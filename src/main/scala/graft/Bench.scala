@@ -93,6 +93,45 @@ object Bench {
     "s18_index_delete", "s19_ivfpq_append", "s20_retrieval_pipeline",
     "q74_bucketed_join", "e16_incremental_agg")
 
+  private def compactFmt(v: Double): String = {
+    val s = JsonNum.f3(v)
+    if (s.contains('.')) {
+      val t = s.reverse.dropWhile(_ == '0').reverse
+      if (t.endsWith(".")) t.dropRight(1) else t
+    } else s
+  }
+
+  /** The compact summary line printed LAST. Carries `names` (default
+    * [[tailQueries]]) that have a result; values drop trailing zeros
+    * ("0.2" not "0.200") to buy entries. Defensive truncation keeps
+    * the line parseable even if times grow wide: names are dropped
+    * from the END of `names` (never the first five) until the line
+    * fits `maxChars`, the 2000-char window with margin. When that
+    * drops any timed entry the line says how many in `"truncated":N`,
+    * so a key missing from one run's line is never mistaken for a
+    * removed query; an untruncated line has no such field. */
+  private[graft] def tailLine(results: Seq[(String, Double)],
+      failed: Seq[String], sfDir: String, names: Seq[String] = tailQueries,
+      maxChars: Int = 1900): String = {
+    val byName = results.toMap
+    val total = JsonNum.f3(results.map(_._2).sum)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def render(carried: Seq[String]): String = {
+      val qmap = carried.flatMap(n => byName.get(n).map(v =>
+        "\"" + n + "\":" + compactFmt(v))).mkString("{", ",", "}")
+      val dropped = names.drop(carried.size).count(byName.contains)
+      val truncated = if (dropped == 0) "" else s""","truncated":$dropped"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qmap,"n_queries":${results.size},"failed":$failedJson$truncated,"detail":"bench_last.json","sf":"$sfDir"}"""
+    }
+    var carried = names
+    var line = render(carried)
+    while (line.length > maxChars && carried.size > 5) {
+      carried = carried.dropRight(1)
+      line = render(carried)
+    }
+    line
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -196,32 +235,8 @@ object Bench {
     }.mkString("{", ",", "}"))
     println(fullLine)
     // compact, tail-window-sized summary LAST — this is the line the
-    // driver actually manages to parse. Carries `tailQueries` (the
-    // headline five + every entry with real weight, see the scaladoc);
-    // values drop trailing zeros ("0.2" not "0.200") to buy entries.
-    // Defensive truncation keeps the line parseable even if times grow
-    // wide: drop entries from the END of the list (never q01–q05)
-    // until the line fits the 2000-char window with margin.
-    def compactFmt(v: Double): String = {
-      val s = fmt(v)
-      if (s.contains('.')) {
-        val t = s.reverse.dropWhile(_ == '0').reverse
-        if (t.endsWith(".")) t.dropRight(1) else t
-      } else s
-    }
-    val byName = results.toMap
-    def tailLine(names: Seq[String]): String = {
-      val qmap = names.flatMap(n => byName.get(n).map(v =>
-        "\"" + n + "\":" + compactFmt(v))).mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qmap,"n_queries":${results.size},"failed":$failedJson,"detail":"bench_last.json","sf":"$sfDir"}"""
-    }
-    var carried = tailQueries
-    var line = tailLine(carried)
-    while (line.length > 1900 && carried.size > 5) {
-      carried = carried.dropRight(1)
-      line = tailLine(carried)
-    }
-    println(line)
+    // driver actually manages to parse (see [[tailLine]])
+    println(tailLine(results, failed.toSeq, sfDir))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -260,6 +260,5 @@ object ScaleCurveStatement {
     println(s"""{"metric":"scale_curve_statement","sf":"$sf",""" +
       s""""status":"ok","workers":{$workers},$spoolTopologyJson,""" +
       s""""max_overhead_sec":${JsonNum.f3(maxOverhead)}}""")
-    sys.exit(0) // the HttpServer dispatcher thread is non-daemon
   }
 }

@@ -122,8 +122,5 @@ object SpoolCheck {
         s""""codec":"$codec","spoolBytes":$spoolBytes,""" +
         s""""sec":${JsonNum.f3(sec)},"complete":true}""")
     } finally spark.stop()
-    // the HttpServer's internal dispatcher thread is non-daemon and
-    // would hold the JVM open after main returns
-    sys.exit(0)
   }
 }

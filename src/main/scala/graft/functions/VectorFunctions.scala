@@ -566,7 +566,11 @@ object VectorFunctions {
     * array<struct<cl: long, cs: array<float|double>>>>>); `right`: the
     * vector the dot runs against (ignored when `squared`). Slots index
     * by the entry's OWN cl (the original lutArr semantics); a cl
-    * outside [0, pqK) or a length-mismatched cs yields/stays null. */
+    * outside [0, pqK) or a length-mismatched cs yields/stays null.
+    * A dot LUT (not `squared`) against a vector shorter than
+    * subspaces·subDim is null as a whole, like a NULL vector: callers
+    * drop such rows with `isnotnull`, the relational shape's
+    * drop-the-query contract for degenerate query embeddings. */
   case class PqLut(left: Expression, right: Expression,
       subspaces: Int, subDim: Int, pqK: Int, squared: Boolean)
       extends BinaryExpression {
@@ -611,6 +615,7 @@ object VectorFunctions {
            |${ev.value} = graft.functions.DecimalVecOps.pqLut(
            |  $a, $b, $subspaces, $subDim, $pqK, $squared,
            |  ${csElem == FloatType}, $vecIsFloat);
+           |${ev.isNull} = ${ev.value} == null;
          """.stripMargin
       })
 
@@ -761,11 +766,12 @@ object DecimalVecOps {
 
   /** The dense subspaces·pqK LUT row: slot sub·pqK+cl =
     * ddot(vec[sub·subDim ..), cs) (or ddot(cs, cs) when `squared`);
-    * slots without a codebook entry stay null. */
+    * slots without a codebook entry stay null. Null when not `squared`
+    * and `vec` is shorter than subspaces·subDim. */
   def pqLut(cbs: ArrayData, vec: ArrayData, subspaces: Int, subDim: Int,
       pqK: Int, squared: Boolean, csF: Boolean, vecF: Boolean): ArrayData = {
+    if (!squared && vec.numElements() < subspaces * subDim) return null
     val out = new Array[Any](subspaces * pqK)
-    val n = vec.numElements()
     var sub = 0
     while (sub < subspaces) {
       if (sub < cbs.numElements() && !cbs.isNullAt(sub)) {
@@ -782,11 +788,7 @@ object DecimalVecOps {
                   val cs = cand.getArray(1)
                   val v: java.lang.Double =
                     if (squared) ddotSlice(cs, 0, cs.numElements(), cs, csF, csF)
-                    else {
-                      val off = sub * subDim
-                      val sliceLen = math.max(0, math.min(subDim, n - off))
-                      ddotSlice(vec, off, sliceLen, cs, vecF, csF)
-                    }
+                    else ddotSlice(vec, sub * subDim, subDim, cs, vecF, csF)
                   out(sub * pqK + cl.toInt) = v
                 }
               }

@@ -777,6 +777,16 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     // footer-only count (aggregate pushdown) sizing the training sample
     val (codebook, codes) = pqTrain(e, math.max(1L, e.count() / pqTrainSample))
+    pqProbe(e, codebook, codes)
+  }
+
+  /** PQ probe — the query-side half of s07 against a trained codebook
+    * and the corpus's codes8 rows. A query whose embedding is NULL or
+    * shorter than subspaces·subDim has no LUT and is absent from the
+    * output, as under the relational LUT shape this replaced. */
+  private[graft] def pqProbe(e: org.apache.spark.sql.DataFrame,
+      codebook: org.apache.spark.sql.DataFrame,
+      codes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // per-query LUTs — pmap(sub·k+cl) = dot(q|sub, centroid),
     // qmap(sub·k+cl) = ‖centroid‖² — in ONE map pass per query row
     // against the one-row broadcast codebook array: zero joins, zero
@@ -788,6 +798,7 @@ object Similarity {
       .select(col("vec_id").as("qid"),
         lutOf(col("cbs"), col("embedding"), squared = false).as("pmap"),
         lutOf(col("cbs"), col("embedding"), squared = true).as("qmap"))
+      .filter(col("pmap").isNotNull)
     val cand = codes.filter(col("vec_id") >= 10)
       .crossJoin(broadcast(lut))
       .withColumn("ascore", lutSum(col("pmap")) / sqrt(lutSum(col("qmap"))))
@@ -914,7 +925,8 @@ object Similarity {
     * lookup state (cdot/csq/cnorm and the per-query LUTs) derives
     * from the centroid table and codebook — O(k·M·[[pqK]]) work,
     * corpus-independent — so a stored index needs no corpus scan to
-    * probe. */
+    * probe. A query whose embedding is NULL or shorter than
+    * subspaces·subDim has no LUT and is absent from the output. */
   private[graft] def ivfPqProbe(e: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame,
       codebook: org.apache.spark.sql.DataFrame,
@@ -943,6 +955,8 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("embedding"),
         explode(topCellsCol(col("cents"), col("embedding"), ivfProbes)).as("pc"),
         lutOf(col("cbs"), col("embedding"), squared = false).as("pmap"))
+      // a NULL or short query embedding has no LUT: the query is dropped
+      .filter(col("pmap").isNotNull)
       .select(col("qid"), col("pc.cid").as("cell"),
         ddot(col("embedding"), col("pc.ce")).as("qc"), col("pmap"))
       .join(cellState, Seq("cell"))

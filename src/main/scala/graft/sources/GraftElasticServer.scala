@@ -1,8 +1,7 @@
 package graft.sources
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
@@ -143,25 +142,11 @@ private[graft] object GraftElasticServer {
   @volatile private var server: HttpServer = _
 
   /** Base URL, starting the server on first use (ephemeral port; all
-    * handlers on a cached pool so sliced readers page in parallel).
-    * `start()` runs on a DAEMON thread: HttpServer's internal
-    * dispatcher inherits the starting thread's daemon flag, and a
-    * non-daemon dispatcher keeps the whole JVM alive after main
-    * returns (Verify/Bench would hang at exit). */
+    * handlers on a cached pool so sliced readers page in parallel; see
+    * [[LoopbackHttp]]). */
   def url: String = {
     if (server == null) synchronized {
-      if (server == null) {
-        val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-        s.setExecutor(Executors.newCachedThreadPool(r => {
-          val t = new Thread(r, "graft-es"); t.setDaemon(true); t
-        }))
-        s.createContext("/", exchange => route(exchange))
-        val starter = new Thread(() => s.start(), "graft-es-start")
-        starter.setDaemon(true)
-        starter.start()
-        starter.join()
-        server = s
-      }
+      if (server == null) server = LoopbackHttp.create("graft-es", 0)(route)
     }
     s"http://127.0.0.1:${server.getAddress.getPort}"
   }

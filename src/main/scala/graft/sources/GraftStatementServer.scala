@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -153,17 +152,8 @@ object GraftStatementServer {
   def start(spark: SparkSession, port: Int = 0): String = synchronized {
     session = spark
     sweepOrphanSpools(spark)
-    if (server == null) {
-      val s = HttpServer.create(
-        new InetSocketAddress("127.0.0.1", port), 64)
-      s.createContext("/v1/statement", (x: HttpExchange) => route(x))
-      s.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-statement"); t.setDaemon(true); t
-        }))
-      s.start()
-      server = s
-    }
+    if (server == null)
+      server = LoopbackHttp.create("graft-statement", 64, port)(route)
     url
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.GraftElasticServer
+import graft.sources.{GraftElasticHttp, GraftElasticServer}
 
 /** The elastic WIRE connector (GraftElasticSource/GraftElasticServer):
   * scroll-paged HTTP reads with filter/projection pushdown rendered
@@ -91,6 +91,34 @@ class ElasticSourceSpec extends SparkSpec {
     val expect = (total + 6) / 7
     assert(pages == expect || pages == expect + 1,
       s"pages=$pages expected≈$expect for $total rows @7")
+    // the same 7-row scroll paged with the reader's own client over
+    // one kept-alive connection: the follow-up `_search/scroll`
+    // requests answer without the ~40 ms delayed-ACK stall Nagle
+    // caused on every response
+    val url = GraftElasticServer.url
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ms = Seq.newBuilder[Double]
+    def timed(u: String, body: String): (String, Int) = {
+      val t0 = System.nanoTime()
+      val root = mapper.readTree(GraftElasticHttp.send(u, "POST", body))
+      ms += (System.nanoTime() - t0) / 1e6
+      (root.get("_scroll_id").asText, root.get("hits").get("hits").size)
+    }
+    var (scrollId, hits) = timed(s"$url/$idx/_search?scroll=1m",
+      """{"size":7,"_source":["doc_id"],"query":{"match_all":{}}}""")
+    var seen = hits
+    while (hits == 7) {
+      val (sid, h) = timed(s"$url/_search/scroll",
+        s"""{"scroll":"1m","scroll_id":"$scrollId"}""")
+      scrollId = sid; hits = h; seen += h
+    }
+    GraftElasticHttp.send(s"$url/_search/scroll", "DELETE",
+      s"""{"scroll_id":["$scrollId"]}""")
+    val times = ms.result()
+    assert(seen == total && times.size >= 10, s"$seen rows in ${times.size} pages")
+    val mean = times.sum / times.size
+    assert(mean < 20.0, f"mean scroll request $mean%.1f ms over " +
+      s"${times.size} pages: ${times.map(t => f"$t%.1f").mkString(",")}")
   }
 
   test("IN, prefix and IS NOT NULL render; empty result stays correct") {

@@ -68,4 +68,30 @@ class PqSpec extends SparkSpec {
       assert(r.getInt(2) >= 1 && r.getInt(2) <= 5)
     }
   }
+
+  test("a NULL or short query embedding drops the query from the s07 and s08 probes") {
+    val e = spark.read.parquet(s"$sf1/embeddings.parquet")
+    // query 0: NULL; query 1: one element short of subspaces·subDim
+    val degenerate = e.withColumn("embedding",
+      when(col("vec_id") === 0, lit(null).cast(e.schema("embedding").dataType))
+        .when(col("vec_id") === 1, slice(col("embedding"), 1,
+          Similarity.pqSubspaces * Similarity.pqSubDim - 1))
+        .otherwise(col("embedding")))
+    def qid(r: org.apache.spark.sql.Row): Long = r.getAs[Number](0).longValue
+    def check(probe: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      val clean = probe(e).collect().toSeq
+      assert(Set(0L, 1L).subsetOf(clean.map(qid).toSet), s"$what: ${clean.take(5)}")
+      val got = probe(degenerate).collect().toSeq
+      assert(got == clean.filterNot(r => qid(r) <= 1L),
+        s"$what: degenerate queries ${got.map(qid).distinct} vs clean " +
+          s"${clean.map(qid).distinct}")
+    }
+    // both probes run against index state built from the clean corpus
+    val (codebook, codes) = Similarity.pqTrain(
+      e, math.max(1L, e.count() / Similarity.pqTrainSample))
+    check(q => Similarity.pqProbe(q, codebook, codes), "s07")
+    val (cent, cb, codesCell) = Similarity.ivfPqBuild(e)
+    check(q => Similarity.ivfPqProbe(q, cent, cb, codesCell), "s08")
+  }
 }

@@ -41,6 +41,29 @@ class StatementServerSpec extends SparkSpec {
     (code, out)
   }
 
+  /** One request over the JDK's kept-alive connection cache, the way
+    * loader.py's `requests.Session` pages: the body is read to the end
+    * and the stream closed, never `disconnect()`ed (which would hide a
+    * per-response stall behind a fresh connection). Returns the body
+    * and the request's wall time in ms. */
+  private def keptAlive(method: String, url: String,
+      body: Option[String]): (String, Double) = {
+    val t0 = System.nanoTime()
+    val conn = URI.create(url).toURL.openConnection()
+      .asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod(method)
+    conn.setRequestProperty("X-Trino-User", "spec")
+    body.foreach { b =>
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(b.getBytes(StandardCharsets.UTF_8))
+    }
+    assert(conn.getResponseCode == 200, s"$method $url")
+    val in = conn.getInputStream
+    val out = new String(in.readAllBytes(), StandardCharsets.UTF_8)
+    in.close()
+    (out, (System.nanoTime() - t0) / 1e6)
+  }
+
   /** loader.py's query_iter: post, follow nextUri, collect data. */
   private def runSql(sql: String,
       headers: Map[String, String] = Map("X-Trino-User" -> "spec"))
@@ -112,6 +135,30 @@ class StatementServerSpec extends SparkSpec {
     }
     assert(rows == 15000, s"drained $rows rows")
     assert(pages >= 15, s"only $pages data pages — paging not bounded")
+  }
+
+  test("kept-alive nextUri pages answer without a delayed-ACK stall") {
+    spark.conf.set("spark.sql.graft.root", sf2)
+    // the 15-page statement above, paged over one kept-alive
+    // connection: with Nagle on, every page's body waited ~40 ms for
+    // the client's delayed ACK of the headers
+    val (first, _) = keptAlive("POST", s"$base/v1/statement",
+      Some("SELECT o_orderkey, o_totalprice, o_orderstatus " +
+        "FROM mongodb.tpcds.orders"))
+    var node = mapper.readTree(first)
+    val ms = Seq.newBuilder[Double]
+    var rows = 0L
+    while (node.has("nextUri")) {
+      val (page, t) = keptAlive("GET", node.get("nextUri").asText, None)
+      ms += t
+      node = mapper.readTree(page)
+      if (node.has("data")) rows += node.get("data").size()
+    }
+    assert(rows == 15000, s"drained $rows rows")
+    val sorted = ms.result().sorted
+    val median = sorted(sorted.size / 2)
+    assert(median < 20.0, f"median GET nextUri $median%.1f ms over " +
+      s"${sorted.size} pages: ${sorted.map(t => f"$t%.1f").mkString(",")}")
   }
 
   test("X-Trino-Catalog/Schema headers set the statement's defaults") {
