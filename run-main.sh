@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main directly (no sbt) — mirrors build.sbt javaOptions.
-# Usage: ./run-main.sh graft.Bench [args...]
+# Usage: ./run-main.sh graft.Bench [names...]
+#        ./run-main.sh graft.Harness <leg> [args...]
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

@@ -132,6 +132,23 @@ object Bench {
     line
   }
 
+  /** Per-measurement hygiene, run after every timed execution (here
+    * and in [[Harness.measure]]): per-query caches must not leak into
+    * the next measurement — the table cache, AND any localCheckpoint
+    * blocks the query pinned. Spark frees those only when the RDD
+    * object is GC'd, so over a 215-entry suite the iterative entries
+    * (closures, k-means, the checkpointed ANN/tf indexes) otherwise
+    * accumulate MEMORY_AND_DISK blocks that squeeze the unified memory
+    * manager under LATER entries (the r17 in-suite d20/s08 elevations
+    * with the canary at floor — r18 adjudication). The query's own
+    * DataFrame is dead by then, so dropping every persisted RDD is the
+    * clean-block-manager baseline each measurement assumes. */
+  private[graft] def cleanup(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -166,19 +183,7 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // per-query caches must not leak into the next measurement: the
-      // table cache, AND any localCheckpoint blocks the query pinned —
-      // Spark frees those only when the RDD object is GC'd, so over a
-      // 215-entry suite the iterative entries (closures, k-means, the
-      // checkpointed ANN/tf indexes) otherwise accumulate
-      // MEMORY_AND_DISK blocks that squeeze the unified memory manager
-      // under LATER entries (the r17 in-suite d20/s08 elevations with
-      // the canary at floor — r18 adjudication). The query's own
-      // DataFrame is dead here, so dropping every persisted RDD is the
-      // clean-block-manager baseline each measurement assumes.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      cleanup(spark)
       if (ok) Some(dt) else None
     }
     // optional args = query names: the BENCH.md adjudication protocol's

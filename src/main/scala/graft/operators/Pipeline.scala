@@ -1290,7 +1290,7 @@ object Pipeline {
     * intermediate is (2·n_s+1)·10⁹ < 2⁶³ for any source below ~4.6
     * BILLION documents (the previous form multiplied by the corpus
     * total as well and overflowed at ~10⁵ docs/source — inside
-    * ScaleProof's own 100× regime); sub-slot ties beyond 5·10⁸ docs
+    * `Harness proof`'s own 100× regime); sub-slot ties beyond 5·10⁸ docs
     * per source fall back to the deterministic (source, doc_id)
     * tiebreak.
     *

@@ -643,7 +643,7 @@ object Relational {
       d: String): String = {
     // catalog registration is PER SESSION, outside the memo: the build
     // below is once-per-JVM, but a second session in the same JVM
-    // (ClusterCheck's second topology, a Connect session) still needs
+    // (`Harness cluster`'s second topology, a Connect session) needs
     // the catalog conf or `cbocat` resolves as a spark_catalog namespace
     s.conf.set("spark.sql.catalog.cbocat",
       "graft.sources.GraftParquetCatalog")
@@ -1582,7 +1582,7 @@ object Relational {
       |SELECT doc_id, depth, path_chars
       |FROM walk WHERE cur = 1 ORDER BY doc_id""".stripMargin
   ) { (s, d) =>
-    // documents only (not registerViews): the ScaleProof corpus dirs
+    // documents only (not registerViews): `Harness proof`'s corpus dirs
     // carry just the scaled tables this query reads
     Tables.documents(s, d).createOrReplaceTempView("documents")
     s.sql(

@@ -318,7 +318,7 @@ object Similarity {
   /** Target members per s06 cell. Cell count k = max(ivfK,
     * ⌈n/target⌉) GROWS with the corpus, so the within-cell pair join
     * does Σ|cell|² ≈ n·target work — linear in n. A fixed k would make
-    * it n²/k: the round-8 rotated-copy ScaleProof measured exactly that
+    * it n²/k: the round-8 rotated-copy `Harness proof` measured that
     * (ratio 8.5 at 10×) before k went dynamic. */
   val semanticCellTarget = 512
 

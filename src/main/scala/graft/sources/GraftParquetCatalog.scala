@@ -727,8 +727,8 @@ private[graft] object GraftVersions {
       names: Seq[String]): Seq[String] = {
     // Footer opens are independent ~ms-each metadata reads; a
     // sequential loop makes them the commit's fixed tail exactly when
-    // a rewrite stages many files (the all-files MERGE in
-    // ScaleCurveFamilies stages 3,200; a 100 TB commit stages more).
+    // a rewrite stages many files (the all-files MERGE of
+    // `Harness families` stages 3,200; a 100 TB commit stages more).
     // Bounded pool, order preserved; small commits skip the pool.
     def one(n: String): String = {
       val fields = footerStats(new java.io.File(dataDir(dir), n))
@@ -743,7 +743,7 @@ private[graft] object GraftVersions {
     * (footer-stats reads, stage-moves, lost-race re-prefixes). Each
     * item is an independent ~ms filesystem/footer op; run sequentially
     * they become the commit's N-invariant tail exactly when a rewrite
-    * stages many files (ScaleCurveFamilies stages 3,200; a 100 TB
+    * stages many files (`Harness families` stages 3,200; a 100 TB
     * commit stages more). Small batches skip the pool. On failure the
     * queued tasks are cancelled (`shutdownNow`) so a failed commit
     * never leaves thousands of tasks running in the background. */

@@ -77,7 +77,7 @@ private[graft] object GraftWireConf {
   /** Spool part-file compression codec: `gzip` (default), `deflate`
     * (both pure-JVM, no native lib dependency), or `none`. Defaulted
     * ON at r19 from a measured pair (verdict r18 #6): the 2M-row
-    * SpoolCheck drain reads the SAME wall seconds with and without
+    * `Harness spool` drain reads the SAME wall seconds with and without
     * (10.3–13.9 s, inside the box spread — the drain is paging-bound,
     * not codec-bound) while the spooled footprint drops 264.9 MB →
     * 5.9 MB (44.7×). On a real cluster the spool write+read is

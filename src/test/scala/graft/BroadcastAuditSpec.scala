@@ -35,7 +35,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ResolvedHint}
   *
   * Limitation, stated honestly: a Θ(n/512)-style slowly-linear side
   * (round-8 s06) is indistinguishable from constant at these corpus
-  * sizes because of the max(ivfK, ⌈n/512⌉) floor — ScaleProof's 10×
+  * sizes because of the max(ivfK, ⌈n/512⌉) floor — `Harness proof`'s 10×
   * and the 100× s06 spot-run cover that regime; this spec catches the
   * Θ(n) hint instantly and forces every hint to carry its bound. */
 class BroadcastAuditSpec extends SparkSpec {
@@ -93,7 +93,7 @@ class BroadcastAuditSpec extends SparkSpec {
     "s03_ann_ivf" -> (Fixed, "ivfK=8 centroids + ≤ 10·probes query-probe rows + k seed ids"),
     "s04_embed_doc_search" -> (Fixed, "query set: 5 vectors"),
     "s05_kmeans_train" -> (Fixed, "k=8 centroid (dim,c) rows + k seed ids inside Lloyd"),
-    "s06_semantic_dedup" -> (Fixed, "max(ivfK, ⌈n/512⌉) centroids — 8 at both spec scales; the n/512 regime is ScaleProof's to falsify (see scaladoc limitation)"),
+    "s06_semantic_dedup" -> (Fixed, "max(ivfK, ⌈n/512⌉) centroids — 8 at both spec scales; the n/512 regime is `Harness proof`'s to falsify (see scaladoc limitation)"),
     "s07_ann_pq" -> (Fixed, "M·k codebook arrays + O(queries·M) ADC LUT rows + query vectors"),
     "s08_ann_ivfpq" -> (Fixed, "coarse centroids + probe list + per-(cell,sub,cl) decimal LUTs — all O(k·M·pqK) or O(queries·nprobe)"),
     "s09_ann_sq" -> (Fixed, "query set: 10 vectors (codes are scanned, never broadcast)"),

@@ -2,15 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Multi-executor scheduler gate: forks [[ClusterCheck]] as its own
-  * JVM (a second Spark master cannot coexist with the suite's shared
-  * SparkContext) and requires the `local-cluster[2,4,2048]` run — two
-  * REAL executor JVM processes, serialized closures, netty shuffle —
-  * to produce bit-identical results to the single-process run across
-  * the representative query slice. This is the §5.2 worker-count
-  * invariance property on the PROCESS-topology axis, the closest one
-  * machine gets to the reference's 1-vs-5-worker result equality
-  * (reference: results/q00N/workers-{1,5}). */
+/** Multi-executor scheduler gate: forks the `cluster` leg of
+  * [[Harness]] as its own JVM (a second Spark master cannot coexist
+  * with the suite's shared SparkContext) and requires the
+  * `local-cluster[2,4,2048]` run — two REAL executor JVM processes,
+  * serialized closures, netty shuffle — to produce bit-identical
+  * results to the single-process run across the representative query
+  * slice. This is the §5.2 worker-count invariance property on the
+  * PROCESS-topology axis, the closest one machine gets to the
+  * reference's 1-vs-5-worker result equality (reference:
+  * results/q00N/workers-{1,5}). */
 class LocalClusterSpec extends AnyFunSuite {
 
   test("two-executor-JVM local-cluster results equal single-process results") {
@@ -18,7 +19,7 @@ class LocalClusterSpec extends AnyFunSuite {
     assert(new java.io.File(repo, "run-main.sh").exists(),
       s"expected to run from the repo root, cwd=$repo")
     val pb = new ProcessBuilder(
-      "./run-main.sh", "graft.ClusterCheck", "/root/testdata/sf0.001")
+      "./run-main.sh", "graft.Harness", "cluster", "/root/testdata/sf0.001")
     pb.directory(repo)
     // the executor-launch path (WorkerCommandBuilder) needs these when
     // spawned outside the distribution's shell scripts

@@ -193,7 +193,7 @@ class PersistedAnnSpec extends SparkSpec {
   test("batch probe over the stored index self-retrieves every query and prunes cells") {
     import graft.operators.Similarity
     // build s11's index, then probe it with a WIDE query relation (the
-    // serving shape ScaleCurveFamilies measures) instead of the
+    // serving shape `Harness families` measures) instead of the
     // entries' fixed vec_id < 10 harness set
     SparkEntry.queries("s11_ann_persisted")(spark, sf2).collect()
     val idxDir = Similarity.indexDir(spark, "s11", sf2)

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Statement-face page-memory bound (verdict r16 #7): forks
-  * [[SpoolCheck]] into a deliberately SMALL-heap JVM (768 MB) and
-  * drains a ONE-PARTITION 2M-row × ~250 B result through the real
-  * HTTP statement face. The spooled serving path streams pre-rendered
+/** Statement-face page-memory bound (verdict r16 #7): forks the
+  * `spool` leg of [[Harness]] into a deliberately SMALL-heap JVM
+  * (768 MB) and drains a ONE-PARTITION 2M-row × ~250 B result through
+  * the real HTTP statement face. The spooled serving path streams pre-rendered
   * lines O(page) at a time; the pipelined `toLocalIterator` pull it
   * replaced materializes the whole ~640 MB partition driver-side and
   * cannot complete in this heap — so the heap bound IS the assertion,
@@ -17,7 +17,7 @@ class SpoolSpec extends AnyFunSuite {
     val repo = new java.io.File(".").getCanonicalFile
     assert(new java.io.File(repo, "run-main.sh").exists(),
       s"expected to run from the repo root, cwd=$repo")
-    val pb = new ProcessBuilder("./run-main.sh", "graft.SpoolCheck")
+    val pb = new ProcessBuilder("./run-main.sh", "graft.Harness", "spool")
     pb.directory(repo)
     pb.environment().put("SPARK_DRIVER_MEM", "768m")
     pb.redirectErrorStream(true)
