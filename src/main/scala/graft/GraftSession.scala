@@ -99,9 +99,8 @@ object GraftSession {
         // 7.55 → 5.37 s, s19 7.46 → 5.71 s from this one setting.
         // Scale-neutral (driver-memory-bounded cache of compiled
         // classes; production drivers with many distinct query shapes
-        // raise it for the same reason), env-overridable for A/B.
-        .config("spark.sql.codegen.cache.maxEntries",
-          sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+        // raise it for the same reason).
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     functions.TrinoFunctions.register(spark)

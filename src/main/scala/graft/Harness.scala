@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.LocalFiles.rmTree
 import graft.sources.{GraftMerge, GraftStatementServer, GraftVersions}
 
 /** The scale-and-topology harness (dev tool; Bench is the driver
@@ -70,10 +71,6 @@ object Harness {
 
   private def canonical(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toIndexedSeq
-
-  private[graft] def rmTree(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
-  }
 
   private def copyTree(src: File, dst: File): Unit =
     if (src.isDirectory) {

@@ -50,9 +50,7 @@ object ProfileOne {
           prevEnd = math.max(prevEnd, j.end)
         }
         println(f"  tail-gap=${(t1 - prevEnd) / 1000.0}%.3f")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Bench.cleanup(spark)
       }
     }
     spark.stop()

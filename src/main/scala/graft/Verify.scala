@@ -21,9 +21,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that cache intermediates (d03's signature table) must
-      // not pin them for the rest of the dump
-      spark.catalog.clearCache()
+      // queries that cache or checkpoint intermediates (d03's signature
+      // table, the localCheckpoint sites) must not pin them for the
+      // rest of the dump
+      Bench.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

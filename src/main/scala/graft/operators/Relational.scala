@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryEntry, Tables}
+import graft.{LocalFiles, QueryEntry, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -652,10 +652,7 @@ object Relational {
       val t = "cbo_customer_" + d.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
       new java.io.File(cboRoot).mkdirs()
       val dir = new java.io.File(cboRoot, s"$t.parquet")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      if (dir.exists()) rm(dir)
+      if (dir.exists()) LocalFiles.rmTree(dir)
       Tables.customer(s, d).createOrReplaceTempView(s"cbo_src_$t")
       s.sql(s"""CREATE TABLE cbocat.tpcds.$t
                |TBLPROPERTIES('versioned'='true')
@@ -1484,11 +1481,7 @@ object Relational {
       s.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new java.io.File(
         s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      if (loc.exists()) rm(loc)
+      if (loc.exists()) LocalFiles.rmTree(loc)
     }
     Tables.orders(s, d).repartition(8, col("o_orderkey"))
       .write.mode("overwrite").format("parquet")

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,7 +52,7 @@ private[graft] object GraftElasticServer {
     * only — dynamic mapping, reference: loader.py:113-127) and is
     * fixed by the first bulk batch; `rows` is copy-on-write under the
     * index lock so open scrolls never see a torn batch. */
-  private final class EsIndex(val name: String,
+  private[graft] final class EsIndex(val name: String,
       @volatile var schema: StructType,
       @volatile var rows: IndexedSeq[IndexedSeq[Any]]) {
     /** `_id` → row position, for `index`-action replace semantics: a
@@ -62,73 +61,23 @@ private[graft] object GraftElasticServer {
     val docIds = new ConcurrentHashMap[String, Integer]()
   }
 
-  private final class ScrollState(val index: EsIndex,
+  private[graft] final class ScrollState(val index: EsIndex,
       val rows: Iterator[IndexedSeq[Any]], val size: Int,
-      val cols: Seq[String]) {
-    @volatile var lastUsed: Long = System.nanoTime()
-  }
+      val cols: Seq[String])
 
   private val indexes = new ConcurrentHashMap[String, EsIndex]()
-  private val scrolls = new ConcurrentHashMap[String, ScrollState]()
-  private val scrollIds = new AtomicLong(0)
+  /** Open scrolls, `graft-scroll-N` with N counting up from 1. */
+  private[graft] val scrolls = new CursorTable[String, ScrollState](firstId = 1)
 
-  /** Scroll cursors abandoned by clients that never page or DELETE
-    * are reaped after [[GraftWireConf.cursorIdleNanos]] of inactivity
-    * (the Mongo server's reapIdleCursors pattern — r15 verdict #3: a
-    * crashed reader must not pin its matched-row iterator for the
-    * JVM's life). Swept on scroll OPEN, and only once the live
-    * population clears [[GraftWireConf.CursorReapMinPopulation]] so a
-    * few slow readers can never be evicted by an eager clock. */
-  private def reapIdleScrolls(): Unit =
-    if (scrolls.size > GraftWireConf.CursorReapMinPopulation) {
-      val now = System.nanoTime()
-      val idle = GraftWireConf.cursorIdleNanos
-      val it = scrolls.entrySet().iterator()
-      while (it.hasNext) {
-        if (now - it.next().getValue.lastUsed > idle) it.remove()
-      }
-    }
-
-  /** Test hook: back-date every live scroll's last-touch by `nanos`
-    * so a spec can drive the idle sweep without a real 600 s wait. */
-  private[graft] def ageScrollsForTest(nanos: Long): Unit =
-    scrolls.values().asScala.foreach(s => s.lastUsed -= nanos)
-  private[graft] def liveScrollCount: Int = scrolls.size
-
-  /** Per-index request log (spec observability). Capped at the last
-    * [[SearchLogCap]] bodies per index; counts survive the trim via
-    * [[searchesSeen]]. */
-  private val SearchLogCap = 256
-  private val searchBodies =
-    new ConcurrentHashMap[String, java.util.List[String]]()
-  private val searchesSeen = new ConcurrentHashMap[String, AtomicInteger]()
-  private val pagesServed = new ConcurrentHashMap[String, AtomicInteger]()
-  private val hitsServed = new ConcurrentHashMap[String, AtomicInteger]()
-
-  def lastSearchBody(index: String): Option[String] = {
-    val l = searchBodies.get(index)
-    // size-then-get under the trim's monitor: a concurrent SearchLogCap
-    // trim between the two calls would shift indices underneath us
-    if (l == null) None
-    else l.synchronized {
-      if (l.isEmpty) None else Some(l.get(l.size - 1))
-    }
-  }
-  def searchCount(index: String): Int = {
-    val c = searchesSeen.get(index); if (c == null) 0 else c.get
-  }
-  def pageCount(index: String): Int = {
-    val c = pagesServed.get(index); if (c == null) 0 else c.get
-  }
+  /** Per-index requests and counters (spec observability). */
+  private val ledger = new RequestLedger
+  def lastSearchBody(index: String): Option[String] = ledger.lastRequest(index)
+  def searchCount(index: String): Int = ledger.count("searches", index)
+  def pageCount(index: String): Int = ledger.count("pages", index)
   /** Hits that actually crossed the wire for `index` — the number the
     * runtime-filter specs watch shrink. */
-  def hitCount(index: String): Int = {
-    val c = hitsServed.get(index); if (c == null) 0 else c.get
-  }
-  private val bulksServed = new ConcurrentHashMap[String, AtomicInteger]()
-  def bulkCount(index: String): Int = {
-    val c = bulksServed.get(index); if (c == null) 0 else c.get
-  }
+  def hitCount(index: String): Int = ledger.count("hits", index)
+  def bulkCount(index: String): Int = ledger.count("bulks", index)
 
   def hasIndex(name: String): Boolean = indexes.containsKey(name)
   /** Catalog-listable indexes: bulk-created ones. The per-dir seeded
@@ -185,6 +134,7 @@ private[graft] object GraftElasticServer {
       (x.getRequestMethod, path.stripPrefix("/").split("/").toList) match {
         case ("POST", "_search" :: "scroll" :: Nil) => scrollNext(x, body)
         case ("DELETE", "_search" :: "scroll" :: Nil) =>
+          clearScroll(body)
           val n = mapper.createObjectNode(); n.put("succeeded", true)
           respond(x, 200, n)
         case ("POST", "_bulk" :: Nil) => bulk(x, body)
@@ -314,8 +264,7 @@ private[graft] object GraftElasticServer {
         idx.rows = rows
         total += docs.size
       }
-      bulksServed.computeIfAbsent(target, _ => new AtomicInteger())
-        .incrementAndGet()
+      ledger.add("bulks", target)
     }
     val root = mapper.createObjectNode()
     root.put("took", 0); root.put("errors", false); root.put("count", total)
@@ -352,17 +301,8 @@ private[graft] object GraftElasticServer {
   }
 
   private def search(x: HttpExchange, index: String, body: String): Unit = {
-    reapIdleScrolls()
     val idx = lookup(index)
-    val log = searchBodies.computeIfAbsent(index,
-      _ => java.util.Collections.synchronizedList(
-        new java.util.ArrayList[String]()))
-    log.synchronized {
-      log.add(body)
-      while (log.size > SearchLogCap) log.remove(0)
-    }
-    searchesSeen.computeIfAbsent(index, _ => new AtomicInteger())
-      .incrementAndGet()
+    ledger.request("searches", index, body)
     val req = mapper.readTree(if (body.isEmpty) "{}" else body)
     val size = if (req.has("size")) req.get("size").asInt else 10
     require(size > 0, "size must be positive")
@@ -382,9 +322,9 @@ private[graft] object GraftElasticServer {
     val matched = idx.rows.iterator.zipWithIndex
       .filter { case (_, i) => i % sliceMax == sliceId }
       .map(_._1).filter(pred)
-    val sid = s"graft-scroll-${scrollIds.incrementAndGet()}"
+    val sid = s"graft-scroll-${scrolls.nextId()}"
     val st = new ScrollState(idx, matched, size, cols)
-    scrolls.put(sid, st)
+    scrolls.open(sid, st)
     respond(x, 200, page(sid, st))
   }
 
@@ -392,12 +332,24 @@ private[graft] object GraftElasticServer {
     val req = mapper.readTree(body)
     require(req.has("scroll_id"), "scroll_id required")
     val sid = req.get("scroll_id").asText
-    val st = scrolls.get(sid)
+    val st = scrolls.get(sid).orNull
     require(st != null, s"unknown or expired scroll_id: $sid")
-    st.lastUsed = System.nanoTime()
     respond(x, 200, page(sid, st))
   }
 
+  /** `DELETE /_search/scroll` — body `{"scroll_id": id | [ids]}`. */
+  private def clearScroll(body: String): Unit =
+    if (body.nonEmpty) {
+      val ids = mapper.readTree(body).get("scroll_id")
+      if (ids != null)
+        if (ids.isArray) ids.elements().asScala.foreach(i => scrolls.release(i.asText))
+        else scrolls.release(ids.asText)
+    }
+
+  /** The next page of scroll `sid`. A short page tells the client the
+    * scroll is drained, so it also releases the scroll; a page that
+    * empties the rows exactly at `size` keeps it for one more (empty)
+    * page, like ES answering an exhausted scroll until it expires. */
   private def page(sid: String, st: ScrollState): ObjectNode = {
     val hits = mapper.createArrayNode()
     st.synchronized {
@@ -426,10 +378,9 @@ private[graft] object GraftElasticServer {
         n += 1
       }
     }
-    pagesServed.computeIfAbsent(st.index.name, _ => new AtomicInteger())
-      .incrementAndGet()
-    hitsServed.computeIfAbsent(st.index.name, _ => new AtomicInteger())
-      .addAndGet(hits.size())
+    if (hits.size() < st.size) scrolls.release(sid)
+    ledger.add("pages", st.index.name)
+    ledger.add("hits", st.index.name, hits.size())
     val total = mapper.createObjectNode()
     total.put("value", st.index.rows.size); total.put("relation", "eq")
     val hitsObj = mapper.createObjectNode()
@@ -551,16 +502,9 @@ private[graft] object GraftElasticServer {
   //  plumbing                                                         //
   // ---------------------------------------------------------------- //
 
-  private def respond(x: HttpExchange, code: Int, node: ObjectNode): Unit = {
-    val bytes = mapper.writeValueAsBytes(node)
-    x.getResponseHeaders.set("Content-Type", "application/json")
-    x.sendResponseHeaders(code, bytes.length)
-    try x.getResponseBody.write(bytes) finally x.close()
-  }
+  private def respond(x: HttpExchange, code: Int, node: ObjectNode): Unit =
+    LoopbackHttp.respond(x, code, mapper.writeValueAsString(node))
 
-  private def error(x: HttpExchange, code: Int, msg: String): Unit = {
-    val n = mapper.createObjectNode()
-    n.put("error", msg)
-    respond(x, code, n)
-  }
+  private def error(x: HttpExchange, code: Int, msg: String): Unit =
+    respond(x, code, mapper.createObjectNode().put("error", msg))
 }

@@ -65,72 +65,22 @@ private[graft] object GraftMongoServer {
   }
 
   private final class MCursor(val ns: String, val coll: String,
-      val rows: Iterator[BDoc], val batchSize: Int, val cols: Option[Seq[String]]) {
-    @volatile var lastUsed: Long = System.nanoTime()
-  }
+      val rows: Iterator[BDoc], val batchSize: Int, val cols: Option[Seq[String]])
 
   private val dbs =
     new ConcurrentHashMap[String, ConcurrentHashMap[String, MCollection]]()
-  private val cursors = new ConcurrentHashMap[Long, MCursor]()
-  private val cursorIds = new AtomicLong(1000)
+  /** Open `getMore` cursors; ids count up from 1001. */
+  private val cursors = new CursorTable[Long, MCursor](firstId = 1001)
 
-  /** Per-collection request log (spec observability). Capped at the
-    * last [[FindLogCap]] bodies per collection so a long bench run
-    * can't grow the log without bound; counts survive the trim via
-    * [[findsSeen]]. */
-  private val FindLogCap = 256
-  private val findBodies =
-    new ConcurrentHashMap[String, java.util.List[String]]()
-  private val findsSeen = new ConcurrentHashMap[String, AtomicInteger]()
-  private val batchesServed = new ConcurrentHashMap[String, AtomicInteger]()
-  private val docsServed = new ConcurrentHashMap[String, AtomicInteger]()
-
-  def lastFind(coll: String): Option[String] = {
-    val l = findBodies.get(coll)
-    // size-then-get under the trim's monitor: a concurrent FindLogCap
-    // trim between the two calls would shift indices underneath us
-    if (l == null) None
-    else l.synchronized {
-      if (l.isEmpty) None else Some(l.get(l.size - 1))
-    }
-  }
-  def findCount(coll: String): Int = {
-    val c = findsSeen.get(coll); if (c == null) 0 else c.get
-  }
-  def batchCount(coll: String): Int = {
-    val c = batchesServed.get(coll); if (c == null) 0 else c.get
-  }
+  /** Per-collection requests and counters (spec observability). */
+  private val ledger = new RequestLedger
+  def lastFind(coll: String): Option[String] = ledger.lastRequest(coll)
+  def findCount(coll: String): Int = ledger.count("finds", coll)
+  def batchCount(coll: String): Int = ledger.count("batches", coll)
   /** Documents that actually crossed the wire for `coll` — the number
     * the runtime-filter specs watch shrink. */
-  def docCount(coll: String): Int = {
-    val c = docsServed.get(coll); if (c == null) 0 else c.get
-  }
-
-  /** Cursors abandoned by clients that never getMore/killCursors are
-    * reaped after [[GraftWireConf.cursorIdleNanos]] of inactivity
-    * (bounds memory on long bench runs). 600 s default and gated on a
-    * minimum live population — the r15-ADVICE fix for the old flat
-    * 120 s window, which could kill a live cursor whose reader stalls
-    * past it (GC pause, skewed task, full-suite contention). */
-  private def reapIdleCursors(): Unit =
-    if (cursors.size > GraftWireConf.CursorReapMinPopulation) {
-      val now = System.nanoTime()
-      val idle = GraftWireConf.cursorIdleNanos
-      val it = cursors.entrySet().iterator()
-      while (it.hasNext) {
-        if (now - it.next().getValue.lastUsed > idle) it.remove()
-      }
-    }
-
-  /** Test hook: back-date every live cursor's last-touch by `nanos`
-    * so a spec can drive the idle sweep without a real 600 s wait. */
-  private[graft] def ageCursorsForTest(nanos: Long): Unit =
-    cursors.values().asScala.foreach(c => c.lastUsed -= nanos)
-  private[graft] def liveCursorCount: Int = cursors.size
-  private val insertsServed = new ConcurrentHashMap[String, AtomicInteger]()
-  def insertCount(coll: String): Int = {
-    val c = insertsServed.get(coll); if (c == null) 0 else c.get
-  }
+  def docCount(coll: String): Int = ledger.count("docs", coll)
+  def insertCount(coll: String): Int = ledger.count("inserts", coll)
 
   @volatile private var server: ServerSocket = _
 
@@ -404,7 +354,7 @@ private[graft] object GraftMongoServer {
         case Some(s: Seq[_]) => s.collect { case l: Long => l }
         case _ => Seq.empty
       }
-      ids.foreach(cursors.remove(_))
+      ids.foreach(cursors.release)
       BDoc("cursorsKilled" -> (ids: Seq[Any]), "ok" -> 1.0)
     case "count" =>
       val db = dbName(cmd)
@@ -441,16 +391,7 @@ private[graft] object GraftMongoServer {
     val db = dbName(cmd)
     val collName = cmd.getString("find").get
     val coll = lookup(db, collName)
-    val log = findBodies.computeIfAbsent(collName,
-      _ => java.util.Collections.synchronizedList(
-        new java.util.ArrayList[String]()))
-    log.synchronized {
-      log.add(cmd.render)
-      while (log.size > FindLogCap) log.remove(0)
-    }
-    findsSeen.computeIfAbsent(collName, _ => new AtomicInteger())
-      .incrementAndGet()
-    reapIdleCursors()
+    ledger.request("finds", collName, cmd.render)
     val pred = cmd.getDoc("filter").map(filterPred)
       .getOrElse((_: BDoc) => true)
     var matched: Iterator[BDoc] = coll.rows.iterator.filter(pred)
@@ -487,8 +428,8 @@ private[graft] object GraftMongoServer {
     val batch = takeBatch(cursor)
     val id =
       if (!singleBatch && cursor.rows.hasNext) {
-        val cid = cursorIds.incrementAndGet()
-        cursors.put(cid, cursor)
+        val cid = cursors.nextId()
+        cursors.open(cid, cursor)
         cid
       } else 0L
     BDoc("cursor" -> BDoc("firstBatch" -> batch, "id" -> id, "ns" -> ns),
@@ -498,11 +439,11 @@ private[graft] object GraftMongoServer {
   private def getMore(cmd: BDoc): BDoc = {
     val id = cmd.getNum("getMore").getOrElse(
       throw new IllegalArgumentException("getMore: missing cursor id"))
-    val cursor = cursors.get(id)
+    val cursor = cursors.get(id).orNull
     require(cursor != null, s"cursor id $id not found")
     val batch = takeBatch(cursor)
     val more = cursor.rows.hasNext
-    if (!more) cursors.remove(id)
+    if (!more) cursors.release(id)
     BDoc("cursor" -> BDoc("nextBatch" -> batch, "id" -> (if (more) id else 0L),
       "ns" -> cursor.ns), "ok" -> 1.0)
   }
@@ -549,8 +490,7 @@ private[graft] object GraftMongoServer {
       else BDoc("n" -> acc.size, "writeErrors" -> (errs: Seq[Any]),
         "ok" -> 1.0)
     }
-    insertsServed.computeIfAbsent(collName, _ => new AtomicInteger())
-      .incrementAndGet()
+    ledger.add("inserts", collName)
     reply
   }
 
@@ -596,7 +536,6 @@ private[graft] object GraftMongoServer {
     val out = Vector.newBuilder[Any]
     var n = 0
     c.synchronized {
-      c.lastUsed = System.nanoTime()
       while (n < c.batchSize && c.rows.hasNext) {
         val row = c.rows.next()
         out += (c.cols match {
@@ -607,10 +546,8 @@ private[graft] object GraftMongoServer {
         n += 1
       }
     }
-    batchesServed.computeIfAbsent(c.coll, _ => new AtomicInteger())
-      .incrementAndGet()
-    docsServed.computeIfAbsent(c.coll, _ => new AtomicInteger())
-      .addAndGet(n)
+    ledger.add("batches", c.coll)
+    ledger.add("docs", c.coll, n)
     out.result()
   }
 

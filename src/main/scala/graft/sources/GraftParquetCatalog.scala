@@ -391,12 +391,8 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     if (!ctasOnDisk(table) && !(created.contains(table) && ctasMeta(table).isEmpty))
       return false
     val dir = new java.io.File(pathOf(table))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
     created.remove(table)
-    if (dir.exists()) { rm(dir); true } else false
+    if (dir.exists()) { graft.LocalFiles.rmTree(dir); true } else false
   }
 
   override def renameTable(old: Identifier, to: Identifier): Unit =
@@ -1280,10 +1276,7 @@ private[graft] object GraftVersions {
         new java.io.File(dataDir(dir), rel).toPath)
       rel
     }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(stage)
+    graft.LocalFiles.rmTree(stage)
     moved
   }
 

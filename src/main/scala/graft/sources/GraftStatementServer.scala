@@ -1,8 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -10,6 +8,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+
+import LoopbackHttp.respond
 
 /** The reference's EXACT client face: Trino's HTTP statement protocol
   * (reference: data-loader/loader.py:25-62, README.md:92-98 curl
@@ -37,14 +37,13 @@ import org.apache.spark.sql.types._
   * the resolved plan no longer depends on them while paging). */
 object GraftStatementServer {
 
-  private final class QueryState(val id: String,
+  private[graft] final class QueryState(val id: String,
       val columns: Seq[StructField], val rows: Iterator[String],
       val pageSize: Int, val df: DataFrame,
       val analysisMillis: Long = 0L, val planningMillis: Long = 0L,
       val cleanup: () => Unit = () => (),
       touch: () => Unit = () => ()) {
     var token: Long = 1L // next valid fetch token
-    @volatile var lastUsed: Long = System.nanoTime()
     val submitNanos: Long = System.nanoTime()
     /** Fixed when the first data page is served — the analogue of the
       * coordinator's QUEUED→RUNNING transition. */
@@ -119,16 +118,11 @@ object GraftStatementServer {
     }
   }
 
-  /** Remove a query's state AND release its spool (if any) — every
-    * retirement path (drain end, DELETE, idle reap, page failure)
-    * funnels here so spool directories can never leak. */
-  private def retire(id: String): Unit = {
-    val st = queries.remove(id)
-    if (st != null) st.cleanup()
-  }
-
-  private val queries = new ConcurrentHashMap[String, QueryState]()
-  private val nextId = new AtomicLong(0)
+  /** Open statements, `graft_%08d` with ids counting up from 1. Every
+    * retirement path (drain end, DELETE, idle sweep, page failure)
+    * releases through the table, which runs the state's cleanup — so
+    * spool directories can never leak. */
+  private[graft] val queries = new CursorTable[String, QueryState](firstId = 1)
   /** Process-unique spool namespace: two processes sharing the default
     * `java.io.tmpdir` (SpoolSpec's forked JVM beside the test JVM, or
     * a driver restarted after a crash) would otherwise collide on
@@ -146,7 +140,6 @@ object GraftStatementServer {
   @volatile private var server: HttpServer = _
   @volatile private var session: SparkSession = _
   private val PageRows = 1000
-  private val QueryIdleNanos = 600L * 1000 * 1000 * 1000
 
   /** Start (idempotently) and return the base URL. */
   def start(spark: SparkSession, port: Int = 0): String = synchronized {
@@ -170,7 +163,7 @@ object GraftStatementServer {
         case ("GET", "v1" :: "statement" :: id :: token :: Nil) =>
           fetch(x, id, token.toLong)
         case ("DELETE", "v1" :: "statement" :: id :: _ :: Nil) =>
-          retire(id)
+          queries.release(id)
           respond(x, 204, "")
         case (m, p) =>
           respond(x, 404, errorJson(s"unsupported route: $m /$path"))
@@ -188,7 +181,7 @@ object GraftStatementServer {
     }
     val spark = session
     require(spark != null, "statement server not started")
-    val id = f"graft_${nextId.incrementAndGet()}%08d"
+    val id = f"graft_${queries.nextId()}%08d"
     try {
       // the reference's per-query time.txt records Analysis / Planning
       // / Execution separately (results/q005/workers-1/time.txt);
@@ -213,8 +206,7 @@ object GraftStatementServer {
       val analysisMillis = if (isCmd) 0L else analysisMillisRaw
       val planningMillis = if (isCmd) 0L else planningMillisRaw
       val st = serveState(id, df, analysisMillis, planningMillis)
-      reapIdle()
-      queries.put(id, st)
+      queries.open(id, st, st.cleanup)
       // first response carries no data (the real coordinator's QUEUED
       // page); the client follows nextUri — loader.py handles both
       respond(x, 200, pageJson(st, firstPage = true))
@@ -226,7 +218,7 @@ object GraftStatementServer {
   }
 
   private def fetch(x: HttpExchange, id: String, token: Long): Unit = {
-    val st = queries.get(id)
+    val st = queries.get(id).orNull
     if (st == null) {
       respond(x, 410, errorJson(s"query $id not found or expired"))
       return
@@ -238,16 +230,15 @@ object GraftStatementServer {
           s"invalid fetch token $token for query $id (expected ${st.token})"))
         return
       }
-      st.lastUsed = System.nanoTime()
       st.maybeTouch() // keep the spool visibly live to foreign sweeps
       st.token += 1
       try {
         val out = pageJson(st, firstPage = false)
-        if (!st.rows.hasNext) retire(id)
+        if (!st.rows.hasNext) queries.release(id)
         respond(x, 200, out)
       } catch {
         case scala.util.control.NonFatal(e) =>
-          retire(id)
+          queries.release(id)
           respond(x, 200, failedJson(id,
             Option(e.getMessage).getOrElse(e.toString)))
       }
@@ -272,7 +263,7 @@ object GraftStatementServer {
     *
     * Spool part files are written by `saveAsTextFile` (task-commit
     * rename, so a half-written attempt is never read) and are released
-    * through [[retire]] on every cursor-retirement path. Both the
+    * through [[queries]] on every cursor-retirement path. Both the
     * write AND the read resolve the spool dir through the Hadoop
     * FileSystem API (verdict r17 #1), so an `hdfs://`/`s3a://` spool
     * dir — the documented cluster deployment — works end to end; a
@@ -339,7 +330,7 @@ object GraftStatementServer {
       // timestamp on every store; the sweep keys its age guard off
       // this marker when present.
       touch = () => {
-        // createNonRecursive, NOT create: a touch racing retire()'s
+        // createNonRecursive, NOT create: a touch racing release's
         // recursive delete must FAIL (FileNotFound into maybeTouch's
         // best-effort catch), never re-create the just-deleted dir —
         // create() makes parents, so the plain call could resurrect a
@@ -418,7 +409,7 @@ object GraftStatementServer {
   /** Reclaim spool directories a CRASHED driver left behind (the
     * in-process retirement paths cover everything else). This
     * process's own nonce is excluded (live spools are managed by
-    * [[retire]]); foreign dirs are reclaimed only past a 1 h age guard
+    * [[queries]]); foreign dirs are reclaimed only past a 1 h age guard
     * that live drains keep refreshing ([[QueryState.maybeTouch]]), so
     * a concurrent process sharing the spool dir can never lose a live
     * spool to this sweep. Best-effort housekeeping: a sweep failure
@@ -662,24 +653,4 @@ object GraftStatementServer {
 
   private def errorJson(msg: String): String =
     s"""{"error":{"message":"${esc(msg)}"}}"""
-
-  private def reapIdle(): Unit = {
-    val now = System.nanoTime()
-    val it = queries.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (now - e.getValue.lastUsed > QueryIdleNanos) {
-        it.remove()
-        e.getValue.cleanup()
-      }
-    }
-  }
-
-  private def respond(x: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "application/json")
-    x.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    if (bytes.nonEmpty) x.getResponseBody.write(bytes)
-    x.close()
-  }
 }

@@ -20,26 +20,6 @@ private[graft] object GraftWireConf {
       .getConfString(RuntimeFilterMaxKeysKey, "65536").toInt
     catch { case _: NumberFormatException => 65536 }
 
-  /** Idle window after which a stand-in store reaps an abandoned
-    * cursor (Mongo find cursor / ES scroll). A SYSTEM property, not a
-    * session conf: the sweep runs on server socket/handler threads
-    * that have no active SparkSession, and the window must be one
-    * value for every client of the JVM-shared store. 600 s default —
-    * well past any legitimate inter-getMore gap (GC pause, skewed
-    * task, full-suite contention), matching the statement server's
-    * query-state reap; r15 ADVICE flagged the old 120 s as tight
-    * enough to kill a slow-but-correct scan. */
-  def cursorIdleNanos: Long =
-    try java.lang.Long.parseLong(
-      System.getProperty("graft.wire.cursorIdleSeconds", "600")) *
-      1000L * 1000 * 1000
-    catch { case _: NumberFormatException => 600L * 1000 * 1000 * 1000 }
-
-  /** Reaping is a memory bound, not a protocol behavior: skip the
-    * sweep entirely while the live-cursor population is small so a
-    * handful of slow readers can never be evicted by an eager clock. */
-  val CursorReapMinPopulation = 32
-
   /** Statement-face result SPOOLING (Trino's spooled client protocol
     * shape): when on, a SELECT's result is written executor-side as
     * pre-rendered page lines and the driver streams the spool files

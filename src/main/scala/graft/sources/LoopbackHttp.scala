@@ -1,13 +1,14 @@
 package graft.sources
 
 import java.net.InetSocketAddress
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
-import com.sun.net.httpserver.{HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
 /** The one way graft builds an in-process JDK `HttpServer` (the
   * statement face and the elastic wire stand-in), bound to loopback
-  * and already started.
+  * and already started, and answers on it with [[respond]].
   *
   * Nagle off: the JDK server writes a response's headers and its body
   * as separate segments. With Nagle on, the body segment waits for
@@ -37,5 +38,14 @@ private[graft] object LoopbackHttp {
     starter.start()
     starter.join()
     s
+  }
+
+  /** Send `body` as a JSON response and close the exchange. An empty
+    * body goes out with no content (the statement face's 204). */
+  def respond(x: HttpExchange, code: Int, body: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    x.getResponseHeaders.set("Content-Type", "application/json")
+    x.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
+    try if (bytes.nonEmpty) x.getResponseBody.write(bytes) finally x.close()
   }
 }

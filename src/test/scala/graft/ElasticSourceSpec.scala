@@ -243,9 +243,9 @@ class ElasticSourceSpec extends SparkSpec {
 
   /** Idle-scroll reaping (r15 verdict #3): a crashed client that never
     * pages or DELETEs its scroll must not pin the matched-row iterator
-    * for the JVM's life. The sweep runs on scroll OPEN, only past the
-    * minimum live population, and only evicts cursors idle past the
-    * 600 s window (back-dated via the test hook). */
+    * for the JVM's life. The sweep runs on scroll OPEN and only evicts
+    * cursors idle past the 600 s window (back-dated via the test
+    * hook). */
   test("abandoned scrolls are reaped after the idle window") {
     useRoot(sf1)
     val idx = index(sf1)
@@ -262,13 +262,13 @@ class ElasticSourceSpec extends SparkSpec {
     val first = openScroll()
     // a paging client's touch refreshes lastUsed
     getMore(first)
-    // push the live population past the reap gate (33 more cursors)
+    // a herd of 33 more open cursors
     val herd = (0 until 33).map(_ => openScroll())
-    // below the idle window nothing is evicted even above the gate
+    // below the idle window nothing is evicted
     openScroll()
     assert(getMore(first).contains("_scroll_id"))
     // age EVERY cursor past 600 s; the next scroll open sweeps them
-    GraftElasticServer.ageScrollsForTest(700L * 1000 * 1000 * 1000)
+    GraftElasticServer.scrolls.ageForTest(700L * 1000 * 1000 * 1000)
     val survivor = openScroll()
     val e = intercept[java.io.IOException] { getMore(first) }
     assert(e.getMessage.contains("unknown or expired"), e.getMessage)
@@ -281,6 +281,32 @@ class ElasticSourceSpec extends SparkSpec {
     graft.sources.GraftElasticHttp.send(
       s"${GraftElasticServer.url}/_search/scroll", "DELETE",
       s"""{"scroll_id":["$survivor"]}""")
+  }
+
+  /** Drain and clear-scroll release the scroll: a full sliced scan
+    * (every slice ends on a short page), a LIMIT scan whose readers
+    * close after a full page, and a short first page with no clear all
+    * leave the live count where it was. */
+  test("drained and early-closed scrolls are released") {
+    useRoot(sf1)
+    val before = GraftElasticServer.scrolls.liveCount
+    val all = spark.sql("SELECT doc_id FROM elastic.default.documents").collect()
+    assert(all.nonEmpty)
+    assert(GraftElasticServer.scrolls.liveCount == before,
+      "a full scan left its slices' scrolls open")
+    spark.conf.set("spark.sql.catalog.esearly",
+      "graft.sources.GraftElasticCatalog")
+    spark.conf.set("spark.sql.catalog.esearly.pageSize", "7")
+    val some = spark.sql("SELECT doc_id FROM esearly.default.documents LIMIT 3")
+      .collect()
+    assert(some.length == 3)
+    assert(GraftElasticServer.scrolls.liveCount == before,
+      "readers that closed early left their scrolls open")
+    // a client that stops at the short page and never clears the scroll
+    GraftElasticHttp.send(s"${GraftElasticServer.url}/${index(sf1)}/_search?scroll=1m",
+      "POST", """{"size":10000,"query":{"match_all":{}}}""")
+    assert(GraftElasticServer.scrolls.liveCount == before,
+      "a drained scroll stayed registered")
   }
 
   /** `terms` type bracketing (r15 ADVICE): booleans and nulls must not

@@ -64,6 +64,6 @@ class HarnessSpec extends SparkSpec {
       assert(new File(dir, "part-00001").exists() && new File(dir, "_SUCCESS").exists())
       Harness.cached(dir.getPath)(build)
       assert(builds == 1)
-    } finally Harness.rmTree(dir)
+    } finally LocalFiles.rmTree(dir)
   }
 }

@@ -499,6 +499,28 @@ class StatementServerSpec extends SparkSpec {
       "cancel leaked an open fd into the deleted spool dir")
   }
 
+  /** The idle sweep: a statement abandoned mid-drain and idle past
+    * the window is retired by the next POST, which releases its spool
+    * dir and leaves its nextUri answering 410 Gone. */
+  test("an abandoned statement is retired by the idle sweep at the next POST") {
+    spark.conf.set("spark.sql.graft.root", sf2)
+    val (_, first) = http("POST", s"$base/v1/statement",
+      Some("SELECT o_orderkey FROM mongodb.tpcds.orders"),
+      Map("X-Trino-User" -> "spec"))
+    var j = mapper.readTree(first)
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      GraftStatementServer.spoolDirName(j.get("id").asText))
+    val (_, page) = http("GET", j.get("nextUri").asText, None)
+    j = mapper.readTree(page)
+    assert(j.has("nextUri") && dir.isDirectory, page.take(200))
+    GraftStatementServer.queries.ageForTest(700L * 1000 * 1000 * 1000)
+    assert(dir.isDirectory, "aging alone must not retire the statement")
+    assert(runSql("SELECT 1")._2.map(_.head.asInt) == Seq(1))
+    assert(!dir.exists, s"spool dir $dir survived the idle sweep")
+    val (code, _) = http("GET", j.get("nextUri").asText, None)
+    assert(code == 410)
+  }
+
   /** ADVICE r17: a spool JOB failure (runtime error inside the save)
     * must delete its partial dir before the failedJson response — the
     * orphan sweep only runs at start() and is 1 h age-guarded, so a
