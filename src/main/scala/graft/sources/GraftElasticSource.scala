@@ -236,10 +236,7 @@ private[graft] class GraftElasticScanBuilder(url: String, index: String,
             case (_, d: Double) => arr.add(d)
             case _ => ()
           }
-          val inner = mapper.createObjectNode()
-          inner.set[ArrayNode](c, arr)
-          val outer = mapper.createObjectNode()
-          outer.set[ObjectNode]("terms", inner); outer
+          one("terms")(_.set[ArrayNode](c, arr))
         } else None
       case GreaterThan(c, v) => lit(c, v).map { case (col, tv) =>
         one("range")(n => { val r = mapper.createObjectNode()
@@ -314,58 +311,20 @@ private[graft] class GraftElasticScanBuilder(url: String, index: String,
         .Expressions.column(f.name))
 
     /** Runtime filters arrive as V2 `IN(col, v1..vn)` predicates (the
-      * evaluated DPP subquery). Accepted only when every literal is
-      * typed-exact for the column AND the key set is within
-      * [[GraftWireConf.runtimeFilterMaxKeys]] — past that the terms
-      * clause stops being selective enough to pay its request bytes
-      * (ES additionally hard-caps terms at 65k; Trino sizes its
-      * dynamic filters the same way). Unknown shapes are ignored —
-      * runtime filtering is an optimization, never a correctness
-      * gate. */
+      * evaluated DPP subquery). [[GraftWireConf.admitRuntimeFilters]]
+      * — the rule the jdbc and mongodb scans share — admits IN-sets
+      * within [[GraftWireConf.runtimeFilterMaxKeys]] keys (past that
+      * the terms clause stops being selective enough to pay its
+      * request bytes; ES additionally hard-caps terms at 65k, and
+      * Trino sizes its dynamic filters the same way). Each admitted
+      * predicate goes through Spark's V2 → V1 translation into the
+      * compile-time `render`, so only typed-exact IN-sets become a
+      * `terms` clause. Unknown shapes are ignored — runtime filtering
+      * is an optimization, never a correctness gate. */
     override def filter(predicates: Array[
-        org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-      val maxKeys = GraftWireConf.runtimeFilterMaxKeys
-      val rendered = predicates.toSeq.flatMap { p =>
-        if (p.name() != "IN" || p.children().isEmpty ||
-          p.children().length - 1 > maxKeys) None
-        else p.children().head match {
-          case ref: org.apache.spark.sql.connector.expressions.NamedReference
-              if ref.fieldNames().length == 1 =>
-            val colName = ref.fieldNames().head
-            full.fields.find(_.name == colName).flatMap { fd =>
-              val lits: Seq[Option[Any]] = p.children().tail.toSeq.map {
-                case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-                  (fd.dataType, l.value) match {
-                    case (StringType, s: UTF8String) => Some(s.toString)
-                    case (LongType, n: Long) => Some(n)
-                    case (LongType, n: Int) => Some(n.toLong)
-                    case (IntegerType, n: Int) => Some(n)
-                    case (DoubleType, d: Double) => Some(d)
-                    case _ => None
-                  }
-                case _ => None
-              }
-              if (lits.nonEmpty && lits.forall(_.isDefined)) Some {
-                val arr = mapper.createArrayNode()
-                lits.flatten.foreach {
-                  case s: String => arr.add(s)
-                  case l: Long => arr.add(l)
-                  case i: Int => arr.add(i)
-                  case d: Double => arr.add(d)
-                  case _ => ()
-                }
-                val inner = mapper.createObjectNode()
-                inner.set[ArrayNode](colName, arr)
-                val outer = mapper.createObjectNode()
-                outer.set[ObjectNode]("terms", inner)
-                outer
-              } else None
-            }
-          case _ => None
-        }
-      }
-      if (rendered.nonEmpty) runtime = runtime ++ rendered
-    }
+        org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+      runtime = runtime ++ GraftWireConf.admitRuntimeFilters(predicates, full)
+        .flatMap(org.apache.spark.sql.GraftBridge.toV1).flatMap(render)
 
     override def readSchema(): StructType = required
     override def description(): String =

@@ -36,9 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    SQL rendering); unsupported conjuncts stay Spark-side residuals.
   *  - RUNTIME: the evaluated build-side IN-set arrives through
   *    [[SupportsRuntimeV2Filtering]] and folds into the WHERE as an
-  *    `IN (…)` — capped at [[GraftWireConf.runtimeFilterMaxKeys]] keys
-  *    like the mongo `$in` / elastic `terms` seams (an unselective set
-  *    is dropped, never shipped; the join stays correct Spark-side).
+  *    `IN (…)` — admitted by the same [[GraftWireConf.admitRuntimeFilters]]
+  *    rule as the mongo `$in` / elastic `terms` seams (an unselective
+  *    set is dropped, never shipped; the join stays correct Spark-side).
   *    At 100 TB this is the difference between reading the store's
   *    whole fact selection and probing its key index.
   *  - PARALLELISM: optional `partitionColumn`+`numPartitions` options
@@ -233,37 +233,17 @@ private[graft] class GraftJdbcScanBuilder(url: String, fqn: String,
     override def filterAttributes(): Array[NamedReference] =
       required.fields.map(f => Expressions.column(f.name))
 
-    /** Runtime filters arrive as evaluated V2 `IN(col, …)` predicates.
-      * Accepted when the dialect can compile them AND the key count is
-      * within [[GraftWireConf.runtimeFilterMaxKeys]] — past that the
-      * IN-list stops being selective enough to pay its SQL bytes and
-      * the store-side probe work (the same sizing discipline as the
-      * mongo/elastic seams, and Trino's own dynamic-filter caps).
-      * Unknown shapes are ignored: runtime filtering is an
-      * optimization, never a correctness gate. */
+    /** Runtime filters arrive as evaluated V2 `IN(col, …)` predicates;
+      * [[GraftWireConf.admitRuntimeFilters]] (the rule the mongodb and
+      * elastic scans share) admits the IN-sets within
+      * [[GraftWireConf.runtimeFilterMaxKeys]] keys with the column in
+      * the store's spelling, and each one the dialect compiles folds
+      * into the WHERE. Unknown shapes are ignored: runtime filtering is
+      * an optimization, never a correctness gate. */
     override def filter(predicates: Array[Predicate]): Unit = {
-      val maxKeys = GraftWireConf.runtimeFilterMaxKeys
-      val accepted = predicates.toSeq.flatMap { p =>
-        if (p.name() == "IN" && p.children().length - 1 > maxKeys) None
-        else dialect.compileExpression(canonicalize(p))
-      }
+      val accepted = GraftWireConf.admitRuntimeFilters(predicates, full)
+        .flatMap(dialect.compileExpression(_))
       if (accepted.nonEmpty) runtimeSql = runtimeSql ++ accepted
-    }
-
-    /** Runtime predicates carry the column name AS THE USER TYPED it
-      * (Spark resolves case-insensitively but keeps the query's
-      * spelling, and — unlike compile-time pushdown — the runtime
-      * path never normalizes it back to the relation schema). The
-      * store quotes identifiers, so rewrite each reference to the
-      * schema's canonical case before compiling. */
-    private def canonicalize(p: Predicate): Predicate = {
-      val children = p.children().map {
-        case ref: NamedReference if ref.fieldNames().length == 1 =>
-          full.fields.find(_.name.equalsIgnoreCase(ref.fieldNames().head))
-            .map(fd => Expressions.column(fd.name)).getOrElse(ref)
-        case other => other
-      }
-      new Predicate(p.name(), children)
     }
 
     override def readSchema(): StructType = required

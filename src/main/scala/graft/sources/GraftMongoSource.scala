@@ -576,25 +576,6 @@ private[graft] class GraftMongoScanBuilder(host: String, port: Int,
     else Some(BDoc("$and" -> (rendered: Seq[Any])))
   }
 
-  /** Catalyst-INTERNAL literal (from a V2 runtime predicate) → wire
-    * value, typed-strict per the column's storage encoding (strings
-    * arrive as UTF8String, timestamps as epoch-micros longs). */
-  private def runtimeLit(c: MongoCol, v: Any): Option[Any] =
-    (c.enc, v) match {
-      case (_, null) => None
-      case ("long", n: Long) => Some(n)
-      case ("long", n: Int) => Some(n.toLong)
-      case ("int", n: Int) => Some(n)
-      case ("double", d: Double) => Some(d)
-      case ("string", s: UTF8String) => Some(s.toString)
-      case ("string", s: String) => Some(s)
-      case ("bool", b: Boolean) => Some(b)
-      case ("date_ms", us: Long) if us % 1000 == 0 =>
-        Some(BsonDate(Math.floorDiv(us, 1000L)))
-      case ("epoch_us", us: Long) => Some(us)
-      case _ => None
-    }
-
   override def build(): Scan = new Scan with Batch
       with SupportsReportStatistics
       with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
@@ -622,35 +603,20 @@ private[graft] class GraftMongoScanBuilder(host: String, port: Int,
           .Expressions.column(c.name)).toArray
 
     /** Runtime filters arrive as V2 `IN(col, v1..vn)` predicates (the
-      * evaluated DPP subquery). Accepted only when every literal is
-      * typed-exact for the column AND the key set is within
-      * [[GraftWireConf.runtimeFilterMaxKeys]] — past that the IN-set
-      * stops being selective enough to pay its wire bytes and the
-      * store's per-doc membership work (Trino sizes its dynamic
-      * filters the same way). Unknown shapes are ignored — runtime
-      * filtering is an optimization, never a correctness gate. */
+      * evaluated DPP subquery). [[GraftWireConf.admitRuntimeFilters]]
+      * — the rule the jdbc and elastic scans share — admits IN-sets
+      * within [[GraftWireConf.runtimeFilterMaxKeys]] keys (past that
+      * the IN-set stops being selective enough to pay its wire bytes
+      * and the store's per-doc membership work; Trino sizes its
+      * dynamic filters the same way). Each admitted predicate goes
+      * through Spark's V2 → V1 translation into the compile-time
+      * `render`, so only typed-exact IN-sets fold into the find
+      * document. Unknown shapes are ignored — runtime filtering is an
+      * optimization, never a correctness gate. */
     override def filter(predicates: Array[
         org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-      val maxKeys = GraftWireConf.runtimeFilterMaxKeys
-      val rendered = predicates.toSeq.flatMap { p =>
-        if (p.name() != "IN" || p.children().isEmpty ||
-          p.children().length - 1 > maxKeys) None
-        else p.children().head match {
-          case ref: org.apache.spark.sql.connector.expressions.NamedReference
-              if ref.fieldNames().length == 1 =>
-            byName.get(ref.fieldNames().head).flatMap { c =>
-              val lits = p.children().tail.toSeq.map {
-                case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-                  runtimeLit(c, l.value)
-                case _ => None
-              }
-              if (lits.nonEmpty && lits.forall(_.isDefined))
-                Some(BDoc(c.name -> BDoc("$in" -> (lits.flatten: Seq[Any]))))
-              else None
-            }
-          case _ => None
-        }
-      }
+      val rendered = GraftWireConf.admitRuntimeFilters(predicates, full)
+        .flatMap(org.apache.spark.sql.GraftBridge.toV1).flatMap(render)
       if (rendered.nonEmpty) {
         runtime = runtime ++ rendered
         planned = null // re-plan with the narrowed filter

@@ -1,12 +1,18 @@
 package graft.sources
 
-/** Session-tunable knobs shared by the wire connectors (mongodb /
-  * elastic). Read at use time from the active session's SQLConf so a
-  * `SET` takes effect without rebuilding catalogs. */
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.types.StructType
+
+/** Session-tunable knobs shared by the wire connectors (jdbc, mongodb,
+  * elastic) and the statement face. Read at use time from the active
+  * session's SQLConf so a `SET` takes effect without rebuilding
+  * catalogs. */
 private[graft] object GraftWireConf {
 
   /** Max literal count a runtime dynamic filter may fold into a wire
-    * request (`$in` find clause / `terms` bool.filter clause). Past
+    * request (jdbc `IN (…)` WHERE clause / mongodb `$in` find clause /
+    * elastic `terms` bool.filter clause). Past
     * this the key set is no longer selective enough to pay its wire
     * bytes and the store-side membership work — the same sizing
     * discipline Trino applies to its dynamic filters (and ES itself
@@ -19,6 +25,31 @@ private[graft] object GraftWireConf {
     try org.apache.spark.sql.internal.SQLConf.get
       .getConfString(RuntimeFilterMaxKeysKey, "65536").toInt
     catch { case _: NumberFormatException => 65536 }
+
+  /** The one admission rule for runtime dynamic filters, shared by the
+    * jdbc, mongodb and elastic scans: only `IN` predicates with at
+    * most [[runtimeFilterMaxKeys]] literals go over the wire. Runtime
+    * predicates carry the column AS THE USER TYPED it (Spark resolves
+    * case-insensitively but keeps the query's spelling, and — unlike
+    * compile-time pushdown — the runtime path never normalizes it back
+    * to the relation schema), so each single-part reference is
+    * rewritten to `schema`'s spelling; each scan then translates what
+    * is admitted with its own compile-time renderer. */
+  def admitRuntimeFilters(predicates: Array[Predicate],
+      schema: StructType): Seq[Predicate] = {
+    val maxKeys = runtimeFilterMaxKeys
+    predicates.toSeq.filter { p =>
+      p.name() == "IN" && p.children().nonEmpty &&
+        p.children().length - 1 <= maxKeys
+    }.map { p =>
+      new Predicate(p.name(), p.children().map {
+        case ref: NamedReference if ref.fieldNames().length == 1 =>
+          schema.fields.find(_.name.equalsIgnoreCase(ref.fieldNames().head))
+            .map(fd => Expressions.column(fd.name)).getOrElse(ref)
+        case other => other
+      })
+    }
+  }
 
   /** Statement-face result SPOOLING (Trino's spooled client protocol
     * shape): when on, a SELECT's result is written executor-side as

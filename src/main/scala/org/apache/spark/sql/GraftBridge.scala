@@ -25,6 +25,11 @@ object GraftBridge {
   def v2Literal(v: Any, dt: DataType)
       : org.apache.spark.sql.connector.expressions.Literal[Any] =
     org.apache.spark.sql.connector.expressions.LiteralValue(v, dt)
+  /** Spark's own V2 → V1 predicate translation (literals converted to
+    * external Scala values), so the mongodb and elastic scans render a
+    * runtime filter with their compile-time V1 renderer. */
+  def toV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate)
+      : Option[sources.Filter] = internal.connector.PredicateUtils.toV1(p)
   /** Render a DataFrame's rows to strings EXECUTOR-side through the
     * df's OWN QueryExecution (`toRdd`), so the SQL metrics of the
     * already-planned tree keep accumulating — `Dataset.rdd` would

@@ -241,6 +241,77 @@ class ElasticSourceSpec extends SparkSpec {
     } finally conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
   }
 
+  /** Runtime predicates name the column AS THE QUERY SPELLED it; the
+    * shared admission rule maps it back to the schema's spelling, so a
+    * case-mismatched join key (`spark.sql.caseSensitive` stays false)
+    * still becomes a `terms` clause. */
+  test("a runtime filter on a key spelled in another case reaches the wire") {
+    useRoot(sf1)
+    val idx = index(sf1)
+    val root = java.nio.file.Files.createTempDirectory("graft-es-case").toString
+    val conf = spark.conf
+    conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
+    try {
+      val keys = Seq(2L, 5L, 8L)
+      Tables.documents(spark, sf1).select(col("doc_id").as("dkey"))
+        .withColumn("pick", when(col("dkey").isin(keys: _*), 1).otherwise(0))
+        .write.mode("overwrite").parquet(s"$root/dim")
+      val dim = spark.read.parquet(s"$root/dim").filter(col("pick") === 1)
+      val fact = spark.table("elastic.default.documents")
+        .select(col("DOC_ID"), col("n_chars"))
+      val q = fact.join(dim, col("DOC_ID") === col("dkey"))
+        .agg(sum(col("n_chars")).as("s"))
+      val rows = q.collect()
+      val body = GraftElasticServer.lastSearchBody(idx).get
+      assert(body.contains(""""terms":{"doc_id":"""), body)
+      keys.foreach(k => assert(body.contains(k.toString), s"key $k absent: $body"))
+      val expect = Tables.documents(spark, sf1)
+        .filter(col("doc_id").isin(keys: _*))
+        .agg(sum(col("n_chars"))).head.getLong(0)
+      assert(rows.length == 1 && rows(0).getLong(0) == expect,
+        s"got ${rows.mkString}, expected $expect")
+    } finally conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+  }
+
+  /** The runtime-filter SIZE guard: past
+    * `spark.sql.graft.wire.runtimeFilterMaxKeys` literals the IN-set
+    * is not folded into the request body, and the join stays correct
+    * Spark-side (runtime filtering is an optimization). */
+  test("an oversized runtime IN-set is not sent over the wire") {
+    useRoot(sf1)
+    val idx = index(sf1)
+    val root = java.nio.file.Files.createTempDirectory("graft-es-cap").toString
+    val conf = spark.conf
+    conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
+    conf.set("spark.sql.graft.wire.runtimeFilterMaxKeys", "2")
+    try {
+      val keys = Seq(2L, 5L, 8L) // 3 keys > cap of 2
+      Tables.documents(spark, sf1).select(col("doc_id").as("dkey"))
+        .withColumn("pick", when(col("dkey").isin(keys: _*), 1).otherwise(0))
+        .write.mode("overwrite").parquet(s"$root/dim")
+      val dim = spark.read.parquet(s"$root/dim").filter(col("pick") === 1)
+      val fact = spark.table("elastic.default.documents")
+        .select("doc_id", "n_chars")
+      val q = fact.join(dim, col("doc_id") === col("dkey"))
+        .agg(sum(col("n_chars")).as("s"))
+      val rows = q.collect()
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.toLowerCase.contains("dynamicpruning"),
+        s"no runtime filter planned into the elastic scan:\n$plan")
+      val body = GraftElasticServer.lastSearchBody(idx).get
+      assert(!body.contains(""""terms""""),
+        s"oversized runtime IN-set crossed the wire: $body")
+      val expect = Tables.documents(spark, sf1)
+        .filter(col("doc_id").isin(keys: _*))
+        .agg(sum(col("n_chars"))).head.getLong(0)
+      assert(rows.length == 1 && rows(0).getLong(0) == expect,
+        s"got ${rows.mkString}, expected $expect")
+    } finally {
+      conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+      conf.unset("spark.sql.graft.wire.runtimeFilterMaxKeys")
+    }
+  }
+
   /** Idle-scroll reaping (r15 verdict #3): a crashed client that never
     * pages or DELETEs its scroll must not pin the matched-row iterator
     * for the JVM's life. The sweep runs on scroll OPEN and only evicts

@@ -442,6 +442,37 @@ class MongoSourceSpec extends SparkSpec {
     }
   }
 
+  /** Runtime predicates name the column AS THE QUERY SPELLED it; the
+    * shared admission rule maps it back to the schema's spelling, so a
+    * case-mismatched join key (`spark.sql.caseSensitive` stays false)
+    * still folds its IN-set into the find document. */
+  test("a runtime filter on a key spelled in another case reaches the wire") {
+    useRoot(sf1)
+    val root = java.nio.file.Files.createTempDirectory("graft-mongo-case").toString
+    val conf = spark.conf
+    conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
+    try {
+      val keys = Seq(3L, 7L, 11L)
+      Tables.customer(spark, sf1).select(col("c_custkey").as("ckey"))
+        .withColumn("pick", when(col("ckey").isin(keys: _*), 1).otherwise(0))
+        .write.mode("overwrite").parquet(s"$root/dim")
+      val dim = spark.read.parquet(s"$root/dim").filter(col("pick") === 1)
+      val fact = spark.table("mongodb.tpcds.orders")
+        .select(col("O_CUSTKEY"), col("o_totalprice"))
+      val q = fact.join(dim, col("O_CUSTKEY") === col("ckey"))
+        .agg(sum(col("o_totalprice")).as("s"))
+      val rows = q.collect()
+      val body = GraftMongoServer.lastFind("orders").get
+      assert(body.contains(""""o_custkey":{"$in":"""), body)
+      keys.foreach(k => assert(body.contains(k.toString), s"key $k absent: $body"))
+      val expect = Tables.orders(spark, sf1)
+        .filter(col("o_custkey").isin(keys: _*))
+        .agg(sum(col("o_totalprice"))).head.getDouble(0)
+      assert(rows.length == 1 && math.abs(rows(0).getDouble(0) - expect) < 1e-6,
+        s"got ${rows.mkString}, expected $expect")
+    } finally conf.unset("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+  }
+
   test("unknown commands and operators fail loudly, never match-all") {
     useRoot(sf1)
     val (host, port) = GraftMongoServer.address
