@@ -312,7 +312,10 @@ object Harness {
     // five checkpoint/release cycles whose blocks live in executor
     // JVMs; s17 feeds it from a corpus pass, s20 from the full stored-
     // index pipeline (build + DPP probe + eligible semi-join upstream)
-    "s17_ann_mmr", "s20_retrieval_pipeline")
+    "s17_ann_mmr", "s20_retrieval_pipeline",
+    // the BPE trainer's mapPartitions closure must serialize into
+    // executor JVMs
+    "p09_bpe_encode")
 
   private def cluster(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

@@ -4,6 +4,7 @@ import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Training-data pipeline operators beyond dedup/similarity: test-set
   * decontamination, stratified sampling, token-aware sequence packing,
@@ -330,6 +331,7 @@ object Pipeline {
   }
 
   private val bpeSteps = 10
+  private val bpeDelim = "\u001F" // chr(31); never occurs in document text
 
   /** The shared oracle prelude: lexicon word frequencies wrapped into
     * the delimiter encoding, then the [[bpeSteps]] merge rounds
@@ -369,100 +371,122 @@ object Pipeline {
         |FROM occ JOIN enc USING (w) WHERE w <> ''
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** BPE merge-training core over a (w, n) word-frequency relation.
+  /** The corpus lexicon: one (w, n) row per distinct non-empty word. */
+  private def bpeLexicon(docs: org.apache.spark.sql.DataFrame) =
+    docs
+      .select(explode(ws).as("w"))
+      .filter(col("w") =!= "")
+      .groupBy(col("w")).agg(count(lit(1)).as("n"))
+
+  /** BPE merge training over ONE partition's (w, ws, n) rows, `ws`
+    * being w in the delimiter encoding (see [[bpeMerges]]) and w, ws
+    * their raw UTF-8 bytes. Runs `steps` rounds in memory and returns
+    * the learned (step, pa, pb, cnt) rules plus every word's final
+    * (w, token count).
+    *
+    * Each round calls the very `UTF8String` methods the SQL round
+    * would: `substringSQL`/`numChars`/`split(_, -1)` (Substring, Length,
+    * StringSplit) to read the symbols, `compareTo` (the binary sort) for
+    * the tie-break — count desc, then pa, pb in UTF-8 byte order, which
+    * is also DuckDB's — and `replace` (StringReplace) for the merge, so
+    * the rules and the leftmost-nonoverlapping merge equal the SQL
+    * formulation by construction. A word's symbols are re-read only
+    * when a merge changed it (`replace` returns its receiver when
+    * nothing matches). */
+  private[graft] def bpeTrainTask(
+      rows: Iterator[(Array[Byte], Array[Byte], Long)],
+      steps: Int): (Seq[(Long, UTF8String, UTF8String, Long)], Seq[(Array[Byte], Int)]) = {
+    val S = UTF8String.fromString(bpeDelim)
+    val SS = UTF8String.concat(S, S)
+    def symbols(ws: UTF8String) = ws.substringSQL(2, ws.numChars - 2).split(SS, -1)
+    val in = rows.toArray
+    val words = in.map(r => UTF8String.fromBytes(r._2))
+    val syms = words.map(symbols)
+    val rules = Seq.newBuilder[(Long, UTF8String, UTF8String, Long)]
+    for (step <- 1 to steps) {
+      val counts = scala.collection.mutable.HashMap.empty[(UTF8String, UTF8String), Long]
+      for (i <- in.indices; sy = syms(i); j <- 0 until sy.length - 1) {
+        val k = (sy(j), sy(j + 1))
+        counts(k) = counts.getOrElse(k, 0L) + in(i)._3
+      }
+      if (counts.nonEmpty) {
+        val ((pa, pb), c) = counts.reduce { (x, y) =>
+          val o = if (x._2 != y._2) java.lang.Long.compare(y._2, x._2)
+            else if (x._1._1 != y._1._1) x._1._1.compareTo(y._1._1)
+            else x._1._2.compareTo(y._1._2)
+          if (o <= 0) x else y
+        }
+        rules += ((step.toLong, pa, pb, c))
+        val from = UTF8String.concat(S, pa, S, S, pb, S)
+        val to = UTF8String.concat(S, pa, pb, S)
+        for (i <- words.indices) {
+          val next = words(i).replace(from, to)
+          if (next ne words(i)) { words(i) = next; syms(i) = symbols(next) }
+        }
+      }
+    }
+    (rules.result(), in.indices.map(i => (in(i)._1, syms(i).length)))
+  }
+
+  /** A (w, n) word-frequency relation as [[bpeTrainTask]]'s input: one
+    * partition of (w, ws, n) rows. The `(.)` wrap stays the SQL
+    * `regexp_replace` (Java's `.` skips line terminators), and w, ws
+    * cross into the task as binary — a string↔binary cast is the
+    * identity on the UTF-8 bytes. */
+  private def bpeTaskInput(words: org.apache.spark.sql.DataFrame) = {
+    import words.sparkSession.implicits._
+    words.repartition(1)
+      .select(col("w").cast("binary"),
+        regexp_replace(col("w"), "(.)", bpeDelim + "$1" + bpeDelim).cast("binary"),
+        col("n"))
+      .as[(Array[Byte], Array[Byte], Long)]
+  }
+
+  /** BPE merge-training core over a (w, n) word-frequency relation, one
+    * row per distinct non-null word.
     *
     * Symbol sequences are encoded as a single STRING with every symbol
     * wrapped in a U+001F delimiter pair ("ab" → ␟a␟␟b␟), so applying a
-    * merge is one codegen'd literal `replace` of ␟a␟␟b␟ with ␟ab␟ —
-    * and because each symbol carries its OWN delimiters, consecutive
-    * matches share no boundary characters, which makes SQL replace's
-    * leftmost-nonoverlapping scan EXACTLY standard BPE merge semantics
-    * ("aaa" + (a,a) → "aa","a") in both engines with no regex and no
-    * UDF.
+    * merge is one literal `replace` of ␟a␟␟b␟ with ␟ab␟ — and because
+    * each symbol carries its OWN delimiters, consecutive matches share
+    * no boundary characters, which makes replace's leftmost-
+    * nonoverlapping scan EXACTLY standard BPE merge semantics ("aaa" +
+    * (a,a) → "aa","a") — the same literal replace the DuckDB oracle
+    * replays.
     *
-    * Each round: explode adjacent pairs (lexicon-bounded, see below),
-    * one grouped count, one TakeOrdered argmax — a single winner row
-    * read on the driver (the p02-quota O(1) pattern), then a map-side
-    * replace + `localCheckpoint`. The checkpoint per round is the
-    * d03/Clustering posture: it truncates the 10-round lineage (no
-    * quadratic plan re-derivation, no re-execution of earlier rounds'
-    * argmax jobs) and its blocks are ContextCleaner-released; an
-    * executor lost mid-round recomputes that round's stage.
+    * One lazy plan, no job at build time: the relation is gathered
+    * into one partition and [[bpeTrainTask]] runs all `steps` rounds
+    * in that task, emitting one (step, pa, pb, merged, cnt) row per
+    * learned rule. Bound: the unthresholded lexicon, one row per
+    * distinct word, fits one task — the relation p09 already broadcasts
+    * whole to every executor. The corpus is touched once, by the
+    * caller's word-frequency aggregate (Zipfian, so map-side partials
+    * absorb most of it); each round is linear in the lexicon's total
+    * character count, never in the corpus.
     *
-    * Scale: the corpus is touched ONCE (the word-frequency aggregate a
-    * caller supplies — Zipfian, so map-side partials absorb most of
-    * it). Every merge round is bounded by the LEXICON's total character
-    * count (Σ |word| over distinct words — ~10⁶–10⁷ rows at any corpus
-    * size), not the corpus: pair counting stays corpus-linear overall
-    * and vocab-linear per round. */
+    * Degenerate input: an empty relation, or one whose words all have
+    * one character (no adjacent pair), learns 0 rules. */
   private[graft] def bpeMerges(
       words0: org.apache.spark.sql.DataFrame, steps: Int): org.apache.spark.sql.DataFrame = {
-    val s = words0.sparkSession
-    import s.implicits._
-    bpeTrainRounds(words0, steps).toDF("step", "pa", "pb", "merged", "cnt")
+    import words0.sparkSession.implicits._
+    bpeTaskInput(words0)
+      .mapPartitions(rows => bpeTrainTask(rows, steps)._1.iterator.map {
+        case (step, pa, pb, c) =>
+          (step, pa.getBytes, pb.getBytes, UTF8String.concat(pa, pb).getBytes, c)
+      })
+      .select(col("_1").as("step"), col("_2").cast("string").as("pa"),
+        col("_3").cast("string").as("pb"), col("_4").cast("string").as("merged"),
+        col("_5").as("cnt"))
       .orderBy(col("step"))
-  }
-
-  /** The training loop behind [[bpeMerges]], returning the learned
-    * rounds as local (step, pa, pb, merged, cnt) rows -- each round's
-    * winner is a single driver-read row by construction, so the rule
-    * list is driver-local for free and p09's encoder can splice the
-    * merges into a literal replace chain. */
-  private[graft] def bpeTrainRounds(
-      words0: org.apache.spark.sql.DataFrame,
-      steps: Int): Seq[(Long, String, String, String, Long)] = {
-    val S = "\u001F" // chr(31); never occurs in document text
-    var words = words0
-      .select(regexp_replace(col("w"), "(.)", S + "$1" + S).as("ws"), col("n"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Long, String, String, String, Long)]
-    for (step <- 1 to steps) {
-      val winner = words
-        .select(col("n"),
-          split(col("ws").substr(lit(2), length(col("ws")) - 2), S + S).as("sy"))
-        .filter(size(col("sy")) >= 2)
-        .select(col("n"), col("sy"),
-          explode(sequence(lit(1), size(col("sy")) - 1)).as("i"))
-        .select(col("n"), element_at(col("sy"), col("i")).as("pa"),
-          element_at(col("sy"), col("i") + 1).as("pb"))
-        .groupBy(col("pa"), col("pb")).agg(sum(col("n")).as("c"))
-        .orderBy(col("c").desc, col("pa"), col("pb"))
-        .limit(1).collect()
-      if (winner.nonEmpty) {
-        val (pa, pb, c) =
-          (winner(0).getString(0), winner(0).getString(1), winner(0).getLong(2))
-        merges += ((step.toLong, pa, pb, pa + pb, c))
-        val next = words
-          .select(replace(col("ws"), lit(S + pa + S + S + pb + S),
-            lit(S + pa + pb + S)).as("ws"), col("n"))
-          .localCheckpoint()
-        // the superseded word-table snapshot is dead once the merged
-        // one materializes — release it now (Spark frees checkpoint
-        // blocks only on GC; without this the loop holds one
-        // LEXICON-sized snapshot per learned rule, the d20-at-r18
-        // residency class)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(words)
-        words = next
-      }
-    }
-    // the rule list is already driver-local; the final snapshot's
-    // blocks are not part of the result
-    org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(words)
-    merges.result()
   }
 
   /** BPE-merge tokenizer training: learn the first 10 merge rules from
     * corpus word frequencies — the capstone on p07's vocabulary
-    * (Sennrich et al. 2016's algorithm, driver-coordinated the way
-    * Clustering's k-means is: one bounded relational job per round).
-    * Deterministic tiebreak: count desc, then pair lexicographic. */
+    * (Sennrich et al. 2016's algorithm), all rounds in one task over
+    * the lexicon (see [[bpeMerges]]). Deterministic tiebreak: count
+    * desc, then pair in UTF-8 byte order. */
   val bpeTrain: QueryEntry = QueryEntry("p08_bpe_train", bpeOracle) { (s, d) =>
-    bpeMerges(
-      Tables.documents(s, d)
-        .select(explode(ws).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("n")),
-      bpeSteps)
+    bpeMerges(bpeLexicon(Tables.documents(s, d)), bpeSteps)
   }
 
   /** BPE tokenizer APPLICATION (p09) — encode the corpus with the
@@ -470,34 +494,26 @@ object Pipeline {
     * trained tokenizer (the sizing signal every training pipeline
     * needs before packing/pricing a corpus).
     *
-    * The encode is LEXICON-bounded, never corpus-bounded: each
-    * distinct word is wrapped into the delimiter encoding and pushed
-    * through the [[bpeSteps]] merges as one chained, codegen'd
-    * literal-replace expression (no per-round jobs — the rules are
-    * already driver-local from training), and the corpus only pays a
-    * broadcast join of (word → token count) onto its word
-    * occurrences plus one doc_id-keyed aggregation. At 100 TB the
-    * lexicon is ~10⁶–10⁷ rows regardless of corpus size, so encoding
-    * work is a rounding error next to the occurrence scan, and no
-    * document text ever crosses an exchange. Greedy left-to-right
-    * merge application is exactly SQL replace's leftmost-
-    * nonoverlapping scan in both engines (see [[bpeMerges]]), so the
-    * token counts are exact-oracled. */
+    * The encode is LEXICON-bounded, never corpus-bounded: the training
+    * task (see [[bpeMerges]], same one-task bound) emits every lexicon
+    * word's token count from its final merged form — greedy
+    * left-to-right merge application is exactly the training merges —
+    * and that (w, toks) relation is the broadcast side of a join onto
+    * the corpus word occurrences, followed by one doc_id-keyed
+    * aggregation. The corpus word-count aggregate runs once, no
+    * document text ever crosses an exchange, and the token counts are
+    * exact-oracled.
+    *
+    * Degenerate input: an empty corpus gives an empty result; a corpus
+    * whose words all have one character learns no rules, so each word
+    * counts one token per character. */
   val bpeEncode: QueryEntry = QueryEntry("p09_bpe_encode", bpeEncodeOracle) { (s, d) =>
-    val S = "\u001F"
-    val lex = Tables.documents(s, d)
-      .select(explode(ws).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-    val rules = bpeTrainRounds(lex, bpeSteps)
-    var wsCol: org.apache.spark.sql.Column =
-      regexp_replace(col("w"), "(.)", S + "$1" + S)
-    rules.foreach { case (_, pa, pb, _, _) =>
-      wsCol = replace(wsCol, lit(S + pa + S + S + pb + S), lit(S + pa + pb + S))
-    }
-    val enc = lex.select(col("w"),
-      size(split(wsCol.substr(lit(2), length(wsCol) - 2), S + S)).as("toks"))
-    Tables.documents(s, d)
+    import s.implicits._
+    val docs = Tables.documents(s, d)
+    val enc = bpeTaskInput(bpeLexicon(docs))
+      .mapPartitions(rows => bpeTrainTask(rows, bpeSteps)._2.iterator)
+      .select(col("_1").cast("string").as("w"), col("_2").as("toks"))
+    docs
       .select(col("doc_id"), explode(ws).as("w"))
       .filter(col("w") =!= "")
       .join(broadcast(enc), Seq("w"))

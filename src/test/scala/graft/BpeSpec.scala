@@ -42,13 +42,16 @@ class BpeSpec extends SparkSpec {
 
   private val corpus = Map("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
 
-  private def trained(steps: Int): Seq[(Long, String, String, String, Long)] = {
+  private def rules(words: Seq[(String, Long)], steps: Int)
+      : Seq[(Long, String, String, String, Long)] = {
     import spark.implicits._
-    val words = corpus.toSeq.toDF("w", "n")
-    graft.operators.Pipeline.bpeMerges(words, steps).collect()
+    graft.operators.Pipeline.bpeMerges(words.toDF("w", "n"), steps).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
   }
+
+  private def trained(steps: Int): Seq[(Long, String, String, String, Long)] =
+    rules(corpus.toSeq, steps)
 
   test("first two merges match the hand-derived classic-example answer") {
     // pairs at round 1: es=6+3=9, st=9, we=2+6=8, lo=5+2=7, ow=7 … —
@@ -76,6 +79,77 @@ class BpeSpec extends SparkSpec {
     assert(got(1) == ((2L, "aa", "aa", "aaaa", 4L)), got.mkString(","))
   }
 
+  test("pair tie-break is UTF-8 byte order, not UTF-16 code-unit order") {
+    // (ﬀ,x) and (𝐀,x) tie at 1. U+FB00 is EF AC 80 in UTF-8 and U+1D400
+    // is F0 9D 90 80, so ﬀ sorts first in byte order (Spark, DuckDB);
+    // in UTF-16 the surrogate D835 sorts before FB00, so a trainer
+    // comparing java.lang.String would pick 𝐀
+    val got = rules(Seq(("\uFB00x", 1L), ("\uD835\uDC00x", 1L)), 1)
+    assert(got == Seq((1L, "\uFB00", "x", "\uFB00x", 1L)), got.toString)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a job tag. The
+    * listener bus delivers events in order, so once a later fence job's
+    * start arrives every job `body` launched has been counted. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"bpe-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", ""))
+          .getOrElse("").split(",")
+        if (tags.contains(tag)) jobs.incrementAndGet()
+        if (tags.contains(s"$tag-fence")) fenced.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      sc.addJobTag(s"$tag-fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(s"$tag-fence")
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building the merge plan launches no Spark job until it is collected") {
+    import spark.implicits._
+    val words = corpus.toSeq.toDF("w", "n")
+    var merges: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { merges = graft.operators.Pipeline.bpeMerges(words, 10) } == 0)
+    var rules = 0
+    assert(jobsLaunchedBy { rules = merges.collect().length } > 0)
+    assert(rules == 10)
+  }
+
+  test("degenerate lexicons: empty, or all one-character words, learn 0 rules") {
+    assert(rules(Seq.empty, 10).isEmpty)
+    assert(rules(Seq(("a", 3L), ("b", 1L), ("\uD835\uDC00", 2L)), 10).isEmpty)
+  }
+
+  test("p09 on degenerate corpora: empty gives no rows, one-char words one token each") {
+    val empty = corpusDir(Seq.empty)
+    assert(SparkEntry.queries("p09_bpe_encode")(spark, empty).collect().isEmpty)
+    val single = corpusDir(Seq(1L -> "a b a", 2L -> "c", 3L -> "b b b b"))
+    val got = SparkEntry.queries("p09_bpe_encode")(spark, single).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((1L, 3L, 3L), (2L, 1L, 1L), (3L, 4L, 4L)), got.toString)
+  }
+
+  /** A temp table root holding `docs` as its documents table. */
+  private def corpusDir(docs: Seq[(Long, String)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bpe9").toString
+    docs.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   /** Reference encoder: apply the trained merges greedily left-to-right
     * (same loop as [[naive]]'s application step) and count symbols. */
   private def naiveEncode(word: String, rules: Seq[(String, String)]): Int = {
@@ -94,16 +168,11 @@ class BpeSpec extends SparkSpec {
   }
 
   test("p09 token counts match the independent encoder on a synthetic corpus") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe9").toString
     val docs = Seq(
       1L -> "low low low low low lower lower",
       2L -> "newest newest newest newest newest newest widest",
       3L -> "widest widest lowest newest")
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val dir = corpusDir(docs)
     val wordFreq = docs.flatMap(_._2.split(" ")).groupBy(identity)
       .map { case (w, g) => w -> g.size.toLong }
     val rules = naive(wordFreq, 10).map { case (a, b, _) => (a, b) }

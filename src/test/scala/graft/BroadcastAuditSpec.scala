@@ -81,7 +81,7 @@ class BroadcastAuditSpec extends SparkSpec {
     "t10_rank_score" -> (Bounded, "frequency-thresholded vocabulary: O(kept token types), generator vocab is ~fixed"),
     "p01_decontaminate" -> (Fixed, "test-set shingles: O(|test set|), the externally-fixed contamination list"),
     "p02_stratified_sample" -> (Fixed, "per-lang quota cells: O(distinct langs) = 5"),
-    "p09_bpe_encode" -> (Fixed, "trained merge table: O(merge rounds) = 10 rows"),
+    "p09_bpe_encode" -> (Fixed, "the lexicon's (w, toks) encoding relation: one row per distinct corpus word, 31 rows at both spec scales (the test corpus draws every word from a fixed list); the corpus occurrence side is never hinted"),
     "p11_mixture_temperature" -> (Fixed, "scalar temperature denominator, 1 row"),
     "p15_token_budget" -> (Fixed, "three waterfill scalars: the budget aggregate (1 row), the crossing index (1 row), and the water line (1 row)"),
     "p16_dsir_weights" -> (Bounded, "hashed-bucket log-ratio LM table: hard-capped at dsirBuckets = 1024 rows by the pmod, corpus-independent by construction (observed-bucket count may grow toward the cap at tiny scales)"),

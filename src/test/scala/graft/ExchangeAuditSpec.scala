@@ -27,7 +27,7 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
   *     rows, by construction.
   *  2. WHITELISTED: the query intentionally funnels an
   *     already-aggregated, provably small relation (p05's stat cells,
-  *     p07/t10's vocabulary rank window). Each entry carries the
+  *     p07/t10's vocabulary rank window, p08/p09's BPE lexicon). Each entry carries the
   *     size-bound argument; anything not listed fails the build.
   */
 class ExchangeAuditSpec extends SparkSpec {
@@ -41,6 +41,14 @@ class ExchangeAuditSpec extends SparkSpec {
     "p07_vocab_build" -> ("global rank sort over the frequency-thresholded " +
       "VOCABULARY — input is one row per kept token type (post-aggregate, " +
       "post-min-count filter), bounded by vocab size not corpus size"),
+    "p08_bpe_train" -> ("one-task BPE training over the LEXICON — input is " +
+      "the word-count aggregate's output, one row per distinct corpus word " +
+      "(post-aggregate), bounded by vocabulary size not corpus size: the " +
+      "same class as p07's vocabulary window"),
+    "p09_bpe_encode" -> ("same one-task training pass as p08, on the " +
+      "broadcast (w, toks) side: one row per distinct corpus word " +
+      "(post-aggregate); the corpus occurrence side joins it map-side and " +
+      "reduces by a doc_id hash exchange, never SinglePartition"),
     "t10_rank_score" -> ("same stage as p07: the broadcast vocab side's " +
       "ROW_NUMBER global rank over the frequency-thresholded vocabulary " +
       "(Pipeline.vocab) — O(kept token types); the per-document output " +
