@@ -95,11 +95,7 @@ case class GraftAnalyzeCommand(path: String, forColumns: Boolean)
     require(v >= 1, s"$path: ANALYZE needs at least one committed snapshot")
     val files = GraftVersions.manifest(path, v)
     val bytes = files.map(f => new java.io.File(f).length()).sum
-    val schema = GraftVersions.schemaAt(path, v)
-    val df = schema match {
-      case Some(s) => spark.read.schema(s).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
+    val df = GraftVersions.read(spark, path, v, files)
     val fields = if (forColumns) df.schema.fields.toSeq else Seq.empty
     val isNum: org.apache.spark.sql.types.DataType => Boolean = {
       case _: org.apache.spark.sql.types.NumericType => true
@@ -162,9 +158,7 @@ case class GraftDescribeDetailCommand(path: String)
       if (cfg.isFile)
         new String(java.nio.file.Files.readAllBytes(cfg.toPath), "UTF-8")
       else ""
-    val nCols = GraftVersions.schemaAt(path, v).map(_.size).getOrElse(
-      if (files.isEmpty) 0
-      else spark.read.parquet(files.head).schema.size)
+    val nCols = GraftVersions.snapshotSchema(path, v, files).map(_.size).getOrElse(0)
     Seq(Row(path, v, live, files.size, bytes, blooms, nCols))
   }
 }

@@ -129,7 +129,8 @@ private[graft] object GraftBlooms {
     val items = spark.conf.getOption("spark.sql.graft.bloom.expectedItems")
       .map(_.toLong)
       .getOrElse(math.max(1L, names.map(n =>
-        footerRowCount(new java.io.File(GraftVersions.dataDir(dir), n))).max))
+        GraftVersions.footer(new java.io.File(GraftVersions.dataDir(dir), n))
+          .getBlocks.asScala.map(_.getRowCount).sum).max))
     val fpp = spark.conf.get("spark.sql.graft.bloom.fpp", "0.01").toDouble
     val numBits = BloomFilter.optimalNumOfBits(items, fpp)
     def agg(hashed: org.apache.spark.sql.catalyst.expressions.Expression) =
@@ -171,17 +172,6 @@ private[graft] object GraftBlooms {
           out.toByteArray)
       }
     }
-  }
-
-  /** Total row count from a staged file's parquet footer (block
-    * metadata only — the same driver-side read statsSuffixes makes). */
-  private def footerRowCount(f: java.io.File): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
   }
 
   /** Drop the files whose blooms PROVE they hold no candidate value —

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MERGE INTO (upsert) over a versioned table, expressed as Iceberg's
@@ -14,10 +14,14 @@ import org.apache.spark.sql.functions._
   * it (read-modify-write is not blind-append retry-safe).
   *
   * Scale shape: the touched-file discovery is one semi-join of
-  * (key, `_metadata.file_path`) against the DISTINCT source keys — at
-  * 100 TB the driver holds only the touched file NAME list (O(files
-  * hit), not O(rows)), the rewrite reads only those files, and commit
-  * cost is O(rewritten + inserted data), never O(table). This is the
+  * (key, `_metadata.file_path`) against the DISTINCT source keys, run
+  * as ONE Spark job ([[splitTouched]]) — at 100 TB the driver holds
+  * only the touched file NAME list (O(files hit), not O(rows)), the
+  * rewrite reads only those files, and commit cost is O(rewritten +
+  * inserted data), never O(table). Every verb reads the snapshot with
+  * the schema [[GraftVersions.snapshotSchema]] resolves on the driver
+  * (the evolution record, else one footer), so a statement launches
+  * only its discovery and rewrite jobs. This is the
   * corpus-refresh verb of a training-data lakehouse: a 0.1% daily
   * update rewrites ~0.1% of files (modulo clustering), not the corpus.
   *
@@ -100,23 +104,15 @@ object GraftMerge {
     }
     val candidates =
       pruneByStats(spark, dir, base, files, None, keyBounds, keyLongPts, keyStrPts)
-    // one pass over the candidates: which files contain at least one
-    // matched key? Driver receives file names only — O(touched files),
-    // never O(rows).
-    val touchedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else readSnapshot(spark, dir, base, candidates)
-        .select(col(keyCol), col("_metadata.file_path").as("__path"))
-        .join(srcKeys, Seq(keyCol), "left_semi")
-        .select(col("__path")).distinct()
-        .collect().map(r => pathName(r.getString(0))).toSet
-    val (touched, untouched) =
-      files.partition(f => touchedNames.contains(pathName(f)))
+    // which files contain at least one matched key?
+    val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
+      _.select(col(keyCol), col("_metadata.file_path").as("__path"))
+        .join(srcKeys, Seq(keyCol), "left_semi").select(col("__path")))
     // rewrite = touched files minus matched rows, plus ALL source rows
     // (replacements for matched keys + inserts for new keys)
     val survivors =
       if (touched.isEmpty) source
-      else readSnapshot(spark, dir, base, touched)
+      else GraftVersions.read(spark, dir, base, touched)
         .join(srcKeys, Seq(keyCol), "left_anti")
         .unionByName(source)
     GraftVersions.mergeCommit(dir, base,
@@ -126,6 +122,24 @@ object GraftMerge {
 
   private def pathName(p: String): String =
     p.substring(p.lastIndexOf('/') + 1)
+
+  /** Split snapshot `base`'s `files` into (touched, untouched): a file
+    * is touched when `paths`, applied to the read of the `candidates`,
+    * yields its `_metadata.file_path`. ONE Spark job: each split
+    * dedups its own paths (`mapPartitions`, no exchange), so the
+    * driver receives file names only, at most one per (split, file) —
+    * never O(rows). */
+  private def splitTouched(spark: SparkSession, dir: String, base: Int,
+      files: Seq[String], candidates: Seq[String])(
+      paths: DataFrame => DataFrame): (Seq[String], Seq[String]) = {
+    val names =
+      if (candidates.isEmpty) Set.empty[String]
+      else paths(GraftVersions.read(spark, dir, base, candidates))
+        .as(Encoders.STRING)
+        .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(Encoders.STRING)
+        .collect().map(pathName).toSet
+    files.partition(f => names.contains(pathName(f)))
+  }
 
   private def asLong(v: Any): Long = v match {
     case i: java.lang.Integer => i.toLong
@@ -222,47 +236,26 @@ object GraftMerge {
     // unsoundly prune); the schema record covers evolved tables, one
     // footer covers the rest, and it is only forced when a point
     // constraint survives to the probe
-    GraftBlooms.prune(dir, byStats, longPts, strPts, tableSchema(spark, dir, base, files))
+    GraftBlooms.prune(dir, byStats, longPts, strPts,
+      GraftVersions.snapshotSchema(dir, base, files).get)
   }
-
-  /** The snapshot's authoritative schema: the evolution record if the
-    * table ever evolved, else ONE data-file footer (never-evolved
-    * tables are schema-homogeneous). */
-  private def tableSchema(spark: SparkSession, dir: String, v: Int,
-      files: Seq[String]): org.apache.spark.sql.types.StructType =
-    GraftVersions.schemaAt(dir, v)
-      .getOrElse(spark.read.parquet(files.head).schema)
-
-  /** Read snapshot files with the snapshot's AUTHORITATIVE schema
-    * ([[GraftVersions.schemaAt]]): after an ADD COLUMN the table's
-    * files are schema-heterogeneous, and a bare footer-inferred read
-    * picks an arbitrary file's schema — a rewrite through a
-    * pre-evolution file's schema silently drops the evolved column's
-    * committed values from post-evolution rows (ADVICE r12; compaction
-    * is near-guaranteed to hit it, since it packs every small file
-    * together). A never-evolved table has no schema record and its
-    * files are homogeneous, so plain inference stays correct. The
-    * `_metadata` column remains available under an explicit schema. */
-  private def readSnapshot(spark: SparkSession, dir: String, v: Int,
-      files: Seq[String]): DataFrame =
-    GraftVersions.schemaAt(dir, v) match {
-      case Some(s) => spark.read.schema(s).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
 
   /** Copy-on-write DELETE (`DELETE FROM t WHERE p`) — the takedown
     * verb a training-data lakehouse cannot ship without (a GDPR or
-    * contamination removal must not cost a 100 TB rewrite): ONE pass
+    * contamination removal must not cost a 100 TB rewrite): ONE job
     * finds the files that contain at least one matching row (the
     * driver receives file NAMES only — O(touched files), never
-    * O(rows)), only those files are rewritten without their matching
-    * rows, and every untouched file carries into the new snapshot by
-    * manifest reference. Pre-delete snapshots stay readable until
-    * retention expires them — deletion is logical at commit time and
-    * physical at vacuum time, the two-phase shape compliance processes
-    * expect. Concurrent commits are detected at the atomic publish
-    * (read-modify-write, like MERGE); `maxRetries` > 0 rebases the
-    * delete onto the new snapshot and reapplies the predicate.
+    * O(rows)), a second job rewrites only those files without their
+    * matching rows, and every untouched file carries into the new
+    * snapshot by manifest reference. The snapshot schema comes from the
+    * evolution record or one footer read on the driver, so with no
+    * bloom columns configured those two are the statement's only jobs.
+    * Pre-delete snapshots stay readable until retention expires them —
+    * deletion is logical at commit time and physical at vacuum time,
+    * the two-phase shape compliance processes expect. Concurrent
+    * commits are detected at the atomic publish (read-modify-write,
+    * like MERGE); `maxRetries` > 0 rebases the delete onto the new
+    * snapshot and reapplies the predicate.
     * Returns (base snapshot, files reused, files rewritten). */
   def deleteFrom(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column, maxRetries: Int = 0)
@@ -287,20 +280,14 @@ object GraftMerge {
     // manifest-level skip, then the exact per-row discovery scan over
     // the surviving candidates only
     val candidates = pruneByStats(spark, dir, base, files, Some(predicate))
-    val touchedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else readSnapshot(spark, dir, base, candidates)
-        .filter(predicate)
-        .select(col("_metadata.file_path").as("__path")).distinct()
-        .collect().map(r => pathName(r.getString(0))).toSet
-    val (touched, untouched) =
-      files.partition(f => touchedNames.contains(pathName(f)))
+    val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
+      _.filter(predicate).select(col("_metadata.file_path")))
     if (touched.isEmpty) return (base, files.size, 0) // nothing matched
     // SQL DELETE semantics: remove rows where the predicate is TRUE,
     // KEEP rows where it is false OR NULL — a bare `!predicate` filter
     // would silently drop null-predicate rows from rewritten files
     // (three-valued logic: NOT NULL is NULL, and filters keep only TRUE)
-    val survivors = readSnapshot(spark, dir, base, touched)
+    val survivors = GraftVersions.read(spark, dir, base, touched)
       .filter(!coalesce(predicate, lit(false)))
     GraftVersions.mergeCommit(dir, base, untouched.map(pathName), survivors)
     (base, untouched.size, touched.size)
@@ -309,12 +296,15 @@ object GraftMerge {
   /** Copy-on-write UPDATE (`UPDATE t SET c = expr WHERE p`) — the last
     * of the four DML verbs (INSERT via the write path, MERGE, DELETE,
     * UPDATE), same cost shape as [[deleteFrom]]: one name-only
-    * metadata pass finds the files holding a matching row, only those
-    * rewrite (matching rows get each assignment applied, the rest pass
-    * through unchanged), untouched files carry by reference, and a
+    * discovery job finds the files holding a matching row, and only
+    * those rewrite, in a second job (matching rows get each assignment
+    * applied, the rest pass through unchanged), untouched files carry
+    * by reference, and a
     * NULL predicate leaves the row unchanged (SQL UPDATE semantics).
     * `assignments` maps column name → new-value expression (may read
-    * the row's own columns). Returns (base, reused, rewritten). */
+    * the row's own columns). The schema the assignments resolve
+    * against comes from the evolution record or one footer read on the
+    * driver. Returns (base, reused, rewritten). */
   def updateWhere(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
@@ -340,7 +330,7 @@ object GraftMerge {
     // no schema record ⇒ never evolved ⇒ files are schema-homogeneous:
     // ONE footer gives the schema (an all-files read here was an
     // O(table) metadata pass on a 3200-file table)
-    val schema = tableSchema(spark, dir, base, files)
+    val schema = GraftVersions.snapshotSchema(dir, base, files).get
     // resolve each assignment key to the EXACT schema field name:
     // validation is case-insensitive (SQL identifier semantics), so the
     // applying map must be too — a caller's "V" against schema column
@@ -355,19 +345,13 @@ object GraftMerge {
     require(assigned.size == assignments.size,
       s"$dir: UPDATE assigns the same column more than once")
     val candidates = pruneByStats(spark, dir, base, files, Some(predicate))
-    val touchedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else readSnapshot(spark, dir, base, candidates)
-        .filter(predicate)
-        .select(col("_metadata.file_path").as("__path")).distinct()
-        .collect().map(r => pathName(r.getString(0))).toSet
-    val (touched, untouched) =
-      files.partition(f => touchedNames.contains(pathName(f)))
+    val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
+      _.filter(predicate).select(col("_metadata.file_path")))
     if (touched.isEmpty) return (base, files.size, 0) // nothing matched
     val hit = coalesce(predicate, lit(false))
     // every column in declared order: assigned ones switch on the
     // predicate, the rest pass through — row shape is preserved
-    val rewritten = readSnapshot(spark, dir, base, touched).select(
+    val rewritten = GraftVersions.read(spark, dir, base, touched).select(
       schema.fieldNames.toIndexedSeq.map { c =>
         assigned.get(c) match {
           case Some(expr) => when(hit, expr).otherwise(col(c)).as(c)
@@ -416,7 +400,7 @@ object GraftMerge {
     val files = GraftVersions.manifest(dir, base)
     val (small, big) = files.partition(f => new java.io.File(f).length() < smallBytes)
     if (small.size <= 1) return (base, files.size, 0) // nothing to gain
-    val packed = readSnapshot(spark, dir, base, small).repartition(targetFiles)
+    val packed = GraftVersions.read(spark, dir, base, small).repartition(targetFiles)
     GraftVersions.mergeCommit(dir, base, big.map(pathName), packed,
       dataChange = false)
     (base, big.size, small.size)
@@ -455,7 +439,7 @@ object GraftMerge {
     require(base >= 1, s"$dir: clustering needs at least one committed snapshot")
     require(cols.nonEmpty, s"$dir: clustering needs at least one column")
     val files = GraftVersions.manifest(dir, base)
-    val packed = readSnapshot(spark, dir, base, files)
+    val packed = GraftVersions.read(spark, dir, base, files)
       .repartitionByRange(targetFiles, cols.map(col): _*)
     GraftVersions.mergeCommit(dir, base, Seq.empty, packed,
       dataChange = false)

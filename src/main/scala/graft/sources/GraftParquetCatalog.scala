@@ -339,7 +339,7 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     val cur = GraftVersions.current(dir)
     val base: StructType = GraftVersions.schemaAt(dir, cur)
       .orElse(created.get(table))
-      .getOrElse(spark.read.parquet(GraftVersions.manifest(dir, cur): _*).schema)
+      .getOrElse(GraftVersions.read(spark, dir, cur, GraftVersions.manifest(dir, cur)).schema)
     // durable pre-history base: backs the ADD-after-DROP resurrection
     // guard and makes pre-evolution snapshot schemas explicit
     GraftVersions.recordBaseSchema(dir, base)
@@ -721,10 +721,12 @@ private[graft] object GraftVersions {
     * dropped for that file (sound: no bound, always a candidate). */
   private def statsSuffixes(data: DataFrame, dir: String,
       names: Seq[String]): Seq[String] = {
-    // Footer opens are independent ~ms-each metadata reads; a
-    // sequential loop makes them the commit's fixed tail exactly when
-    // a rewrite stages many files (the all-files MERGE of
-    // `Harness families` stages 3,200; a 100 TB commit stages more).
+    // Footer opens are independent ~1 ms metadata reads (only with
+    // [[footer]]'s prebuilt read options: over a fresh Hadoop conf each
+    // costs ~16 ms); a sequential loop makes them the commit's fixed
+    // tail exactly when a rewrite stages many files (the all-files
+    // MERGE of `Harness families` stages 3,200; a 100 TB commit stages
+    // more).
     // Bounded pool, order preserved; small commits skip the pool.
     def one(n: String): String = {
       val fields = footerStats(new java.io.File(dataDir(dir), n))
@@ -737,12 +739,13 @@ private[graft] object GraftVersions {
   /** Order-preserving map over a bounded 8-thread pool — the commit
     * path's tool for its driver-side O(staged files) metadata loops
     * (footer-stats reads, stage-moves, lost-race re-prefixes). Each
-    * item is an independent ~ms filesystem/footer op; run sequentially
-    * they become the commit's N-invariant tail exactly when a rewrite
-    * stages many files (`Harness families` stages 3,200; a 100 TB
-    * commit stages more). Small batches skip the pool. On failure the
-    * queued tasks are cancelled (`shutdownNow`) so a failed commit
-    * never leaves thousands of tasks running in the background. */
+    * item is an independent ~1 ms filesystem/footer op (a footer is
+    * ~1 ms only through [[footer]]'s prebuilt read options); run
+    * sequentially they become the commit's N-invariant tail exactly
+    * when a rewrite stages many files (`Harness families` stages 3,200;
+    * a 100 TB commit stages more). Small batches skip the pool. On
+    * failure the queued tasks are cancelled (`shutdownNow`) so a failed
+    * commit never leaves thousands of tasks running in the background. */
   private def pooledMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     if (items.size <= 8) items.map(f)
     else {
@@ -771,102 +774,140 @@ private[graft] object GraftVersions {
   private def footerStats(f: java.io.File): Seq[(String, String)] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val longAcc = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-      val binAcc =
-        scala.collection.mutable.LinkedHashMap[String, (Array[Byte], Array[Byte])]()
-      val nullAcc = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-      val dropped = scala.collection.mutable.Set[String]()
-      val droppedNulls = scala.collection.mutable.Set[String]()
-      for (block <- reader.getFooter.getBlocks.asScala;
-           c <- block.getColumns.asScala) {
-        val pt = c.getPrimitiveType
-        val name = c.getPath.toDotString
-        val okName = !name.contains(".") && !name.contains("\t") &&
-          !name.contains("=") && !name.contains("#")
-        val isLong = (pt.getPrimitiveTypeName == INT32 ||
-          pt.getPrimitiveTypeName == INT64) && pt.getLogicalTypeAnnotation == null
-        // UTF8-annotated BINARY: parquet's stats comparator is unsigned
-        // lexicographic, identical to Spark's UTF8String byte order —
-        // and truncated stats stay VALID bounds (prefix min, padded max)
-        val isStr = pt.getPrimitiveTypeName == BINARY &&
-          pt.getLogicalTypeAnnotation ==
-            LogicalTypeAnnotation.stringType()
-        if (okName && (isLong || isStr)) {
-          val st = c.getStatistics
-          // NULL channel: sum numNulls + rows across row groups; any
-          // group without a null count drops the column (sound: no
-          // record, never a wrong prune)
-          if (st == null || st.isEmpty || !st.isNumNullsSet) droppedNulls += name
-          else {
-            val (an, ar) = nullAcc.getOrElse(name, (0L, 0L))
-            nullAcc(name) = (an + st.getNumNulls, ar + block.getRowCount)
-          }
-          if (st == null || st.isEmpty) dropped += name
-          else if (st.hasNonNullValue) {
-            if (isLong) {
-              val lo: Long = st.genericGetMin match {
-                case i: java.lang.Integer => i.toLong
-                case l: java.lang.Long => l.longValue
-              }
-              val hi: Long = st.genericGetMax match {
-                case i: java.lang.Integer => i.toLong
-                case l: java.lang.Long => l.longValue
-              }
-              longAcc.get(name) match {
-                case Some((alo, ahi)) =>
-                  longAcc(name) = (math.min(alo, lo), math.max(ahi, hi))
-                case None => longAcc(name) = (lo, hi)
-              }
-            } else {
-              val lo = st.genericGetMin
-                .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-              val hi = st.genericGetMax
-                .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-              def cmp(a: Array[Byte], b: Array[Byte]): Int =
-                java.util.Arrays.compareUnsigned(a, b)
-              binAcc.get(name) match {
-                case Some((alo, ahi)) => binAcc(name) =
-                  (if (cmp(lo, alo) < 0) lo else alo,
-                    if (cmp(hi, ahi) > 0) hi else ahi)
-                case None => binAcc(name) = (lo, hi)
-              }
-            }
-          } // all-null row group: contributes no values, widens nothing
+    val meta = footer(f)
+    val longAcc = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+    val binAcc =
+      scala.collection.mutable.LinkedHashMap[String, (Array[Byte], Array[Byte])]()
+    val nullAcc = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+    val dropped = scala.collection.mutable.Set[String]()
+    val droppedNulls = scala.collection.mutable.Set[String]()
+    for (block <- meta.getBlocks.asScala;
+         c <- block.getColumns.asScala) {
+      val pt = c.getPrimitiveType
+      val name = c.getPath.toDotString
+      val okName = !name.contains(".") && !name.contains("\t") &&
+        !name.contains("=") && !name.contains("#")
+      val isLong = (pt.getPrimitiveTypeName == INT32 ||
+        pt.getPrimitiveTypeName == INT64) && pt.getLogicalTypeAnnotation == null
+      // UTF8-annotated BINARY: parquet's stats comparator is unsigned
+      // lexicographic, identical to Spark's UTF8String byte order —
+      // and truncated stats stay VALID bounds (prefix min, padded max)
+      val isStr = pt.getPrimitiveTypeName == BINARY &&
+        pt.getLogicalTypeAnnotation ==
+          LogicalTypeAnnotation.stringType()
+      if (okName && (isLong || isStr)) {
+        val st = c.getStatistics
+        // NULL channel: sum numNulls + rows across row groups; any
+        // group without a null count drops the column (sound: no
+        // record, never a wrong prune)
+        if (st == null || st.isEmpty || !st.isNumNullsSet) droppedNulls += name
+        else {
+          val (an, ar) = nullAcc.getOrElse(name, (0L, 0L))
+          nullAcc(name) = (an + st.getNumNulls, ar + block.getRowCount)
         }
-      }
-      val enc = java.util.Base64.getEncoder
-      (longAcc -- dropped).toSeq.map { case (c, (lo, hi)) =>
-        c -> s"$lo..$hi"
-      } ++ (nullAcc -- droppedNulls).toSeq.map { case (c, (nn, rr)) =>
-        s"$c#n" -> s"$nn/$rr"
-      } ++ (binAcc -- dropped).toSeq.flatMap { case (c, (lo, hi)) =>
-        // TRUNCATE long string bounds or the manifest line bloats with
-        // kilobyte document values: a 16-byte PREFIX of the min is still
-        // a valid lower bound (a prefix sorts ≤ its extension), and the
-        // max truncates to a prefix with its last non-0xFF byte
-        // incremented — strictly above anything carrying the original
-        // prefix. 0xFF never occurs in UTF-8, so the increment always
-        // finds a byte; if it ever cannot, the stat is dropped (sound).
-        val tlo = lo.take(16)
-        val thi: Option[Array[Byte]] =
-          if (hi.length <= 16) Some(hi)
-          else {
-            val t = hi.take(16)
-            var i = t.length - 1
-            while (i >= 0 && t(i) == 0xFF.toByte) i -= 1
-            if (i < 0) None
-            else Some(t.take(i) :+ (t(i) + 1).toByte)
+        if (st == null || st.isEmpty) dropped += name
+        else if (st.hasNonNullValue) {
+          if (isLong) {
+            val lo: Long = st.genericGetMin match {
+              case i: java.lang.Integer => i.toLong
+              case l: java.lang.Long => l.longValue
+            }
+            val hi: Long = st.genericGetMax match {
+              case i: java.lang.Integer => i.toLong
+              case l: java.lang.Long => l.longValue
+            }
+            longAcc.get(name) match {
+              case Some((alo, ahi)) =>
+                longAcc(name) = (math.min(alo, lo), math.max(ahi, hi))
+              case None => longAcc(name) = (lo, hi)
+            }
+          } else {
+            val lo = st.genericGetMin
+              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+            val hi = st.genericGetMax
+              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
+            def cmp(a: Array[Byte], b: Array[Byte]): Int =
+              java.util.Arrays.compareUnsigned(a, b)
+            binAcc.get(name) match {
+              case Some((alo, ahi)) => binAcc(name) =
+                (if (cmp(lo, alo) < 0) lo else alo,
+                  if (cmp(hi, ahi) > 0) hi else ahi)
+              case None => binAcc(name) = (lo, hi)
+            }
           }
-        thi.map(h =>
-          c -> s"s:${enc.encodeToString(tlo)}..${enc.encodeToString(h)}")
+        } // all-null row group: contributes no values, widens nothing
       }
-    } finally reader.close()
+    }
+    val enc = java.util.Base64.getEncoder
+    (longAcc -- dropped).toSeq.map { case (c, (lo, hi)) =>
+      c -> s"$lo..$hi"
+    } ++ (nullAcc -- droppedNulls).toSeq.map { case (c, (nn, rr)) =>
+      s"$c#n" -> s"$nn/$rr"
+    } ++ (binAcc -- dropped).toSeq.flatMap { case (c, (lo, hi)) =>
+      // TRUNCATE long string bounds or the manifest line bloats with
+      // kilobyte document values: a 16-byte PREFIX of the min is still
+      // a valid lower bound (a prefix sorts ≤ its extension), and the
+      // max truncates to a prefix with its last non-0xFF byte
+      // incremented — strictly above anything carrying the original
+      // prefix. 0xFF never occurs in UTF-8, so the increment always
+      // finds a byte; if it ever cannot, the stat is dropped (sound).
+      val tlo = lo.take(16)
+      val thi: Option[Array[Byte]] =
+        if (hi.length <= 16) Some(hi)
+        else {
+          val t = hi.take(16)
+          var i = t.length - 1
+          while (i >= 0 && t(i) == 0xFF.toByte) i -= 1
+          if (i < 0) None
+          else Some(t.take(i) :+ (t(i) + 1).toByte)
+        }
+      thi.map(h =>
+        c -> s"s:${enc.encodeToString(tlo)}..${enc.encodeToString(h)}")
+    }
   }
+
+  /** One data file's parquet footer: the only place a footer is opened
+    * (commit stats, bloom sizing, [[snapshotSchema]]). The read options
+    * are built from the session's already-loaded Hadoop conf; opening
+    * over a fresh `Configuration` re-parses Hadoop's default resources
+    * on every call: ~16 ms a file against ~1 ms here, on a 4-core x86
+    * host with local files. */
+  def footer(f: java.io.File): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The schema snapshot `v` reads with, resolved on the driver: the
+    * evolution record in force at `v` ([[schemaAt]]), else the footer of
+    * the first of `files` — a never-evolved table's files are
+    * schema-homogeneous — converted the way Spark's own parquet
+    * inference converts it (`readSchemaFromFooter`, nullable as a file
+    * source reads it), without the one-task job that inference runs.
+    * None only when there is no record and no file. */
+  def snapshotSchema(dir: String, v: Int, files: Seq[String]): Option[StructType] =
+    schemaAt(dir, v).orElse(files.headOption.map { f =>
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(
+          new org.apache.hadoop.fs.Path(f), footer(new java.io.File(f))),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(
+            org.apache.spark.sql.internal.SQLConf.get)).toNullable
+    })
+
+  /** Snapshot `v`'s `files` read with [[snapshotSchema]]. After an ADD
+    * COLUMN the files are schema-heterogeneous, and an inferred read
+    * takes an arbitrary file's schema: a rewrite through a
+    * pre-evolution file's schema would silently drop the evolved
+    * column's values (ADVICE r12). The `_metadata` column stays
+    * available under the explicit schema. With no record and no file,
+    * Spark's own inference runs and rejects the empty file list. */
+  def read(spark: SparkSession, dir: String, v: Int, files: Seq[String]): DataFrame =
+    snapshotSchema(dir, v, files).fold(spark.read)(s => spark.read.schema(s))
+      .parquet(files: _*)
 
   // --- schema evolution (metadata-only commits) --------------------------
 

@@ -76,11 +76,9 @@ private[graft] object GraftCdfSource {
     require(dir != null, "graft-cdf requires .option(\"path\", <tableDir>)")
     val cur = GraftVersions.current(dir)
     require(cur >= 1, s"graft-cdf: $dir has no committed snapshot")
-    val data = GraftVersions.schemaAt(dir, cur).getOrElse {
-      val files = GraftVersions.manifest(dir, cur)
-      require(files.nonEmpty, s"graft-cdf: $dir snapshot $cur lists no files")
-      org.apache.spark.sql.SparkSession.active.read.parquet(files.head).schema
-    }
+    val schema = GraftVersions.snapshotSchema(dir, cur, GraftVersions.manifest(dir, cur))
+    require(schema.isDefined, s"graft-cdf: $dir snapshot $cur lists no files")
+    val data = schema.get
     data.fields.foreach(f => checkSupported(f.dataType, f.name))
     val meta = StructField(versionCol, IntegerType, nullable = false) +:
       (if (includeRemoved)

@@ -88,33 +88,6 @@ class BpeSpec extends SparkSpec {
     assert(got == Seq((1L, "\uFB00", "x", "\uFB00x", 1L)), got.toString)
   }
 
-  /** Spark jobs started while `body` runs, counted by a job tag. The
-    * listener bus delivers events in order, so once a later fence job's
-    * start arrives every job `body` launched has been counted. */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"bpe-jobs-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", ""))
-          .getOrElse("").split(",")
-        if (tags.contains(tag)) jobs.incrementAndGet()
-        if (tags.contains(s"$tag-fence")) fenced.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      try body finally sc.removeJobTag(tag)
-      sc.addJobTag(s"$tag-fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(s"$tag-fence")
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("building the merge plan launches no Spark job until it is collected") {
     import spark.implicits._
     val words = corpus.toSeq.toDF("w", "n")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.sources.{GraftMerge, GraftVersions}
 
@@ -1021,6 +1022,54 @@ class MergeSpec extends SparkSpec {
     assert(rows().contains((5, "E", "keep-me")),
       "merge rewrite dropped an evolved column's values")
     assert(rows().contains((1, "A", "m1")))
+  }
+
+  test("SQL DELETE and UPDATE each launch only their discovery and rewrite jobs") {
+    val root = freshRoot()
+    import spark.implicits._
+    Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
+      .repartitionByRange(4, col("k")).createOrReplaceTempView("mg_src12")
+    spark.sql("""CREATE TABLE psql.tpcds.mg12 TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM mg_src12""".stripMargin)
+    assert(GraftVersions.manifest(s"$root/mg12.parquet", 1).size == 4)
+    // the snapshot schema is read on the driver and discovery has no
+    // exchange: one job finds the touched file, one rewrites it
+    assert(jobsLaunchedBy { spark.sql("DELETE FROM psql.tpcds.mg12 WHERE k = 2") } == 2)
+    assert(kvRows("SELECT * FROM psql.tpcds.mg12") == Set((1, "a"), (3, "c"), (4, "d")))
+    assert(jobsLaunchedBy {
+      spark.sql("UPDATE psql.tpcds.mg12 SET v = v || '!' WHERE k = 3")
+    } == 2)
+    assert(kvRows("SELECT * FROM psql.tpcds.mg12") == Set((1, "a"), (3, "c!"), (4, "d")))
+    assert(kvRows("SELECT * FROM psql.tpcds.mg12 VERSION AS OF 1") ==
+      Set((1, "a"), (2, "b"), (3, "c"), (4, "d")))
+  }
+
+  test("the driver-side snapshot schema is exactly Spark's inferred parquet schema") {
+    val root = freshRoot()
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678")
+    Seq(
+      (Some(1), Some(10L), "a", BigDecimal("1.25"), ts, "x".getBytes("UTF-8"),
+        (5L, "s"), Seq(1L, 2L), 7),
+      (None, None, null, null, null, null, null, null, 8))
+      .toDF("i", "l", "s", "d", "ts", "b", "st", "arr", "req")
+      .createOrReplaceTempView("mg_src13")
+    spark.sql("""CREATE TABLE psql.tpcds.mg13 TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM mg_src13""".stripMargin)
+    val dir = s"$root/mg13.parquet"
+    assert(GraftVersions.schemaAt(dir, 1).isEmpty, "table must be never-evolved")
+    val files = GraftVersions.manifest(dir, 1)
+    val inferred = spark.read.parquet(files.head).schema
+    assert(GraftVersions.snapshotSchema(dir, 1, files).contains(inferred))
+    // the footer really carries a non-nullable column, and every type
+    // the case names
+    val required = GraftVersions.footer(new java.io.File(files.head))
+      .getFileMetaData.getSchema.getFields.asScala
+      .filter(_.isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED))
+      .map(_.getName)
+    assert(required.contains("req"), required.toString)
+    assert(inferred.map(_.dataType.typeName) == Seq("integer", "long", "string",
+      "decimal(38,18)", "timestamp", "binary", "struct", "array", "integer"))
   }
 
   test("UPDATE assignment column names resolve case-insensitively") {
