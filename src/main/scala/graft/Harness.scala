@@ -582,13 +582,13 @@ object Harness {
     * SAME session.
     *
     * What this isolates: the face cost — per-statement session clone,
-    * analysis, spooled result serve (executor-side render + text spool,
-    * driver line-stream; GraftStatementServer.serveState), page JSON,
+    * analysis, result serve (executor-side render, inline or spooled
+    * segments, driver line-stream; GraftStatementServer.serveState), page JSON,
     * HTTP roundtrips. The statements run over temp views of the sf
     * parquet so the measured delta is the face, not a re-measurement of
     * the wire connectors (those have their own probes in `curve`: q84 and
-    * s25). The spool write/read runs under every topology, so the leg
-    * also proves the spooled serve is process-topology-invariant.
+    * s25). The serve runs under every topology, so the leg also proves
+    * it is process-topology-invariant.
     *
     * Gates per N: direct and wire rows bit-identical across topologies,
     * wire rows equal in count to direct; `stats` envelopes monotone
@@ -644,8 +644,10 @@ object Harness {
 
   /** Composition gate (verdict r17 #6): executor-side spool render +
     * REAL process topology + the Hadoop-FS read path in ONE motion. A
-    * REPARTITION(8) statement is driven through the face under
-    * `local-cluster[2,…]` with spooling ON. HARD conditions (throw on
+    * REPARTITION(8) statement whose every partition (about 7,500 rows
+    * at sf0.01) is far past the face's inline limit (1,000 rows or
+    * 64 Ki characters) is driven through the face under
+    * `local-cluster[2,…]`, so each task spools a file. HARD conditions (throw on
     * violation): the spool dir held multiple part files while the
     * cursor was open, was released after the drain, and the drained
     * wire rows are bit-identical to direct execution. The two-executor
@@ -659,8 +661,7 @@ object Harness {
     * the ledger to judge, with every correctness condition still
     * enforced. */
   private def spoolTopologyGate(spark: SparkSession, base: String): String = {
-    val sql = "SELECT /*+ REPARTITION(8) */ l_orderkey, l_partkey " +
-      "FROM lineitem WHERE l_orderkey % 7 = 0"
+    val sql = "SELECT /*+ REPARTITION(8) */ l_orderkey, l_partkey FROM lineitem"
     // both executor JVMs registered (driver + 2) before the spool job
     // POSTs: 8 simultaneous tasks over 8 slots in 2 processes is what
     // makes the spread near-certain
@@ -725,38 +726,33 @@ object Harness {
   /** Statement-face memory-bound check (verdict r16 #7), run in its OWN
     * deliberately SMALL-heap JVM (`SPARK_DRIVER_MEM=768m ./run-main.sh
     * graft.Harness spool`): drives a one-partition multi-million-row
-    * result (~250 B of rendered JSON per row: the exact shape the
-    * pipelined pull cannot bound) through the real HTTP statement face
+    * result (~250 B of rendered JSON per row: the shape a driver-side
+    * partition pull cannot bound) through the real HTTP statement face
     * and drains every page.
     *
     * Why a separate JVM: the property under test is "driver memory stays
-    * O(page) even when the whole result is ONE partition". The spooled
-    * serving path streams pre-rendered lines, so ~640 MB of rendered
-    * rows never coexist in memory; the pre-r17 pipelined pull
-    * materialized the full partition driver-side and cannot finish in
-    * this heap. An in-suite heap-delta assertion would race the 16 GB
+    * O(page) even when the whole result is ONE partition". The task
+    * spools that partition to a file and the driver streams its lines,
+    * so ~640 MB of rendered rows never coexist in memory; a pull that
+    * materialized the partition driver-side cannot finish in this
+    * heap. An in-suite heap-delta assertion would race the 16 GB
     * shared test JVM's other suites; here the heap itself is the
     * assertion — regressing to whole-partition materialization OOMs and
     * the check exits nonzero. For the same reason the drain keeps no
     * rows: it folds them into a streaming multiset hash.
     *
-    * Args: `[rows] [codec]` (defaults 2000000, none; codec is the spool
-    * codec none|gzip|deflate — the r19 codec-default measurement runs
-    * this check once per codec and compares spooled bytes vs wall
-    * seconds). Prints one JSON line
-    * `{"metric":"spool_check","rows":N,"pages":P,"codec":…,"spoolBytes":…,"sec":…,"complete":true}`. */
+    * Args: `[rows]` (default 2000000). Prints one JSON line
+    * `{"metric":"spool_check","rows":N,"pages":P,"spoolBytes":…,"sec":…,"complete":true}`. */
   private def spool(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val codec = args.lift(1).getOrElse("none")
     val spark = GraftSession.local("8")
     try {
-      spark.conf.set(sources.GraftWireConf.StatementSpoolCodecKey, codec)
       val base = GraftStatementServer.start(spark)
       val t0 = System.nanoTime()
       val first = Face.post(base, s"SELECT /*+ REPARTITION(1) */ id, " +
         s"repeat('x', 120) AS pad FROM range($rows)")
-      // spooled footprint, measured MID-drain (the dir is deleted at
-      // drain end): what the codec trades CPU against
+      // spooled footprint (one gzip part file), measured MID-drain: the
+      // dir is deleted at drain end
       val spoolBytes = Option(new File(System.getProperty("java.io.tmpdir"),
           GraftStatementServer.spoolDirName(Face.id(first))).listFiles())
         .getOrElse(Array.empty).filter(_.getName.startsWith("part-"))
@@ -796,7 +792,7 @@ object Harness {
           s"hash=$hx/$expHx")
       val sec = (System.nanoTime() - t0) / 1e9
       println(s"""{"metric":"spool_check","rows":$n,"pages":$pages,""" +
-        s""""codec":"$codec","spoolBytes":$spoolBytes,""" +
+        s""""spoolBytes":$spoolBytes,""" +
         s""""sec":${JsonNum.f3(sec)},"complete":true}""")
     } finally spark.stop()
   }

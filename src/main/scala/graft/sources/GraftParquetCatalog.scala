@@ -114,6 +114,15 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     spark.conf.getOption("spark.sql.graft.root").getOrElse(defaultRoot))
 
   private def pathOf(table: String): String = s"$root/$table.parquet"
+  /** A table path's data files: the path itself when it is one file,
+    * else the directory's visible files (Spark skips `_`/`.` names). */
+  private def dataFiles(path: String): Seq[String] = {
+    val f = new java.io.File(path)
+    if (f.isFile) Seq(path)
+    else Option(f.listFiles()).getOrElse(Array.empty).toSeq
+      .filter(c => c.isFile && !c.getName.startsWith("_") && !c.getName.startsWith("."))
+      .map(_.getPath).sorted
+  }
   private def jsonPathOf(table: String): String = s"$root/$table.json"
   private def isJsonTable(table: String): Boolean =
     !new java.io.File(pathOf(table)).exists() &&
@@ -190,14 +199,20 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     if (ctasMeta(table).exists(_._3))
       return versionedTable(fullName, table,
         GraftVersions.current(pathOf(table)))
+    val partCols = ctasMeta(table).map(_._2).filter(_.nonEmpty)
+    // a non-partitioned table's schema is its footer's, read on the
+    // driver: left to the ParquetTable, every analysis would run
+    // Spark's schema inference as a one-task job. A partitioned table
+    // keeps inference, whose partition discovery adds the layout columns.
     val pt = ParquetTable(
       fullName,
       spark.asInstanceOf[ClassicSparkSession],
       CaseInsensitiveStringMap.empty(),
       Seq(pathOf(table)),
-      created.get(table).orElse(None),
+      created.get(table).orElse(if (partCols.isDefined) None
+        else dataFiles(pathOf(table)).headOption.map(GraftVersions.footerSchema)),
       classOf[ParquetFileFormat])
-    ctasMeta(table).map(_._2).filter(_.nonEmpty) match {
+    partCols match {
       case Some(partCols) =>
         // partitioned CTAS table: read through the ParquetTable (its
         // partition discovery sees the hive layout), write through the
@@ -264,10 +279,11 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   /** Read/write table over snapshot `v`'s manifest files. The schema
-    * is the one IN FORCE at `v` ([[GraftVersions.schemaAt]] — ADD
+    * is the one IN FORCE at `v` ([[GraftVersions.snapshotSchema]] — ADD
     * COLUMN is a metadata-only commit, so snapshots before the
     * evolution keep their original schema and snapshots after it
-    * null-fill the new column for pre-evolution files). */
+    * null-fill the new column for pre-evolution files); an empty
+    * manifest falls back to the schema this catalog created it with. */
   private def versionedTable(fullName: String, table: String, v: Int): Table = {
     val dir = pathOf(table)
     val files = GraftVersions.manifest(dir, v)
@@ -276,7 +292,7 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
       spark.asInstanceOf[ClassicSparkSession],
       CaseInsensitiveStringMap.empty(),
       files,
-      GraftVersions.schemaAt(dir, v).orElse(created.get(table)),
+      GraftVersions.snapshotSchema(dir, v, files).orElse(created.get(table)),
       classOf[ParquetFileFormat])
     new GraftVersionedTable(pt, dir)
   }
@@ -867,7 +883,7 @@ private[graft] object GraftVersions {
   }
 
   /** One data file's parquet footer: the only place a footer is opened
-    * (commit stats, bloom sizing, [[snapshotSchema]]). The read options
+    * (commit stats, bloom sizing, [[footerSchema]]). The read options
     * are built from the session's already-loaded Hadoop conf; opening
     * over a fresh `Configuration` re-parses Hadoop's default resources
     * on every call: ~16 ms a file against ~1 ms here, on a 4-core x86
@@ -884,19 +900,21 @@ private[graft] object GraftVersions {
   /** The schema snapshot `v` reads with, resolved on the driver: the
     * evolution record in force at `v` ([[schemaAt]]), else the footer of
     * the first of `files` — a never-evolved table's files are
-    * schema-homogeneous — converted the way Spark's own parquet
-    * inference converts it (`readSchemaFromFooter`, nullable as a file
-    * source reads it), without the one-task job that inference runs.
+    * schema-homogeneous — read by [[footerSchema]], without the one-task
+    * job Spark's schema inference runs.
     * None only when there is no record and no file. */
   def snapshotSchema(dir: String, v: Int, files: Seq[String]): Option[StructType] =
-    schemaAt(dir, v).orElse(files.headOption.map { f =>
-      ParquetFileFormat.readSchemaFromFooter(
-        new org.apache.parquet.hadoop.Footer(
-          new org.apache.hadoop.fs.Path(f), footer(new java.io.File(f))),
-        new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(
-            org.apache.spark.sql.internal.SQLConf.get)).toNullable
-    })
+    schemaAt(dir, v).orElse(files.headOption.map(footerSchema))
+
+  /** One parquet file's schema as Spark's own inference converts it
+    * (`readSchemaFromFooter`, nullable as a file source reads it). */
+  def footerSchema(f: String): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(
+        new org.apache.hadoop.fs.Path(f), footer(new java.io.File(f))),
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get)).toNullable
 
   /** Snapshot `v`'s `files` read with [[snapshotSchema]]. After an ADD
     * COLUMN the files are schema-heterogeneous, and an inferred read

@@ -214,6 +214,17 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  test("analysing a psql table reads its footer schema and launches no job") {
+    useRoot(sf2)
+    def analyze(): Unit = {
+      spark.sql("SELECT * FROM psql.tpcds.lineitem").queryExecution.analyzed; ()
+    }
+    assert(jobsLaunchedBy(analyze()) == 0, "first analysis")
+    assert(jobsLaunchedBy(analyze()) == 0, "second analysis")
+    assert(spark.table("psql.tpcds.lineitem").schema ==
+      spark.read.parquet(s"$sf2/lineitem.parquet").schema)
+  }
+
   test("federated query spans catalogs with broadcast dims") {
     useRoot(sf1)
     val df = SparkEntry.queries("q19_federated_catalogs")(spark, sf1)

@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Statement-face page-memory bound (verdict r16 #7): forks the
   * `spool` leg of [[Harness]] into a deliberately SMALL-heap JVM
   * (768 MB) and drains a ONE-PARTITION 2M-row × ~250 B result through
-  * the real HTTP statement face. The spooled serving path streams pre-rendered
-  * lines O(page) at a time; the pipelined `toLocalIterator` pull it
-  * replaced materializes the whole ~640 MB partition driver-side and
-  * cannot complete in this heap — so the heap bound IS the assertion,
-  * deterministic where an in-suite heap-delta check would race the
-  * 16 GB shared test JVM's concurrent suites. */
+  * the real HTTP statement face. That partition is far past the inline
+  * limit, so its task spools it to one gzip file and the driver streams
+  * the lines O(page) at a time; a path that materialized the ~640 MB
+  * partition driver-side cannot complete in this heap — so the heap
+  * bound IS the assertion, deterministic where an in-suite heap-delta
+  * check would race the 16 GB shared test JVM's concurrent suites. */
 class SpoolSpec extends AnyFunSuite {
 
   test("a one-partition 2M-row result drains through the face in a 768m heap") {

@@ -319,8 +319,8 @@ class StatementServerSpec extends SparkSpec {
 
   /** Verdict r17 #1 (the loud guard): a `file:` spool dir under a
     * non-local master is executor-local disk the driver cannot read —
-    * the spool path must refuse it (and fall back to pipelined) rather
-    * than serve an empty FINISHED result. Pure-function gate over the
+    * a statement that needs a spool file there must fail with guidance
+    * rather than serve an empty FINISHED result. Pure-function gate over the
     * (master, scheme, declared-shared) decision table. */
   test("spoolPathUsable refuses executor-local file: dirs on real clusters") {
     import GraftStatementServer.spoolPathUsable
@@ -382,6 +382,8 @@ class StatementServerSpec extends SparkSpec {
     }
   }
 
+  // The name keeps its original id; the pipelined pull it compared
+  // with is gone, and the drain is now checked against a direct collect.
   test("spool lifecycle: files back the cursor, are released on drain, equal the pipelined pull") {
     spark.conf.set("spark.sql.graft.root", sf1)
     val sql =
@@ -395,7 +397,7 @@ class StatementServerSpec extends SparkSpec {
     // sharing the default tmpdir can never collide (ADVICE r17)
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       GraftStatementServer.spoolDirName(id))
-    // the default path really is the spool: part files back the cursor
+    // a partition past the inline limit: part files back the cursor
     assert(dir.isDirectory,
       s"expected spool dir $dir while the cursor is open; POST body: $first")
     val rows = Seq.newBuilder[Long]
@@ -411,57 +413,143 @@ class StatementServerSpec extends SparkSpec {
     assert(!dir.exists, s"spool dir $dir leaked after the drain")
     val spooled = rows.result()
     assert(spooled == spooled.sorted && spooled.nonEmpty)
-    // the conf kill-switch serves the same rows through toLocalIterator
-    spark.conf.set(graft.sources.GraftWireConf.StatementSpoolKey, "false")
-    val piped = try runSql(sql)._2.map(_.head.asLong)
-      finally spark.conf.unset(graft.sources.GraftWireConf.StatementSpoolKey)
-    assert(piped == spooled, "pipelined and spooled drains disagree")
+    val direct = spark.sql(sql).collect().map(_.getLong(0)).toSeq
+    assert(spooled == direct, "spooled drain != direct collect")
   }
 
-  /** Spool compression (`spark.sql.graft.statement.spoolCodec=gzip`):
-    * on a real cluster the spool is RESULT-sized I/O against shared
-    * storage, where text-JSON pages compress 5-10× (Trino's spooling
-    * protocol makes the same trade). The read side detects the codec
-    * from the part-file extension, so the drain must be byte-identical
-    * to the uncompressed one. */
+  /** Spool files are gzip-compressed: on a real cluster the spool is
+    * RESULT-sized I/O against shared storage, where text-JSON pages
+    * compress 5-10× (Trino's spooling protocol makes the same trade).
+    * The drain must equal direct execution row for row. */
   test("gzip-compressed spool drains identical rows; parts carry the extension") {
     spark.conf.set("spark.sql.graft.root", sf1)
     val sql = "SELECT l_orderkey, l_partkey FROM psql.tpcds.lineitem " +
       "ORDER BY l_orderkey, l_partkey, l_suppkey"
-    val plain = runSql(sql)._2.map(r => (r(0).asLong, r(1).asLong))
-    spark.conf.set(graft.sources.GraftWireConf.StatementSpoolCodecKey, "gzip")
+    val direct = spark.sql(sql).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (code, first) = http("POST", s"$base/v1/statement", Some(sql),
+      Map("X-Trino-User" -> "spec"))
+    assert(code == 200, first)
+    var j = mapper.readTree(first)
+    val id = j.get("id").asText
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      GraftStatementServer.spoolDirName(id))
+    val parts = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty && parts.forall(_.getName.endsWith(".gz")),
+      s"expected .gz parts, got ${parts.map(_.getName).mkString(",")}")
+    val rows = Seq.newBuilder[(Long, Long)]
+    while (j.has("nextUri")) {
+      val (_, page) = http("GET", j.get("nextUri").asText, None)
+      j = mapper.readTree(page)
+      if (j.has("data"))
+        j.get("data").elements().asScala.foreach(r =>
+          rows += ((r.get(0).asLong, r.get(1).asLong)))
+    }
+    assert(j.get("stats").get("state").asText == "FINISHED")
+    assert(rows.result() == direct && direct.nonEmpty,
+      "gzip spool drain != direct collect")
+    assert(!dir.exists, s"gzip spool dir $dir leaked")
+  }
+
+  /** Drain one statement page by page; returns its id and the first
+    * column of every row. `midDrain` runs after the POST, before the
+    * first page. */
+  private def drainLongs(sql: String)(midDrain: String => Unit): Seq[Long] = {
+    val (code, first) = http("POST", s"$base/v1/statement", Some(sql),
+      Map("X-Trino-User" -> "spec"))
+    assert(code == 200, first)
+    var j = mapper.readTree(first)
+    midDrain(j.get("id").asText)
+    val rows = Seq.newBuilder[Long]
+    while (j.has("nextUri")) {
+      val (_, page) = http("GET", j.get("nextUri").asText, None)
+      j = mapper.readTree(page)
+      if (j.has("error")) fail(j.get("error").get("message").asText)
+      if (j.has("data"))
+        j.get("data").elements().asScala.foreach(r => rows += r.get(0).asLong)
+    }
+    assert(j.get("stats").get("state").asText == "FINISHED")
+    rows.result()
+  }
+
+  test("a small result comes back inline: no spool entry, rows equal direct") {
+    spark.conf.set("spark.sql.graft.root", sf1)
+    val scratch = java.nio.file.Files.createTempDirectory("graft_inline")
+    spark.conf.set(graft.sources.GraftWireConf.StatementSpoolDirKey, scratch.toString)
     try {
-      val (code, first) = http("POST", s"$base/v1/statement", Some(sql),
-        Map("X-Trino-User" -> "spec"))
-      assert(code == 200, first)
-      var j = mapper.readTree(first)
-      val id = j.get("id").asText
+      val sql = """SELECT n_nationkey FROM psql.tpcds.nation
+                  |WHERE n_regionkey < 3 ORDER BY n_nationkey""".stripMargin
+      def entries() = scratch.toFile.list().toSeq
+      val wire = drainLongs(sql)(_ =>
+        assert(entries().isEmpty, s"spool entries after the POST: ${entries()}"))
+      assert(entries().isEmpty, s"spool entries after the drain: ${entries()}")
+      val direct = spark.sql(sql).collect().map(_.getAs[Number](0).longValue).toSeq
+      assert(wire == direct && wire.nonEmpty, s"wire $wire != direct $direct")
+    } finally {
+      spark.conf.unset(graft.sources.GraftWireConf.StatementSpoolDirKey)
+      scratch.toFile.delete()
+    }
+  }
+
+  /** A skewed ORDER BY over four uncoalesced range partitions: the one
+    * holding the 5,000 zero keys is past the inline limit and spools,
+    * the ones holding the other 1,000 keys come back inline. The drain
+    * must still follow partition order. */
+  test("an ORDER BY result of inline and spooled partitions drains in order") {
+    val sql = "SELECT CASE WHEN id < 5000 THEN 0 ELSE id END AS k " +
+      "FROM RANGE(6000) ORDER BY k"
+    val confs = Map("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    var spooledLines = 0
+    val wire = try drainLongs(sql) { id =>
       val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
         GraftStatementServer.spoolDirName(id))
       val parts = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("part-"))
-      assert(parts.nonEmpty && parts.forall(_.getName.endsWith(".gz")),
-        s"expected .gz parts, got ${parts.map(_.getName).mkString(",")}")
-      val rows = Seq.newBuilder[(Long, Long)]
-      while (j.has("nextUri")) {
-        val (_, page) = http("GET", j.get("nextUri").asText, None)
-        j = mapper.readTree(page)
-        if (j.has("data"))
-          j.get("data").elements().asScala.foreach(r =>
-            rows += ((r.get(0).asLong, r.get(1).asLong)))
+      spooledLines = parts.map { f =>
+        val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f))
+        try new String(in.readAllBytes(), StandardCharsets.UTF_8).count(_ == '\n')
+        finally in.close()
+      }.sum
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val direct = spark.sql(sql).collect().map(_.getLong(0)).toSeq
+    assert(wire == direct && wire.size == 6000, "mixed drain != direct collect")
+    assert(spooledLines >= 5000 && spooledLines < 6000,
+      s"$spooledLines of 6000 rows spooled: expected both inline and spooled partitions")
+  }
+
+  test("a stray part file planted in a statement's spool dir is never served") {
+    spark.conf.set("spark.sql.graft.root", sf1)
+    val sql = "SELECT l_orderkey FROM psql.tpcds.lineitem ORDER BY l_orderkey"
+    val wire = drainLongs(sql) { id =>
+      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+        GraftStatementServer.spoolDirName(id))
+      assert(dir.isDirectory, s"expected spool dir $dir")
+      for (name <- Seq("part-00000-7.gz", "part-99999-0.gz")) {
+        val out = new java.util.zip.GZIPOutputStream(
+          new java.io.FileOutputStream(new java.io.File(dir, name)))
+        try out.write("[-1]\n".getBytes(StandardCharsets.UTF_8)) finally out.close()
       }
-      assert(j.get("stats").get("state").asText == "FINISHED")
-      assert(rows.result() == plain && plain.nonEmpty,
-        "gzip spool drain != plain drain")
-      assert(!dir.exists, s"gzip spool dir $dir leaked")
-      // unknown codec names fail loudly at submit, not silently plain
-      spark.conf.set(
-        graft.sources.GraftWireConf.StatementSpoolCodecKey, "zstd9")
-      val (c2, body) = http("POST", s"$base/v1/statement", Some(sql),
-        Map("X-Trino-User" -> "spec"))
-      assert(c2 == 200 && body.contains("unsupported codec"), body.take(300))
-    } finally spark.conf.unset(
-      graft.sources.GraftWireConf.StatementSpoolCodecKey)
+    }
+    val direct = spark.sql(sql).collect().map(_.getLong(0)).toSeq
+    assert(!wire.contains(-1L), "a planted part file was served")
+    assert(wire == direct && wire.nonEmpty, "drain != direct collect")
+  }
+
+  test("a command over the face launches no job") {
+    spark.conf.set("spark.sql.graft.root", sf1)
+    assert(base.nonEmpty) // start the server outside the counted window
+    val jobs = jobsStartedDuring {
+      assert(runSql("CREATE OR REPLACE TEMP VIEW stmt_cmd_v AS " +
+        "SELECT n_nationkey FROM psql.tpcds.nation")._2.isEmpty)
+    }
+    assert(jobs == 0, s"$jobs jobs for a command")
   }
 
   /** ADVICE r17: every early retirement path must CLOSE the currently
@@ -525,14 +613,15 @@ class StatementServerSpec extends SparkSpec {
     * must delete its partial dir before the failedJson response — the
     * orphan sweep only runs at start() and is 1 h age-guarded, so a
     * long-lived server would otherwise accumulate failed-statement
-    * spools for its lifetime. */
+    * spools for its lifetime. The one task spools 5,000 rows, past the
+    * inline limit, before it fails. */
   test("a failing spooled statement leaves no partial spool dir behind") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def spoolDirs() = Option(tmp.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("graft-spool-")).map(_.getName).toSet
     val before = spoolDirs()
     val (code, body) = http("POST", s"$base/v1/statement",
-      Some("SELECT assert_true(id < 10, 'boom') AS a FROM RANGE(100000)"),
+      Some("SELECT assert_true(id < 5000, 'boom') AS a FROM RANGE(0, 10000, 1, 1)"),
       Map("X-Trino-User" -> "spec"))
     assert(code == 200, body)
     val j = mapper.readTree(body)
@@ -556,7 +645,7 @@ class StatementServerSpec extends SparkSpec {
       assert(cols == Seq("c_custkey"))
       val wire = data.map(_.head.asLong).toSeq
       assert(wire.nonEmpty && wire == local, s"wire $wire != local $local")
-      // the dynamic filter survived PAGED toLocalIterator execution:
+      // the dynamic filter survived execution through the face:
       // the wire drain's JDBC scan carried the rendered IN-set and the
       // store returned the dim-filtered subset, not its F-status span
       val crossed = GraftJdbcSource.rowCount(logName) - before
