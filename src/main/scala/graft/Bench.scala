@@ -134,10 +134,10 @@ object Bench {
 
   /** Per-measurement hygiene, run after every timed execution (here
     * and in [[Harness.measure]]): per-query caches must not leak into
-    * the next measurement — the table cache, AND any localCheckpoint
+    * the next measurement — the table cache, AND any materialized
     * blocks the query pinned. Spark frees those only when the RDD
     * object is GC'd, so over a 215-entry suite the iterative entries
-    * (closures, k-means, the checkpointed ANN/tf indexes) otherwise
+    * (closures, k-means, the materialized ANN/tf indexes) otherwise
     * accumulate MEMORY_AND_DISK blocks that squeeze the unified memory
     * manager under LATER entries (the r17 in-suite d20/s08 elevations
     * with the canary at floor — r18 adjudication). The query's own

@@ -273,8 +273,13 @@ object Harness {
     * nature (separate executor processes cannot share its file lock),
     * which is a property of the stand-in store, not of the engine.
     *
+    * A third session, `loss` (also `local-cluster[2,4,2048]`), runs
+    * each [[lossQueries]] entry through [[lossRun]]: it loses the
+    * executor holding the most materialized blocks between the build
+    * and the collect, and must still return the single-process rows.
+    *
     * Args: `[sfDir]` (default sf0.001). Prints
-    * `{"metric":"cluster_check","status":"ok","queries":…,"rows":…}`. */
+    * `{"metric":"cluster_check","status":"ok","queries":…,"rows":…,"loss":{probe:{"executor":…,"blocks":…},…}}`. */
   private val checkQueries: Seq[String] = Seq(
     "q02_scan_group_agg", "q03_join_agg_topn", "q04_left_join_case_agg",
     "q05_except_chain_count", "q15_shuffled_join_agg", "q17_window_topk",
@@ -286,9 +291,9 @@ object Harness {
     // fire across processes (executors also WRITE the index partitions)
     "q25_grouped_topk_custom", "s11_ann_persisted",
     // r17: the broadcast-probe inverted-index joins — t09 additionally
-    // localCheckpoints the shared tf index, so its checkpointed blocks
-    // must serve all four downstream subtrees from EXECUTOR storage
-    // under a real process topology
+    // materializes the shared tf index, so its blocks must serve all
+    // four downstream subtrees from EXECUTOR storage under a real
+    // process topology
     "d02_word_jaccard", "t09_tf_cosine_pairs",
     // r13: the band-index probe (custom TypedImperativeAggregate
     // signatures + DPP across processes) and the bloom point DELETE
@@ -296,10 +301,10 @@ object Harness {
     "d23_incremental_minhash", "l12_bloom_point_delete",
     // r18: the round's riskiest new paths under a process topology —
     // the connected-components loop now RELEASES superseded label
-    // snapshots mid-query (executor-resident checkpoint blocks must
+    // snapshots mid-query (executor-resident materialized blocks must
     // come and go without breaking the live lineage), and the IVF-PQ
-    // build materializes its index relations via localCheckpoint whose
-    // blocks every probe stage must read back across executor JVMs
+    // build materializes its index relations, whose blocks every probe
+    // stage must read back across executor JVMs
     "d20_para_clusters", "s08_ann_ivfpq",
     // r15: runtime dynamic filtering into WIRE scans across processes —
     // the DPP subquery evaluates driver-side, scan.filter() narrows the
@@ -309,7 +314,7 @@ object Harness {
     "q82_cbo_stats_join", "q85_elastic_runtime_filter",
     // r19: the MMR rerank loop now materializes its growing selection
     // per iteration AND releases each superseded snapshot mid-query —
-    // five checkpoint/release cycles whose blocks live in executor
+    // five materialize/release cycles whose blocks live in executor
     // JVMs; s17 feeds it from a corpus pass, s20 from the full stored-
     // index pipeline (build + DPP probe + eligible semi-join upstream)
     "s17_ann_mmr", "s20_retrieval_pipeline",
@@ -317,18 +322,56 @@ object Harness {
     // executor JVMs
     "p09_bpe_encode")
 
+  /** The [[checkQueries]] entries that materialize a relation while
+    * their DataFrame is built: each must lose blocks in `loss`. */
+  private val lossQueries: Seq[String] = Seq(
+    "d02_word_jaccard", "d03_minhash_lsh", "d20_para_clusters",
+    "d23_incremental_minhash", "s08_ann_ivfpq", "s11_ann_persisted",
+    "s17_ann_mmr", "s20_retrieval_pipeline", "t09_tf_cosine_pairs")
+
   private def cluster(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val cluster = Topology("cluster", "local-cluster[2,4,2048]", 8, Some("1536m"))
+    val lost = Seq.newBuilder[String]
     run(Leg("cluster_check", "",
-      Seq(Topology("single", "local[8]", 8),
-        Topology("cluster", "local-cluster[2,4,2048]", 8, Some("1536m"))),
+      Seq(Topology("single", "local[8]", 8), cluster, cluster.copy(label = "loss")),
       timed = false,
-      (spark, _) => checkQueries.map { q =>
-        q -> (() => (0.0, canonical(SparkEntry.queries(q)(spark, sfDir))))
-      },
+      (spark, t) =>
+        if (t.label == "loss") lossQueries.map(q => q -> (() => lossRun(spark, q, sfDir, lost += _)))
+        else checkQueries.map(q => q -> (() => (0.0, canonical(SparkEntry.queries(q)(spark, sfDir))))),
       r => s""""queries":${checkQueries.size},"rows":"""" +
         r.head._2.map { case (q, (_, rows)) => s"$q=${rows.size}" }
-          .mkString(",") + "\""))
+          .mkString(",") + "\"," + lost.result().mkString(""""loss":{""", ",", "}")))
+  }
+
+  /** One executor-loss probe on a two-executor session: build `q`'s
+    * DataFrame (which materializes its reused relations), kill the
+    * executor holding the most materialized blocks, collect once it is
+    * gone, then bring the session back to two executors. A probe whose
+    * victim held no block proves nothing and fails the leg. `report`
+    * gets the probe's `"q":{"executor":…,"blocks":…}` entry. */
+  private def lossRun(spark: SparkSession, q: String, sfDir: String,
+      report: String => Unit): Run = {
+    val sc = spark.sparkContext
+    def blocks = org.apache.spark.sql.GraftBridge.rddBlocksByExecutor(sc)
+    def await(ok: Map[String, Int] => Boolean): Unit = {
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (!ok(blocks)) {
+        require(System.nanoTime() < deadline, s"$q: executors did not settle")
+        Thread.sleep(200)
+      }
+    }
+    await(_.size == 2)
+    val df = SparkEntry.queries(q)(spark, sfDir)
+    val (victim, held) = blocks.maxBy(_._2)
+    require(held > 0, s"$q: no executor holds a materialized block")
+    require(sc.killExecutor(victim), s"$q: executor $victim was not killed")
+    await(!_.contains(victim))
+    report(s""""$q":{"executor":"$victim","blocks":$held}""")
+    val rows = canonical(df)
+    Bench.cleanup(spark)
+    sc.requestTotalExecutors(2, 0, Map.empty)
+    (0.0, rows)
   }
 
   /** Scale-out throughput curve: the headline five plus the
@@ -449,10 +492,7 @@ object Harness {
     val annDir = cached(s"$root/ann$annCopies")(d => withLocal { b =>
       functions.VectorFunctions.register(b)
       val corpus = scaleEmb(Tables.embeddings(b, sf01), annCopies)
-      val cent = operators.Similarity.ivfCentroids(corpus)
-      operators.Similarity.nearestCells(corpus, cent)
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$d/cells")
-      cent.write.mode("overwrite").parquet(s"$d/centroids")
+      operators.Similarity.writeIvfIndex(corpus, d)
       corpus.filter(pmod(col("vec_id"), lit(30)) === 7)
         .select(col("vec_id"), col("embedding"))
         .write.mode("overwrite").parquet(s"$d/queries.parquet")

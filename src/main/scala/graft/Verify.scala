@@ -21,9 +21,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that cache or checkpoint intermediates (d03's signature
-      // table, the localCheckpoint sites) must not pin them for the
-      // rest of the dump
+      // queries that materialize intermediates (d03's signature table,
+      // the IVF centroids) must not pin them for the rest of the dump
       Bench.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

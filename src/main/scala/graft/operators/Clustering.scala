@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
+import org.apache.spark.sql.GraftBridge.{materialize, release}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -12,8 +13,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * in Similarity.annIvf).
   *
   * Both are iterative-relational: each iteration is a bounded number
-  * of shuffles over DataFrames, with `localCheckpoint()` truncating
-  * the growing lineage — the Pregel-on-DataFrames shape. At 100 TB the
+  * of shuffles over DataFrames, with each round materialized so the
+  * plan stays flat — the Pregel-on-DataFrames shape. At 100 TB the
   * same loops hold: label propagation converges in O(graph diameter)
   * rounds of one shuffle each (for hostile diameters switch to the
   * large-star/small-star algorithm, same join primitives); k-means
@@ -43,13 +44,10 @@ object Clustering {
     // d20 feeds the full d17 minhash pair pipeline here) edge subtree
     // twice into the sym job, and exchange reuse does not fire across
     // the swapped projections (r18 adjudication of the d20 elevation)
-    val e0 = edges.select(col("a"), col("b")).localCheckpoint()
-    val sym = e0
-      .union(e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    var snapshot = sym.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
+    val e0 = materialize(edges.select(col("a"), col("b")))
+    val sym = materialize(e0.union(e0.select(col("b").as("a"), col("a").as("b"))))
+    var snapshot = materialize(sym.select(col("a").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     var labels = snapshot
     val lblType = labels.schema("lbl").dataType
     var converged = false
@@ -72,28 +70,27 @@ object Clustering {
       // renamed projection rather than .as() aliases — the hop plan is
       // un-checkpointed and alias self-joins trip attribute dedup
       val jump = hop.select(col("node").as("jnode"), col("lbl").as("jlbl"))
-      // convergence probe rides the checkpoint materialization itself
+      // convergence probe rides the snapshot's materialization itself
       // (observe/CollectMetrics accumulates during the ONE job that
       // writes the snapshot) — previously a separate filter+limit+count
-      // job per iteration re-scanned the fresh checkpoint (r19 verdict
+      // job per iteration re-scanned the fresh snapshot (r19 verdict
       // item 8: fold the probe into the iteration's job count). The
       // count() fallback keeps the loop correct if a Spark version ever
-      // stops populating observedMetrics off a localCheckpoint job.
+      // stops populating observedMetrics off that job.
       val nextObs = hop.join(jump, col("lbl") === col("jnode"), "left")
         .select(col("node"),
           least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"),
           col("prev"))
         .observe(s"cc_changed_$i", count(when(col("lbl") < col("prev"), lit(1))))
-      val next = nextObs.localCheckpoint()
+      val next = materialize(nextObs)
       val changed = nextObs.queryExecution.observedMetrics
         .get(s"cc_changed_$i").map(_.getLong(0))
         .getOrElse(next.filter(col("lbl") < col("prev")).limit(1).count())
       // the superseded snapshot's blocks are dead the moment `next`
-      // materializes — free them NOW: Spark itself only releases
-      // checkpoint blocks on GC (ContextCleaner), so a long closure
-      // would otherwise hold one labels-sized snapshot PER ITERATION
-      // in the block manager (at 100 TB: 25 corpus-sized snapshots)
-      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(snapshot)
+      // materializes — free them NOW, not at GC: a long closure would
+      // otherwise hold one labels-sized snapshot PER ITERATION in the
+      // block manager (at 100 TB: 25 corpus-sized snapshots)
+      release(snapshot)
       snapshot = next
       labels = next.select(col("node"), col("lbl"))
       converged = changed == 0
@@ -103,8 +100,8 @@ object Clustering {
       s"connectedComponents: no convergence after $maxIter iterations; raise maxIter")
     // the result depends only on the FINAL snapshot — the edge
     // relations' blocks are released before returning
-    org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(e0)
-    org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(sym)
+    release(e0)
+    release(sym)
     labels
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.functions._
 
@@ -57,12 +58,11 @@ object Dedup {
     // (per-pair set construction dominates there), and it is the
     // formulation that scales out: at real corpus sizes the index join
     // plus a prefix filter (PPJoin-style) bounds the candidate space.
-    // spread + checkpoint (r20): the distinct-word explode fed three
-    // consumers (sizes, probe, stream side) un-materialized, each
-    // evaluation one task off the one-split scan (1.1 s job)
-    val ws = Tables.spread(Tables.documents(s, d), col("doc_id"))
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
-      .localCheckpoint()
+    // spread + materialize (r20): the distinct-word explode feeds three
+    // consumers (sizes, probe, stream side), and each evaluation was
+    // one task off the one-split scan (1.1 s job); O(corpus words)
+    val ws = materialize(Tables.spread(Tables.documents(s, d), col("doc_id"))
+      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w")))
     val sz = ws.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // the bounded PROBE side broadcasts (r17): the corpus-side index
     // streams map-side instead of shuffling every (doc, word) row on
@@ -151,26 +151,10 @@ object Dedup {
     // (doc_id, 32×8B sig, n) is materialized — the shingle sets
     // themselves never cross an exchange (round-2 fix: collect_set +
     // cache of full sets materialized the whole corpus content).
-    // localCheckpoint (not cache): the signature table is reused three
-    // times below, but a returned-lazy DataFrame gives no hook to
-    // unpersist a cache after the caller materializes — cache() pinned
-    // the blocks for the whole session for any caller that didn't
-    // clearCache() (round-6 advice). localCheckpoint materializes
-    // eagerly; its blocks are dropped by the ContextCleaner once a
-    // driver GC collects the checkpointed RDD reference (NOT by
-    // spark.catalog.clearCache(), which covers only cached plans) —
-    // weaker than deterministic unpersist, but bounded: O(docs × 256 B)
-    // per live plan, no caller contract. Scale caveats: the eager
-    // materialization runs the signature job even for plan-only
-    // tooling (an explain shows Scan ExistingRDD where the aggregate
-    // subtree was), and checkpoint blocks forgo lineage — an executor
-    // lost mid-query recomputes the stage instead of recovering
-    // per-partition. Both are the right trade for a thrice-reused
-    // bounded table (same posture as Clustering's iteration tables).
-    val sig = sh.groupBy(col("doc_id"))
+    // the signature table is read three times below: O(docs × 256 B)
+    val sig = materialize(sh.groupBy(col("doc_id"))
       .agg(graft.functions.MinHashAggregate.minhash_agg(col("s"), nSig).as("sig"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
+        count(lit(1)).as("n")))
     // the banded relation carries ONLY (doc_id, band, bh) through the
     // exchange; signatures join back in for candidate pairs only
     val banded = bandedOf(sig, nSig)
@@ -179,19 +163,16 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .distinct()
-    // estimate Jaccard from signature agreement, keep plausible pairs.
-    // localCheckpoint (r20): the relation is referenced three times
-    // below (candDocs, the common-count join, the final left join) and
-    // each reference otherwise re-runs the banded self-join + est
-    // screen; it is bounded by band collisions (pairs, not corpus). */
-    val plausible = cand
+    // estimate Jaccard from signature agreement, keep plausible pairs;
+    // read three times below (candDocs, the common-count join, the
+    // final left join), bounded by band collisions (pairs, not corpus)
+    val plausible = materialize(cand
       .join(sig.select(col("doc_id").as("a_id"), col("sig").as("siga"), col("n").as("na")), "a_id")
       .join(sig.select(col("doc_id").as("b_id"), col("sig").as("sigb"), col("n").as("nb")), "b_id")
       .withColumn("est",
         size(expr("filter(zip_with(siga, sigb, (p, q) -> p = q), v -> v)")).cast("double") / nSig)
       .filter(col("est") >= 0.25)
-      .select(col("a_id"), col("b_id"), col("na"), col("nb"))
-      .localCheckpoint()
+      .select(col("a_id"), col("b_id"), col("na"), col("nb")))
     // exact verification restricted to the PLAUSIBLE PAIRS themselves:
     // expand each pair to its left doc's shingles (Σ|sh(a)| rows over
     // plausible pairs), then count which of those shingles the right
@@ -490,8 +471,8 @@ object Dedup {
     // spread (r20): the trigram-sha256 map stage ran in one task off
     // the one-split local scan — and TWICE, because `fps` fed both the
     // df count and the pair join un-materialized (two 1.3 s single-task
-    // jobs = most of d14's profile). One spread evaluation, one
-    // checkpoint of exactly the (doc_id, fp, pos) rows the joins
+    // jobs = most of d14's profile). One spread evaluation, and `fps`
+    // materialized: exactly the (doc_id, fp, pos) rows the joins
     // shuffle anyway.
     val kg = Tables.spread(Tables.documents(s, d), col("doc_id"))
       .withColumn("arr", split(col("text"), " "))
@@ -503,13 +484,12 @@ object Dedup {
       .select(col("doc_id"), posexplode(col("hs")).as(Seq("pos", "h")))
     val byDoc = Window.partitionBy(col("doc_id"))
     val win4 = Window.partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, 3)
-    val fps = kg.withColumn("nk", count(lit(1)).over(byDoc))
+    val fps = materialize(kg.withColumn("nk", count(lit(1)).over(byDoc))
       .withColumn("fp", min(col("h")).over(win4))
       .filter((col("nk") >= 4 && col("pos") <= col("nk") - 4) ||
         (col("nk") < 4 && col("pos") === 0))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("fp"))
-      .groupBy(col("doc_id"), col("fp")).agg(min(col("pos")).as("pos"))
-      .localCheckpoint()
+      .groupBy(col("doc_id"), col("fp")).agg(min(col("pos")).as("pos")))
     val keep = fps.join(
       fps.groupBy(col("fp")).agg(count(lit(1)).as("ndocs"))
         .filter(col("ndocs") <= cloneMaxDf)
@@ -583,21 +563,19 @@ object Dedup {
       |WHERE CAST(common AS DOUBLE) / (sa.n + sb.n - common) >= 0.8
       |ORDER BY a_id, b_id""".stripMargin
   ) { (s, d) =>
-    // spread + checkpoint (r20): the trigram-shingle explode ran in one
-    // task off the one-split local scan, and FOUR times — sz, wdf, the
-    // ranked prefix build, and the candidate-restricted verify all read
-    // `ws` un-materialized (four ~0.5 s single-task jobs in the
-    // profile). One spread evaluation, one checkpoint of the narrow
+    // spread + materialize (r20): the trigram-shingle explode ran in
+    // one task off the one-split local scan, and FOUR times — sz, wdf,
+    // the ranked prefix build, and the candidate-restricted verify
+    // (four ~0.5 s single-task jobs in the profile). The narrow
     // (doc_id, trigram) index rows — the persisted-inverted-index
     // posture the scaladoc already argues at corpus scale.
-    val ws = Tables.spread(Tables.documents(s, d), col("doc_id"))
+    val ws = materialize(Tables.spread(Tables.documents(s, d), col("doc_id"))
       .withColumn("arr", split(col("text"), " "))
       .filter(size(col("arr")) >= 3)
       .select(col("doc_id"), explode(array_distinct(expr(
         """zip_with(zip_with(slice(arr, 1, size(arr) - 2), slice(arr, 2, size(arr) - 2),
           |  (a, b) -> concat(a, '_', b)), slice(arr, 3, size(arr) - 2),
-          |  (x, c) -> concat(x, '_', c))""".stripMargin))).as("w"))
-      .localCheckpoint()
+          |  (x, c) -> concat(x, '_', c))""".stripMargin))).as("w")))
     val sz = ws.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val wdf = ws.groupBy(col("w")).agg(count(lit(1)).as("df"))
     // global rarity order; per-doc position within it
@@ -653,11 +631,9 @@ object Dedup {
       |WHERE CAST(common AS DOUBLE) / sa.n >= 0.9
       |ORDER BY a_id, b_id""".stripMargin
   ) { (s, d) =>
-    // spread + checkpoint (r20): same rationale as d02's (1.1 s
-    // single-task explode evaluated per consumer)
-    val ws = Tables.spread(Tables.documents(s, d), col("doc_id"))
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
-      .localCheckpoint()
+    // spread + materialize (r20): same rationale and bound as d02's
+    val ws = materialize(Tables.spread(Tables.documents(s, d), col("doc_id"))
+      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w")))
     val sz = ws.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // the probe side IS the benchmark (tiny by construction) — broadcast
     // it so the corpus-side index streams map-side instead of shuffling
@@ -820,7 +796,7 @@ object Dedup {
     // exact-dup collapse: one representative row per distinct digest
     // (the d16 survivor). The groupBy exchanges (digest, key) pairs
     // only; the join brings each winning row's text across once.
-    // (r20 negative result: a localCheckpoint of this collapsed-type
+    // (r20 negative result: materializing this collapsed-type
     // relation — so the verification branch skips the re-chunk — was
     // measured 0.4 s SLOWER isolated: materializing paragraph text
     // blocks costs more than recomputing the chunk explode here.)
@@ -834,10 +810,9 @@ object Dedup {
         "zip_with(slice(arr, 1, size(arr) - 1), slice(arr, 2, size(arr) - 1), (a, b) -> concat(a, '_', b))")))
         .as("s"))
     val sh = shingleOf(rp)
-    val sig = sh.groupBy(col("key"))
+    val sig = materialize(sh.groupBy(col("key"))
       .agg(graft.functions.MinHashAggregate.minhash_agg(col("s"), nSig).as("sig"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
+        count(lit(1)).as("n")))
     val bands = (0 until nSig / 2).map(b =>
       struct(lit(b).as("band"),
         xxh(0L, element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2)).as("bh")))
@@ -850,17 +825,15 @@ object Dedup {
       .distinct()
     // signature-agreement estimate prunes the verification set (d03's
     // shape): band collisions admit ~single-band matches, the estimate
-    // keeps only pairs plausibly at the 0.5 report threshold.
-    // localCheckpoint (r20): referenced three times below, bounded by
-    // band collisions — same rationale as d03's.
-    val plausible = cand
+    // keeps only pairs plausibly at the 0.5 report threshold. Read
+    // three times below, bounded by band collisions (as d03's).
+    val plausible = materialize(cand
       .join(sig.select(col("key").as("a_key"), col("sig").as("siga"), col("n").as("na")), "a_key")
       .join(sig.select(col("key").as("b_key"), col("sig").as("sigb"), col("n").as("nb")), "b_key")
       .withColumn("est",
         size(expr("filter(zip_with(siga, sigb, (p, q) -> p = q), v -> v)")).cast("double") / nSig)
       .filter(col("est") >= 0.25)
-      .select(col("a_key"), col("b_key"), col("na"), col("nb"))
-      .localCheckpoint()
+      .select(col("a_key"), col("b_key"), col("na"), col("nb")))
     val candChunks = plausible.select(col("a_key").as("key"))
       .union(plausible.select(col("b_key").as("key")))
       .distinct()
@@ -1031,15 +1004,12 @@ object Dedup {
       .withColumn("last", lead(col("w"), dupSpanGram - 1).over(byDocPos))
       .filter(col("last").isNotNull)
       .select(col("doc_id"), col("pos"), col("gram"))
-    // r20: materialized — `capped` feeds BOTH the per-gram df count and
-    // the pair join, and each reference otherwise re-runs the gram
-    // build (a doc-keyed window with 8 lead columns) plus the position
-    // cap window over the whole corpus; the checkpoint holds exactly
-    // the (doc_id, pos, gram) rows the pair join shuffles anyway.
-    val capped = grams.withColumn("rk", row_number().over(
+    // r20: `capped` feeds BOTH the per-gram df count and the pair join;
+    // it is exactly the (doc_id, pos, gram) rows the pair join shuffles
+    // anyway
+    val capped = materialize(grams.withColumn("rk", row_number().over(
         Window.partitionBy(col("doc_id"), col("gram")).orderBy(col("pos"))))
-      .filter(col("rk") <= dupSpanMaxPos).drop("rk")
-      .localCheckpoint()
+      .filter(col("rk") <= dupSpanMaxPos).drop("rk"))
     val dfg = capped.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd").between(2, dupSpanMaxDf))
@@ -1151,12 +1121,11 @@ object Dedup {
       |FROM gr JOIN f USING (g)
       |GROUP BY gr.doc_id ORDER BY gr.doc_id""".stripMargin
   ) { (s, d) =>
-    // spread + checkpoint (r20): the gram-sha256 explode ran in one
+    // spread + materialize (r20): the gram-sha256 explode ran in one
     // task off the one-split local scan, TWICE (first-occurrence agg +
-    // the join back read it un-materialized) — two ~0.6 s single-task
-    // jobs in the profile; the checkpoint holds the narrow
-    // (doc_id, digest) rows both consumers shuffle anyway
-    val g = Tables.spread(Tables.documents(s, d), col("doc_id"))
+    // the join back) — two ~0.6 s single-task jobs in the profile; the
+    // narrow (doc_id, digest) rows both consumers shuffle anyway
+    val g = materialize(Tables.spread(Tables.documents(s, d), col("doc_id"))
       .withColumn("arr", split(col("text"), " "))
       .filter(size(col("arr")) >= 3)
       // two zip_with folds over pre-shifted slices (the d13 pattern:
@@ -1167,8 +1136,7 @@ object Dedup {
                       (a, b) -> concat(a, '_', b)),
              slice(arr, 3, size(arr) - 2), (ab, c) -> concat(ab, '_', c))""")))
         .as("gram"))
-      .select(col("doc_id"), sha2(col("gram"), 256).as("dg"))
-      .localCheckpoint()
+      .select(col("doc_id"), sha2(col("gram"), 256).as("dg")))
     val first = g.groupBy(col("dg")).agg(min(col("doc_id")).as("first_doc"))
     g.join(first, Seq("dg"))
       .groupBy(col("doc_id"))
@@ -1254,14 +1222,12 @@ object Dedup {
     val spread =
       if (inParts * 2 >= target) docs
       else docs.repartition(target, col("doc_id"))
-    // localCheckpoint: the signature table feeds BOTH writes (bands,
-    // sigs) — without it the shingle+minhash aggregate runs twice per
-    // build. Safe here, unlike the PROBE side: DPP's selective-filter
+    // the signature table feeds BOTH writes (bands, sigs), O(docs ×
+    // 256 B). Safe here, unlike the PROBE side: DPP's selective-filter
     // check never looks at the build plan.
-    val hSig0 = shinglesOf(spread).groupBy(col("doc_id"))
+    val hSig0 = materialize(shinglesOf(spread).groupBy(col("doc_id"))
       .agg(graft.functions.MinHashAggregate.minhash_agg(col("s"), nSig).as("sig"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
+        count(lit(1)).as("n")))
     val hSig =
       if (spread eq docs) hSig0 else hSig0.coalesce(math.max(1, inParts))
     bandedOf(hSig, nSig)
@@ -1297,7 +1263,7 @@ object Dedup {
     val nSig = 32
     val docs = corpus
     val bSh = shinglesOf(batch)
-    // NOT checkpointed: the probe side must keep its selective batch
+    // NOT materialized: the probe side must keep its selective batch
     // filter visible in the logical plan, or the dynamic-partition-
     // pruning rule sees a bare LogicalRDD and declines to prune the
     // stored band scan (recomputing the O(batch) signature twice is

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryEntry, Tables}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -724,9 +725,9 @@ object Pipeline {
     * so the five-stage pipeline is hash-gated end-to-end.
     * PipelineComposeSpec still gates the chain algebra (survivor ⊆
     * p12's, dropped docs have smaller-id partners, totals re-add).
-    * The survivor relation is localCheckpoint'd once — consumed by
-    * both the pair generator and the final anti-join, the one diamond
-    * in the chain. */
+    * The survivor relation is materialized once — consumed by both the
+    * pair generator and the final anti-join, the one diamond in the
+    * chain. */
   val pipelineFull: QueryEntry = QueryEntry(
     "p13_pipeline_full",
     s"""WITH $composeSurvivorCtes,
@@ -740,7 +741,7 @@ object Pipeline {
        |         LEFT JOIN drop0 USING (doc_id) WHERE drop0.doc_id IS NULL),
        |${packManifestSql("kept")}""".stripMargin
   ) { (s, d) =>
-    val surv = composeSurvivors(s, d).localCheckpoint()
+    val surv = materialize(composeSurvivors(s, d))
     val drop = Dedup.minhashVerifiedPairs(surv)
       .filter(col("jaccard") >= 0.85)
       .select(col("b_id").as("doc_id")).distinct()
@@ -884,7 +885,7 @@ object Pipeline {
     * map-side; the per-doc fold array is ≤ min(doc features, B)
     * elements, doc-bounded, never corpus-bounded. One corpus scan
     * builds feats; Spark reuses it across the raw/target aggregates
-    * and the scoring join via the checkpointed lineage. */
+    * and the scoring join via the materialized relation. */
   val dsirWeights: QueryEntry = QueryEntry(
     "p16_dsir_weights", {
       val (hc, hlast) = XxhOracle.hashStrCtes(
@@ -921,11 +922,10 @@ object Pipeline {
       .select(col("doc_id"), col("lang"), explode(expr(
         "zip_with(slice(arr, 1, size(arr) - 1), slice(arr, 2, size(arr) - 1), " +
           "(a, b) -> concat(a, '_', b))")).as("g"))
-    val feats = docs.select(col("doc_id"), col("lang"), explode(ws).as("g"))
+    val feats = materialize(docs.select(col("doc_id"), col("lang"), explode(ws).as("g"))
       .unionByName(bi)
       .select(col("doc_id"), col("lang"),
-        pmod(xxhash64(col("g")), lit(dsirBuckets.toLong)).as("bucket"))
-      .localCheckpoint()
+        pmod(xxhash64(col("g")), lit(dsirBuckets.toLong)).as("bucket")))
     val raw = feats.groupBy(col("bucket")).agg(count(lit(1)).as("cr"))
     val tgt = feats.filter(col("lang") === "en")
       .groupBy(col("bucket")).agg(count(lit(1)).as("ct"))
@@ -1376,12 +1376,10 @@ object Pipeline {
       |FROM o JOIN na ON na.source = o.src_a
       |ORDER BY src_a, src_b""".stripMargin
   ) { (s, d) =>
-    // spread + checkpoint (r20): the 5-gram sha256 explode ran in one
-    // task off the one-split local scan, TWICE (the per-gram source-set
-    // aggregate and the per-source denominator both read `g`
-    // un-materialized — 1.3 + 1.1 s single-task jobs, most of p24's
-    // profile); the checkpoint holds the narrow (source, digest) rows
-    val g = Tables.spread(Tables.documents(s, d), col("doc_id")).select(col("source"),
+    // spread + materialize (r20): the 5-gram sha256 explode ran in one
+    // task off the one-split local scan, TWICE (1.3 + 1.1 s single-task
+    // jobs, most of p24's profile); the narrow (source, digest) rows
+    val g = materialize(Tables.spread(Tables.documents(s, d), col("doc_id")).select(col("source"),
       explode(when(size(ws) >= 5, expr(
           "zip_with(zip_with(zip_with(zip_with(" +
             "slice(split(text, ' '), 1, size(split(text, ' ')) - 4), " +
@@ -1390,8 +1388,7 @@ object Pipeline {
             "slice(split(text, ' '), 4, size(split(text, ' ')) - 4), (x, d) -> concat(x, ' ', d)), " +
             "slice(split(text, ' '), 5, size(split(text, ' ')) - 4), (x, e) -> sha2(concat(x, ' ', e), 256))"))
         .otherwise(array().cast("array<string>"))).as("sh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val bySh = g.groupBy(col("sh"))
       .agg(collect_set(col("source")).as("srcs"))
     val pairs = bySh
@@ -1479,19 +1476,16 @@ object Pipeline {
       var batchId = 0L
       Seq(8, 9).foreach { residue =>
         val batch = docs.filter(col("doc_id") % 10 === residue)
-        // localCheckpoint AFTER the probe: the admitted set feeds the
-        // exactly-once sink TWICE (the crash-replay double-apply) and
-        // the index append — without it each consumer re-runs the
-        // whole shingle+minhash+probe pipeline (the r13 p25 floor was
-        // ~3 probe evaluations per batch). The probe's own DPP is
-        // unaffected: it fires inside the ONE evaluation that
-        // materializes the checkpoint (the no-checkpoint rule guards
-        // the probe's INTERNAL plan, not its consumers).
-        val novel = Dedup.probeBandIndex(s, idx, docs, batch)
+        // materialized AFTER the probe: the admitted set (one batch's
+        // novel docs) feeds the exactly-once sink TWICE (the
+        // crash-replay double-apply) and the index append. The probe's
+        // own DPP is unaffected: it fires inside the ONE evaluation
+        // that materializes the set (the no-materialize rule guards the
+        // probe's INTERNAL plan, not its consumers).
+        val novel = materialize(Dedup.probeBandIndex(s, idx, docs, batch)
           .filter(col("novel"))
           .select(col("doc_id"))
-          .join(docs, Seq("doc_id"))
-          .localCheckpoint()
+          .join(docs, Seq("doc_id")))
         admit(novel, batchId); admit(novel, batchId) // crash replay
         Dedup.buildBandIndex(s, novel, idx, append = true)
         batchId += 1

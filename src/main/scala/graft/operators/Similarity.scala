@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryEntry, Tables}
 import graft.functions.VectorFunctions.cosine_similarity
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.GraftBridge.{materialize, release}
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -171,12 +172,28 @@ object Similarity {
     * vec_id % m sample; footer-only count sizes m), so only the
     * assignment pass ever scans the corpus — k centroids fit from a
     * bounded sample are statistically the same quantizer at any corpus
-    * size (the FAISS training posture). */
+    * size (the FAISS training posture). Returned materialized: every
+    * caller reads the ≤ ivfK centroid rows at least twice. */
   private[graft] def ivfCentroids(e: org.apache.spark.sql.DataFrame,
+      n: Long = -1L): org.apache.spark.sql.DataFrame = materialize(trainIvf(e, n))
+
+  /** [[ivfCentroids]]' lazy training plan; [[ivfTop5]] materializes
+    * its packed [[centArray]] form instead (one job, not two). */
+  private def trainIvf(e: org.apache.spark.sql.DataFrame,
       n: Long = -1L): org.apache.spark.sql.DataFrame = {
     val cnt = if (n >= 0L) n else e.count()
     Clustering.trainCentroids(e, ivfK, iters = 1,
       sampleMod = math.max(1L, cnt / pqTrainSample))
+  }
+
+  /** The stored IVF index of `e` under `idxDir`: `cells`, the corpus
+    * partitioned by nearest centroid, and the `centroids` themselves. */
+  private[graft] def writeIvfIndex(e: org.apache.spark.sql.DataFrame,
+      idxDir: String): Unit = {
+    val cent = ivfCentroids(e)
+    nearestCells(e, cent)
+      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
+    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
   }
 
   // ── zero-shuffle nearest-cell machinery (r19 optimization round) ───
@@ -247,19 +264,25 @@ object Similarity {
   val annIvf: QueryEntry = QueryEntry(
     "s03_ann_ivf", IvfOracle.probeOracle()
   ) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-    // train once (the r18 discipline — the corpus and query branches
-    // below would otherwise each re-inline the Lloyd training)
-    val centA = centArray(ivfCentroids(e)).localCheckpoint()
-    // map-only passes: the corpus branch takes each vector's argmax
-    // cell via the codegen'd per-row loop, the query branch its top
-    // ivfProbes — no corpus exchange anywhere before the probe join
+    ivfTop5(Tables.embeddings(s, d), ivfProbes)
+      .select(col("qid"), col("vec_id").as("nid"), col("rank"), col("cos"))
+      .orderBy(col("qid"), col("rank"))
+  }
+
+  /** s03's probe over a freshly trained index of `e` at `probes` cells:
+    * each query's (qid, vec_id, cos, rank ≤ 5). Map-only passes: the
+    * corpus branch takes each vector's argmax cell via the codegen'd
+    * per-row loop, the query branch its top `probes` — no corpus
+    * exchange anywhere before the probe join. */
+  private def ivfTop5(e: org.apache.spark.sql.DataFrame, probes: Int)
+      : org.apache.spark.sql.DataFrame = {
+    val centA = materialize(centArray(trainIvf(e)))
     val assigned = e.filter(col("vec_id") >= 10).crossJoin(broadcast(centA))
       .withColumn("best", bestCellCol(col("cents"), col("embedding")))
       .select(col("vec_id"), col("embedding"), col("best.cid").as("cluster"))
     val qprobe = e.filter(col("vec_id") < 10).crossJoin(broadcast(centA))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode(topCellsCol(col("cents"), col("embedding"), ivfProbes)).as("pc"))
+        explode(topCellsCol(col("cents"), col("embedding"), probes)).as("pc"))
       .select(col("qid"), col("qe"), col("pc.cid").as("cluster"))
     assigned
       .join(broadcast(qprobe), Seq("cluster"))
@@ -267,8 +290,6 @@ object Similarity {
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rank"), col("cos"))
-      .orderBy(col("qid"), col("rank"))
   }
 
   /** Cross-modal join: embedding-space neighbors resolved back to
@@ -662,13 +683,10 @@ object Similarity {
     // sample vec_ids): codes become true small ints and the ADC flat
     // LUT key sub·k + code stays compact. Window runs over ≤ M·k·d/M
     // codebook rows, hash-partitioned by sub.
-    // materialize the O(M·k·subDim) codebook before fan-out: every
-    // caller references it at least twice (the returned encode plus
-    // its own LUT/probe heads), and a lazy codebook re-runs the Lloyd
-    // training once per reference (the r18 train-once discipline)
-    val c1d = c1.withColumn("cl",
-      (expr("dense_rank() OVER (PARTITION BY sub ORDER BY cl)") - 1).cast("long"))
-      .localCheckpoint()
+    // the O(M·k·subDim) codebook is read at least twice by every
+    // caller (the returned encode plus its own LUT/probe heads)
+    val c1d = materialize(c1.withColumn("cl",
+      (expr("dense_rank() OVER (PARTITION BY sub ORDER BY cl)") - 1).cast("long")))
     (c1d, pqCodes(e, c1d))
   }
 
@@ -890,17 +908,14 @@ object Similarity {
          org.apache.spark.sql.DataFrame) = {
     // one footer-only count sizes BOTH quantizers' training samples
     val n = e.count()
-    // The three index relations are MATERIALIZED once (localCheckpoint
-    // — the in-memory analogue of the persisted s12 index): without it
-    // every downstream reference re-inlines its training subtree, and
-    // the probe's many aggregation heads (cdot/csq/cnorm/pdot/qc) each
-    // replay coarse + PQ training — 96 corpus scans in s08's formatted
-    // plan with ZERO exchange reuse (the r17 verdict's s08 elevation;
-    // the exact t09-at-r16 signature). Sizes: cent O(ivfK) rows,
-    // codebook O(M·k·subDim) — both trivially resident; codes 8 B + a
-    // cell id per vector — the FAISS in-RAM index, i.e. the state a
-    // 100 TB deployment persists instead (s12's parquet layout).
-    val cent = ivfCentroids(e, n).localCheckpoint()
+    // The three index relations are materialized once — the in-memory
+    // analogue of the persisted s12 index, read by the probe's many
+    // aggregation heads (cdot/csq/cnorm/pdot/qc; lazy, s08's plan had
+    // 96 corpus scans). Sizes: cent O(ivfK) rows, codebook
+    // O(M·k·subDim) — both trivially resident; codes 8 B + a cell id
+    // per vector — the FAISS in-RAM index, i.e. the state a 100 TB
+    // deployment persists instead (s12's parquet layout).
+    val cent = ivfCentroids(e, n)
     // residuals r = x − c(x) with the cell ridden through — since the
     // r19 fold rework assignment + residual is ONE map pass (no
     // window exchange, no join back for the cell id)
@@ -914,8 +929,7 @@ object Similarity {
     // encode under the MATERIALIZED codebook (pqCodes is exactly the
     // encode half of pqTrain, so the codes are bit-identical — the
     // oracle replays the same frozen-state chain)
-    val codesCell = pqCodes(residuals, codebook, carry = Seq("cell"))
-      .localCheckpoint()
+    val codesCell = materialize(pqCodes(residuals, codebook, carry = Seq("cell")))
     (cent, codebook, codesCell)
   }
 
@@ -1132,7 +1146,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val corpus = e.filter(col("vec_id") >= 10)
       .join(filteredEligible(s, d), Seq("vec_id"), "left_semi")
-    val cent = ivfCentroids(corpus).localCheckpoint() // train once; both consumers read the materialized O(k) rows
+    val cent = ivfCentroids(corpus)
     val centA = centArray(cent)
     val assigned = corpus.crossJoin(broadcast(centA))
       .withColumn("best", bestCellCol(col("cents"), col("embedding")))
@@ -1291,10 +1305,7 @@ object Similarity {
   ) { (s, d) =>
     val idxDir = indexDir(s, "s11", d)
     val e = Tables.embeddings(s, d)
-    val cent = ivfCentroids(e).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e, cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e, idxDir)
     // probe path: STORED state only (plus the query vectors)
     probeStoredCells(s, idxDir, e)
   }
@@ -1337,10 +1348,7 @@ object Similarity {
     val idxDir = indexDir(s, "s14", d)
     val e = Tables.embeddings(s, d)
     val arriving = col("vec_id") % 10 === appendMod && col("vec_id") >= 10
-    val cent = ivfCentroids(e.filter(!arriving)).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e.filter(!arriving), cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e.filter(!arriving), idxDir)
     // INCREMENTAL APPEND: assign the arriving batch against the STORED
     // centroids (no retrain, no rewrite of existing cell files)
     nearestCells(e.filter(arriving), s.read.parquet(s"$idxDir/centroids"))
@@ -1405,10 +1413,7 @@ object Similarity {
   ) { (s, d) =>
     val idxDir = indexDir(s, "s13", d)
     val e = Tables.embeddings(s, d)
-    val cent = ivfCentroids(e).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e, cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e, idxDir)
     probeStoredCells(s, idxDir, e, eligible = Some(filteredEligible(s, d)))
   }
 
@@ -1440,10 +1445,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     def batch(m: Int) = col("vec_id") % 10 === m && col("vec_id") >= 10
     val isBase = !(batch(7) || batch(8) || batch(9))
-    val cent = ivfCentroids(e.filter(isBase)).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e.filter(isBase), cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e.filter(isBase), idxDir)
     // three s14-style ingest batches fragment the cell directories
     Seq(7, 8, 9).foreach { m =>
       nearestCells(e.filter(batch(m)), s.read.parquet(s"$idxDir/centroids"))
@@ -1535,7 +1537,7 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val arriving = col("vec_id") % 10 === appendMod && col("vec_id") >= 10
     val base = e.filter(!arriving && col("vec_id") >= 10)
-    val cent = ivfCentroids(base).localCheckpoint() // train once; both consumers read the materialized O(k) rows
+    val cent = ivfCentroids(base)
     // base build: cells + centroids + the O(k) per-cell baseline stats
     val assignedBase = assignCells(base, cent)
     assignedBase.drop("cs")
@@ -1595,7 +1597,7 @@ object Similarity {
     * one scan) truncated to a [[mmrPool]]-candidate pool per query via
     * the bounded WindowGroupLimit top-k; stage 2 is the greedy loop —
     * [[mmrK]] bounded iterations over O(queries·pool) rows, every join
-    * keyed on qid, nothing corpus-sized (the pool is localCheckpoint'd
+    * keyed on qid, nothing corpus-sized (the pool is materialized
     * once so the corpus scan never re-executes). At 100 TB the corpus
     * cost is exactly one s01 pass (or any indexed entry swapped in as
     * the candidate generator); the rerank cost is independent of
@@ -1627,13 +1629,12 @@ object Similarity {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val pool = e.filter(col("vec_id") >= 10).crossJoin(broadcast(q))
+    val pool = materialize(e.filter(col("vec_id") >= 10).crossJoin(broadcast(q))
       .withColumn("cos", cosine_similarity(col("qe"), col("embedding")))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= mmrPool)
-      .select(col("qid"), col("vec_id"), col("embedding"), col("cos"))
-      .localCheckpoint()
+      .select(col("qid"), col("vec_id"), col("embedding"), col("cos")))
     mmrSelect(pool)
   }
 
@@ -1641,8 +1642,8 @@ object Similarity {
     * candidate pool — factored so any stage-1 candidate generator
     * (s01's corpus pass in s17, the filtered stored-index probe in
     * s20) can feed the same rerank. The pool must already be bounded
-    * per query (callers localCheckpoint it so the generator never
-    * re-executes inside the loop).
+    * per query, and callers materialize it so the generator never
+    * re-executes inside the loop.
     *
     * The growing selection is materialized PER ITERATION: each step
     * references `sel` three times (the union's kept branch, the
@@ -1652,19 +1653,18 @@ object Similarity {
     * r19 adjudication of the s20 elevation; the same re-inlined-subtree
     * class as s08's lazy index relations at r18, one level up — here
     * the data stays tiny but the OPTIMIZER/CODEGEN cost explodes, a
-    * driver-side bottleneck no executor count fixes). Checkpointing the
-    * O(queries·k)-row selection keeps the plan linear in k; superseded
-    * snapshots are released immediately (connectedComponents'
-    * discipline — Spark frees checkpoint blocks only on GC). */
+    * driver-side bottleneck no executor count fixes). Materializing
+    * the O(queries·k)-row selection keeps the plan linear in k;
+    * superseded snapshots are released immediately
+    * (connectedComponents' discipline). */
   private[graft] def mmrSelect(pool: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    var sel = pool
+    var sel = materialize(pool
       .withColumn("r", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("r") === 1)
       .select(col("qid"), col("vec_id"), col("embedding"), col("cos"),
-        lit(1).as("rank"))
-      .localCheckpoint()
+        lit(1).as("rank")))
     for (k <- 2 to mmrK) {
       val remaining = pool.join(
         sel.select(col("qid"), col("vec_id")), Seq("qid", "vec_id"), "left_anti")
@@ -1676,16 +1676,15 @@ object Similarity {
           max(col("sim")).as("maxsim"))
         .withColumn("mmr",
           lit(mmrLambda) * col("cos") - lit(1 - mmrLambda) * col("maxsim"))
-      val next = sel.unionByName(scored
+      val next = materialize(sel.unionByName(scored
         .withColumn("r", row_number().over(
           Window.partitionBy(col("qid")).orderBy(col("mmr").desc, col("vec_id"))))
         .filter(col("r") === 1)
         .select(col("qid"), col("vec_id"), col("embedding"), col("cos"),
-          lit(k).as("rank")))
-        .localCheckpoint()
+          lit(k).as("rank"))))
       // the superseded snapshot's blocks are dead once `next` holds the
       // union of it and the new pick — free them now, not at GC
-      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(sel)
+      release(sel)
       sel = next
     }
     sel.select(col("qid"), col("vec_id").as("nid"), col("rank"), col("cos"))
@@ -1729,10 +1728,7 @@ object Similarity {
   ) { (s, d) =>
     val idxDir = indexDir(s, "s18", d)
     val e = Tables.embeddings(s, d)
-    val cent = ivfCentroids(e).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e, cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e, idxDir)
     // DELETE: O(deleted) ids, written beside the index — zero cell
     // files touched, effective at the very next probe
     e.filter(col("vec_id") % 10 === deleteMod && col("vec_id") >= 10)
@@ -1801,9 +1797,9 @@ object Similarity {
     * greedy MMR diversification (s17's rerank, shared [[mmrSelect]]).
     * A user of the reference composes exactly this from its pieces;
     * here the composition is a single lazy DataFrame whose stages fuse
-    * under Catalyst — the pool is the only checkpoint (it bounds the
-    * rerank's input at O(queries·pool) and stops the probe re-running
-    * inside the greedy loop).
+    * under Catalyst — past the index build, only the pool is
+    * materialized (it bounds the rerank's input at O(queries·pool) and
+    * stops the probe re-running inside the greedy loop).
     *
     * Scale posture inherits each stage's argument: the probe reads
     * only probed cells (dynamic partition pruning, pinned), the
@@ -1842,17 +1838,14 @@ object Similarity {
   ) { (s, d) =>
     val idxDir = indexDir(s, "s20", d)
     val e = Tables.embeddings(s, d)
-    val cent = ivfCentroids(e).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-    nearestCells(e, cent)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-    cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+    writeIvfIndex(e, idxDir)
     val centS = s.read.parquet(s"$idxDir/centroids")
     val qprobe = e.filter(col("vec_id") < 10)
       .crossJoin(broadcast(centArray(centS)))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         explode(topCellsCol(col("cents"), col("embedding"), ivfProbes)).as("pc"))
       .select(col("qid"), col("qe"), col("pc.cid").as("cluster"))
-    val pool = s.read.parquet(s"$idxDir/cells")
+    val pool = materialize(s.read.parquet(s"$idxDir/cells")
       .filter(col("vec_id") >= 10)
       .join(broadcast(qprobe), Seq("cluster"))
       // predicate BEFORE ranking (s13's posture): id-only, shuffled
@@ -1861,8 +1854,7 @@ object Similarity {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= mmrPool)
-      .select(col("qid"), col("vec_id"), col("embedding"), col("cos"))
-      .localCheckpoint()
+      .select(col("qid"), col("vec_id"), col("embedding"), col("cos")))
     mmrSelect(pool)
   }
 
@@ -1873,21 +1865,7 @@ object Similarity {
   private[graft] def ivfRecall(s: org.apache.spark.sql.SparkSession,
       d: String, probes: Int): org.apache.spark.sql.DataFrame = {
     val truth = annBruteForce.build(s, d).select(col("qid"), col("nid"))
-    val e = Tables.embeddings(s, d)
-    val centA = centArray(ivfCentroids(e)).localCheckpoint() // train once
-    val assigned = e.filter(col("vec_id") >= 10).crossJoin(broadcast(centA))
-      .withColumn("best", bestCellCol(col("cents"), col("embedding")))
-      .select(col("vec_id"), col("embedding"), col("best.cid").as("cluster"))
-    val qprobe = e.filter(col("vec_id") < 10).crossJoin(broadcast(centA))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode(topCellsCol(col("cents"), col("embedding"), probes)).as("pc"))
-      .select(col("qid"), col("qe"), col("pc.cid").as("cluster"))
-    val approx = assigned
-      .join(broadcast(qprobe), Seq("cluster"))
-      .withColumn("cos", cosine_similarity(col("qe"), col("embedding")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
+    val approx = ivfTop5(Tables.embeddings(s, d), probes)
       .select(col("qid"), col("vec_id").as("nid"), lit(1).as("hit"))
     truth.join(approx, Seq("qid", "nid"), "left")
       .groupBy(col("qid"))
@@ -2122,10 +2100,7 @@ object Similarity {
     // on the missing path instead of rebuilding)
     if (!new java.io.File(s"$idxDir/cells").exists() ||
         !new java.io.File(s"$idxDir/centroids").exists()) {
-      val cent = ivfCentroids(e).localCheckpoint() // train once; both consumers read the materialized O(k) rows
-      nearestCells(e, cent)
-        .write.mode("overwrite").partitionBy("cluster").parquet(s"$idxDir/cells")
-      cent.write.mode("overwrite").parquet(s"$idxDir/centroids")
+      writeIvfIndex(e, idxDir)
     }
     val cells = s.read.parquet(s"$idxDir/cells")
     val stats = cells.groupBy(col("cluster"))

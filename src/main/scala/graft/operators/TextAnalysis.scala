@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryEntry, Tables}
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -274,22 +275,17 @@ object TextAnalysis {
       |WHERE dp / (sqrt(na.n2) * sqrt(nb.n2)) >= 0.8
       |ORDER BY a_id, b_id""".stripMargin
   ) { (s, d) =>
-    // materialize the inverted index ONCE (localCheckpoint): the dot
-    // product, the probe side, and both norm lookups all read `tf`,
-    // and without the checkpoint Catalyst plans FOUR independent
-    // explode+aggregate passes over the corpus (r17 profile — the
-    // named cause of t09's r16 isolated elevation). At corpus scale
-    // this is the persisted-index posture the scaladoc argues anyway.
-    // spread (r20): AQE coalesces the small local index to ONE
-    // checkpoint partition, so the corpus-side dot-product join+agg —
-    // t09's whole cost — ran in one task (2.0 s of the 2.9 s profile);
-    // re-spreading the materialized blocks is a tiny shuffle and the
-    // identity at scale (Tables.spread)
+    // the inverted index is read four times (dot product, probe side,
+    // both norm lookups) and is O(corpus terms), the persisted-index
+    // posture the scaladoc argues. spread (r20): AQE coalesces the
+    // small local index to ONE partition, so the corpus-side
+    // dot-product join+agg — t09's whole cost — ran in one task (2.0 s
+    // of the 2.9 s profile); re-spreading the materialized blocks is a
+    // tiny shuffle and the identity at scale (Tables.spread)
     val tf = Tables.spread(
-      Tables.documents(s, d)
+      materialize(Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint(),
+        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))),
       col("doc_id"), col("w"))
     val nrm = tf.groupBy(col("doc_id")).agg(sum(col("tf") * col("tf")).as("n2"))
     // the PROBE side is bounded by construction (the scaladoc's PPJoin

@@ -52,20 +52,51 @@ object GraftBridge {
     b.withPredicates(predicates,
       org.apache.spark.sql.execution.datasources.jdbc.JDBCPartition(null, 0))
 
-  /** Release the storage blocks behind a `localCheckpoint`'d Dataset.
-    * Spark only frees checkpoint blocks when the RDD object is GC'd
-    * (ContextCleaner), so an iterative operator that snapshots per
-    * round — or a long benchmark suite running many such operators —
-    * accumulates MEMORY_AND_DISK blocks that squeeze the unified
-    * memory manager long after the snapshots are dead. No-op on
-    * non-checkpoint plans. */
-  def unpersistLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-        ()
-      case _ => ()
+  /** The one materialization of an operator relation that is read more
+    * than once. Without it every reference re-inlines the relation's
+    * subtree: a training pass (IVF centroids, PQ codebooks), a corpus
+    * explode (word/trigram/tf indexes), a signature aggregate, or the
+    * previous round of an iterative loop (connected components, the MMR
+    * selection), whose lazy plan grows 3^k with the rounds. One
+    * materialization runs that subtree once and every consumer reads
+    * its blocks.
+    *
+    * It is Spark's eager local Dataset checkpoint minus the step that
+    * cuts lineage: under one SQL execution of `df`'s own QueryExecution
+    * (so `observe()` metrics fill during it) the executed plan's rows
+    * are persisted at MEMORY_AND_DISK, filled by one job, and wrapped
+    * in a `LogicalRDD` that keeps the plan's partitioning, ordering and
+    * statistics. A block lost with its executor is recomputed from
+    * lineage, so task retry recovers it instead of failing the job. The
+    * blocks stay until [[release]] (iterative loops drop each
+    * superseded round), `Bench.cleanup`, or the RDD's GC. */
+  def materialize(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    val rows = execution.SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      qe.executedPlan.resetMetrics()
+      val r = qe.executedPlan.execute().map(_.copy())
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      r.count()
+      r
     }
+    ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
+
+  /** Drop the blocks behind a [[materialize]]d DataFrame now rather
+    * than at the RDD's GC. No-op on any other plan. */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+    case _ =>
+  }
+
+  /** Materialized (RDD) blocks per live executor, from the block
+    * manager master — zero for an executor that holds none. */
+  def rddBlocksByExecutor(sc: org.apache.spark.SparkContext): Map[String, Int] =
+    sc.env.blockManager.master.getStorageStatus
+      .map(s => s.blockManagerId.executorId -> s.rddBlocks.size)
+      .filter(_._1 != org.apache.spark.SparkContext.DRIVER_IDENTIFIER).toMap
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

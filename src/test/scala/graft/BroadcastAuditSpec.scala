@@ -75,7 +75,7 @@ class BroadcastAuditSpec extends SparkSpec {
     "p24_source_overlap" -> (Bounded, "per-source denominator aggregate: one row per source in the catalog (20 here; named datasets, not documents, at any corpus size)"),
     "d02_word_jaccard" -> (Bounded, "probe-side word index: 100 probe docs at ANY SF (doc_id < 100), so rows = O(100 x distinct words/doc) ~ 2.3k — corpus-independent in doc count; Bounded not Fixed only because the generated docs differ slightly across SFs (2313 vs 2266 rows at the spec's two scales). In production the probe side is the query batch — bounded by definition (r17, the hot-key shuffle fix)"),
     "d15_containment" -> (Bounded, "probe-side word index: the benchmark being checked for containment — 100 docs at any SF, same O(100 x words/doc) bound and same SF-content caveat as d02 (r17)"),
-    "t09_tf_cosine_pairs" -> (Bounded, "probe-side tf index: 100 probe docs at any SF, O(100 x distinct words/doc) ~ 2.3k rows, same bound and caveat as d02; the corpus-side index streams map-side off its localCheckpoint (r17)"),
+    "t09_tf_cosine_pairs" -> (Bounded, "probe-side tf index: 100 probe docs at any SF, O(100 x distinct words/doc) ~ 2.3k rows, same bound and caveat as d02; the corpus-side index streams map-side off its materialized blocks (r17)"),
     "t05_tfidf_topterms" -> (Fixed, "scalar doc-count relation, 1 row"),
     "p10_quality_funnel" -> (Fixed, "scalar total-docs relation feeding rate computation, 1 row"),
     "t10_rank_score" -> (Bounded, "frequency-thresholded vocabulary: O(kept token types), generator vocab is ~fixed"),
@@ -114,8 +114,8 @@ class BroadcastAuditSpec extends SparkSpec {
     "s24_index_stats" -> (Fixed, "single-row n_total aggregate over the O(k) per-cell stats; the stored index is scanned, never broadcast"),
     "p23_epoch_interleave" -> (Fixed, "per-source count cells (O(distinct sources) rows); the ranked corpus side flows through source-partitioned windows un-broadcast"))
   // s17_ann_mmr broadcasts its 10-vector query set in stage 1, but the
-  // pool localCheckpoint severs the analyzed plan before this audit
-  // sees it — the greedy loop itself joins the checkpointed
+  // materialized pool replaces that plan with a LogicalRDD leaf before
+  // this audit sees it — the greedy loop itself joins the materialized
   // O(queries·pool) relation un-hinted.
 
   /** Hinted-broadcast subtrees of a query's ANALYZED plan (hints are

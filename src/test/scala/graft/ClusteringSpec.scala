@@ -14,6 +14,20 @@ class ClusteringSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
+  // Each round's convergence probe is an observe() metric filled by the
+  // job that materializes the round. Were that to stop working, the
+  // loop would fall back to one extra count() job per round, three
+  // more here. The graph takes three rounds and 19 or 20 jobs: adaptive
+  // execution sometimes launches one more shuffle-stage job in the last
+  // round (12 runs gave both counts before the loop moved off the local
+  // checkpoint, too).
+  test("connected components on the known graph launches a fixed number of jobs") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 20L)).toDF("a", "b")
+    val jobs = jobsLaunchedBy(Clustering.connectedComponents(edges))
+    assert(jobs == 19 || jobs == 20, s"$jobs jobs")
+  }
+
   test("connected components handles a long chain (diameter > a few iterations)") {
     import spark.implicits._
     val n = 40L

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorFunctions.cosine_similarity
 import graft.operators.Similarity
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,7 +105,7 @@ class MmrSpec extends SparkSpec {
         Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cid"))))
       .filter(col("crn") <= Similarity.ivfProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cid").as("cluster"))
-    val pool = spark.read.parquet(s"$idxDir/cells")
+    val pool = materialize(spark.read.parquet(s"$idxDir/cells")
       .filter(col("vec_id") >= 10)
       .join(broadcast(qprobe), Seq("cluster"))
       .join(Similarity.filteredEligible(spark, sf2), Seq("vec_id"), "left_semi")
@@ -112,8 +113,7 @@ class MmrSpec extends SparkSpec {
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= Similarity.mmrPool)
-      .select(col("qid"), col("vec_id"), col("embedding"), col("cos"))
-      .localCheckpoint()
+      .select(col("qid"), col("vec_id"), col("embedding"), col("cos")))
     val rebuilt = Similarity.mmrSelect(pool).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(res == rebuilt,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Pipeline}
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** p12/p13 composed-pipeline chain-algebra gates. p12's values are
@@ -88,7 +89,7 @@ class PipelineComposeSpec extends SparkSpec {
   }
 
   test("p13 drops exactly the larger ids of verified pairs and re-packs the rest") {
-    val surv = Pipeline.composeSurvivors(spark, sf1).localCheckpoint()
+    val surv = materialize(Pipeline.composeSurvivors(spark, sf1))
     val pairs = Dedup.minhashVerifiedPairs(surv)
       .filter(col("jaccard") >= 0.85)
       .select(col("a_id"), col("b_id")).collect()

@@ -379,6 +379,7 @@ class StatementServerSpec extends SparkSpec {
     } finally {
       spark.conf.unset(graft.sources.GraftWireConf.StatementSpoolDirKey)
       hconf.unset("fs.graftfs.impl")
+      graft.LocalFiles.rmTree(scratch.toFile)
     }
   }
 
@@ -677,7 +678,10 @@ class StatementServerSpec extends SparkSpec {
         "SELECT COUNT(*) AS n FROM psql.tpcds.stmt_ctas")
       assert(data.head.head.asLong == 7L)
       runSql("DROP TABLE psql.tpcds.stmt_ctas")
-    } finally spark.conf.set("spark.sql.graft.root", sf1)
+    } finally {
+      spark.conf.set("spark.sql.graft.root", sf1)
+      graft.LocalFiles.rmTree(scratch.toFile)
+    }
   }
 
   /** Verdict r18 #7: the reference's captured query.json records
@@ -730,7 +734,10 @@ class StatementServerSpec extends SparkSpec {
         j = mapper.readTree(p)
       }
       runSql("DROP TABLE psql.tpcds.stmt_split")
-    } finally spark.conf.set("spark.sql.graft.root", sf1)
+    } finally {
+      spark.conf.set("spark.sql.graft.root", sf1)
+      graft.LocalFiles.rmTree(scratch.toFile)
+    }
   }
 
   /** ADVICE r18: liveness is proven by a marker PUT inside the spool
