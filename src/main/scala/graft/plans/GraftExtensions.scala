@@ -134,5 +134,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => PushPartialDistinctBelowJoin)
     e.injectPlannerStrategy(_ => GroupedTopKStrategy)
     e.injectPlannerStrategy(_ => PartialDistinctStrategy)
+    // AQE re-optimization, once the input stages' sizes are known
+    e.injectRuntimeOptimizerRule(GatherSmallSort)
   }
 }

@@ -13,19 +13,13 @@ import graft.sources.{GraftMerge, GraftVersions}
   * bloom's doing. */
 class BloomSkipSpec extends SparkSpec {
 
-  private def freshRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bl").toString
-    spark.conf.set("spark.sql.graft.root", dir)
-    dir
-  }
-
   /** 64 rows hash-partitioned by `k % 8` (hash collisions may pack
     * several groups into one file — file COUNT is derived, not
     * assumed): every file holds a k-residue class spanning [g, 56+g],
     * so each file's k-range overlaps every point k and min/max stats
     * prune nothing on k. */
   private def buildScattered(table: String, bloomCols: String): String = {
-    val root = freshRoot()
+    val root = freshRoot("graft_bl")
     import spark.implicits._
     spark.conf.set("spark.sql.graft.bloom.columns", bloomCols)
     (0 until 64).map(k => (k, k % 8, s"doc_$k")).toDF("k", "grp", "v")
@@ -163,7 +157,7 @@ class BloomSkipSpec extends SparkSpec {
   }
 
   test("null-count stats prune IS NULL / IS NOT NULL discovery") {
-    val root = freshRoot()
+    val root = freshRoot("graft_bl")
     import spark.implicits._
     // exactly 3 files by construction — one single-partition commit per
     // group: grp 0 all-null v, grp 1 mixed, grp 2 no nulls
@@ -275,7 +269,7 @@ class BloomSkipSpec extends SparkSpec {
 
   test("cross-type point predicates never unsoundly skip (channel guard)") {
     try {
-      val root = freshRoot()
+      val root = freshRoot("graft_bl")
       import spark.implicits._
       // bloom BOTH channels: sv is k's decimal string, so cross-type
       // literals compare TRUE through Spark's implicit casts while the

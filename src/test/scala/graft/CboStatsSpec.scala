@@ -10,12 +10,6 @@ import graft.sources.GraftTableStats
   * `Estimates:`-driven REPLICATED vs PARTITIONED choice. */
 class CboStatsSpec extends SparkSpec {
 
-  private def freshRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbo").toString
-    spark.conf.set("spark.sql.graft.root", dir)
-    dir
-  }
-
   private def planOf(sql: String): String =
     spark.sql(sql).queryExecution.executedPlan.toString
 
@@ -24,7 +18,7 @@ class CboStatsSpec extends SparkSpec {
     * the join strategy before/after ANALYZE. Run at both SFs — the
     * judge's two-scale gate. */
   private def flipAt(sf: String, tag: String): Unit = {
-    val root = freshRoot()
+    val root = freshRoot("graft_cbo")
     import spark.implicits._
     Tables.customer(spark, sf)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -77,7 +71,7 @@ class CboStatsSpec extends SparkSpec {
   }
 
   test("ANALYZE statement: outputs, FOR ALL COLUMNS record, selectivity math") {
-    freshRoot()
+    freshRoot("graft_cbo")
     import spark.implicits._
     (1 to 1000).map(i => (i.toLong, s"g${i % 10}", i.toDouble))
       .toDF("k", "g", "v").createOrReplaceTempView("cbo_an_src")
@@ -118,7 +112,7 @@ class CboStatsSpec extends SparkSpec {
   }
 
   test("a commit after ANALYZE makes the record STALE (no broadcast from old stats)") {
-    freshRoot()
+    freshRoot("graft_cbo")
     import spark.implicits._
     (1 to 500).map(i => (i.toLong, i.toDouble))
       .toDF("k", "v").createOrReplaceTempView("cbo_stale_src")

@@ -14,18 +14,12 @@ import graft.streaming.DocsStreaming
   * through a live checkpointed stream. */
 class ExactlyOnceSpec extends SparkSpec {
 
-  private def freshRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xo").toString
-    spark.conf.set("spark.sql.graft.root", dir)
-    dir
-  }
-
   private def kRows(table: String): Seq[Int] =
     spark.sql(s"SELECT k FROM psql.tpcds.$table").collect()
       .map(_.getInt(0)).toSeq.sorted
 
   test("replayed append batches commit exactly once") {
-    val root = freshRoot()
+    val root = freshRoot("graft_xo")
     import spark.implicits._
     Seq((0, "seed")).toDF("k", "v").createOrReplaceTempView("xo_src")
     spark.sql("""CREATE TABLE psql.tpcds.xo1 TBLPROPERTIES('versioned'='true')
@@ -48,7 +42,7 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("merge sink is idempotent and ledgers are per-writer") {
-    val root = freshRoot()
+    val root = freshRoot("graft_xo")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("xo_src2")
     spark.sql("""CREATE TABLE psql.tpcds.xo2 TBLPROPERTIES('versioned'='true')
@@ -71,7 +65,7 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("retention does not forget the idempotence ledger") {
-    val root = freshRoot()
+    val root = freshRoot("graft_xo")
     import spark.implicits._
     Seq((0, "seed")).toDF("k", "v").createOrReplaceTempView("xo_src3")
     spark.sql("""CREATE TABLE psql.tpcds.xo3 TBLPROPERTIES('versioned'='true')
@@ -88,7 +82,7 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("auto-compaction bounds the file count under many small appends") {
-    val root = freshRoot()
+    val root = freshRoot("graft_xo")
     import spark.implicits._
     Seq((0, "seed")).toDF("k", "v").createOrReplaceTempView("xo_src5")
     spark.sql("""CREATE TABLE psql.tpcds.xo5 TBLPROPERTIES('versioned'='true')
@@ -118,13 +112,13 @@ class ExactlyOnceSpec extends SparkSpec {
   }
 
   test("a live checkpointed stream lands each batch once") {
-    val root = freshRoot()
+    val root = freshRoot("graft_xo")
     import spark.implicits._
     Seq((0, "seed")).toDF("k", "v").createOrReplaceTempView("xo_src4")
     spark.sql("""CREATE TABLE psql.tpcds.xo4 TBLPROPERTIES('versioned'='true')
                 |AS SELECT * FROM xo_src4""".stripMargin)
     val dir = s"$root/xo4.parquet"
-    val ck = java.nio.file.Files.createTempDirectory("graft_xo_ck").toString
+    val ck = tempDir("graft_xo_ck").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Int, String)](spark)
     val q = DocsStreaming

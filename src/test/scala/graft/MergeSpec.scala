@@ -11,17 +11,11 @@ import graft.sources.{GraftMerge, GraftVersions}
   * and the vacuum guard for in-flight commit files. */
 class MergeSpec extends SparkSpec {
 
-  private def freshRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mg").toString
-    spark.conf.set("spark.sql.graft.root", dir)
-    dir
-  }
-
   private def kvRows(q: String) = spark.sql(q).collect()
     .map(r => (r.getInt(0), r.getString(1))).toSet
 
   test("merge replaces matched rows, inserts unmatched, reuses untouched files") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // 4 single-key files: per-key partitioning makes touched-file
     // accounting exact (source hits keys 2 and 4 → exactly 2 files)
@@ -82,7 +76,7 @@ class MergeSpec extends SparkSpec {
     * scheme maps paths onto the local filesystem, so the lease's
     * backing file is manipulable directly. */
   test("lease lock: a stale lease is broken, a fresh one honored for its term (HadoopFsCommitIo)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lease").toFile
+    val dir = tempDir("graft_lease")
     val lockFile = new java.io.File(dir, "_lock")
     val leaseFile = new java.io.File(dir, "_lock.lease")
     val io = hadoopIo(leaseMillis = 400L)
@@ -117,7 +111,7 @@ class MergeSpec extends SparkSpec {
     * process. Simulated by swapping the lease content mid-hold (the
     * term is long, so no renewal rewrites it back). */
   test("lease lock: release leaves a successor's lease intact (HadoopFsCommitIo)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lease2").toFile
+    val dir = tempDir("graft_lease2")
     val lockFile = new java.io.File(dir, "_lock")
     val leaseFile = new java.io.File(dir, "_lock.lease")
     val io = hadoopIo(leaseMillis = 60000L)
@@ -138,7 +132,7 @@ class MergeSpec extends SparkSpec {
     * successor's lease with the old token and re-arm the cascading
     * double-hold the token-checked release exists to stop. */
   test("lease renewal declines once the slot carries another token (HadoopFsCommitIo)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lease3").toFile
+    val dir = tempDir("graft_lease3")
     val lockFile = new java.io.File(dir, "_lock")
     val leaseFile = new java.io.File(dir, "_lock.lease")
     val io = hadoopIo(leaseMillis = 400L) // renewal ticks every 100 ms
@@ -160,7 +154,7 @@ class MergeSpec extends SparkSpec {
     * lock on the same inode throws OverlappingFileLockException
     * instead of blocking. */
   test("aliased lock-file spellings share one mutex (PosixCommitIo)") {
-    val real = java.nio.file.Files.createTempDirectory("graft_alias").toFile
+    val real = tempDir("graft_alias")
     val link = new java.io.File(real.getParentFile, real.getName + "-ln")
     java.nio.file.Files.createSymbolicLink(link.toPath, real.toPath)
     val spellings = Seq(new java.io.File(real, "_lock"),
@@ -189,7 +183,7 @@ class MergeSpec extends SparkSpec {
     * sibling in the table directory (the cleanup now lives inside the
     * rename helper, covering every caller). */
   test("lost publishIfAbsent race leaves no temp orphan (HadoopFsCommitIo)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pub").toFile
+    val dir = tempDir("graft_pub")
     val target = new java.io.File(dir, "00000002.json")
     val io = hadoopIo(leaseMillis = 60000L)
     assert(io.publishIfAbsent(target, "winner".getBytes))
@@ -212,7 +206,7 @@ class MergeSpec extends SparkSpec {
       "posix" -> graft.sources.PosixCommitIo,
       "hadoop" -> hadoopIo(leaseMillis = 60000L))
     ios.foreach { case (label, io) =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_mtx").toFile
+      val dir = tempDir("graft_mtx")
       val t1 = new java.io.File(dir, "t1/_lock"); t1.getParentFile.mkdirs()
       val t2 = new java.io.File(dir, "t2/_lock"); t2.getParentFile.mkdirs()
       val aHolds = new java.util.concurrent.CountDownLatch(1)
@@ -255,7 +249,7 @@ class MergeSpec extends SparkSpec {
   }
 
   private def racingAppendsGate(tbl: String): Unit = {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView(s"mg_src_$tbl")
     spark.sql(s"""CREATE TABLE psql.tpcds.$tbl TBLPROPERTIES('versioned'='true')
@@ -294,7 +288,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("merge based on a stale snapshot fails loudly, losing no rows") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_src3")
     spark.sql("""CREATE TABLE psql.tpcds.mg3 TBLPROPERTIES('versioned'='true')
@@ -315,13 +309,13 @@ class MergeSpec extends SparkSpec {
   }
 
   test("streaming upsert: each micro-batch is one snapshot, history time-travelable") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("mg_src5")
     spark.sql("""CREATE TABLE psql.tpcds.mg5 TBLPROPERTIES('versioned'='true')
                 |AS SELECT * FROM mg_src5""".stripMargin)
     val dir = s"$root/mg5.parquet"
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_mgs").toString
+    val srcDir = tempDir("graft_mgs").toString
     Seq((2, "B"), (3, "c")).toDF("k", "v").coalesce(1)
       .write.parquet(s"$srcDir/batch1.parquet")
     val stream = spark.readStream
@@ -349,7 +343,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("expire never vacuums an in-flight commit's files") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_src4")
     spark.sql("""CREATE TABLE psql.tpcds.mg4 TBLPROPERTIES('versioned'='true')
@@ -366,7 +360,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("expire spares a losing writer's pre-reprefix files (orphan grace window)") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_src6")
     spark.sql("""CREATE TABLE psql.tpcds.mg6 TBLPROPERTIES('versioned'='true')
@@ -391,7 +385,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("copy-on-write delete rewrites only touched files; pre-delete snapshot intact") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // 4 single-key files → exact touched-file accounting
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
@@ -436,7 +430,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("SQL DELETE FROM routes through the copy-on-write path; untranslatable conditions fail loudly") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
       .createOrReplaceTempView("mg_srcC")
@@ -466,7 +460,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("copy-on-write update transforms matching rows in touched files only") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .repartition(4, col("k")).createOrReplaceTempView("mg_srcD")
@@ -506,7 +500,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("merge with retries rebases over concurrent appends; final state is interleaving-independent") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("mg_src9")
     spark.sql("""CREATE TABLE psql.tpcds.mg9 TBLPROPERTIES('versioned'='true')
@@ -535,7 +529,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("compaction bin-packs small files with zero logical change; old snapshots keep the fragmented layout") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_src8")
     spark.sql("""CREATE TABLE psql.tpcds.mg8 TBLPROPERTIES('versioned'='true')
@@ -565,7 +559,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("a published manifest without a pointer flip (crashed writer) is completed by the next commit") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_srcB")
     spark.sql("""CREATE TABLE psql.tpcds.mgB TBLPROPERTIES('versioned'='true')
@@ -573,7 +567,7 @@ class MergeSpec extends SparkSpec {
     val dir = s"$root/mgB.parquet"
     // simulate a writer that won manifest v2 (file moved in, manifest
     // published) but died before flipping the pointer
-    val tmp = java.nio.file.Files.createTempDirectory("graft_crash").toString + "/out"
+    val tmp = tempDir("graft_crash").toString + "/out"
     Seq((2, "b")).toDF("k", "v").coalesce(1).write.parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
@@ -597,7 +591,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("expire racing optimistic appends loses no committed rows") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("mg_src7")
     spark.sql("""CREATE TABLE psql.tpcds.mg7 TBLPROPERTIES('versioned'='true')
@@ -636,7 +630,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("native SQL UPDATE statement routes through the copy-on-write update") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .repartition(4, col("k")).createOrReplaceTempView("mg_srcU")
@@ -668,7 +662,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("native SQL MERGE INTO statement routes through the copy-on-write upsert") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .repartition(4, col("k")).createOrReplaceTempView("mg_srcM")
@@ -772,7 +766,7 @@ class MergeSpec extends SparkSpec {
     assert(GraftMerge.predicateBounds(col("s.b") === 5 && col("k") === 9) ==
       Map("k" -> (9L, 9L)))
 
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // range-clustered table: file i holds keys [10i, 10i+10)
     (0 until 40).map(k => (k, s"v$k")).toDF("k", "v")
@@ -823,7 +817,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("re-clustering turns an all-files predicate into a one-file predicate") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // k-clustered layout: every g value appears in EVERY file, so a
     // g-predicate delete must touch all of them …
@@ -861,7 +855,7 @@ class MergeSpec extends SparkSpec {
   }
 
   private def mixedVerbGate(tbl: String): Unit = {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // the three read-modify-write verbs share one rebase loop — an
     // interleaving bug there corrupts silently. Each round races a
@@ -915,7 +909,7 @@ class MergeSpec extends SparkSpec {
   }
 
   private def rollbackExpireGate(tbl: String): Unit = {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // the r12 orphan-grace design point, now RACED (verdict r13 #5):
     // each round publishes a bad overwrite, then a RESTORE of the
@@ -983,7 +977,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("rewrites after ADD COLUMN read with the snapshot schema (no silent column loss)") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     // v1: 2-column files; v2: ADD COLUMN; v3: rows populating it — the
     // table's files are now schema-HETEROGENEOUS. A footer-inferred
@@ -1025,7 +1019,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("SQL DELETE and UPDATE each launch only their discovery and rewrite jobs") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .repartitionByRange(4, col("k")).createOrReplaceTempView("mg_src12")
@@ -1045,7 +1039,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("the driver-side snapshot schema is exactly Spark's inferred parquet schema") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678")
     Seq(
@@ -1073,7 +1067,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("UPDATE assignment column names resolve case-insensitively") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("mg_src9")
     spark.sql("""CREATE TABLE psql.tpcds.mg9 TBLPROPERTIES('versioned'='true')
@@ -1102,7 +1096,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("OPTIMIZE / VACUUM run as native SQL statements") {
-    val root = freshRoot()
+    val root = freshRoot("graft_mg")
     import spark.implicits._
     Seq((1, "a"), (2, "b"), (3, "c"), (4, "d")).toDF("k", "v")
       .repartition(4, col("k")).createOrReplaceTempView("mg_mnt")

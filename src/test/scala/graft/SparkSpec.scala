@@ -1,40 +1,69 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one JVM-wide session, per guide). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local("8")
   val sf1: String = "/root/testdata/sf0.001"
   val sf2: String = "/root/testdata/sf0.01"
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A new directory under `java.io.tmpdir`, deleted when the spec ends. */
+  protected def tempDir(prefix: String): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir
+  }
+
+  /** A new, empty `spark.sql.graft.root` (a [[tempDir]]). */
+  protected def freshRoot(prefix: String): String = {
+    val dir = tempDir(prefix).toString
+    spark.conf.set("spark.sql.graft.root", dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => LocalFiles.rmTree(d)) finally super.afterAll()
+
   /** Spark jobs started while `body` runs, counted by a job tag. The
     * listener bus delivers events in order, so once a later fence job's
     * start arrives every job `body` launched has been counted. */
-  protected def jobsLaunchedBy(body: => Unit): Int = countJobs(body, anyThread = false)
+  protected def jobsLaunchedBy(body: => Unit): Int = count(body, anyThread = false)._1
+
+  /** Jobs and tasks (summed over the submitted stages) `body` launched. */
+  protected def jobsAndTasksLaunchedBy(body: => Unit): (Int, Int) =
+    count(body, anyThread = false)
 
   /** Every Spark job started, on any thread, between a fence job before
     * `body` and one after it — for work `body` hands to other threads
     * (the statement face's HTTP handlers), whose jobs carry no tag the
     * caller set. */
-  protected def jobsStartedDuring(body: => Unit): Int = countJobs(body, anyThread = true)
+  protected def jobsStartedDuring(body: => Unit): Int = count(body, anyThread = true)._1
 
-  private def countJobs(body: => Unit, anyThread: Boolean): Int = {
+  private def count(body: => Unit, anyThread: Boolean): (Int, Int) = {
     val sc = spark.sparkContext
     val tag = s"spec-jobs-${System.nanoTime}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val opened = new java.util.concurrent.atomic.AtomicBoolean(!anyThread)
     val fenced = new java.util.concurrent.CountDownLatch(1)
+    def tags(p: java.util.Properties) =
+      Option(p).map(_.getProperty("spark.job.tags", "")).getOrElse("").split(",")
+    def counted(t: Array[String]) = !t.contains(s"$tag-open") && opened.get && fenced.getCount > 0 && (anyThread || t.contains(tag))
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties).map(_.getProperty("spark.job.tags", ""))
-          .getOrElse("").split(",")
-        if (tags.contains(s"$tag-open")) opened.set(true)
-        else if (tags.contains(s"$tag-fence")) fenced.countDown()
-        else if (opened.get && fenced.getCount > 0 && (anyThread || tags.contains(tag)))
-          jobs.incrementAndGet()
+        val t = tags(e.properties)
+        if (t.contains(s"$tag-open")) opened.set(true)
+        else if (t.contains(s"$tag-fence")) fenced.countDown()
+        else if (counted(t)) jobs.incrementAndGet()
       }
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (counted(tags(e.properties))) tasks.addAndGet(e.stageInfo.numTasks)
     }
     def fence(t: String): Unit = {
       sc.addJobTag(t)
@@ -47,7 +76,7 @@ trait SparkSpec extends AnyFunSuite {
       try body finally sc.removeJobTag(tag)
       fence(s"$tag-fence")
       assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
+      (jobs.get, tasks.get)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -553,6 +553,32 @@ class StatementServerSpec extends SparkSpec {
     assert(jobs == 0, s"$jobs jobs for a command")
   }
 
+  /** q84's ORDER BY over a few grouped rows runs in the result task
+    * (`GatherSmallSort`): the map stage and the result job, where a
+    * range-partitioned sort also ran a sampling job and a range-exchange
+    * stage (4 jobs). */
+  test("q84 over the face launches 2 jobs and pages the rows of a direct collect") {
+    spark.conf.set("spark.sql.graft.root", sf1)
+    assert(base.nonEmpty)
+    val sql = """SELECT event_type, COUNT(*) AS n,
+                |       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+                |FROM mongodb.tpcds.events
+                |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
+                |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
+                |GROUP BY event_type ORDER BY event_type""".stripMargin
+    runSql(sql) // the first read of the collection loads it into the wire server
+    var data = Seq.empty[Seq[JsonNode]]
+    val jobs = jobsStartedDuring { data = runSql(sql)._2 }
+    val excluded = "spark.sql.adaptive.optimizer.excludedRules"
+    spark.conf.set(excluded, "graft.plans.GatherSmallSort")
+    val ranged = try jobsStartedDuring(runSql(sql)) finally spark.conf.unset(excluded)
+    assert(jobs == 2 && ranged == 4, s"q84 over the face: $jobs jobs, $ranged without the rule")
+    val wire = data.map(r => (r(0).asText, r(1).asLong, r(2).asDouble))
+    val local = spark.sql(sql).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(wire == local && wire.nonEmpty, s"wire $wire != local $local")
+  }
+
   /** ADVICE r17: every early retirement path must CLOSE the currently
     * open spool reader before deleting the dir — else each abandoned
     * cursor leaks a file descriptor (and on non-POSIX filesystems the

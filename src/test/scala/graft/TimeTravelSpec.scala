@@ -8,14 +8,8 @@ import org.apache.spark.sql.functions._
   * unversioned table fails loudly. */
 class TimeTravelSpec extends SparkSpec {
 
-  private def freshRoot(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt").toString
-    spark.conf.set("spark.sql.graft.root", dir)
-    dir
-  }
-
   test("snapshots accumulate, overwrite replaces, every version stays readable") {
-    freshRoot()
+    freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("tt_src")
     spark.sql("""CREATE TABLE psql.tpcds.tt1 TBLPROPERTIES('versioned'='true')
@@ -34,7 +28,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("a held snapshot is isolated from commits made after it was resolved") {
-    freshRoot()
+    freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src2")
     spark.sql("""CREATE TABLE psql.tpcds.tt2 TBLPROPERTIES('versioned'='true')
@@ -48,7 +42,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("commits never rewrite or delete data files (append reuses v1's files by reference)") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src3")
     spark.sql("""CREATE TABLE psql.tpcds.tt3 TBLPROPERTIES('versioned'='true')
@@ -70,7 +64,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("expire drops old manifests but keeps files any survivor references") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src5")
     spark.sql("""CREATE TABLE psql.tpcds.tt5 TBLPROPERTIES('versioned'='true')
@@ -115,7 +109,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF resolves to the newest snapshot committed at or before the instant") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src6")
     spark.sql("""CREATE TABLE psql.tpcds.tt6 TBLPROPERTIES('versioned'='true')
@@ -144,7 +138,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("time travel on an unversioned table fails loudly") {
-    freshRoot()
+    freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src4")
     spark.sql("CREATE TABLE psql.tpcds.tt4 AS SELECT * FROM tt_src4")
@@ -156,7 +150,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("ADD COLUMN is metadata-only; each snapshot reads with its own schema") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src7")
     spark.sql("""CREATE TABLE psql.tpcds.tt7 TBLPROPERTIES('versioned'='true')
@@ -194,7 +188,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("DROP COLUMN is metadata-only; dropped names cannot be resurrected") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src8")
     spark.sql("""CREATE TABLE psql.tpcds.tt8 TBLPROPERTIES('versioned'='true')
@@ -237,7 +231,7 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("restore publishes an old snapshot forward; schema rolls back with it") {
-    val root = freshRoot()
+    val root = freshRoot("graft_tt")
     import spark.implicits._
     import graft.sources.GraftVersions
     Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("tt_src9")
@@ -277,7 +271,7 @@ class TimeTravelSpec extends SparkSpec {
   test("abandoned restore tombstones its won manifest; successors chain past it") {
     import spark.implicits._
     import graft.sources.GraftVersions
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt10").toString + "/tbl"
+    val dir = tempDir("graft_tt10").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // v1: rows A; v2: OVERWRITE — v1's files leave the live manifest
     GraftVersions.commit(dir, Seq((1, "a"), (2, "b")).toDF("k", "v"),
