@@ -1429,26 +1429,11 @@ object Relational {
     // a separate execution whose metrics this walk would never see);
     // the profiled query is a TopN, so the driver-side result is O(k)
     df.collect()
-    def executed(p: org.apache.spark.sql.execution.SparkPlan)
-        : org.apache.spark.sql.execution.SparkPlan = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case other => other
-    }
-    val rows = scala.collection.mutable.ListBuffer[(Int, String, Long)]()
-    var i = 0
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      val node = executed(p)
-      val out = node.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-      rows += ((i, node.nodeName, out)); i += 1
-      node.children.foreach(walk)
-      node match {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-        case _ => ()
+    val rows = graft.plans.ExecutedPlan.nodes(df.queryExecution.executedPlan)
+      .zipWithIndex.map { case (node, i) =>
+        (i, node.nodeName, node.metrics.get("numOutputRows").map(_.value).getOrElse(-1L))
       }
-    }
-    walk(df.queryExecution.executedPlan)
-    rows.toSeq.toDF("node_idx", "node", "output_rows")
+    rows.toDF("node_idx", "node", "output_rows")
       .orderBy(col("node_idx"))
   }
 

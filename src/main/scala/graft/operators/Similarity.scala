@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryEntry, Tables}
 import graft.functions.VectorFunctions.cosine_similarity
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.GraftBridge.{materialize, release}
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.expressions.Window
@@ -20,11 +20,8 @@ object Similarity {
   private def xxh(seed: Long, cols: Column*): Column =
     GraftBridge.column(XxHash64(cols.map(GraftBridge.expression), seed))
 
-  /** Brute-force cosine top-5 for query vectors vec_id < 10: broadcast
-    * the tiny query side, stream the corpus once, per-query top-k via
-    * window row_number (rank output is robust to last-ulp float noise). */
-  val annBruteForce: QueryEntry = QueryEntry(
-    "s01_ann_bruteforce",
+  /** The DuckDB oracle of the exact cosine top-5 (s01, s25). */
+  private val annTop5Oracle =
     """WITH n AS (SELECT vec_id, embedding,
       |             sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
       |                  i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
@@ -37,8 +34,12 @@ object Similarity {
       |SELECT qid, nid, rank FROM (
       |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank FROM c)
       |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
-  ) { (s, d) =>
-    val e = Tables.embeddings(s, d)
+
+  /** Brute-force cosine top-5 for query vectors vec_id < 10 over the
+    * corpus `e` (vec_id, embedding): broadcast the tiny query side,
+    * stream the corpus once, per-query top-k via window row_number
+    * (rank output is robust to last-ulp float noise). */
+  private def annTop5(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val scored = e.filter(col("vec_id") >= 10).crossJoin(broadcast(q))
@@ -49,6 +50,11 @@ object Similarity {
       .filter(col("rank") <= 5)
       .select(col("qid"), col("vec_id").as("nid"), col("rank"))
       .orderBy(col("qid"), col("rank"))
+  }
+
+  /** [[annTop5]] over the parquet corpus. */
+  val annBruteForce: QueryEntry = QueryEntry("s01_ann_bruteforce", annTop5Oracle) {
+    (s, d) => annTop5(Tables.embeddings(s, d))
   }
 
   /** Random-hyperplane LSH ANN, multi-table: 32 deterministic
@@ -2120,33 +2126,10 @@ object Similarity {
     * CosineSimilarity runs on the cursor-batched rows, and the rank
     * output hashes against the SAME DuckDB oracle as s01 — vector
     * search over a federated store, not just local parquet. */
-  val annWireMongo: QueryEntry = QueryEntry(
-    "s25_ann_wire_mongo",
-    """WITH n AS (SELECT vec_id, embedding,
-      |             sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-      |                  i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-      |           FROM embeddings),
-      |q AS (SELECT vec_id AS qid, embedding AS qe, nrm AS qn FROM n WHERE vec_id < 10),
-      |c AS (SELECT qid, e.vec_id AS nid,
-      |             list_sum(list_transform(range(1, len(qe) + 1),
-      |                  i -> CAST(qe[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) / (qn * e.nrm) AS cos
-      |      FROM n e, q WHERE e.vec_id >= 10)
-      |SELECT qid, nid, rank FROM (
-      |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rank FROM c)
-      |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
-  ) { (s, d) =>
-    s.conf.set("spark.sql.graft.root", d)
-    val e = s.sql("SELECT vec_id, embedding FROM mongodb.tpcds.embeddings")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val scored = e.filter(col("vec_id") >= 10).crossJoin(broadcast(q))
-      .withColumn("cos", cosine_similarity(col("qe"), col("embedding")))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id").as("nid"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+  val annWireMongo: QueryEntry = QueryEntry("s25_ann_wire_mongo", annTop5Oracle) {
+    (s, d) =>
+      s.conf.set("spark.sql.graft.root", d)
+      annTop5(s.sql("SELECT vec_id, embedding FROM mongodb.tpcds.embeddings"))
   }
 
   val all: Seq[QueryEntry] =

@@ -132,7 +132,7 @@ object GraftDmlStatements extends Rule[LogicalPlan] {
     // on different values than the statement compares — rejected
     // instead (ADVICE r13).
     @tailrec def stripCast(e: Expression): Expression = e match {
-      case c: Cast if valuePreserving(c.child.dataType, c.dataType) =>
+      case c: Cast if GraftMerge.widening(c.child.dataType, c.dataType) =>
         stripCast(c.child)
       case other => other
     }
@@ -192,24 +192,6 @@ object GraftDmlStatements extends Rule[LogicalPlan] {
         s"condition's source key ${srcKey.sql}, got: ${up(key.name).sql}")
     GraftMergeCommand(path, source, key.name, targetOut.map(_.name),
       targetOut.map(a => up(a.name)))
-  }
-
-  /** Value-preserving casts only: integral widening (the shape
-    * analyzer coercion inserts around the narrower side) or a no-op
-    * same-type cast. Everything else — narrowing, string/decimal
-    * round-trips — may change the compared value and must NOT be
-    * stripped. */
-  private def valuePreserving(from: org.apache.spark.sql.types.DataType,
-      to: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    def w(d: DataType): Int = d match {
-      case ByteType => 1
-      case ShortType => 2
-      case IntegerType => 3
-      case LongType => 4
-      case _ => 0
-    }
-    from == to || (w(from) > 0 && w(to) >= w(from))
   }
 }
 

@@ -27,8 +27,9 @@ import scala.jdk.CollectionConverters._
   * [[BloomFilterAggregate]] over `xxhash64` of the value, O(new files
   * × bloom bytes) on the driver, never O(rows). The copy-on-write
   * verbs then drop any file whose bloom proves it holds NO candidate
-  * value of an equality/IN conjunct ([[graft.sources.GraftMerge]]'s
-  * `pruneByStats` → [[prune]]) — a point delete on a 100 TB table
+  * value of an equality/IN conjunct (the point sets of the predicate's
+  * one resolved walk, [[graft.sources.GraftMerge]]'s `domain`, handed
+  * by `pruneByStats` to [[prune]]) — a point delete on a 100 TB table
   * reads the manifest plus the handful of files that actually contain
   * the id, independent of the clustering layout.
   *
@@ -176,25 +177,23 @@ private[graft] object GraftBlooms {
 
   /** Drop the files whose blooms PROVE they hold no candidate value —
     * the point-skipping half of touched-file discovery. `files` are
-    * full paths; point sets come from
-    * [[org.apache.spark.sql.GraftBridge.conjunctLongPoints]] /
-    * `conjunctStrPoints`. An EMPTY point set means the predicate's
-    * recognized conjuncts are jointly unsatisfiable — no file can
-    * match. Missing sidecars keep the file (sound).
+    * full paths; point sets come from the predicate's [[GraftMerge]]
+    * `domain`, resolved against the same snapshot schema. An EMPTY
+    * point set means the predicate's recognized conjuncts are jointly
+    * unsatisfiable — no file can match. Missing sidecars keep the file
+    * (sound).
     *
     * CHANNEL SOUNDNESS (ADVICE r13): a constraint is honored only when
     * its literal channel matches the column's declared type in
-    * `schema` — `col("strCol") === 5` (valid via Spark's implicit
-    * casts) extracts a LONG point on a STRING column, and probing the
-    * string-channel sidecar with the long hash would ALWAYS miss,
-    * unsoundly pruning files that hold matching rows. Sidecars are
-    * built from the same schema split ([[channels]]), so type match ⇒
-    * channel match. The same guard gates the empty-set
-    * unsatisfiability shortcut: `intCol === "7" AND intCol === "07"`
-    * intersects to an empty STRING set, yet both conjuncts cast to
-    * intCol = 7 — only a type-matched empty set (where equality against
-    * two distinct literals really is vacuous) proves no file matches.
-    * Mismatched constraints are dropped, leaving files candidates. */
+    * `schema`. Resolution already keeps cross-type literals out: coercion
+    * casts `strCol = 5` on the column side and `intCol = '7'` on the
+    * literal side, and the walk sees through neither cast. The guard
+    * stays as the safety net: probing the string-channel sidecar with a
+    * long hash would ALWAYS miss, unsoundly pruning files that hold
+    * matching rows, and an empty cross-channel set would unsoundly
+    * claim unsatisfiability. Sidecars are built from the same schema
+    * split ([[channels]]), so type match ⇒ channel match. Mismatched
+    * constraints are dropped, leaving files candidates. */
   def prune(dir: String, files: Seq[String],
       longPtsRaw: Map[String, Set[Long]],
       strPtsRaw: Map[String, Set[String]],

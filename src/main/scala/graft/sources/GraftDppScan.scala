@@ -11,11 +11,13 @@ import org.apache.spark.sql.types.StructType
 /** Delegating ScanBuilder that preserves every pushdown capability of
   * the native [[ParquetScanBuilder]] (Catalyst filter pushdown, column
   * pruning, aggregate pushdown, variant extraction) and wraps the built
-  * scan in [[GraftDppScan]]. A plain subclass can't do this:
-  * `ParquetScanBuilder.build()` covariantly returns `ParquetScan`, so
-  * an override can't substitute the wrapper type. */
+  * scan with `wrap`: [[GraftDppScan]] by default, the ANALYZE-aware
+  * [[GraftTableStats.scan]] for versioned tables. A plain subclass
+  * can't do this: `ParquetScanBuilder.build()` covariantly returns
+  * `ParquetScan`, so an override can't substitute the wrapper type. */
 class GraftDppScanBuilder(
-    delegate: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder)
+    delegate: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder,
+    wrap: ParquetScan => Scan = new GraftDppScan(_))
   extends org.apache.spark.sql.connector.read.ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -36,7 +38,7 @@ class GraftDppScanBuilder(
   override def pushVariantExtractions(
       extractions: Array[org.apache.spark.sql.connector.read.VariantExtraction]): Array[Boolean] =
     delegate.pushVariantExtractions(extractions)
-  override def build(): Scan = new GraftDppScan(delegate.build())
+  override def build(): Scan = wrap(delegate.build())
 }
 
 /** Dynamic-partition-pruning adapter for DSv2 parquet scans.

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MERGE INTO (upsert) over a versioned table, expressed as Iceberg's
   * copy-on-write: matched target rows are replaced by their source row,
@@ -18,7 +21,11 @@ import org.apache.spark.sql.functions._
   * as ONE Spark job ([[splitTouched]]) — at 100 TB the driver holds
   * only the touched file NAME list (O(files hit), not O(rows)), the
   * rewrite reads only those files, and commit cost is O(rewritten +
-  * inserted data), never O(table). Every verb reads the snapshot with
+  * inserted data), never O(table). Before discovery, [[pruneByStats]]
+  * drops the files the manifest stats and bloom sidecars rule out: each
+  * verb's predicate (MERGE's is its source-key range and key set) is
+  * resolved once against the snapshot schema and walked once
+  * ([[domain]]). Every verb reads the snapshot with
   * the schema [[GraftVersions.snapshotSchema]] resolves on the driver
   * (the evolution record, else one footer), so a statement launches
   * only its discovery and rewrite jobs. This is the
@@ -65,45 +72,7 @@ object GraftMerge {
     require(base >= 1, s"$dir: MERGE needs at least one committed snapshot")
     val files = GraftVersions.manifest(dir, base)
     val srcKeys = source.select(col(keyCol)).distinct()
-    // manifest-level skip first: files outside [min, max] of the source
-    // keys cannot contain a match — for a key-clustered table the
-    // candidate set is O(touched), decided without opening a footer
-    val keyBounds: Map[String, (Long, Long)] =
-      source.schema(keyCol).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType =>
-          val r = srcKeys.agg(min(col(keyCol)), max(col(keyCol))).head()
-          if (r.isNullAt(0)) Map.empty
-          else Map(keyCol -> (asLong(r.get(0)), asLong(r.get(1))))
-        case _ => Map.empty
-      }
-    // small-batch CDC shape: when the source has at most
-    // `bloomProbeMaxKeys` distinct keys, collect them (driver cost
-    // bounded by the cap, enforced with limit) and probe the key SET
-    // against per-file bloom sidecars — on a key-uncorrelated layout
-    // the min/max span covers every file while the blooms pin the
-    // handful that actually hold a matched key. Larger batches skip
-    // the collect and keep the bounds-only path.
-    val cap = spark.conf
-      .get("spark.sql.graft.merge.bloomProbeMaxKeys", "1024").toInt
-    def smallKeySet[T](f: org.apache.spark.sql.Row => T): Option[Set[T]] = {
-      val rows = srcKeys.limit(cap + 1).collect()
-      if (rows.length <= cap)
-        Some(rows.toSeq.filterNot(_.isNullAt(0)).map(f).toSet)
-      else None
-    }
-    val (keyLongPts, keyStrPts) = source.schema(keyCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType =>
-        (smallKeySet(r => asLong(r.get(0))).map(keyCol -> _).toMap,
-          Map.empty[String, Set[String]])
-      case org.apache.spark.sql.types.StringType =>
-        (Map.empty[String, Set[Long]],
-          smallKeySet(_.getString(0)).map(keyCol -> _).toMap)
-      case _ => (Map.empty[String, Set[Long]], Map.empty[String, Set[String]])
-    }
-    val candidates =
-      pruneByStats(spark, dir, base, files, None, keyBounds, keyLongPts, keyStrPts)
+    val candidates = mergeCandidates(spark, dir, base, files, srcKeys, keyCol)
     // which files contain at least one matched key?
     val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
       _.select(col(keyCol), col("_metadata.file_path").as("__path"))
@@ -141,85 +110,199 @@ object GraftMerge {
     files.partition(f => names.contains(pathName(f)))
   }
 
-  private def asLong(v: Any): Long = v match {
-    case i: java.lang.Integer => i.toLong
-    case l: java.lang.Long => l
+  /** MERGE's candidate files: its source-key constraint stated as a
+    * predicate on the key column. An integral key adds `BETWEEN min AND
+    * max` of the source keys, so for a key-clustered table the
+    * candidate set is O(touched), decided without opening a data file.
+    * While the source has at most `bloomProbeMaxKeys` distinct keys
+    * (driver cost bounded by the cap, enforced with limit) it adds `IN
+    * (keys)`, whose point set probes the bloom sidecars: on a
+    * key-uncorrelated layout the range covers every file while the
+    * blooms pin the handful that hold a matched key. */
+  private[graft] def mergeCandidates(spark: SparkSession, dir: String,
+      base: Int, files: Seq[String], srcKeys: DataFrame,
+      keyCol: String): Seq[String] = {
+    val k = col(keyCol)
+    val keyType = srcKeys.schema(keyCol).dataType
+    val range = keyType match {
+      case LongType | IntegerType =>
+        val r = srcKeys.agg(min(k), max(k)).head()
+        if (r.isNullAt(0)) None else Some(k.between(r.get(0), r.get(1)))
+      case _ => None
+    }
+    val cap = spark.conf
+      .get("spark.sql.graft.merge.bloomProbeMaxKeys", "1024").toInt
+    val keySet = keyType match {
+      case LongType | IntegerType | StringType =>
+        val rows = srcKeys.limit(cap + 1).collect()
+        if (rows.length > cap) None
+        else Some(k.isin(rows.toSeq.filterNot(_.isNullAt(0)).map(_.get(0)): _*))
+      case _ => None
+    }
+    (range ++ keySet).reduceOption(_ && _)
+      .fold(files)(pruneByStats(spark, dir, base, files, _))
   }
 
-  /** Sound per-column interval constraints implied by a predicate's
-    * CONJUNCTS, for manifest-level data skipping: any conjunct this
-    * walk does not recognize simply contributes no constraint (a row
-    * matching `A AND B` matches A, so a file whose stats preclude A
-    * provably holds no matching row — ignoring B stays sound; an OR at
-    * the top yields no constraints and every file stays a candidate).
-    * Range bounds are kept LOOSE (`>` treated as `>=`) — no ±1
-    * overflow edge, still sound. Only integral-literal comparisons on
-    * plain columns are recognized, matching the stats the commit path
-    * collects. */
-  private[graft] def predicateBounds(pred: org.apache.spark.sql.Column)
-      : Map[String, (Long, Long)] =
-    org.apache.spark.sql.GraftBridge.conjunctBounds(pred)
+  /** What a predicate's conjuncts prove about each column, in the
+    * terms the pruning consumers read: loose integral and string bounds
+    * (manifest min/max stats; open ends Long.MinValue/MaxValue or
+    * None), finite candidate-value sets (bloom sidecars; an EMPTY set
+    * means the conjuncts are unsatisfiable) and required nullness (null
+    * counts: true for IS NULL, false for IS NOT NULL). Trino's
+    * TupleDomain, per column. */
+  private[graft] final case class Domain(
+      longBounds: Map[String, (Long, Long)],
+      strBounds: Map[String, (Option[Array[Byte]], Option[Array[Byte]])],
+      longPts: Map[String, Set[Long]],
+      strPts: Map[String, Set[String]],
+      nullness: Map[String, Set[Boolean]]) {
+    def isEmpty: Boolean = longBounds.isEmpty && strBounds.isEmpty &&
+      longPts.isEmpty && strPts.isEmpty && nullness.isEmpty
+  }
+
+  /** One recognized conjunct's constraint on column `col`, whose
+    * channel is `long` (integral) or string: its value lies in [lo, hi]
+    * (None: open) and, with `pts`, in that set (Long or UTF8String
+    * values); `isNull` is IS [NOT] NULL. */
+  private final case class Fact(col: String, long: Boolean,
+      lo: Option[Any] = None, hi: Option[Any] = None,
+      pts: Option[Set[Any]] = None, isNull: Option[Boolean] = None)
+
+  private def integralRank(d: DataType): Int = d match {
+    case ByteType => 1
+    case ShortType => 2
+    case IntegerType => 3
+    case LongType => 4
+    case _ => 0
+  }
+
+  /** Value-preserving casts only: the same type, or integral widening
+    * (the shape analyzer coercion puts around the narrower side). A
+    * narrowing or string/decimal round-trip may change the compared
+    * value, and seeing through it would prune (or join on) the wrong
+    * values. */
+  private[graft] def widening(from: DataType, to: DataType): Boolean =
+    from == to || (integralRank(from) > 0 && integralRank(to) >= integralRank(from))
+
+  /** The [[Domain]] of `pred` over a relation of `schema`. The
+    * predicate is resolved by name against the schema: a column is
+    * keyed by the schema's spelling, a nested `s.b` is a field access
+    * that constrains nothing, and coercion has given both sides of each
+    * comparison one type. ONE walk over the resolved conjuncts then
+    * collects each comparison of a column with a literal, seen through
+    * value-preserving casts on either side. A conjunct the walk does
+    * not recognize contributes nothing: a row matching `A AND B`
+    * matches A, so excluding a file by A alone stays sound, and an OR
+    * or NOT yields no constraint. Bounds stay loose (`>` as `>=`). A
+    * predicate that does not resolve yields no constraint; the
+    * discovery scan then raises its error. */
+  private[graft] def domain(spark: SparkSession,
+      pred: org.apache.spark.sql.Column, schema: StructType): Domain = {
+    val byCol = org.apache.spark.sql.GraftBridge.resolveAgainst(spark, pred, schema)
+      .toSeq.flatMap(conjunctFacts).groupBy(_.col)
+    def channel[T](long: Boolean)(implicit ord: Ordering[T])
+        : (Map[String, (Option[T], Option[T])], Map[String, Set[T]]) = {
+      val mine = byCol.filter(_._2.head.long == long)
+      def t(v: Any): T = v.asInstanceOf[T]
+      val bounds = mine.map { case (c, fs) =>
+        // a point set bounds its column by its min and max
+        val sets = fs.flatMap(_.pts).filter(_.nonEmpty).map(_.map(t))
+        c -> ((fs.flatMap(_.lo).map(t) ++ sets.map(_.min)).maxOption,
+          (fs.flatMap(_.hi).map(t) ++ sets.map(_.max)).minOption)
+      }.filter { case (_, (lo, hi)) => lo.isDefined || hi.isDefined }
+      // point sets on one column INTERSECT: a matching row is in all
+      (bounds, mine.flatMap { case (c, fs) =>
+        fs.flatMap(_.pts).map(_.map(t)).reduceOption(_ intersect _).map(c -> _)
+      })
+    }
+    val (lb, lp) = channel[Long](long = true)
+    val (sb, sp) = channel[UTF8String](long = false)(_ binaryCompare _)
+    Domain(
+      lb.map { case (c, (lo, hi)) =>
+        c -> (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
+      },
+      sb.map { case (c, (lo, hi)) => c -> (lo.map(_.getBytes), hi.map(_.getBytes)) },
+      lp, sp.map { case (c, vs) => c -> vs.map(_.toString) },
+      byCol.map { case (c, fs) => c -> fs.flatMap(_.isNull).toSet }
+        .filter(_._2.nonEmpty))
+  }
+
+  private def conjunctFacts(e: Expression): Seq[Fact] = {
+    def column(e: Expression): Option[Fact] = e match {
+      case a: AttributeReference => Some(Fact(a.name, a.dataType != StringType))
+      case c: Cast if widening(c.child.dataType, c.dataType) => column(c.child)
+      case _ => None
+    }
+    def value(e: Expression, long: Boolean): Option[Any] = e match {
+      case Literal(v: Number, ByteType | ShortType | IntegerType | LongType) if long =>
+        Some(v.longValue)
+      case Literal(v: UTF8String, StringType) if !long => Some(v)
+      case c: Cast if widening(c.child.dataType, c.dataType) => value(c.child, long)
+      case _ => None
+    }
+    def cmp(c: Expression, v: Expression)(f: (Fact, Any) => Fact): Seq[Fact] =
+      (for (col <- column(c); x <- value(v, col.long)) yield f(col, x)).toSeq
+    val point = (f: Fact, x: Any) => f.copy(pts = Some(Set(x)))
+    val above = (f: Fact, x: Any) => f.copy(lo = Some(x))
+    val below = (f: Fact, x: Any) => f.copy(hi = Some(x))
+    e match {
+      case And(l, r) => conjunctFacts(l) ++ conjunctFacts(r)
+      case EqualTo(l, r) => cmp(l, r)(point) ++ cmp(r, l)(point)
+      case GreaterThan(l, r) => cmp(l, r)(above) ++ cmp(r, l)(below)
+      case GreaterThanOrEqual(l, r) => cmp(l, r)(above) ++ cmp(r, l)(below)
+      case LessThan(l, r) => cmp(l, r)(below) ++ cmp(r, l)(above)
+      case LessThanOrEqual(l, r) => cmp(l, r)(below) ++ cmp(r, l)(above)
+      case In(c, list) => column(c).toSeq.flatMap { col =>
+        val xs = list.map(value(_, col.long))
+        if (xs.forall(_.isDefined)) Seq(col.copy(pts = Some(xs.flatten.toSet)))
+        else Nil
+      }
+      case IsNull(c) => column(c).map(_.copy(isNull = Some(true))).toSeq
+      case IsNotNull(c) => column(c).map(_.copy(isNull = Some(false))).toSeq
+      case _ => Nil
+    }
+  }
 
   /** Manifest-level data skipping: the files of snapshot `base` that
-    * COULD hold a row matching the predicate's integral AND string
-    * conjunct bounds, decided from the per-file stats the commit
-    * embedded in the manifest — no footer is opened. A file lacking
-    * stats for a bounded column — or whose stat TYPE does not match
-    * the bound's — stays a candidate (sound), so pre-stats tables and
-    * odd-cast predicates degrade to the full discovery scan, never to
-    * a wrong answer. At 100 TB this is the difference between a
-    * takedown DELETE costing one manifest read + touched files and
-    * costing an O(table) metadata sweep — provided the predicate
-    * correlates with the table's clustering (p21's z-order argument). */
-  /** Point-set constraints from two sources INTERSECT per column (a
-    * matching row satisfies both). */
-  private def combinePts[T](a: Map[String, Set[T]],
-      b: Map[String, Set[T]]): Map[String, Set[T]] =
-    (a.toSeq ++ b.toSeq).groupBy(_._1)
-      .map { case (c, ss) => c -> ss.map(_._2).reduce(_ intersect _) }
-
-  private def pruneByStats(spark: SparkSession, dir: String, base: Int,
-      files: Seq[String],
-      pred: Option[org.apache.spark.sql.Column],
-      extraLong: Map[String, (Long, Long)] = Map.empty,
-      extraLongPts: Map[String, Set[Long]] = Map.empty,
-      extraStrPts: Map[String, Set[String]] = Map.empty): Seq[String] = {
-    import org.apache.spark.sql.GraftBridge
-    val longBounds =
-      pred.map(GraftBridge.conjunctBounds).getOrElse(Map.empty) ++ extraLong
-    val strBounds =
-      pred.map(GraftBridge.conjunctStrBounds).getOrElse(Map.empty)
-    // equality/IN conjuncts additionally yield finite candidate-value
-    // sets, probed against per-file bloom sidecars — the layout-
-    // independent point channel (min/max only prunes a point predicate
-    // when the table happens to be clustered on its column)
-    val longPts = combinePts(
-      pred.map(GraftBridge.conjunctLongPoints).getOrElse(Map.empty), extraLongPts)
-    val strPts = combinePts(
-      pred.map(GraftBridge.conjunctStrPoints).getOrElse(Map.empty), extraStrPts)
-    val nullness =
-      pred.map(GraftBridge.conjunctNullness).getOrElse(Map.empty)
-    if (longBounds.isEmpty && strBounds.isEmpty &&
-      longPts.isEmpty && strPts.isEmpty && nullness.isEmpty) return files
+    * COULD hold a row matching `pred`, decided from the predicate's
+    * [[domain]] over the snapshot schema, the per-file stats the
+    * commit embedded in the manifest and the bloom sidecars. No data
+    * file is opened; the schema costs the evolution record or one
+    * footer. A file lacking stats for a constrained column, or whose
+    * stat type does not match, stays a candidate (sound), so pre-stats
+    * tables degrade to the full discovery scan, never to a wrong
+    * answer. At 100 TB this is the difference between a takedown
+    * DELETE costing one manifest read + touched files and costing an
+    * O(table) metadata sweep — provided the predicate correlates with
+    * the table's clustering (p21's z-order argument) or hits a bloom
+    * column. */
+  private[graft] def pruneByStats(spark: SparkSession, dir: String, base: Int,
+      files: Seq[String], pred: org.apache.spark.sql.Column): Seq[String] = {
+    val schema = GraftVersions.snapshotSchema(dir, base, files) match {
+      case Some(s) => s
+      case None => return files // no schema record and no file
+    }
+    val d = domain(spark, pred, schema)
+    if (d.isEmpty) return files
     // `col IS NULL AND col IS NOT NULL` is unsatisfiable: no file matches
-    if (nullness.values.exists(_.size == 2)) return Seq.empty
+    if (d.nullness.values.exists(_.size == 2)) return Seq.empty
     val stats = GraftVersions.manifestStats(dir, base)
     def cmp(a: Array[Byte], b: Array[Byte]): Int =
       java.util.Arrays.compareUnsigned(a, b)
     val byStats = files.filter { f =>
       val s = stats.getOrElse(pathName(f), Map.empty[String, GraftColStat])
-      longBounds.forall { case (c, (lo, hi)) =>
+      d.longBounds.forall { case (c, (lo, hi)) =>
         s.get(c) match {
           case Some(GraftLongStat(flo, fhi)) => fhi >= lo && flo <= hi
           case _ => true // no stat or type mismatch: keep
         }
-      } && strBounds.forall { case (c, (lo, hi)) =>
+      } && d.strBounds.forall { case (c, (lo, hi)) =>
         s.get(c) match {
           case Some(GraftBinStat(flo, fhi)) =>
             lo.forall(l => cmp(fhi, l) >= 0) && hi.forall(h => cmp(flo, h) <= 0)
           case _ => true
         }
-      } && nullness.forall { case (c, req) =>
+      } && d.nullness.forall { case (c, req) =>
         s.get(s"$c#n") match {
           // IS NULL required: a zero-null file cannot match;
           // IS NOT NULL required: an all-null file cannot match
@@ -230,14 +313,10 @@ object GraftMerge {
         }
       }
     }
-    // bloom probing needs the table's DECLARED column types to match
-    // each point constraint to its hash channel (ADVICE r13 — a
-    // cross-type literal would otherwise probe the wrong channel and
-    // unsoundly prune); the schema record covers evolved tables, one
-    // footer covers the rest, and it is only forced when a point
-    // constraint survives to the probe
-    GraftBlooms.prune(dir, byStats, longPts, strPts,
-      GraftVersions.snapshotSchema(dir, base, files).get)
+    // equality/IN conjuncts' point sets probe the bloom sidecars — the
+    // layout-independent point channel (min/max only prunes a point
+    // predicate when the table is clustered on its column)
+    GraftBlooms.prune(dir, byStats, d.longPts, d.strPts, schema)
   }
 
   /** Copy-on-write DELETE (`DELETE FROM t WHERE p`) — the takedown
@@ -279,7 +358,7 @@ object GraftMerge {
     val files = GraftVersions.manifest(dir, base)
     // manifest-level skip, then the exact per-row discovery scan over
     // the surviving candidates only
-    val candidates = pruneByStats(spark, dir, base, files, Some(predicate))
+    val candidates = pruneByStats(spark, dir, base, files, predicate)
     val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
       _.filter(predicate).select(col("_metadata.file_path")))
     if (touched.isEmpty) return (base, files.size, 0) // nothing matched
@@ -344,7 +423,7 @@ object GraftMerge {
       }.toMap
     require(assigned.size == assignments.size,
       s"$dir: UPDATE assigns the same column more than once")
-    val candidates = pruneByStats(spark, dir, base, files, Some(predicate))
+    val candidates = pruneByStats(spark, dir, base, files, predicate)
     val (touched, untouched) = splitTouched(spark, dir, base, files, candidates)(
       _.filter(predicate).select(col("_metadata.file_path")))
     if (touched.isEmpty) return (base, files.size, 0) // nothing matched

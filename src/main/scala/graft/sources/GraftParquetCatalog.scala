@@ -1548,7 +1548,9 @@ private class GraftVersionedWriteBuilder(path: String)
   * WHERE p` is a NATIVE SQL statement: Spark pushes the condition as
   * source filters, each is rebuilt into a Column, and the delete runs
   * through [[GraftMerge.deleteFrom]]'s copy-on-write path (touched
-  * files only, pre-delete snapshot preserved). A condition that does
+  * files only, pre-delete snapshot preserved). File pruning resolves
+  * the rebuilt Column against the snapshot schema and walks it once,
+  * like every other predicate (GraftMerge `domain`). A condition that does
   * not translate to source filters is rejected by `canDeleteWhere` —
   * Spark then fails the statement loudly instead of deleting the
   * wrong rows. */
@@ -1566,10 +1568,10 @@ private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String
     * seam (GraftTableStats); without a record the wrapper builds the
     * stock scan with its file-size estimate. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftStatsScanBuilder(
+    new GraftDppScanBuilder(
       parquet.newScanBuilder(options)
         .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder],
-      path)
+      GraftTableStats.scan(path))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftVersionedWriteBuilder(path)
 

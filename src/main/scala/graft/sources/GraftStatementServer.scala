@@ -583,7 +583,7 @@ object GraftStatementServer {
     if (!firstPage && st.queuedMillis < 0)
       st.queuedMillis = (System.nanoTime() - st.submitNanos) / 1000000L
     val elapsed = (System.nanoTime() - st.submitNanos) / 1000000L
-    val (inRows, inBytes) = inputMetrics(st.df)
+    val (inRows, inBytes, peakMemory) = planStats(st.df)
     b.append(s""","stats":{"state":"$state"""")
     // the progress fields the reference's captured query.json records
     // (results/q00N/*/query.json): processedRows/Bytes are the INPUT
@@ -606,58 +606,30 @@ object GraftStatementServer {
     // by construction (the accumulators belong to THIS query's plan,
     // unlike executor-level metrics on a shared context); a sum of
     // operator peaks, so an upper bound on the simultaneous peak.
-    b.append(s""","peakMemoryBytes":${peakMemoryBytes(st.df)}""")
+    b.append(s""","peakMemoryBytes":$peakMemory""")
     b.append(s""","queuedTimeMillis":${math.max(st.queuedMillis, 0L)}}}""")
     b.toString
   }
 
-  /** Sum of `peakMemory` SQL-metric accumulators across the executed
-    * plan (AQE-descended, the [[inputMetrics]] walk). Grows as the
-    * drain executes memory-bearing operators; 0 for pure streaming
-    * scans and commands. */
-  private def peakMemoryBytes(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    var peak = 0L
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case other =>
-        other.metrics.get("peakMemory").foreach { m =>
-          if (m.value > 0) peak += m.value
-        }
-        other.children.foreach(walk)
-    }
-    try walk(df.queryExecution.executedPlan)
-    catch { case scala.util.control.NonFatal(_) => () }
-    peak
-  }
-
-  /** Live input-side progress: sum of leaf-scan `numOutputRows`
-    * accumulators (descending through AQE wrappers, the q78 walk) and
-    * a schema-width byte estimate per scanned row. Monotone: SQL
-    * metric accumulators only grow while the cursor drains. */
-  private def inputMetrics(df: DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  /** Live progress from one walk over the executed plan
+    * ([[graft.plans.ExecutedPlan]]): input rows as the sum of leaf-scan
+    * `numOutputRows` accumulators, a schema-width byte estimate per
+    * scanned row, and the sum of `peakMemory` accumulators (hash
+    * aggregates, sorts, hash joins). Monotone: SQL metric accumulators
+    * only grow while the cursor drains; 0 for commands. */
+  private def planStats(df: DataFrame): (Long, Long, Long) = {
     var rows = 0L
     var bytes = 0L
-    def walk(p: SparkPlan): Unit = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case leaf if leaf.children.isEmpty =>
-        leaf.metrics.get("numOutputRows").foreach { m =>
-          val n = m.value
-          if (n > 0) {
-            rows += n
-            bytes += n * math.max(leaf.schema.defaultSize.toLong, 1L)
-          }
-        }
-      case other => other.children.foreach(walk)
-    }
-    try walk(df.queryExecution.executedPlan)
-    catch { case scala.util.control.NonFatal(_) => () }
-    (rows, bytes)
+    var peak = 0L
+    try graft.plans.ExecutedPlan.nodes(df.queryExecution.executedPlan).foreach { n =>
+      def metric(name: String) = n.metrics.get(name).map(_.value).filter(_ > 0)
+      metric("peakMemory").foreach(peak += _)
+      if (n.children.isEmpty) metric("numOutputRows").foreach { r =>
+        rows += r
+        bytes += r * math.max(n.schema.defaultSize.toLong, 1L)
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
+    (rows, bytes, peak)
   }
 
   private def failedJson(id: String, msg: String): String =

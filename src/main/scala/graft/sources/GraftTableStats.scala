@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.connector.read.{Batch, Scan, Statistics, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.StructType
 
 /** Table-level CBO statistics for graft versioned tables — the seam
@@ -66,6 +66,20 @@ private[graft] object GraftTableStats {
     root.set[ObjectNode]("cols", cols)
     java.nio.file.Files.write(statsFile(dir).toPath,
       mapper.writeValueAsBytes(root))
+  }
+
+  /** The scan a versioned table's [[GraftDppScanBuilder]] builds: with
+    * a live ANALYZE record, its reported statistics are the stored
+    * totals scaled by the pushed filters' selectivity. A record is live
+    * only for the snapshot it measured: any commit since ANALYZE
+    * (append/merge/compact/restore) makes it STALE and planning falls
+    * back to the file-size estimate. Either way the scan keeps runtime
+    * filtering — a versioned fact must not lose DPP just because it is
+    * versioned. */
+  def scan(dir: String)(parquet: ParquetScan): Scan = read(dir) match {
+    case Some(st) if st.version == GraftVersions.current(dir) =>
+      new GraftStatsScan(parquet, st)
+    case _ => new GraftDppScan(parquet)
   }
 
   def read(dir: String): Option[TableStats] = {
@@ -134,51 +148,6 @@ private[graft] object GraftTableStats {
       case _ => 1.0
     }
     math.min(1.0, math.max(1e-9, conjuncts.map(one).product))
-  }
-}
-
-/** Delegating ScanBuilder for VERSIONED tables: preserves the native
-  * [[ParquetScanBuilder]] pushdown surface (same shape as
-  * [[GraftDppScanBuilder]]) and, when the table carries an ANALYZE
-  * record, wraps the built scan so its reported statistics are the
-  * stored totals scaled by the pushed filters' selectivity. */
-private[graft] class GraftStatsScanBuilder(delegate: ParquetScanBuilder,
-    dir: String)
-  extends org.apache.spark.sql.connector.read.ScanBuilder
-  with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.connector.read.SupportsPushDownVariantExtractions {
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    delegate.pruneColumns(requiredSchema)
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
-    delegate.pushFilters(filters)
-  override def pushedFilters
-      : Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    delegate.pushedFilters
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    delegate.pushAggregation(agg)
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    delegate.supportCompletePushDown(agg)
-  override def pushVariantExtractions(
-      extractions: Array[org.apache.spark.sql.connector.read.VariantExtraction]): Array[Boolean] =
-    delegate.pushVariantExtractions(extractions)
-
-  override def build(): Scan = {
-    val scan = delegate.build()
-    GraftTableStats.read(dir) match {
-      // a record is live only for the snapshot it measured: any
-      // commit since ANALYZE (append/merge/compact/restore) makes it
-      // STALE and planning falls back to the file-size estimate
-      case Some(st) if st.version == GraftVersions.current(dir) =>
-        new GraftStatsScan(scan, st)
-      // no (live) ANALYZE record: still wrap for runtime filtering —
-      // a versioned fact must not lose DPP just because it is versioned
-      case _ => new GraftDppScan(scan)
-    }
   }
 }
 

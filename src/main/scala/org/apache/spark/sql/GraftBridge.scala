@@ -5,7 +5,10 @@ import org.apache.spark.sql.types._
 
 /** Bridge into `private[sql]` helpers so graft code can lift custom
   * Catalyst [[Expression]]s into user-facing [[Column]]s (the Spark 4.x
-  * Column API is node-based; `classic.ExpressionUtils` does the lifting). */
+  * Column API is node-based; `classic.ExpressionUtils` does the lifting)
+  * and read a Column back as Catalyst: [[resolveAgainst]] is the one
+  * place a copy-on-write predicate, whichever way it was built, becomes
+  * a resolved expression for file pruning. */
 object GraftBridge {
   /** Per-statement session isolation for the statement protocol face:
     * a clone shares the SparkContext and SharedState (so registered
@@ -104,324 +107,24 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Sound per-column INTEGRAL interval constraints implied by a
-    * predicate Column's CONJUNCTS — the extraction behind graft's
-    * manifest-level data skipping (GraftMerge.pruneByStats). Open ends
-    * are Long.MinValue/MaxValue. */
-  def conjunctBounds(c: Column): Map[String, (Long, Long)] =
-    boundsWalk[Long](c, longLit, longNodeLit)(Ordering.Long).map {
-      case (col, (lo, hi)) =>
-        col -> (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
-    }
-
-  /** The STRING channel of the same extraction: per-column byte-array
-    * bounds (UTF8 bytes, unsigned-lexicographic — Spark's UTF8String
-    * ordering, which is also parquet's UTF8 stats comparator). Open
-    * ends are None. */
-  def conjunctStrBounds(c: Column)
-      : Map[String, (Option[Array[Byte]], Option[Array[Byte]])] =
-    boundsWalk[Array[Byte]](c, strLit, strNodeLit)(byteOrd)
-
-  private val byteOrd: Ordering[Array[Byte]] =
-    (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b)
-
-  /** Finite per-column candidate-value SETS implied by a predicate's
-    * CONJUNCTS — the extraction behind graft's bloom-sidecar point
-    * skipping (GraftBlooms.prune): `col = v` contributes {v}, `col IN
-    * (…)` the literal set, and several conjuncts on one column
-    * INTERSECT (a matching row satisfies all of them). An EMPTY set is
-    * meaningful: the recognized conjuncts are jointly unsatisfiable, so
-    * NO file can hold a matching row. Unrecognized conjuncts contribute
-    * nothing (sound, as in [[conjunctBounds]]); any OR/NOT above yields
-    * no constraints. */
-  def conjunctLongPoints(c: Column): Map[String, Set[Long]] =
-    pointsWalk[Long](c, longLit, longNodeLit)
-
-  /** The STRING channel of [[conjunctLongPoints]]. */
-  def conjunctStrPoints(c: Column): Map[String, Set[String]] =
-    pointsWalk[String](c, strLitStr, strNodeLitStr)
-
-  /** Per-column NULLNESS constraints implied by a predicate's
-    * CONJUNCTS: `col IS NULL` → true, `col IS NOT NULL` → false —
-    * probed against the manifest's per-file null counts (a file with
-    * zero nulls in the column cannot match IS NULL; a file that is all
-    * null cannot match IS NOT NULL). Both requirements on one column
-    * is unsatisfiable — encoded as BOTH entries present via the
-    * special key handling in the caller (here: last-writer-wins is
-    * avoided by collecting into a Set). */
-  def conjunctNullness(c: Column): Map[String, Set[Boolean]] = {
-    import org.apache.spark.sql.{internal => n}
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute => CUA}
-    def cname(e: Expression): Option[String] = e match {
-      case a: ce.AttributeReference => Some(a.name)
-      case u: CUA if u.nameParts.length == 1 => Some(u.nameParts.head)
-      case _ => None
-    }
-    def cwalk(e: Expression): Seq[(String, Boolean)] = e match {
-      case ce.And(l, r) => cwalk(l) ++ cwalk(r)
-      case ce.IsNull(a) => cname(a).map(_ -> true).toSeq
-      case ce.IsNotNull(a) => cname(a).map(_ -> false).toSeq
-      case _ => Seq.empty
-    }
-    def nname(node: n.ColumnNode): Option[String] = node match {
-      case a: n.UnresolvedAttribute if a.nameParts.length == 1 =>
-        Some(a.nameParts.head)
-      case _ => None
-    }
-    def nwalk(node: n.ColumnNode): Seq[(String, Boolean)] = node match {
-      case e: classic.ExpressionColumnNode => cwalk(e.expression)
-      case f: n.UnresolvedFunction =>
-        f.functionName match {
-          case "and" => f.arguments.flatMap(nwalk)
-          case "isnull" if f.arguments.length == 1 =>
-            nname(f.arguments.head).map(_ -> true).toSeq
-          case "isnotnull" if f.arguments.length == 1 =>
-            nname(f.arguments.head).map(_ -> false).toSeq
-          case _ => Seq.empty
-        }
-      case _ => Seq.empty
-    }
-    nwalk(c.node).groupBy(_._1).map { case (col, xs) =>
-      col -> xs.map(_._2).toSet
-    }
-  }
-
-  private def strLitStr(e: Expression): Option[String] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    e match {
-      case ce.Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-        Some(v.toString)
-      case _ => None
-    }
-  }
-
-  private def strNodeLitStr(node: internal.ColumnNode): Option[String] =
-    node match {
-      case l: internal.Literal => l.value match {
-        case s: String => Some(s)
-        case _ => None
+  /** `pred` analysed by name against a relation of `schema`: the
+    * resolved condition, or None when it does not resolve there. Its
+    * columns carry the schema's spelling (a case-insensitive session
+    * resolves `K` to column `k` but keeps the user's `K` on the
+    * reference). The analysis runs on the driver and launches no job. */
+  def resolveAgainst(spark: SparkSession, pred: Column, schema: StructType)
+      : Option[Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val attrs = catalyst.types.DataTypeUtils.toAttributes(schema)
+    val byId = attrs.map(a => a.exprId -> a).toMap
+    scala.util.Try(session.sessionState.analyzer.executeAndCheck(
+      Filter(session.expression(pred), LocalRelation(attrs)),
+      new catalyst.QueryPlanningTracker)).toOption.collect {
+      case Filter(cond, _) => cond.transform {
+        case a: AttributeReference => byId.getOrElse(a.exprId, a)
       }
-      case _ => None
     }
-
-  private def pointsWalk[T](c: Column,
-      clit: Expression => Option[T],
-      nlit: internal.ColumnNode => Option[T]): Map[String, Set[T]] = {
-    import org.apache.spark.sql.{internal => n}
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute => CUA}
-
-    def cname(e: Expression): Option[String] = e match {
-      case a: ce.AttributeReference => Some(a.name)
-      case u: CUA if u.nameParts.length == 1 => Some(u.nameParts.head)
-      case cst: ce.Cast if widening(cst.child.dataType, cst.dataType) =>
-        cname(cst.child)
-      case _ => None
-    }
-    def ceq(a: Expression, b: Expression): Seq[(String, Set[T])] =
-      (for { nm <- cname(a); v <- clit(b) } yield (nm, Set(v))).toSeq
-    def cwalk(e: Expression): Seq[(String, Set[T])] = e match {
-      case ce.And(l, r) => cwalk(l) ++ cwalk(r)
-      case ce.EqualTo(a, b) => ceq(a, b) ++ ceq(b, a)
-      case ce.In(a, list) =>
-        val vs = list.map(clit)
-        if (vs.nonEmpty && vs.forall(_.isDefined))
-          cname(a).map(nm => (nm, vs.flatten.toSet)).toSeq
-        else Seq.empty
-      case _ => Seq.empty
-    }
-
-    def nname(node: n.ColumnNode): Option[String] = node match {
-      case a: n.UnresolvedAttribute if a.nameParts.length == 1 =>
-        Some(a.nameParts.head)
-      case _ => None
-    }
-    def neq(a: n.ColumnNode, b: n.ColumnNode): Seq[(String, Set[T])] =
-      (for { nm <- nname(a); v <- nlit(b) } yield (nm, Set(v))).toSeq
-    def nwalk(node: n.ColumnNode): Seq[(String, Set[T])] = node match {
-      case e: classic.ExpressionColumnNode => cwalk(e.expression)
-      case f: n.UnresolvedFunction =>
-        val a = f.arguments
-        f.functionName match {
-          case "and" => a.flatMap(nwalk)
-          case "=" | "==" if a.length == 2 => neq(a(0), a(1)) ++ neq(a(1), a(0))
-          case "in" if a.length >= 2 =>
-            val vs = a.drop(1).map(nlit)
-            if (vs.forall(_.isDefined))
-              nname(a.head).map(nm => (nm, vs.flatten.toSet)).toSeq
-            else Seq.empty
-          case _ => Seq.empty
-        }
-      case _ => Seq.empty
-    }
-
-    nwalk(c.node).groupBy(_._1).map { case (col, sets) =>
-      col -> sets.map(_._2).reduce(_ intersect _)
-    }
-  }
-
-  /** Value-preserving (widening) integral casts only — a NARROWING
-    * cast on either side changes the compared value (truncation), and
-    * stripping it would derive WRONG bounds that prune matching files. */
-  private def widening(from: DataType, to: DataType): Boolean = {
-    def w(d: DataType): Int = d match {
-      case ByteType => 1
-      case ShortType => 2
-      case IntegerType => 3
-      case LongType => 4
-      case _ => 0
-    }
-    w(from) > 0 && w(to) >= w(from)
-  }
-
-  private def longLit(e: Expression): Option[Long] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    e match {
-      case ce.Literal(v: Byte, _) => Some(v.toLong)
-      case ce.Literal(v: Short, _) => Some(v.toLong)
-      case ce.Literal(v: Int, _) => Some(v.toLong)
-      case ce.Literal(v: Long, _) => Some(v)
-      case cst: ce.Cast if widening(cst.child.dataType, cst.dataType) =>
-        longLit(cst.child)
-      case _ => None
-    }
-  }
-
-  private def strLit(e: Expression): Option[Array[Byte]] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    e match {
-      case ce.Literal(v: org.apache.spark.unsafe.types.UTF8String, StringType) =>
-        Some(v.getBytes)
-      case _ => None
-    }
-  }
-
-  private def longNodeLit(node: internal.ColumnNode): Option[Long] =
-    node match {
-      case l: internal.Literal => l.value match {
-        case b: Byte => Some(b.toLong)
-        case s: Short => Some(s.toLong)
-        case i: Int => Some(i.toLong)
-        case lo: Long => Some(lo)
-        case _ => None
-      }
-      case _ => None
-    }
-
-  private def strNodeLit(node: internal.ColumnNode): Option[Array[Byte]] =
-    node match {
-      case l: internal.Literal => l.value match {
-        case s: String =>
-          Some(org.apache.spark.unsafe.types.UTF8String.fromString(s).getBytes)
-        case _ => None
-      }
-      case _ => None
-    }
-
-  /** The shared conjunct walk over BOTH predicate representations: the
-    * node-space tree the `col()/lit()` API builds
-    * (`internal.UnresolvedFunction("=", …)`) and Catalyst expressions
-    * wrapped by `ExpressionColumnNode` (the SQL DML path rebuilding
-    * resolved statement predicates). Any conjunct the walk does not
-    * recognize contributes no constraint (a row matching `A AND B`
-    * matches A, so excluding a file by A's bounds alone stays sound; an
-    * OR at the top yields no constraints). Range bounds stay LOOSE (`>`
-    * treated as `>=`) — no increment edge, still sound. Cast-stripping
-    * on the COLUMN side is catalyst-only and widening-only (node-space
-    * child types are unknown pre-resolution, so no stripping there).
-    * UNRESOLVED attributes constrain only when their name is a SINGLE
-    * part: `col("s.b")` denotes the nested field b of struct s, and
-    * keying a constraint by the trailing part would prune on an
-    * unrelated top-level column b's stats (ADVICE r13) — multipart
-    * names contribute nothing, which is sound. */
-  private def boundsWalk[T](c: Column,
-      clit: Expression => Option[T],
-      nlit: internal.ColumnNode => Option[T])(implicit ord: Ordering[T])
-      : Map[String, (Option[T], Option[T])] = {
-    import org.apache.spark.sql.{internal => n}
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute => CUA}
-
-    // (column, lo, hi) with None = unbounded on that side
-    type B = (String, Option[T], Option[T])
-
-    def cname(e: Expression): Option[String] = e match {
-      case a: ce.AttributeReference => Some(a.name)
-      case u: CUA if u.nameParts.length == 1 => Some(u.nameParts.head)
-      case cst: ce.Cast if widening(cst.child.dataType, cst.dataType) =>
-        cname(cst.child)
-      case _ => None
-    }
-    def crange(a: Expression, b: Expression,
-        mk: T => (Option[T], Option[T])): Seq[B] =
-      (for { nm <- cname(a); v <- clit(b) }
-        yield { val (lo, hi) = mk(v); (nm, lo, hi) }).toSeq
-    def cwalk(e: Expression): Seq[B] = e match {
-      case ce.And(l, r) => cwalk(l) ++ cwalk(r)
-      case ce.EqualTo(a, b) =>
-        crange(a, b, v => (Some(v), Some(v))) ++
-          crange(b, a, v => (Some(v), Some(v)))
-      case ce.GreaterThan(a, b) =>
-        crange(a, b, v => (Some(v), None)) ++ crange(b, a, v => (None, Some(v)))
-      case ce.GreaterThanOrEqual(a, b) =>
-        crange(a, b, v => (Some(v), None)) ++ crange(b, a, v => (None, Some(v)))
-      case ce.LessThan(a, b) =>
-        crange(a, b, v => (None, Some(v))) ++ crange(b, a, v => (Some(v), None))
-      case ce.LessThanOrEqual(a, b) =>
-        crange(a, b, v => (None, Some(v))) ++ crange(b, a, v => (Some(v), None))
-      case ce.In(a, list) =>
-        val vs = list.map(clit)
-        if (vs.nonEmpty && vs.forall(_.isDefined))
-          cname(a).map(nm =>
-            (nm, Some(vs.flatten.min), Some(vs.flatten.max))).toSeq
-        else Seq.empty
-      case _ => Seq.empty
-    }
-
-    def nname(node: n.ColumnNode): Option[String] = node match {
-      case a: n.UnresolvedAttribute if a.nameParts.length == 1 =>
-        Some(a.nameParts.head)
-      case _ => None
-    }
-    def nrange(a: n.ColumnNode, b: n.ColumnNode,
-        mk: T => (Option[T], Option[T])): Seq[B] =
-      (for { nm <- nname(a); v <- nlit(b) }
-        yield { val (lo, hi) = mk(v); (nm, lo, hi) }).toSeq
-    def nwalk(node: n.ColumnNode): Seq[B] = node match {
-      case e: classic.ExpressionColumnNode => cwalk(e.expression)
-      case f: n.UnresolvedFunction =>
-        val a = f.arguments
-        f.functionName match {
-          case "and" => a.flatMap(nwalk)
-          case "=" | "==" if a.length == 2 =>
-            nrange(a(0), a(1), v => (Some(v), Some(v))) ++
-              nrange(a(1), a(0), v => (Some(v), Some(v)))
-          case ">" | ">=" if a.length == 2 =>
-            nrange(a(0), a(1), v => (Some(v), None)) ++
-              nrange(a(1), a(0), v => (None, Some(v)))
-          case "<" | "<=" if a.length == 2 =>
-            nrange(a(0), a(1), v => (None, Some(v))) ++
-              nrange(a(1), a(0), v => (Some(v), None))
-          case "in" if a.length >= 2 =>
-            val vs = a.drop(1).map(nlit)
-            if (vs.forall(_.isDefined))
-              nname(a.head).map(nm =>
-                (nm, Some(vs.flatten.min), Some(vs.flatten.max))).toSeq
-            else Seq.empty
-          case _ => Seq.empty
-        }
-      case _ => Seq.empty
-    }
-
-    nwalk(c.node)
-      .groupBy(_._1)
-      .map { case (col, bs) =>
-        val los = bs.flatMap(_._2)
-        val his = bs.flatMap(_._3)
-        col -> (if (los.isEmpty) None else Some(los.max),
-          if (his.isEmpty) None else Some(his.min))
-      }
-      .filter { case (_, (lo, hi)) => lo.isDefined || hi.isDefined }
   }
 }

@@ -16,7 +16,7 @@ class AnomalySpec extends SparkSpec {
   /** Hours 0..5 carry counts 1,2,3,1,2,3 (baseline), hour 6 carries a
     * 30-event spike, hour 7 returns to 2. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_anom").toString
+    val d = tempDir("graft_anom").toString
     import spark.implicits._
     val counts = Seq(1, 2, 3, 1, 2, 3, 30, 2)
     val rows = counts.zipWithIndex.flatMap { case (n, h) =>
@@ -52,7 +52,7 @@ class AnomalySpec extends SparkSpec {
   }
 
   test("a constant baseline yields NULL z, not infinity") {
-    val d = java.nio.file.Files.createTempDirectory("graft_anom_const").toString
+    val d = tempDir("graft_anom_const").toString
     import spark.implicits._
     val rows = (0 until 8).flatMap { h =>
       (0 until 2).map(i => ev(h * 100L + i, h, i))

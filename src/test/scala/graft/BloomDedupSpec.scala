@@ -17,7 +17,7 @@ class BloomDedupSpec extends SparkSpec {
     val seen = (0L until 400L).map(i => (i, s"seen text number ${i % 380} padded"))
     val dup = (400L until 450L).map(i => (i, s"seen text number ${i % 50} padded"))
     val novel = (450L until 800L).map(i => (i, s"novel text number $i"))
-    val out = java.nio.file.Files.createTempDirectory("bloomdedup").toString
+    val out = tempDir("bloomdedup").toString
     (seen ++ dup ++ novel).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("synthetic"))
       .withColumn("n_chars", length(col("text")).cast("long"))

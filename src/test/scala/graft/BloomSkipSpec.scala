@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, IsNotNull, IsNull, Literal}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftMerge, GraftVersions}
+import graft.sources.{GraftMerge, GraftVersionedTable, GraftVersions}
 
 /** Bloom-sidecar point skipping (GraftBlooms): the layout-independent
   * file-pruning channel for equality/IN predicates. Min/max manifest
@@ -39,6 +42,15 @@ class BloomSkipSpec extends SparkSpec {
       val dir = buildScattered("bl1", "k")
       val n = GraftVersions.manifest(dir, 1).size
       assert(n >= 4, s"fragmentation precondition: $n files")
+      // candidate pins: the point and the SQL DELETE's IN list (rebuilt
+      // from its pushed source filter) keep only the files holding them
+      val hold13 = filesHolding(dir, col("k") === 13)
+      assert(hold13.size == 1 && candidateFiles(dir, col("k") === 13) == hold13)
+      val inList = GraftVersionedTable.filterToColumn(
+        org.apache.spark.sql.sources.In("k", Array(5, 21))).get
+      val holdIn = filesHolding(dir, inList)
+      assert(holdIn.nonEmpty && holdIn.size < n)
+      assert(candidateFiles(dir, inList) == holdIn)
       // blooms: a handful of values in a ~1% @100k-item filter — false
       // positives are vanishingly improbable, so accounting is exact:
       // k=13 lives in exactly ONE residue-class file
@@ -61,10 +73,28 @@ class BloomSkipSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.graft.bloom.columns")
   }
 
+  test("a constraint is keyed by the schema's spelling of its column") {
+    try {
+      val dir = buildScattered("bl10", "k")
+      // case-insensitive session: K names column k, so its stats and
+      // sidecars apply
+      val hold = filesHolding(dir, col("k") === 13)
+      assert(hold.size == 1)
+      assert(candidateFiles(dir, col("K") === 13) == hold)
+    } finally spark.conf.unset("spark.sql.graft.bloom.columns")
+  }
+
   test("string-channel bloom prunes equality on a text column") {
     try {
       val dir = buildScattered("bl2", "v")
       val n = GraftVersions.manifest(dir, 1).size
+      val hold = filesHolding(dir, col("v") === "doc_37")
+      assert(hold.size == 1 && candidateFiles(dir, col("v") === "doc_37") == hold)
+      // a MERGE source with a small STRING key set probes the same channel
+      import spark.implicits._
+      val keys = Seq("doc_37", "doc_40", "absent").toDF("v")
+      assert(mergeCandidateFiles(dir, keys, "v") ==
+        filesHolding(dir, col("v").isin("doc_37", "doc_40")))
       val (_, kept, rewritten) =
         GraftMerge.deleteFrom(spark, dir, col("v") === "doc_37")
       assert(rewritten == 1 && kept == n - 1,
@@ -78,6 +108,7 @@ class BloomSkipSpec extends SparkSpec {
       val dir = buildScattered("bl3", "k")
       val n = GraftVersions.manifest(dir, 1).size
       val v0 = GraftVersions.current(dir)
+      assert(candidateFiles(dir, col("k") === 5 && col("k") === 6).isEmpty)
       val (_, kept, rewritten) =
         GraftMerge.deleteFrom(spark, dir, col("k") === 5 && col("k") === 6)
       assert(rewritten == 0 && kept == n, s"kept=$kept rewritten=$rewritten")
@@ -92,6 +123,8 @@ class BloomSkipSpec extends SparkSpec {
     val dir = buildScattered("bl4", "")
     spark.conf.unset("spark.sql.graft.bloom.columns")
     val n = GraftVersions.manifest(dir, 1).size
+    // nothing prunes a point on an unclustered column without sidecars
+    assert(candidateFiles(dir, col("k") === 13) == allFiles(dir))
     val (_, kept, rewritten) =
       GraftMerge.deleteFrom(spark, dir, col("k") === 13)
     assert(rewritten == 1 && kept == n - 1,
@@ -107,6 +140,12 @@ class BloomSkipSpec extends SparkSpec {
       // rewritten replacement file gets NEW sidecars at commit
       spark.sql("UPDATE psql.tpcds.bl5 SET v = 'touched' WHERE k = 22")
       val n2 = GraftVersions.manifest(dir, GraftVersions.current(dir)).size
+      // the resolved-statement shape SQL UPDATE hands over (a Catalyst
+      // expression over a name) prunes like the Scala API's Column
+      val hold22 = filesHolding(dir, col("k") === 22)
+      assert(hold22.size == 1 && candidateFiles(dir, col("k") === 22) == hold22)
+      assert(candidateFiles(dir, GraftBridge.column(
+        EqualTo(UnresolvedAttribute.quoted("k"), Literal(22)))) == hold22)
       val (_, kept2, rewritten2) =
         GraftMerge.deleteFrom(spark, dir, col("k") === 22)
       assert(rewritten2 == 1 && kept2 == n2 - 1,
@@ -123,6 +162,10 @@ class BloomSkipSpec extends SparkSpec {
       // 2 keys, same residue class (13 % 8 == 21 % 8): ONE touched file
       val src = Seq((13, 13 % 8, "u13"), (21, 21 % 8, "u21"), (999, 7, "new"))
         .toDF("k", "grp", "v")
+      // the key range spans every file; the key SET's blooms keep only
+      // the files holding 13 or 21
+      assert(mergeCandidateFiles(dir, src, "k") ==
+        filesHolding(dir, col("k").isin(13, 21)))
       val (base, reused, rewritten) =
         GraftMerge.mergeInto(spark, dir, src, "k")
       assert(base == 1 && rewritten <= 2 && reused >= n - 2,
@@ -150,33 +193,50 @@ class BloomSkipSpec extends SparkSpec {
     }
     // and the point channel still prunes exactly on the next delete
     val n2 = GraftVersions.manifest(dir, 2).size
+    assert(candidateFiles(dir, col("k") === 21) == filesHolding(dir, col("k") === 21))
     val (_, kept, rewritten) =
       GraftMerge.deleteFrom(spark, dir, col("k") === 21)
     assert(rewritten == 1 && kept == n2 - 1,
       s"post-conf-less-rewrite skip failed: kept=$kept rewritten=$rewritten of $n2")
   }
 
-  test("null-count stats prune IS NULL / IS NOT NULL discovery") {
+  /** Exactly 3 files by construction — one single-partition commit
+    * per group: grp 0 all-null v, grp 1 mixed, grp 2 no nulls. */
+  private def buildNullGroups(table: String): String = {
     val root = freshRoot("graft_bl")
     import spark.implicits._
-    // exactly 3 files by construction — one single-partition commit per
-    // group: grp 0 all-null v, grp 1 mixed, grp 2 no nulls
     val groups = Seq(
       Seq((0, 0, null: String), (1, 0, null: String)),
       Seq((2, 1, "x"), (3, 1, null: String)),
       Seq((4, 2, "y"), (5, 2, "z")))
     groups.head.toDF("k", "grp", "v").coalesce(1)
       .createOrReplaceTempView("ns_src")
-    spark.sql("""CREATE TABLE psql.tpcds.ns1 TBLPROPERTIES('versioned'='true')
-                |AS SELECT * FROM ns_src""".stripMargin)
-    val dir = s"$root/ns1.parquet"
+    spark.sql(s"""CREATE TABLE psql.tpcds.$table TBLPROPERTIES('versioned'='true')
+                 |AS SELECT * FROM ns_src""".stripMargin)
+    val dir = s"$root/$table.parquet"
     groups.drop(1).foreach { g =>
       GraftVersions.commit(dir, g.toDF("k", "grp", "v").coalesce(1),
         overwrite = false)
     }
+    dir
+  }
+
+  test("null-count stats prune IS NULL / IS NOT NULL discovery") {
+    val dir = buildNullGroups("ns1")
     val base = GraftVersions.current(dir)
     val n = GraftVersions.manifest(dir, base).size
     assert(n == 3, s"expected 3 single-group files, got $n")
+    // null counts, on the resolved-statement shape SQL UPDATE hands
+    // over: IS NULL keeps the two files with nulls, IS NOT NULL the two
+    // with a value, and both together none
+    val withNull = filesHolding(dir, col("v").isNull)
+    val withValue = filesHolding(dir, col("v").isNotNull)
+    assert(withNull.size == 2 && withValue.size == 2 && withNull != withValue)
+    val isNull = GraftBridge.column(IsNull(UnresolvedAttribute.quoted("v")))
+    val isNotNull = GraftBridge.column(IsNotNull(UnresolvedAttribute.quoted("v")))
+    assert(candidateFiles(dir, isNull) == withNull)
+    assert(candidateFiles(dir, isNotNull) == withValue)
+    assert(candidateFiles(dir, isNull && isNotNull).isEmpty)
     // IS NULL touches only the files that HAVE nulls (grp 0 and 1)
     val (_, kept1, rewritten1) =
       GraftMerge.deleteFrom(spark, dir, col("v").isNull)
@@ -194,6 +254,14 @@ class BloomSkipSpec extends SparkSpec {
       s"IS NOT NULL should touch every remaining file: " +
         s"kept=$kept2 rewritten=$rewritten2 of $n2")
     assert(spark.sql("SELECT COUNT(*) FROM psql.tpcds.ns1").head.getLong(0) == 0)
+  }
+
+  test("the Column API's IS [NOT] NULL prunes by null counts") {
+    val dir = buildNullGroups("ns2")
+    assert(candidateFiles(dir, col("v").isNull) == filesHolding(dir, col("v").isNull))
+    assert(candidateFiles(dir, col("v").isNotNull) ==
+      filesHolding(dir, col("v").isNotNull))
+    assert(candidateFiles(dir, col("v").isNull && col("v").isNotNull).isEmpty)
   }
 
   test("racing bloom-conf'd appends: all rows land, every file gets sidecars") {
@@ -225,6 +293,8 @@ class BloomSkipSpec extends SparkSpec {
       }
       // and point skipping stays exact over the raced-in files
       val n = GraftVersions.manifest(dir, cur).size
+      assert(candidateFiles(dir, col("k") === 3001) ==
+        filesHolding(dir, col("k") === 3001))
       val (_, kept, rewritten) =
         GraftMerge.deleteFrom(spark, dir, col("k") === 3001)
       assert(rewritten == 1 && kept == n - 1,
@@ -283,6 +353,13 @@ class BloomSkipSpec extends SparkSpec {
       val dir = s"$root/bl7.parquet"
       def remaining(): Set[Int] = spark.sql("SELECT k FROM psql.tpcds.bl7")
         .collect().map(_.getInt(0)).toSet
+      // cross-type literals constrain nothing: every file stays a
+      // candidate; a type-matched empty intersection keeps none
+      assert(candidateFiles(dir, col("sv") === 13) == allFiles(dir))
+      assert(candidateFiles(dir, col("k") === "7" && col("k") === "07") ==
+        allFiles(dir))
+      assert(candidateFiles(dir, col("k") === 1 && col("k") === 2).isEmpty)
+      assert(candidateFiles(dir, col("k") === 20) == filesHolding(dir, col("k") === 20))
       // LONG literal against the STRING column: the long point would
       // probe sv's string-channel sidecar, always miss, and prune every
       // file — the row sv='13' (which Spark's cast makes a match) must

@@ -115,7 +115,7 @@ class BpeSpec extends SparkSpec {
   /** A temp table root holding `docs` as its documents table. */
   private def corpusDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe9").toString
+    val dir = tempDir("bpe9").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -57,7 +57,7 @@ class CatalogSpec extends SparkSpec {
 
   test("CREATE NAMESPACE / CTAS / DROP TABLE through the catalog") {
     useRoot(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-cat").toString
+    val root = tempDir("graft-cat").toString
     // copy a source file so the temp root serves psql tables
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf1/nation.parquet"),
@@ -74,7 +74,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("CTAS tables are durable: visible and droppable from a fresh session") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dur").toString
+    val root = tempDir("graft-dur").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf1/nation.parquet"),
       java.nio.file.Paths.get(s"$root/nation.parquet"))
@@ -101,7 +101,7 @@ class CatalogSpec extends SparkSpec {
 
   test("partitioned CTAS lands hive layout and reads back partition-pruned") {
     useRoot(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val root = tempDir("graft-part").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf1/nation.parquet"),
       java.nio.file.Paths.get(s"$root/nation.parquet"))
@@ -128,7 +128,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("non-identity partition transforms are rejected loudly") {
-    val root = java.nio.file.Files.createTempDirectory("graft-rej").toString
+    val root = tempDir("graft-rej").toString
     useRoot(root)
     try {
       val e = intercept[Exception] {
@@ -142,7 +142,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("CTAS provenance isolates catalogs and protects source directories") {
-    val root = java.nio.file.Files.createTempDirectory("graft-iso").toString
+    val root = tempDir("graft-iso").toString
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf1/nation.parquet"),
       java.nio.file.Paths.get(s"$root/nation.parquet"))
@@ -178,7 +178,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("schemaless JSON table: schema inferred once and persisted (_schema analogue)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val root = tempDir("graft-json").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$root/docs.json"),
       "{\"id\": 1, \"body\": \"hello\"}\n{\"id\": 2, \"body\": \"world\"}\n".getBytes("UTF-8"))

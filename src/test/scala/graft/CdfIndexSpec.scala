@@ -18,10 +18,10 @@ class CdfIndexSpec extends SparkSpec {
       if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
 
   test("CDF stream maintains the band index across table commits") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdfix").toString
+    val root = tempDir("graft_cdfix").toString
     spark.conf.set("spark.sql.graft.root", root)
-    val idx = java.nio.file.Files.createTempDirectory("graft_cdfix_idx").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_cdfix_ck").toString
+    val idx = tempDir("graft_cdfix_idx").toString
+    val ck = tempDir("graft_cdfix_ck").toString
     val docs = Tables.documents(spark, sf2).select(col("doc_id"), col("text"))
     val isBatch = col("doc_id") % 10 >= 8
     docs.filter(!isBatch).createOrReplaceTempView("cdfix_src")
@@ -98,10 +98,10 @@ class CdfIndexSpec extends SparkSpec {
   }
 
   test("row-level CDF maintenance re-indexes only the changed document") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdfrl").toString
+    val root = tempDir("graft_cdfrl").toString
     spark.conf.set("spark.sql.graft.root", root)
-    val idx = java.nio.file.Files.createTempDirectory("graft_cdfrl_idx").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_cdfrl_ck").toString
+    val idx = tempDir("graft_cdfrl_idx").toString
+    val ck = tempDir("graft_cdfrl_ck").toString
     Tables.documents(spark, sf1).select(col("doc_id"), col("text"))
       .createOrReplaceTempView("cdfrl_src")
     spark.sql("""CREATE TABLE psql.tpcds.cdfrl

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * group-by. */
 class CharTypeSpec extends SparkSpec {
 
-  private lazy val wh = java.nio.file.Files.createTempDirectory("graft-char").toString
+  private lazy val wh = tempDir("graft-char").toString
 
   private def setup(): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_char LOCATION '$wh/db'")

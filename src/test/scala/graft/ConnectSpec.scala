@@ -125,7 +125,7 @@ class ConnectSpec extends SparkSpec {
     // built from the same static conf, so the injected parser
     // (OPTIMIZE/VACUUM/ANALYZE) and the DML routing rules must hold
     // end to end over ExecutePlan — not just read parity.
-    val scratch = java.nio.file.Files.createTempDirectory("graft_conn_dml")
+    val scratch = tempDir("graft_conn_dml").toPath
     val conn = connect(serverUrl)
     try {
       val st = conn.createStatement()

@@ -6,7 +6,7 @@ package graft
 class DatasetCardSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_card").toString
+    val d = tempDir("graft_card").toString
     import spark.implicits._
     // group (web, en): 3 docs, lengths 10/20/30 -> median 20; one
     //   exact duplicate pair -> n_unique 2, dup_rate 1/3

@@ -23,7 +23,7 @@ class DsirSpec extends SparkSpec {
     * the sign split is robust to everything except a hash collision
     * between an en and a de gram bucket (gated as a precondition). */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dsir").toString
+    val d = tempDir("graft_dsir").toString
     import spark.implicits._
     val docs = (0L until 10L).map(i => (i, cycleText(enVocab), "en", "web", 0L)) ++
       (10L until 12L).map(i => (i, cycleText(deVocab), "de", "web", 0L))

@@ -17,7 +17,7 @@ class DupSpanSpec extends SparkSpec {
     * boilerplate herd sharing ONE 8-gram (df = 20 > dupSpanMaxDf), and
     * a degenerate looping pair. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dupspan").toString
+    val d = tempDir("graft_dupspan").toString
     import spark.implicits._
     val span15 = (1 to 15).map(i => s"a$i").mkString(" ")
     val span11 = (1 to 11).map(i => s"c$i").mkString(" ")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class EdgeCaseSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val d = tempDir("graft_edge").toString
     import spark.implicits._
     // documents: an empty text, a single word, a 20-word exact chunk
     // boundary, and a 3-doc herd sharing ONE boilerplate paragraph
@@ -107,7 +107,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("t14 redacts EVERY occurrence when a document carries multiple PII spans") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_pii").toString
+    val d = tempDir("graft_pii").toString
     Seq((1L, "mail a.user@x.org then b_2@y.co.uk and ids 1234567 890123456 end",
         "en", "web", 60L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

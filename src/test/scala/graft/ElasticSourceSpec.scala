@@ -206,7 +206,7 @@ class ElasticSourceSpec extends SparkSpec {
   test("runtime dynamic filter folds build-side keys into bool.filter terms") {
     useRoot(sf1)
     val idx = index(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-es-rtf").toString
+    val root = tempDir("graft-es-rtf").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {
@@ -248,7 +248,7 @@ class ElasticSourceSpec extends SparkSpec {
   test("a runtime filter on a key spelled in another case reaches the wire") {
     useRoot(sf1)
     val idx = index(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-es-case").toString
+    val root = tempDir("graft-es-case").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {
@@ -280,7 +280,7 @@ class ElasticSourceSpec extends SparkSpec {
   test("an oversized runtime IN-set is not sent over the wire") {
     useRoot(sf1)
     val idx = index(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-es-cap").toString
+    val root = tempDir("graft-es-cap").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     conf.set("spark.sql.graft.wire.runtimeFilterMaxKeys", "2")

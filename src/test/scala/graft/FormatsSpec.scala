@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * csv, json, orc round-trips preserve data. */
 class FormatsSpec extends SparkSpec {
 
-  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+  private lazy val tmp = tempDir("graft-fmt").toString
 
   private lazy val src = Tables.orders(spark, sf1)
     .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))

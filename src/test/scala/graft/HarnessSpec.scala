@@ -49,7 +49,7 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("cached: a directory without _SUCCESS is rebuilt, one with it is reused") {
-    val dir = java.nio.file.Files.createTempDirectory("harness-cache").toFile
+    val dir = tempDir("harness-cache")
     try {
       val partial = new File(dir, "part-00000")
       partial.createNewFile()

@@ -29,7 +29,7 @@ class IndexDriftSpec extends SparkSpec {
 
   test("s16 on a crafted drifted batch: the absorbing cell flags for retrain") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     // base: 80 vectors spread uniformly over 8 axis directions, ids
     // ≥ 10 with id % 10 ∈ 0..6 (never the arriving mod); arriving
     // batch (vec_id ≡ 7 mod 10): every vector near axis 0 — maximal

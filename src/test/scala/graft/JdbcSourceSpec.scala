@@ -10,7 +10,7 @@ import java.sql.DriverManager
 class JdbcSourceSpec extends SparkSpec {
 
   private lazy val url: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-derby")
+    val dir = tempDir("graft-derby").toPath
     val u = s"jdbc:derby:$dir/db;create=true"
     val conn = DriverManager.getConnection(u)
     val st = conn.createStatement()
@@ -88,7 +88,7 @@ class JdbcSourceSpec extends SparkSpec {
     conf.set("spark.sql.catalog.derbyspec.partitionColumn", "O_CUSTKEY")
     conf.set("spark.sql.catalog.derbyspec.numPartitions", "2")
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    val root = java.nio.file.Files.createTempDirectory("graft-jdbc-rtf")
+    val root = tempDir("graft-jdbc-rtf").toPath
     try {
       val fact = spark.table("derbyspec.APP.ORD")
       // hash-mod slicing: two disjoint partitions covering the table

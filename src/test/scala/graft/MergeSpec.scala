@@ -742,28 +742,30 @@ class MergeSpec extends SparkSpec {
 
   test("manifest stats skip untouched files in the discovery pass (sound bounds)") {
     import org.apache.spark.sql.functions.{lit => flit}
+    // extraction, resolved against a schema holding a struct s<b> and
+    // a top-level b
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "k INT, v STRING, g STRING, s STRUCT<b: INT>, b INT")
+    def domain(p: org.apache.spark.sql.Column) = GraftMerge.domain(spark, p, schema)
     // bounds extraction: conjuncts recognized, OR degrades to no bounds
-    assert(GraftMerge.predicateBounds(col("k") === 5) == Map("k" -> (5L, 5L)))
-    assert(GraftMerge.predicateBounds(col("k") >= 3 && col("k") < 9) ==
+    assert(domain(col("k") === 5).longBounds == Map("k" -> (5L, 5L)))
+    assert(domain(col("k") >= 3 && col("k") < 9).longBounds ==
       Map("k" -> (3L, 9L)))
-    assert(GraftMerge.predicateBounds(
-      col("k").isin(4, 7, 2) && col("v") === "x") == Map("k" -> (2L, 7L)))
-    assert(GraftMerge.predicateBounds(col("k") === 5 || col("k") === 9).isEmpty)
+    assert(domain(
+      col("k").isin(4, 7, 2) && col("v") === "x").longBounds == Map("k" -> (2L, 7L)))
+    assert(domain(col("k") === 5 || col("k") === 9).longBounds.isEmpty)
     // an unrecognized conjunct contributes nothing but keeps the rest
-    assert(GraftMerge.predicateBounds(col("k") > 3 && col("v").contains("a")) ==
+    assert(domain(col("k") > 3 && col("v").contains("a")).longBounds ==
       Map("k" -> (3L, Long.MaxValue)))
     // NESTED-FIELD names constrain nothing (ADVICE r13): col("s.b")
     // denotes struct s's field b — keying by the trailing part would
     // prune on an unrelated top-level column b's stats/sidecars
-    assert(GraftMerge.predicateBounds(col("s.b") === 5).isEmpty)
-    assert(org.apache.spark.sql.GraftBridge
-      .conjunctLongPoints(col("s.b") === 5).isEmpty)
-    assert(org.apache.spark.sql.GraftBridge
-      .conjunctStrPoints(col("s.b") === "x").isEmpty)
-    assert(org.apache.spark.sql.GraftBridge
-      .conjunctNullness(col("s.b").isNull).isEmpty)
+    assert(domain(col("s.b") === 5).longBounds.isEmpty)
+    assert(domain(col("s.b") === 5).longPts.isEmpty)
+    assert(domain(col("s.b") === "x").strPts.isEmpty)
+    assert(domain(col("s.b").isNull).nullness.isEmpty)
     // …while the single-part conjunct in the same predicate survives
-    assert(GraftMerge.predicateBounds(col("s.b") === 5 && col("k") === 9) ==
+    assert(domain(col("s.b") === 5 && col("k") === 9).longBounds ==
       Map("k" -> (9L, 9L)))
 
     val root = freshRoot("graft_mg")
@@ -778,6 +780,17 @@ class MergeSpec extends SparkSpec {
     val stats = GraftVersions.manifestStats(dir, 1)
     assert(stats.size == 4 && stats.values.forall(_.contains("k")),
       stats.toString)
+    // candidate pins: the bounds keep exactly the files whose k range
+    // meets the predicate's, an unsatisfiable point pair keeps none,
+    // and an OR constrains nothing
+    val range = col("k") >= 12 && col("k") <= 14
+    assert(filesHolding(dir, range).size == 1)
+    assert(candidateFiles(dir, range) == filesHolding(dir, range))
+    assert(candidateFiles(dir, col("k") === 25) == filesHolding(dir, col("k") === 25))
+    assert(candidateFiles(dir, col("k").isin(4, 27)) ==
+      filesHolding(dir, col("k").between(4, 27)))
+    assert(candidateFiles(dir, col("k") === 5 && col("k") === 6).isEmpty)
+    assert(candidateFiles(dir, col("k") === 5 || col("k") === 35) == allFiles(dir))
     // a predicate inside one file's range rewrites exactly that file —
     // and the result is exact (pruning is a skip, not a filter change)
     val (_, reused, rewritten) =
@@ -787,6 +800,8 @@ class MergeSpec extends SparkSpec {
       (0 until 40).toSet -- Set(12, 13, 14))
     // merge: source keys 35..39 + 100 (insert) bound the candidate set
     val src = Seq((35, "U"), (100, "N")).toDF("k", "v")
+    assert(mergeCandidateFiles(dir, src, "k") ==
+      filesHolding(dir, col("k").between(35, 100)))
     val (_, reusedM, rewrittenM) = GraftMerge.mergeInto(spark, dir, src, "k")
     assert(rewrittenM == 1, s"rewrittenM=$rewrittenM")
     assert(kvRows("SELECT * FROM psql.tpcds.mgS").contains(35 -> "U"))
@@ -798,8 +813,7 @@ class MergeSpec extends SparkSpec {
 
     // STRING channel: byte-bound extraction and pruning on a
     // string-clustered table (the takedown-by-source/tenant shape)
-    val sb = org.apache.spark.sql.GraftBridge.conjunctStrBounds(
-      col("g") === "g2" && col("k") > 3)
+    val sb = domain(col("g") === "g2" && col("k") > 3).strBounds
     assert(sb.keySet == Set("g"), sb.toString)
     (0 until 40).map(k => (k, s"g${k / 10}")).toDF("k", "g")
       .repartitionByRange(4, col("g")).createOrReplaceTempView("mg_srcT")
@@ -808,12 +822,31 @@ class MergeSpec extends SparkSpec {
     val dirT = s"$root/mgT.parquet"
     val statsT = GraftVersions.manifestStats(dirT, 1)
     assert(statsT.values.forall(_.contains("g")), statsT.toString)
+    assert(filesHolding(dirT, col("g") === "g2").size == 1)
+    assert(candidateFiles(dirT, col("g") === "g2") ==
+      filesHolding(dirT, col("g") === "g2"))
     val (_, reusedT, rewrittenT) =
       GraftMerge.deleteFrom(spark, dirT, col("g") === "g2")
     assert(rewrittenT == 1 && reusedT == 3,
       s"string-clustered delete: reused=$reusedT rewritten=$rewrittenT")
     assert(spark.sql("SELECT k FROM psql.tpcds.mgT").collect()
       .map(_.getInt(0)).toSet == ((0 until 20) ++ (30 until 40)).toSet)
+  }
+
+  test("a column-side widening cast constrains the column it casts") {
+    val root = freshRoot("graft_mg")
+    import spark.implicits._
+    (0 until 40).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartitionByRange(4, col("k")).createOrReplaceTempView("mg_srcW")
+    spark.sql("""CREATE TABLE psql.tpcds.mgW TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM mg_srcW""".stripMargin)
+    val dir = s"$root/mgW.parquet"
+    val hold = filesHolding(dir, col("k") === 25)
+    assert(hold.size == 1)
+    assert(candidateFiles(dir, col("k").cast("long") === 25) == hold)
+    assert(candidateFiles(dir, col("k").cast("long") === 25L) == hold)
+    // a narrowing cast changes the compared value: no constraint
+    assert(candidateFiles(dir, col("k").cast("tinyint") === 25) == allFiles(dir))
   }
 
   test("re-clustering turns an all-files predicate into a one-file predicate") {

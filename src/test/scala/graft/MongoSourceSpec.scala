@@ -367,7 +367,7 @@ class MongoSourceSpec extends SparkSpec {
   test("runtime dynamic filter folds build-side keys into the find document") {
     useRoot(sf1)
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-mongo-rtf").toString
+    val root = tempDir("graft-mongo-rtf").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {
@@ -413,7 +413,7 @@ class MongoSourceSpec extends SparkSpec {
   test("an oversized runtime IN-set is not sent over the wire") {
     useRoot(sf1)
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-mongo-cap").toString
+    val root = tempDir("graft-mongo-cap").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     conf.set("spark.sql.graft.wire.runtimeFilterMaxKeys", "2")
@@ -448,7 +448,7 @@ class MongoSourceSpec extends SparkSpec {
     * still folds its IN-set into the find document. */
   test("a runtime filter on a key spelled in another case reaches the wire") {
     useRoot(sf1)
-    val root = java.nio.file.Files.createTempDirectory("graft-mongo-case").toString
+    val root = tempDir("graft-mongo-case").toString
     val conf = spark.conf
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     try {

@@ -7,7 +7,7 @@ package graft
 class PatternMatchSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_cep").toString
+    val d = tempDir("graft_cep").toString
     import spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)

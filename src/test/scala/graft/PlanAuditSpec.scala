@@ -152,7 +152,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("dynamic partition pruning fires on a partitioned fact scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val dir = tempDir("graft-dpp").toString
     Tables.orders(spark, sf2).write.partitionBy("o_orderstatus")
       .mode("overwrite").parquet(s"$dir/fact")
     // dim must live on disk: DPP requires a selective filter over a
@@ -179,7 +179,7 @@ class PlanAuditSpec extends SparkSpec {
   // partition pruning through the DSv2 catalog scan.
   test("dynamic partition pruning fires through a catalog-served partitioned table") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-catdpp").toString
+    val root = tempDir("graft-catdpp").toString
     val conf = spark.conf
     conf.set("spark.sql.graft.root", root)
     conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")

@@ -72,7 +72,7 @@ class QualityGatesSpec extends SparkSpec {
       (id, text, lang, "synthetic", text.length.toLong)
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("t03gate").toString
+    val dir = tempDir("t03gate").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .repartition(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("t03_lang_id")(spark, dir)

@@ -53,7 +53,7 @@ class SlidingHllSpec extends SparkSpec {
 
   test("streaming sliding-distinct twin equals batch e17 on anchor hours") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft-e17")
+    val dir = tempDir("graft-e17").toPath
     Files.copy(Paths.get(s"$sf1/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val q = graft.streaming.EventsStreaming.slidingDistinct(

@@ -29,6 +29,43 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit =
     try tempDirs.forEach(d => LocalFiles.rmTree(d)) finally super.afterAll()
 
+  private def fileNames(paths: Seq[String]): Set[String] =
+    paths.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
+
+  /** The files of `dir`'s current snapshot that file pruning keeps as
+    * candidates for `pred` (manifest stats, then bloom sidecars). */
+  protected def candidateFiles(dir: String,
+      pred: org.apache.spark.sql.Column): Set[String] = {
+    val base = graft.sources.GraftVersions.current(dir)
+    fileNames(graft.sources.GraftMerge.pruneByStats(spark, dir, base,
+      graft.sources.GraftVersions.manifest(dir, base), pred))
+  }
+
+  /** The candidates MERGE keeps for a source with key column `keyCol`. */
+  protected def mergeCandidateFiles(dir: String,
+      source: org.apache.spark.sql.DataFrame, keyCol: String): Set[String] = {
+    val base = graft.sources.GraftVersions.current(dir)
+    fileNames(graft.sources.GraftMerge.mergeCandidates(spark, dir, base,
+      graft.sources.GraftVersions.manifest(dir, base),
+      source.select(org.apache.spark.sql.functions.col(keyCol)).distinct(), keyCol))
+  }
+
+  /** The files of `dir`'s current snapshot holding a row that matches
+    * `pred` — what exact discovery finds; pruning keeps a superset. */
+  protected def filesHolding(dir: String,
+      pred: org.apache.spark.sql.Column): Set[String] = {
+    val base = graft.sources.GraftVersions.current(dir)
+    fileNames(graft.sources.GraftVersions.read(spark, dir, base,
+      graft.sources.GraftVersions.manifest(dir, base)).filter(pred)
+      .select(org.apache.spark.sql.functions.col("_metadata.file_path"))
+      .collect().map(_.getString(0)).toSeq)
+  }
+
+  /** Every file of `dir`'s current snapshot. */
+  protected def allFiles(dir: String): Set[String] =
+    fileNames(graft.sources.GraftVersions.manifest(dir,
+      graft.sources.GraftVersions.current(dir)))
+
   /** Spark jobs started while `body` runs, counted by a job tag. The
     * listener bus delivers events in order, so once a later fence job's
     * start arrives every job `body` launched has been counted. */

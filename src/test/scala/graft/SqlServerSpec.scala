@@ -193,7 +193,7 @@ class SqlServerSpec extends SparkSpec {
     // (loader.py:25-39) — so INSERT/MERGE/UPDATE/DELETE must all work
     // as statements a remote client issues, end to end: Thrift socket →
     // parser → GraftDmlStatements routing → copy-on-write commit
-    val scratch = java.nio.file.Files.createTempDirectory("graft_wire_dml")
+    val scratch = tempDir("graft_wire_dml").toPath
     spark.conf.set("spark.sql.graft.root", scratch.toString)
     val conn = connect()
     try {

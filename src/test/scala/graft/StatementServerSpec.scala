@@ -348,7 +348,7 @@ class StatementServerSpec extends SparkSpec {
   test("spool write+read round-trip through a non-file: Hadoop scheme") {
     spark.conf.set("spark.sql.graft.root", sf1)
     val hconf = spark.sparkContext.hadoopConfiguration
-    val scratch = java.nio.file.Files.createTempDirectory("graft_fs_spool")
+    val scratch = tempDir("graft_fs_spool").toPath
     hconf.set("fs.graftfs.impl", classOf[GraftTestFs].getName)
     spark.conf.set(graft.sources.GraftWireConf.StatementSpoolDirKey,
       s"graftfs:$scratch")
@@ -476,7 +476,7 @@ class StatementServerSpec extends SparkSpec {
 
   test("a small result comes back inline: no spool entry, rows equal direct") {
     spark.conf.set("spark.sql.graft.root", sf1)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_inline")
+    val scratch = tempDir("graft_inline").toPath
     spark.conf.set(graft.sources.GraftWireConf.StatementSpoolDirKey, scratch.toString)
     try {
       val sql = """SELECT n_nationkey FROM psql.tpcds.nation
@@ -695,7 +695,7 @@ class StatementServerSpec extends SparkSpec {
   }
 
   test("DML runs over the statement face (the loader's CTAS motion)") {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stmt")
+    val scratch = tempDir("graft_stmt").toPath
     spark.conf.set("spark.sql.graft.root", scratch.toString)
     try {
       runSql("CREATE TABLE psql.tpcds.stmt_ctas AS " +
@@ -743,7 +743,7 @@ class StatementServerSpec extends SparkSpec {
     * 0/0 to keep the fields' reference meaning; elapsedTimeMillis
     * still carries the command's true cost. */
   test("command statements report the analysis/planning split as zero") {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_stmt0")
+    val scratch = tempDir("graft_stmt0").toPath
     spark.conf.set("spark.sql.graft.root", scratch.toString)
     try {
       val (code, first) = http("POST", s"$base/v1/statement",

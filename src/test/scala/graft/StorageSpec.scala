@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * scan, bucketed joins avoid the shuffle. */
 class StorageSpec extends SparkSpec {
 
-  private lazy val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+  private lazy val wh = tempDir("graft-wh").toString
 
   test("CREATE NAMESPACE / CTAS / DROP TABLE round-trip") {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_test LOCATION '$wh/db'")

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 class StreamingSpec extends SparkSpec {
 
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft-events")
+    val dir = tempDir("graft-events").toPath
     Files.copy(Paths.get(s"$sf1/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch sink lands the hourly agg in parquet") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val outDir = tempDir("graft-fb").toString
     val q = EventsStreaming.hourlyAgg(EventsStreaming.readStream(spark, streamDir))
       .writeStream.outputMode("complete")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -130,9 +130,9 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpointed stream resumes across restarts with state intact") {
     import org.apache.spark.sql.functions._
-    val inDir = java.nio.file.Files.createTempDirectory("graft-ck-in").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ck-out").toString
+    val inDir = tempDir("graft-ck-in").toString
+    val ckDir = tempDir("graft-ck").toString
+    val outDir = tempDir("graft-ck-out").toString
     def start() = EventsStreaming.hourlyAgg(EventsStreaming.readStream(spark, inDir))
       .writeStream.outputMode("complete")
       .option("checkpointLocation", ckDir)
@@ -252,7 +252,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming CEP match survives a view-run split across micro-batches") {
     import org.apache.spark.sql.functions._
-    val inDir = Files.createTempDirectory("graft-cep-in").toString
+    val inDir = tempDir("graft-cep-in").toString
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
     def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     import spark.implicits._
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest dedup carries d07's novelty semantics across micro-batches") {
     import graft.streaming.DocsStreaming
     import org.apache.spark.sql.functions._
-    val inDir = Files.createTempDirectory("graft-docs-in").toString
+    val inDir = tempDir("graft-docs-in").toString
     val docs = Tables.documents(spark, sf1)
     // phase 1: the d07 "seen" batch arrives and is processed
     docs.filter(col("doc_id") < 250).write.mode("append").parquet(inDir)
@@ -331,7 +331,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming hourly agg drops late data beyond the watermark") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late").toString
     def write(rows: Seq[(Long, String, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "t", "user_id", "event_type", "value", "props")
         .select(col("event_id"), to_timestamp(col("t")).as("ts"),
@@ -365,7 +365,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{GraftMerge, GraftVersions}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf").toString + "/tbl"
+    val dir = tempDir("graft-cdf").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // snapshot history through the same commit protocol the catalog
     // uses: initial load, then an append — both BEFORE the stream starts
@@ -402,13 +402,13 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.GraftVersions
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf2").toString + "/tbl"
+    val dir = tempDir("graft-cdf2").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     GraftVersions.commit(dir,
       Seq((1, "a"), (2, "b")).toDF("k", "v"), overwrite = false)
     GraftVersions.commit(dir, Seq((3, "c")).toDF("k", "v"), overwrite = false)
     GraftVersions.commit(dir, Seq((4, "d")).toDF("k", "v"), overwrite = false)
-    val cp = Files.createTempDirectory("graft-cdf2-cp").toString
+    val cp = tempDir("graft-cdf2-cp").toString
     val out = new scala.collection.concurrent.TrieMap[Long, Set[(Int, String, Int)]]
     def startQuery() = spark.readStream
       .format("graft.streaming.GraftCdfProvider")
@@ -465,7 +465,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.GraftVersions
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf5").toString + "/tbl"
+    val dir = tempDir("graft-cdf5").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     GraftVersions.commit(dir, Seq((1, "a")).toDF("k", "v"), overwrite = false)
     Thread.sleep(5)
@@ -505,7 +505,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{GraftMerge, GraftVersions}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf4").toString + "/tbl"
+    val dir = tempDir("graft-cdf4").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // v1: 4 single-key files; v2: COW delete of k=2 (one file removed,
     // one rewritten survivor file added); v3: full overwrite
@@ -556,7 +556,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.GraftVersions
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf3").toString + "/tbl"
+    val dir = tempDir("graft-cdf3").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     GraftVersions.commit(dir,
       Seq((1L, Array(1.0f, 2.0f)), (2L, Array(3.0f, 4.0f)))
@@ -594,7 +594,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{GraftMerge, GraftVersions}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf6").toString + "/tbl"
+    val dir = tempDir("graft-cdf6").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // v1–v2: appends fragment the table; v3: compaction (layout-only);
     // v4: re-cluster (layout-only); v5: a real append after them
@@ -650,7 +650,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.GraftVersions
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf7").toString + "/tbl"
+    val dir = tempDir("graft-cdf7").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // v1: rows A; v2: OVERWRITE with rows B (A's files leave the
     // manifest); v3: RESTORE v1 — the restored files keep their
@@ -701,7 +701,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{GraftMerge, GraftVersions}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf8").toString + "/tbl"
+    val dir = tempDir("graft-cdf8").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // ONE file holding four rows: the copy-on-write update rewrites
     // the whole file, so the file feed reports 4 removed + 4 added —
@@ -753,7 +753,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.sources.{GraftMerge, GraftVersions}
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-cdf9").toString + "/tbl"
+    val dir = tempDir("graft-cdf9").toString + "/tbl"
     new java.io.File(dir).mkdirs()
     // k=2 appears TWICE: the key-join reconstruction would cartesian
     // (batch) or last-win (stream) — both must refuse instead of

@@ -9,7 +9,7 @@ package graft
 class UnigramLmSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_ulm").toString
+    val d = tempDir("graft_ulm").toString
     import spark.implicits._
     Seq((0L, "a a b", "en", "web", 5L), (1L, "a c", "en", "web", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -12,7 +12,7 @@ class WinnowingSpec extends SparkSpec {
 
   private def fps(docs: Seq[(Long, String)]): Map[Long, Set[String]] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = tempDir("winnow").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -46,7 +46,7 @@ class WinnowingSpec extends SparkSpec {
 
   private def clones(docs: Seq[(Long, String)]): Map[(Long, Long), (Long, Long, Long, Long, Long)] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("clones").toString
+    val dir = tempDir("clones").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
