@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main directly (no sbt) — mirrors build.sbt javaOptions.
-# Usage: ./run-main.sh graft.Bench [names...]
+# Usage: ./run-main.sh graft.Bench [--profile|--explain] [names...]
 #        ./run-main.sh graft.Harness <leg> [args...]
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""

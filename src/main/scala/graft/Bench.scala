@@ -149,10 +149,84 @@ object Bench {
       .foreach(_.unpersist(blocking = false))
   }
 
+  /** `graft.Bench [names]` times every registered query (or only
+    * `names`); `graft.Bench --profile <names>` prints each named query's
+    * per-job profile and `graft.Bench --explain <names>` its formatted
+    * physical plan. All three read `SPARK_GRAFT_SF_DIR` and
+    * `SPARK_GRAFT_CPUS`; only the timed run writes `bench_*` files. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus)
+    val (mode, names) = args.toSeq match {
+      case flag +: rest if flag.startsWith("--") => (flag, rest)
+      case rest => ("", rest)
+    }
+    require(Set("", "--profile", "--explain")(mode), s"unknown flag: $mode")
+    require(names.forall(SparkEntry.queries.contains),
+      s"unknown queries: ${names.filterNot(SparkEntry.queries.contains)}")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val ok = mode match {
+      case "--profile" => profile(spark, sfDir, names); true
+      case "--explain" =>
+        names.foreach { n =>
+          println(s"===== $n =====")
+          SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+        }
+        true
+      case _ => timeAll(spark, sfDir, names.toSet)
+    }
+    spark.stop()
+    if (!ok) sys.exit(1)
+  }
+
+  /** Per-job wall-clock profile of `names`, two runs each: every Spark
+    * JOB inside one query execution plus the gaps between jobs (driver-
+    * side planning and codegen sit in the gaps), so a multi-second entry
+    * can be attributed to the job that owns it instead of guessed at. */
+  private def profile(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      names: Seq[String]): Unit = {
+    import org.apache.spark.scheduler._
+    spark.range(1000000).agg(org.apache.spark.sql.functions.sum("id")).collect()
+    case class JobRec(id: Int, start: Long, var end: Long = -1L,
+        var stages: Int = 0, var tasks: Int = 0, desc: String)
+    val jobs = scala.collection.mutable.LinkedHashMap[Int, JobRec]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
+        val desc = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        jobs(js.jobId) = JobRec(js.jobId, js.time,
+          stages = js.stageInfos.size,
+          tasks = js.stageInfos.map(_.numTasks).sum, desc = desc)
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
+        jobs.get(je.jobId).foreach(_.end = je.time)
+      }
+    })
+    names.foreach { n =>
+      (1 to 2).foreach { i =>
+        jobs.synchronized(jobs.clear())
+        val t0 = System.currentTimeMillis()
+        SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val t1 = System.currentTimeMillis()
+        Thread.sleep(300) // let the listener bus drain
+        println(f"PROFILE $n run$i total=${(t1 - t0) / 1000.0}%.3f s, ${jobs.size} jobs")
+        var prevEnd = t0
+        jobs.synchronized(jobs.values.toSeq).sortBy(_.start).foreach { j =>
+          val gap = (j.start - prevEnd) / 1000.0
+          val dur = (j.end - j.start) / 1000.0
+          if (gap > 0.005 || dur > 0.005)
+            println(f"  gap=$gap%6.3f job=${j.id}%3d dur=$dur%6.3f stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(60)}")
+          prevEnd = math.max(prevEnd, j.end)
+        }
+        println(f"  tail-gap=${(t1 - prevEnd) / 1000.0}%.3f")
+        cleanup(spark)
+      }
+    }
+  }
+
+  /** The timed run over `only` (every query when empty); false when a
+    * query failed. */
+  private def timeAll(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      only: Set[String]): Boolean = {
     import org.apache.spark.sql.functions._
     // warm up session, codegen, and the parquet footer caches
     spark.range(1000000).agg(sum(col("id"))).collect()
@@ -189,9 +263,6 @@ object Bench {
     // optional args = query names: the BENCH.md adjudication protocol's
     // isolated re-run ("one query, quiet machine, same warm protocol").
     // No args (the driver contract) = every registered query.
-    val only = args.toSet
-    require(only.forall(SparkEntry.queries.contains),
-      s"unknown queries: ${only.filterNot(SparkEntry.queries.contains)}")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .flatMap { case (name, fn) =>
@@ -242,7 +313,6 @@ object Bench {
     // compact, tail-window-sized summary LAST — this is the line the
     // driver actually manages to parse (see [[tailLine]])
     println(tailLine(results, failed.toSeq, sfDir))
-    spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    failed.isEmpty
   }
 }

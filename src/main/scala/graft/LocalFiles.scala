@@ -10,4 +10,13 @@ private[graft] object LocalFiles {
   def rmTree(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
   }
+
+  /** The URL of a new embedded-Derby database in a fresh temp directory
+    * named `prefix…`, which is deleted with the database when the JVM
+    * exits. */
+  def derbyUrl(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(rmTree(dir))
+    s"jdbc:derby:$dir/db;create=true"
+  }
 }

@@ -272,7 +272,9 @@ object Loader {
               |FROM nation_src WHERE n_regionkey = 0""".stripMargin)
       val dir = s"$root/nations_cdf.parquet"
       val parts = Seq((1, 2), (2, 3)).flatMap { case (v1, v2) =>
-        val (added, removed) = graft.sources.GraftMerge.snapshotDiff(s, dir, v1, v2)
+        val (added, removed) = graft.sources.GraftMerge.snapshotDiff(s,
+          graft.sources.GraftVersions.Snapshot(dir, v1),
+          graft.sources.GraftVersions.Snapshot(dir, v2))
         Seq(("insert", added), ("delete", removed)).map { case (ch, df) =>
           df.agg(count(lit(1)).as("n_rows"),
               coalesce(sum(col("n_nationkey")), lit(0L)).as("key_sum"))
@@ -510,10 +512,7 @@ object Loader {
   /** One embedded-Derby database per JVM for the l11 export target —
     * its own catalog name (CatalogManager caches instances by name;
     * see q79's derbyfed note). */
-  private lazy val derbyExpUrl: String = {
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-derby-exp")
-    s"jdbc:derby:$dbDir/db;create=true"
-  }
+  private lazy val derbyExpUrl: String = graft.LocalFiles.derbyUrl("graft-derby-exp")
 
   /** Export INTO the relational store (l11) — the reference loader's
     * defining motion is moving tables into stores (loader.py:163-167

@@ -395,10 +395,7 @@ object Relational {
     * Spark's CatalogManager caches the catalog instance on first use,
     * so a per-dir URL would silently keep serving the FIRST dir's data
     * to every later scale factor in the same session. */
-  private lazy val derbyFedUrl: String = {
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-derby-fed")
-    s"jdbc:derby:$dbDir/db;create=true"
-  }
+  private lazy val derbyFedUrl: String = LocalFiles.derbyUrl("graft-derby-fed")
 
   private val derbyNationTables =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

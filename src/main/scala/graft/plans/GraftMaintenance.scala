@@ -91,11 +91,10 @@ case class GraftAnalyzeCommand(path: String, forColumns: Boolean)
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
     import graft.sources.GraftTableStats
-    val v = GraftVersions.current(path)
-    require(v >= 1, s"$path: ANALYZE needs at least one committed snapshot")
-    val files = GraftVersions.manifest(path, v)
-    val bytes = files.map(f => new java.io.File(f).length()).sum
-    val df = GraftVersions.read(spark, path, v, files)
+    val snap = GraftVersions.Snapshot.current(path)
+    require(snap.version >= 1, s"$path: ANALYZE needs at least one committed snapshot")
+    val bytes = snap.files.map(f => new java.io.File(f).length()).sum
+    val df = snap.read(spark)
     val fields = if (forColumns) df.schema.fields.toSeq else Seq.empty
     val isNum: org.apache.spark.sql.types.DataType => Boolean = {
       case _: org.apache.spark.sql.types.NumericType => true
@@ -122,7 +121,7 @@ case class GraftAnalyzeCommand(path: String, forColumns: Boolean)
           Some(r.getAs[Double](s"__max_${f.name}")) else None)
     }.toMap
     GraftTableStats.write(path,
-      GraftTableStats.TableStats(rows, bytes, cols, version = v))
+      GraftTableStats.TableStats(rows, bytes, cols, version = snap.version))
     Seq(Row("rows", rows), Row("bytes", bytes),
       Row("columns_analyzed", cols.size.toLong))
   }
@@ -149,17 +148,16 @@ case class GraftDescribeDetailCommand(path: String)
       nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val v = GraftVersions.current(path)
-    val files = GraftVersions.manifest(path, v)
-    val live = (1 to v).count(GraftVersions.isLive(path, _))
-    val bytes = files.map(f => new java.io.File(f).length()).sum
+    val snap = GraftVersions.Snapshot.current(path)
+    val live = (1 to snap.version).count(GraftVersions.isLive(path, _))
+    val bytes = snap.files.map(f => new java.io.File(f).length()).sum
     val cfg = new java.io.File(new java.io.File(path, "_blooms"), "_config")
     val blooms =
       if (cfg.isFile)
         new String(java.nio.file.Files.readAllBytes(cfg.toPath), "UTF-8")
       else ""
-    val nCols = GraftVersions.snapshotSchema(path, v, files).map(_.size).getOrElse(0)
-    Seq(Row(path, v, live, files.size, bytes, blooms, nCols))
+    val nCols = snap.schema.map(_.size).getOrElse(0)
+    Seq(Row(path, snap.version, live, snap.files.size, bytes, blooms, nCols))
   }
 }
 
@@ -179,7 +177,7 @@ case class GraftOptimizeCommand(path: String, zorder: Seq[String])
     val smallBytes = spark.conf
       .get("spark.sql.graft.optimize.smallFileBytes", (128L << 20).toString)
       .toLong
-    val files = GraftVersions.manifest(path, GraftVersions.current(path))
+    val files = GraftVersions.Snapshot.current(path).files
     def target(bytes: Long) =
       math.max(1L, (bytes + smallBytes - 1) / smallBytes).toInt
     if (zorder.isEmpty) {

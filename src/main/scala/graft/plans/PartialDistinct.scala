@@ -75,7 +75,8 @@ case class PartialDistinct(keys: Seq[Attribute], child: LogicalPlan)
   * partial-mode HashAggregateExec (PartialDistinctStrategy), so unlike a
   * logical Distinct insertion this adds NO shuffle — at 1000 executors
   * the join exchange ships the deduped rows instead of raw scan output.
-  * Disable with `spark.sql.graft.partialAggBelowJoin=false`.
+  * Switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.PushPartialDistinctBelowJoin`.
   */
 object PushPartialDistinctBelowJoin extends Rule[LogicalPlan] {
 
@@ -175,9 +176,7 @@ object PushPartialDistinctBelowJoin extends Rule[LogicalPlan] {
     j.copy(left = push(j.left), right = push(j.right))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.sql.graft.partialAggBelowJoin", "true").toBoolean)
-      return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case agg @ Aggregate(groups, aggs, j: Join, _)
           if duplicateInsensitive(aggs) && eligible(j, groups ++ aggs) =>
@@ -197,7 +196,6 @@ object PushPartialDistinctBelowJoin extends Rule[LogicalPlan] {
       case f @ Filter(cond, pd: PartialDistinct) if cond.deterministic =>
         pd.copy(child = f.copy(child = pd.child))
     }
-  }
 }
 
 /** Plans PartialDistinct as a partial-mode (no required child

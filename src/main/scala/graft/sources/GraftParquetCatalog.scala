@@ -184,21 +184,40 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
       .map(t => Identifier.of(namespace, t)).toArray
   }
 
-  override def loadTable(ident: Identifier): Table = {
+  /** The table `ident` names, after the one guard every load and
+    * ALTER shares: a known namespace, a name this catalog serves, and
+    * data on disk (a `.parquet` path or a schemaless `.json` table) —
+    * else "no such table". */
+  private def lookup(ident: Identifier): String = {
     val table = ident.name()
-    val fullName = s"$catalogName.${ident.namespace().mkString(".")}.$table"
-    def missing() =
+    if (!knownNamespace(ident.namespace()) || !serves(table) ||
+        !(new java.io.File(pathOf(table)).exists() || isJsonTable(table)))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         catalogName +: ident.namespace().toSeq :+ table)
-    if (!knownNamespace(ident.namespace()) || !serves(table)) missing()
+    table
+  }
+
+  /** [[lookup]] for a verb only versioned tables support: the
+    * table's directory, or a loud error naming what `verb` requires. */
+  private def versionedDir(ident: Identifier, verb: String): String = {
+    val table = lookup(ident)
+    if (!ctasMeta(table).exists(_._3))
+      throw new UnsupportedOperationException(
+        s"$catalogName.$table: $verb requires a versioned table " +
+          "(CTAS with TBLPROPERTIES('versioned'='true'))")
+    pathOf(table)
+  }
+
+  override def loadTable(ident: Identifier): Table = {
+    val table = lookup(ident)
+    val fullName = s"$catalogName.${ident.namespace().mkString(".")}.$table"
     if (isJsonTable(table))
       return JsonTable(fullName, spark.asInstanceOf[ClassicSparkSession],
         CaseInsensitiveStringMap.empty(), Seq(jsonPathOf(table)),
         Some(persistedOrInferredSchema(table)), classOf[JsonFileFormat])
-    if (!new java.io.File(pathOf(table)).exists()) missing()
     if (ctasMeta(table).exists(_._3))
       return versionedTable(fullName, table,
-        GraftVersions.current(pathOf(table)))
+        GraftVersions.Snapshot.current(pathOf(table)))
     val partCols = ctasMeta(table).map(_._2).filter(_.nonEmpty)
     // a non-partitioned table's schema is its footer's, read on the
     // driver: left to the ParquetTable, every analysis would run
@@ -226,30 +245,11 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     * parser routes the version literal here; serve exactly snapshot
     * n's manifest. Only versioned CTAS tables travel. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val table = ident.name()
-    def missing() =
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-        catalogName +: ident.namespace().toSeq :+ table)
-    if (!knownNamespace(ident.namespace()) || !serves(table)) missing()
-    // a nonexistent table is "no such table", not "not versioned" —
-    // serves() is permissive when placement is unset, so check the
-    // directory like the plain loadTable does
-    if (!new java.io.File(pathOf(table)).exists()) missing()
-    if (!ctasMeta(table).exists(_._3))
-      throw new UnsupportedOperationException(
-        s"$catalogName.$table is not a versioned table — time travel " +
-          "requires CTAS with TBLPROPERTIES('versioned'='true')")
+    val dir = versionedDir(ident, "time travel")
     val v = version.stripPrefix("v").toIntOption.getOrElse(
       throw new IllegalArgumentException(
-        s"$catalogName.$table: VERSION AS OF expects a snapshot number, got '$version'"))
-    if (!GraftVersions.isLive(pathOf(table), v))
-      // the TABLE exists — name the missing/expired SNAPSHOT, don't
-      // claim the table is gone
-      throw new IllegalArgumentException(
-        s"$catalogName.$table: snapshot $v does not exist or was expired " +
-          s"(current: ${GraftVersions.current(pathOf(table))})")
-    versionedTable(
-      s"$catalogName.${ident.namespace().mkString(".")}.$table@v$v", table, v)
+        s"$catalogName.${ident.name()}: VERSION AS OF expects a snapshot number, got '$version'"))
+    travelTo(ident, GraftVersions.Snapshot(dir, v))
   }
 
   /** DSv2 time travel by time (`TIMESTAMP AS OF t`): Spark hands the
@@ -258,43 +258,44 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     * [[GraftVersions.commit]]). Before the first commit there is no
     * snapshot — loud error, like an expired version. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val table = ident.name()
-    def missing() =
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-        catalogName +: ident.namespace().toSeq :+ table)
-    if (!knownNamespace(ident.namespace()) || !serves(table)) missing()
-    // same nonexistent-table guard as the version overload
-    if (!new java.io.File(pathOf(table)).exists()) missing()
-    if (!ctasMeta(table).exists(_._3))
-      throw new UnsupportedOperationException(
-        s"$catalogName.$table is not a versioned table — time travel " +
-          "requires CTAS with TBLPROPERTIES('versioned'='true')")
-    val v = GraftVersions.versionAt(pathOf(table), timestamp).getOrElse(
+    val dir = versionedDir(ident, "time travel")
+    val v = GraftVersions.versionAt(dir, timestamp).getOrElse(
       throw new IllegalArgumentException(
-        s"$catalogName.$table: no snapshot committed at or before " +
+        s"$catalogName.${ident.name()}: no snapshot committed at or before " +
           s"timestamp $timestamp (earliest retained: " +
-          s"${GraftVersions.earliestCommitMicros(pathOf(table))})"))
-    versionedTable(
-      s"$catalogName.${ident.namespace().mkString(".")}.$table@v$v", table, v)
+          s"${GraftVersions.earliestCommitMicros(dir)})"))
+    travelTo(ident, GraftVersions.Snapshot(dir, v))
   }
 
-  /** Read/write table over snapshot `v`'s manifest files. The schema
-    * is the one IN FORCE at `v` ([[GraftVersions.snapshotSchema]] — ADD
-    * COLUMN is a metadata-only commit, so snapshots before the
-    * evolution keep their original schema and snapshots after it
-    * null-fill the new column for pre-evolution files); an empty
-    * manifest falls back to the schema this catalog created it with. */
-  private def versionedTable(fullName: String, table: String, v: Int): Table = {
-    val dir = pathOf(table)
-    val files = GraftVersions.manifest(dir, v)
+  /** A time-travel load of `snap`: the TABLE exists, so a missing or
+    * expired snapshot is named as such, never as a missing table. */
+  private def travelTo(ident: Identifier, snap: GraftVersions.Snapshot): Table = {
+    val table = ident.name()
+    if (!snap.live)
+      throw new IllegalArgumentException(
+        s"$catalogName.$table: snapshot ${snap.version} does not exist or was expired " +
+          s"(current: ${GraftVersions.current(snap.dir)})")
+    versionedTable(s"$catalogName.${ident.namespace().mkString(".")}.$table@v${snap.version}",
+      table, snap)
+  }
+
+  /** Read/write table over `snap`'s manifest files. The schema is the
+    * one IN FORCE at the snapshot (ADD COLUMN is a metadata-only
+    * commit, so snapshots before the evolution keep their original
+    * schema and snapshots after it null-fill the new column for
+    * pre-evolution files); an empty manifest falls back to the schema
+    * this catalog created it with. Scan statistics come from an ANALYZE
+    * record of this same snapshot only. */
+  private def versionedTable(fullName: String, table: String,
+      snap: GraftVersions.Snapshot): Table = {
     val pt = ParquetTable(
       fullName,
       spark.asInstanceOf[ClassicSparkSession],
       CaseInsensitiveStringMap.empty(),
-      files,
-      GraftVersions.snapshotSchema(dir, v, files).orElse(created.get(table)),
+      snap.files,
+      snap.schema.orElse(created.get(table)),
       classOf[ParquetFileFormat])
-    new GraftVersionedTable(pt, dir)
+    new GraftVersionedTable(pt, snap.dir, snap.version)
   }
 
   override def createTable(
@@ -342,20 +343,10 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
     * MERGE: metadata columns come and go without rewriting 100 TB. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val table = ident.name()
-    def missing() =
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
-        catalogName +: ident.namespace().toSeq :+ table)
-    if (!knownNamespace(ident.namespace()) || !serves(table)) missing()
-    if (!new java.io.File(pathOf(table)).exists()) missing()
-    if (!ctasMeta(table).exists(_._3))
-      throw new UnsupportedOperationException(
-        s"$catalogName.$table: ALTER TABLE is supported only for versioned " +
-          "tables (ADD COLUMN as a metadata-only snapshot commit)")
-    val dir = pathOf(table)
-    val cur = GraftVersions.current(dir)
-    val base: StructType = GraftVersions.schemaAt(dir, cur)
-      .orElse(created.get(table))
-      .getOrElse(GraftVersions.read(spark, dir, cur, GraftVersions.manifest(dir, cur)).schema)
+    val dir = versionedDir(ident, "ALTER TABLE (ADD/DROP COLUMN as a metadata-only snapshot commit)")
+    val snap = GraftVersions.Snapshot.current(dir)
+    val base: StructType = snap.schema.orElse(created.get(table))
+      .getOrElse(snap.read(spark).schema)
     // durable pre-history base: backs the ADD-after-DROP resurrection
     // guard and makes pre-evolution snapshot schemas explicit
     GraftVersions.recordBaseSchema(dir, base)
@@ -533,6 +524,21 @@ private class GraftPartitionedTable(
     }
 }
 
+/** A per-file column bound parsed from the manifest's embedded stats:
+  * integral (decimal-coded) or string/binary (base64-coded, compared
+  * unsigned-lexicographically — Spark's UTF8String order). */
+private[graft] sealed trait GraftColStat
+private[graft] final case class GraftLongStat(lo: Long, hi: Long)
+  extends GraftColStat
+private[graft] final case class GraftBinStat(lo: Array[Byte], hi: Array[Byte])
+  extends GraftColStat
+/** Null accounting for a column across one file (keyed `<col>#n` in the
+  * stats map — a separate key, so it composes with the bound stat):
+  * `nulls == 0` proves `IS NULL` matches nothing in the file;
+  * `nulls == rows` proves `IS NOT NULL` matches nothing. */
+private[graft] final case class GraftNullStat(nulls: Long, rows: Long)
+  extends GraftColStat
+
 /** Snapshot bookkeeping for versioned tables: immutable data files
   * under `data/`, per-snapshot file lists under `_manifests/v<N>.txt`,
   * and a `_current` pointer. Commits are manifest-write-then-pointer-
@@ -552,22 +558,14 @@ private class GraftPartitionedTable(
   * per-commit nonce, so racing writers never collide on a filename and
   * a loser's already-moved files just get re-prefixed on retry. The
   * `_current` pointer advances monotonically under a file lock; a
-  * reader between link and flip simply sees the previous snapshot. */
-/** A per-file column bound parsed from the manifest's embedded stats:
-  * integral (decimal-coded) or string/binary (base64-coded, compared
-  * unsigned-lexicographically — Spark's UTF8String order). */
-private[graft] sealed trait GraftColStat
-private[graft] final case class GraftLongStat(lo: Long, hi: Long)
-  extends GraftColStat
-private[graft] final case class GraftBinStat(lo: Array[Byte], hi: Array[Byte])
-  extends GraftColStat
-/** Null accounting for a column across one file (keyed `<col>#n` in the
-  * stats map — a separate key, so it composes with the bound stat):
-  * `nulls == 0` proves `IS NULL` matches nothing in the file;
-  * `nulls == rows` proves `IS NOT NULL` matches nothing. */
-private[graft] final case class GraftNullStat(nulls: Long, rows: Long)
-  extends GraftColStat
-
+  * reader between link and flip simply sees the previous snapshot.
+  *
+  * Reads go through one value: [[GraftVersions.Snapshot]] reads a
+  * version's manifest once and derives its files, per-file stats,
+  * liveness, layout flag and (lazily) schema from those lines. Every
+  * reader of a versioned snapshot — the catalog's loads and ALTER, the
+  * copy-on-write verbs and [[mergeCommit]], ANALYZE, DETAIL and the
+  * change-data feed — takes that value instead of re-reading. */
 private[graft] object GraftVersions {
   /** The filesystem seam the commit protocol stands on (verdict r17
     * #4): link-test-and-set, atomic overwrite, table lock, ledger
@@ -624,13 +622,6 @@ private[graft] object GraftVersions {
     * [[expire]]) while [[manifest]] still reads the version as empty. */
   private val expiredMarker = "#expired"
 
-  /** Snapshot `v` exists and is not expired. */
-  def isLive(dir: String, v: Int): Boolean = {
-    val f = manifestFile(dir, v)
-    f.exists() && !java.nio.file.Files.readAllLines(f.toPath).asScala
-      .headOption.exists(_.startsWith(expiredMarker))
-  }
-
   /** A manifest line is `<fileName>` optionally followed by
     * tab-separated `col=lo..hi` per-file column stats (see
     * [[statsSuffixes]]); the name is everything before the first tab. */
@@ -644,52 +635,42 @@ private[graft] object GraftVersions {
     * every downstream incremental consumer as delete+insert. */
   private val layoutMarker = "#layout"
 
-  /** True when snapshot `v` was committed as layout-only (its manifest
-    * carries the `#layout` header). Tombstoned manifests lose the
-    * header with the rest of their lines, which is fine — expired
-    * versions are skipped by liveness before this is consulted. */
-  def isLayoutOnly(dir: String, v: Int): Boolean = {
-    val f = manifestFile(dir, v)
-    f.exists() &&
-      java.nio.file.Files.readAllLines(f.toPath).asScala
-        .exists(_ == layoutMarker)
-  }
+  /** Snapshot `v` of the table at `dir`, resolved once: its manifest is
+    * read in ONE file read, and everything a statement needs from the
+    * snapshot derives from those lines — liveness, the layout-only
+    * flag, the data files, their embedded column stats, and the schema
+    * in force. A statement resolves one Snapshot and passes the value
+    * down to its pruning, discovery, rewrite and commit, so no helper
+    * re-reads the manifest or re-resolves the schema. A missing or
+    * tombstoned manifest has no lines (an expired version reads as
+    * empty). */
+  final class Snapshot private (val dir: String, val version: Int,
+      raw: Option[Seq[String]]) {
+    /** The manifest exists and is not an `#expired` tombstone. */
+    val live: Boolean = raw.exists(!_.headOption.exists(_.startsWith(expiredMarker)))
+    /** Committed as layout-only (`#layout` header). A tombstone loses
+      * the header with the rest of its lines, which is fine — readers
+      * skip expired versions by liveness first. */
+    val layoutOnly: Boolean = raw.exists(_.contains(layoutMarker))
+    /** Raw (non-comment) manifest lines, stats included — the form
+      * commits carry forward so kept-by-reference files KEEP their
+      * skipping stats across snapshots. */
+    val lines: Seq[String] =
+      raw.getOrElse(Nil).filter(l => l.nonEmpty && !l.startsWith("#"))
+    /** Data-file names, in manifest order. */
+    val names: Seq[String] = lines.map(lineName)
+    /** Data files as absolute paths, in manifest order. */
+    val files: Seq[String] =
+      names.map(n => new java.io.File(dataDir(dir), n).getAbsolutePath)
 
-  /** Raw (non-comment) manifest lines, stats included — the form
-    * commits carry forward so kept-by-reference files KEEP their
-    * skipping stats across snapshots. */
-  def manifestLines(dir: String, v: Int): Seq[String] = {
-    val f = manifestFile(dir, v)
-    if (!f.exists()) Seq.empty
-    else java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-  }
-
-  def manifest(dir: String, v: Int): Seq[String] =
-    manifestLines(dir, v)
-      .map(l => new java.io.File(dataDir(dir), lineName(l)).getAbsolutePath)
-
-  /** The newest LIVE version at or below `v` (0 if none). Commit's
-    * predecessor chain consults this instead of blindly reading `v`:
-    * normally one `isLive` check (the pointer's version is live), but
-    * after an abandoned rollback a tombstoned manifest can sit ABOVE
-    * the pointer, and an append must chain past it. */
-  private[graft] def newestLiveAtOrBelow(dir: String, v: Int): Int = {
-    var i = v
-    while (i > 0 && !isLive(dir, i)) i -= 1
-    i
-  }
-
-  /** Per-file column stats embedded in snapshot `v`'s manifest:
-    * fileName → column → bound. Files committed before stats existed
-    * (or all-null columns) simply have no entry — readers must treat
-    * missing stats as "could match anything". Two encodings share the
-    * `col=lo..hi` field shape: integral bounds as decimal longs,
-    * string/binary bounds base64-coded with an `s:` prefix (base64's
-    * alphabet cannot collide with the separators). */
-  def manifestStats(dir: String, v: Int)
-      : Map[String, Map[String, GraftColStat]] =
-    manifestLines(dir, v).map { l =>
+    /** Per-file column stats embedded in the manifest: fileName →
+      * column → bound. Files committed before stats existed (or
+      * all-null columns) simply have no entry — readers must treat
+      * missing stats as "could match anything". Two encodings share the
+      * `col=lo..hi` field shape: integral bounds as decimal longs,
+      * string/binary bounds base64-coded with an `s:` prefix (base64's
+      * alphabet cannot collide with the separators). */
+    lazy val stats: Map[String, Map[String, GraftColStat]] = lines.map { l =>
       val parts = l.split('\t')
       val stats = parts.drop(1).flatMap { f =>
         f.split("=", 2) match {
@@ -720,6 +701,62 @@ private[graft] object GraftVersions {
       }.toMap
       parts.head -> (stats: Map[String, GraftColStat])
     }.toMap
+
+    /** The schema this snapshot reads with, resolved on the driver on
+      * first use: the evolution record in force ([[schemaAt]]), else the
+      * footer of the first file — a never-evolved table's files are
+      * schema-homogeneous — without the one-task job Spark's schema
+      * inference runs. None only when there is no record and no file. */
+    lazy val schema: Option[StructType] =
+      schemaAt(dir, version).orElse(files.headOption.map(footerSchema))
+
+    /** `subset` of this snapshot's files (default all) read with
+      * [[schema]]. After an ADD COLUMN the files are
+      * schema-heterogeneous, and an inferred read takes an arbitrary
+      * file's schema: a rewrite through a pre-evolution file's schema
+      * would silently drop the evolved column's values (ADVICE r12).
+      * The `_metadata` column stays available under the explicit
+      * schema. With no record and no file, Spark's own inference runs
+      * and rejects the empty file list. */
+    def read(spark: SparkSession, subset: Seq[String] = files): DataFrame =
+      schema.fold(spark.read)(s => spark.read.schema(s)).parquet(subset: _*)
+
+    /** This snapshot's files that `other` does not list. */
+    def filesNotIn(other: Snapshot): Seq[String] = {
+      val theirs = other.names.toSet
+      files.zip(names).collect { case (f, n) if !theirs.contains(n) => f }
+    }
+  }
+
+  object Snapshot {
+    def apply(dir: String, v: Int): Snapshot = {
+      val f = manifestFile(dir, v)
+      val raw =
+        try Some(java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq)
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      new Snapshot(dir, v, raw)
+    }
+
+    /** The snapshot the `_current` pointer names. */
+    def current(dir: String): Snapshot = apply(dir, GraftVersions.current(dir))
+  }
+
+  /** Snapshot `v` exists and is not expired. */
+  def isLive(dir: String, v: Int): Boolean = Snapshot(dir, v).live
+
+  /** Snapshot `v`'s data files as absolute paths. */
+  def manifest(dir: String, v: Int): Seq[String] = Snapshot(dir, v).files
+
+  /** The newest LIVE version at or below `v` (0 if none). Commit's
+    * predecessor chain consults this instead of blindly reading `v`:
+    * normally one `isLive` check (the pointer's version is live), but
+    * after an abandoned rollback a tombstoned manifest can sit ABOVE
+    * the pointer, and an append must chain past it. */
+  private[graft] def newestLiveAtOrBelow(dir: String, v: Int): Int = {
+    var i = v
+    while (i > 0 && !isLive(dir, i)) i -= 1
+    i
+  }
 
   /** Manifest-level data skipping, collected at COMMIT time: per-file
     * min/max for every unannotated INT32/INT64 top-level column,
@@ -897,15 +934,6 @@ private[graft] object GraftVersions {
     try reader.getFooter finally reader.close()
   }
 
-  /** The schema snapshot `v` reads with, resolved on the driver: the
-    * evolution record in force at `v` ([[schemaAt]]), else the footer of
-    * the first of `files` — a never-evolved table's files are
-    * schema-homogeneous — read by [[footerSchema]], without the one-task
-    * job Spark's schema inference runs.
-    * None only when there is no record and no file. */
-  def snapshotSchema(dir: String, v: Int, files: Seq[String]): Option[StructType] =
-    schemaAt(dir, v).orElse(files.headOption.map(footerSchema))
-
   /** One parquet file's schema as Spark's own inference converts it
     * (`readSchemaFromFooter`, nullable as a file source reads it). */
   def footerSchema(f: String): StructType =
@@ -915,17 +943,6 @@ private[graft] object GraftVersions {
       new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(
           org.apache.spark.sql.internal.SQLConf.get)).toNullable
-
-  /** Snapshot `v`'s `files` read with [[snapshotSchema]]. After an ADD
-    * COLUMN the files are schema-heterogeneous, and an inferred read
-    * takes an arbitrary file's schema: a rewrite through a
-    * pre-evolution file's schema would silently drop the evolved
-    * column's values (ADVICE r12). The `_metadata` column stays
-    * available under the explicit schema. With no record and no file,
-    * Spark's own inference runs and rejects the empty file list. */
-  def read(spark: SparkSession, dir: String, v: Int, files: Seq[String]): DataFrame =
-    snapshotSchema(dir, v, files).fold(spark.read)(s => spark.read.schema(s))
-      .parquet(files: _*)
 
   // --- schema evolution (metadata-only commits) --------------------------
 
@@ -1041,7 +1058,7 @@ private[graft] object GraftVersions {
     while (attempts < 100) {
       attempts += 1
       val v = current(dir) + 1
-      val prev = if (v == 1) Seq.empty else manifestLines(dir, v - 1)
+      val prev = if (v == 1) Seq.empty else Snapshot(dir, v - 1).lines
       if (tryPublish(dir, v, s"#schema ${schema.json}" +: prev)) {
         schemasDir(dir).mkdirs()
         java.nio.file.Files.write(
@@ -1065,21 +1082,18 @@ private[graft] object GraftVersions {
     * Returns the new current version. */
   def rollback(dir: String, v: Int): Int = {
     // ONE read decides liveness AND supplies the lines: a separate
-    // isLive-then-manifestLines pair races a concurrent expire —
-    // tombstoned between the two reads, the tombstone's comment-only
-    // body parses as ZERO lines and the restore would publish an
-    // EMPTY table (caught by MergeSpec's rollback-vs-expire race
-    // gate, r14). Expire's tombstone write is an atomic rename, so
-    // this read sees the live manifest or the tombstone, never a mix.
-    val mf = manifestFile(dir, v)
-    val raw =
-      if (mf.exists())
-        java.nio.file.Files.readAllLines(mf.toPath).asScala.toSeq
-      else Seq.empty
-    require(mf.exists() && !raw.headOption.exists(_.startsWith(expiredMarker)),
+    // liveness check before reading the lines races a concurrent
+    // expire — tombstoned between the two reads, the tombstone's
+    // comment-only body parses as ZERO lines and the restore would
+    // publish an EMPTY table (caught by MergeSpec's rollback-vs-expire
+    // race gate, r14). Expire's tombstone write is an atomic rename, so
+    // the snapshot's one read sees the live manifest or the tombstone,
+    // never a mix.
+    val snap = Snapshot(dir, v)
+    require(snap.live,
       s"$dir: cannot restore snapshot $v — it does not exist or was expired")
-    val lines = raw.filter(l => l.nonEmpty && !l.startsWith("#")) // stats kept
-    val names = lines.map(lineName)
+    val lines = snap.lines // stats kept
+    val names = snap.names
     val restoredSchema = schemaAt(dir, v)
     var attempts = 0
     var nv = current(dir) + 1
@@ -1097,7 +1111,7 @@ private[graft] object GraftVersions {
           names.filterNot(n => new java.io.File(dataDir(dir), n).exists())
         if (missing.nonEmpty) {
           // the won manifest must not stay live (ADVICE r13): a
-          // successor's append chains onto manifestLines(nv) — the
+          // successor's append chains onto snapshot nv's lines — the
           // dead manifest's lines reference vacuumed files, and the
           // next commit would publish a current snapshot that breaks
           // every read. Tombstone it (no preserved #f lines — the
@@ -1160,10 +1174,9 @@ private[graft] object GraftVersions {
   def history(dir: String): Seq[(Int, Long, Boolean, Boolean, Int)] = {
     val instants = commitInstants(dir).toMap
     (1 to current(dir)).map { v =>
-      val live = isLive(dir, v)
-      (v, instants.getOrElse(v, -1L), live,
-        live && isLayoutOnly(dir, v),
-        if (live) manifestLines(dir, v).size else 0)
+      val snap = Snapshot(dir, v)
+      (v, instants.getOrElse(v, -1L), snap.live,
+        snap.live && snap.layoutOnly, if (snap.live) snap.lines.size else 0)
     }
   }
 
@@ -1371,7 +1384,7 @@ private[graft] object GraftVersions {
       // publish an append that silently drops the whole table
       val prev =
         if (overwrite || v == 1) Seq.empty
-        else manifestLines(dir, newestLiveAtOrBelow(dir, v - 1))
+        else Snapshot(dir, newestLiveAtOrBelow(dir, v - 1)).lines
       val newLines = moved.zip(suffixes).map { case (n, s) => n + s }
       if (tryPublish(dir, v, txnHeader(txn) ++ prev ++ newLines)) {
         publishPointer(dir, v)
@@ -1388,29 +1401,30 @@ private[graft] object GraftVersions {
 
   /** Read-modify-write commit (MERGE INTO's copy-on-write): publish a
     * snapshot whose manifest is `keepNames` (the untouched files of
-    * snapshot `expectedBase`, reused by reference) plus `data` (the
-    * rewritten + inserted rows). UNLIKE blind appends this is NOT
-    * retry-safe — the kept-file set was derived by reading snapshot
-    * `expectedBase`, so if any other writer committed in between, the
-    * merge would silently drop their rows; detect the conflict at the
-    * atomic publish and fail loudly instead.
+    * snapshot `base`, reused by reference with the stats of `base`'s
+    * own manifest lines — no re-read) plus `data` (the rewritten +
+    * inserted rows). UNLIKE blind appends this is NOT retry-safe — the
+    * kept-file set was derived by reading snapshot `base`, so if any
+    * other writer committed in between, the merge would silently drop
+    * their rows; detect the conflict at the atomic publish and fail
+    * loudly instead.
     *
     * `dataChange = false` marks the commit LAYOUT-ONLY (`#layout`
     * header): same rows, different files — compaction/re-clustering.
     * Only callers whose rewrite provably preserves the row set may
     * pass it; the change-data feed skips marked versions. */
-  def mergeCommit(dir: String, expectedBase: Int, keepNames: Seq[String],
+  def mergeCommit(base: Snapshot, keepNames: Seq[String],
       data: DataFrame, dataChange: Boolean = true,
       txn: Option[(String, Long)] = None): Unit = {
+    val dir = base.dir
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val v = expectedBase + 1
+    val v = base.version + 1
     val moved = stageFiles(dir, data, v, nonce)
     val newLines = moved.zip(statsSuffixes(data, dir, moved))
       .map { case (n, s) => n + s }
     // kept files carry their base-manifest lines verbatim (stats intact)
     val keepSet = keepNames.toSet
-    val keepLines = manifestLines(dir, expectedBase)
-      .filter(l => keepSet.contains(lineName(l)))
+    val keepLines = base.lines.filter(l => keepSet.contains(lineName(l)))
     val header = (if (dataChange) Seq.empty else Seq(layoutMarker)) ++
       txnHeader(txn)
     if (!tryPublish(dir, v, header ++ keepLines ++ newLines)) {
@@ -1419,7 +1433,7 @@ private[graft] object GraftVersions {
       // once their version prefix falls at or below the pointer)
       moved.foreach(n => new java.io.File(dataDir(dir), n).delete())
       throw new java.util.ConcurrentModificationException(
-        s"$dir: MERGE based on snapshot $expectedBase conflicts with a " +
+        s"$dir: MERGE based on snapshot ${base.version} conflicts with a " +
           s"concurrent commit of v$v — re-read and retry the merge")
     }
     publishPointer(dir, v)
@@ -1554,7 +1568,8 @@ private class GraftVersionedWriteBuilder(path: String)
   * not translate to source filters is rejected by `canDeleteWhere` —
   * Spark then fails the statement loudly instead of deleting the
   * wrong rows. */
-private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String)
+private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String,
+    version: Int)
   extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete {
   override def name(): String = parquet.name
@@ -1563,15 +1578,15 @@ private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String
   override def capabilities(): util.Set[TableCapability] =
     (parquet.capabilities().asScala.toSet + TableCapability.V1_BATCH_WRITE +
       TableCapability.OVERWRITE_BY_FILTER + TableCapability.TRUNCATE).asJava
-  /** Scans wrap the native builder so an ANALYZE record (if present)
-    * drives the reported statistics — the hint-free broadcast/shuffle
-    * seam (GraftTableStats); without a record the wrapper builds the
-    * stock scan with its file-size estimate. */
+  /** Scans wrap the native builder so an ANALYZE record of the loaded
+    * snapshot (if present) drives the reported statistics — the
+    * hint-free broadcast/shuffle seam (GraftTableStats); without one the
+    * wrapper builds the stock scan with its file-size estimate. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftDppScanBuilder(
       parquet.newScanBuilder(options)
         .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder],
-      GraftTableStats.scan(path))
+      GraftTableStats.scan(path, version))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftVersionedWriteBuilder(path)
 

@@ -68,16 +68,16 @@ private[graft] object GraftTableStats {
       mapper.writeValueAsBytes(root))
   }
 
-  /** The scan a versioned table's [[GraftDppScanBuilder]] builds: with
-    * a live ANALYZE record, its reported statistics are the stored
-    * totals scaled by the pushed filters' selectivity. A record is live
-    * only for the snapshot it measured: any commit since ANALYZE
-    * (append/merge/compact/restore) makes it STALE and planning falls
-    * back to the file-size estimate. Either way the scan keeps runtime
-    * filtering — a versioned fact must not lose DPP just because it is
-    * versioned. */
-  def scan(dir: String)(parquet: ParquetScan): Scan = read(dir) match {
-    case Some(st) if st.version == GraftVersions.current(dir) =>
+  /** The scan a versioned table's [[GraftDppScanBuilder]] builds over
+    * snapshot `version`: with an ANALYZE record of that snapshot, its
+    * reported statistics are the stored totals scaled by the pushed
+    * filters' selectivity. A record measures one snapshot only: a read
+    * of any other — a later commit (append/merge/compact/restore) or an
+    * earlier one (`VERSION AS OF`) — falls back to the file-size
+    * estimate. Either way the scan keeps runtime filtering — a
+    * versioned fact must not lose DPP just because it is versioned. */
+  def scan(dir: String, version: Int)(parquet: ParquetScan): Scan = read(dir) match {
+    case Some(st) if st.version == version =>
       new GraftStatsScan(parquet, st)
     case _ => new GraftDppScan(parquet)
   }

@@ -199,9 +199,9 @@ object DocsStreaming {
           if (!rows.exists(_._2 == "#layout")) {
             // added = this manifest minus the predecessor's (by name):
             // one driver-side manifest read, O(changed files) — the
-            // same rule GraftCdfSource.addedFiles applies
-            val prev = graft.sources.GraftVersions.manifestLines(dir, v - 1)
-              .map(_.takeWhile(_ != '\t')).toSet
+            // same rule GraftCdfSource.changedFiles applies
+            val prev =
+              graft.sources.GraftVersions.Snapshot(dir, v - 1).names.toSet
             val added = rows.map(_._2).filterNot(prev.contains)
             if (added.nonEmpty)
               consume(v, batch.sparkSession.read.parquet(

@@ -74,11 +74,11 @@ private[graft] object GraftCdfSource {
     * channel is on. */
   def fullSchema(dir: String, includeRemoved: Boolean): StructType = {
     require(dir != null, "graft-cdf requires .option(\"path\", <tableDir>)")
-    val cur = GraftVersions.current(dir)
-    require(cur >= 1, s"graft-cdf: $dir has no committed snapshot")
-    val schema = GraftVersions.snapshotSchema(dir, cur, GraftVersions.manifest(dir, cur))
-    require(schema.isDefined, s"graft-cdf: $dir snapshot $cur lists no files")
-    val data = schema.get
+    val snap = GraftVersions.Snapshot.current(dir)
+    require(snap.version >= 1, s"graft-cdf: $dir has no committed snapshot")
+    require(snap.schema.isDefined,
+      s"graft-cdf: $dir snapshot ${snap.version} lists no files")
+    val data = snap.schema.get
     data.fields.foreach(f => checkSupported(f.dataType, f.name))
     val meta = StructField(versionCol, IntegerType, nullable = false) +:
       (if (includeRemoved)
@@ -96,48 +96,32 @@ private[graft] object GraftCdfSource {
         "(flat atomics and arrays of atomics only)")
   }
 
-  /** Files ADDED by version `v`: manifest set-difference against the
-    * predecessor — the SAME rule the batch snapshot diff and
-    * [[removedFiles]] use, NOT the `v<N>-` filename-prefix heuristic
-    * (ADVICE r13): a rollback/RESTORE publishes restored files under
-    * their ORIGINAL prefixes, so the prefix rule emitted their removal
-    * (set-diff) but never their re-addition, and every downstream
-    * incremental consumer silently diverged from the table.
-    * LAYOUT-ONLY versions (compaction/re-clustering, `#layout` header)
-    * contribute NOTHING: their row set equals the predecessor's, and
-    * without the skip a 100 TB compaction would replay the whole table
-    * into every incremental consumer. */
-  def addedFiles(dir: String, v: Int): Seq[String] =
-    if (!GraftVersions.isLive(dir, v) ||
-      GraftVersions.isLayoutOnly(dir, v)) Seq.empty
+  /** (added, removed) files of version `v`: manifest set-difference
+    * against the predecessor, one read of each manifest — the SAME rule
+    * the batch snapshot diff uses, NOT the `v<N>-` filename-prefix
+    * heuristic (ADVICE r13): a rollback/RESTORE publishes restored
+    * files under their ORIGINAL prefixes, so the prefix rule emitted
+    * their removal (set-diff) but never their re-addition, and every
+    * downstream incremental consumer silently diverged from the table.
+    * File granularity: a copy-on-write rewrite reports its surviving
+    * rows as removed-then-re-added (exactly what the files say).
+    * Removed files stay readable on disk until retention expires them —
+    * a consumer more than one retention window behind has lost its
+    * delta feed by contract.
+    *
+    * Empty on both sides for a TOMBSTONED (expired) version —
+    * retention is not a data change, so it must not read as a
+    * whole-table delete (its adds are equally gone; the documented
+    * fell-behind-retention contract) — and for a LAYOUT-ONLY version
+    * (compaction/re-clustering, `#layout` header): its row set equals
+    * the predecessor's, and without the skip a 100 TB compaction would
+    * replay the whole table into every incremental consumer. */
+  def changedFiles(dir: String, v: Int): (Seq[String], Seq[String]) = {
+    val now = GraftVersions.Snapshot(dir, v)
+    if (!now.live || now.layoutOnly) (Seq.empty, Seq.empty)
     else {
-      val prev = GraftVersions.manifest(dir, v - 1)
-        .map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
-      GraftVersions.manifest(dir, v).filterNot { p =>
-        prev.contains(p.substring(p.lastIndexOf('/') + 1))
-      }
-    }
-
-  /** Files REMOVED by version `v`: the predecessor manifest's files the
-    * new manifest no longer lists. File granularity, like the batch
-    * snapshot diff: a copy-on-write rewrite reports its surviving rows
-    * as removed-then-re-added (exactly what the files say). Removed
-    * files stay readable on disk until retention expires them — a
-    * consumer more than one retention window behind has lost its delta
-    * feed by contract. */
-  def removedFiles(dir: String, v: Int): Seq[String] = {
-    // a TOMBSTONED (expired) version reads as an empty manifest —
-    // retention is not a data change, so it must not read as a
-    // whole-table delete (its adds are equally gone; the documented
-    // fell-behind-retention contract)
-    if (!GraftVersions.isLive(dir, v)) return Seq.empty
-    // layout-only versions replace files without changing rows — no
-    // delete delta, matching addedFiles' skip
-    if (GraftVersions.isLayoutOnly(dir, v)) return Seq.empty
-    val now = GraftVersions.manifest(dir, v)
-      .map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
-    GraftVersions.manifest(dir, v - 1).filterNot { p =>
-      now.contains(p.substring(p.lastIndexOf('/') + 1))
+      val prev = GraftVersions.Snapshot(dir, v - 1)
+      (now.filesNotIn(prev), prev.filesNotIn(now))
     }
   }
 }
@@ -230,18 +214,15 @@ private class GraftCdfStream(dir: String, schema: StructType,
     val s = start.asInstanceOf[GraftCdfOffset].version
     val e = end.asInstanceOf[GraftCdfOffset].version
     ((s + 1) to e).flatMap { v =>
-      val added = GraftCdfSource.addedFiles(dir, v)
+      val (added, removed) = GraftCdfSource.changedFiles(dir, v)
       if (rowLevel) {
-        val removed = GraftCdfSource.removedFiles(dir, v)
         if (removed.isEmpty)
           // pure append: the per-file parallel path, no join needed
           added.map(f => GraftCdfPartition(v, f, "insert"))
         else Seq(GraftCdfRowDiffPartition(v, added, removed, mergeKey))
       } else {
         added.map(f => GraftCdfPartition(v, f, "insert")) ++
-          (if (includeRemoved)
-            GraftCdfSource.removedFiles(dir, v)
-              .map(f => GraftCdfPartition(v, f, "delete"))
+          (if (includeRemoved) removed.map(f => GraftCdfPartition(v, f, "delete"))
           else Seq.empty)
       }
     }.toArray

@@ -141,4 +141,30 @@ class CboStatsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(rearmed.contains("GraftStats(rows=1000"), rearmed)
   }
+
+  test("an ANALYZE record plans only its own snapshot, not an earlier VERSION AS OF") {
+    freshRoot("graft_cbo")
+    import spark.implicits._
+    (1 to 500).map(i => (i.toLong, i.toDouble))
+      .toDF("k", "v").createOrReplaceTempView("cbo_tt_src")
+    spark.sql("""CREATE TABLE psql.tpcds.cbott
+                |TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM cbo_tt_src""".stripMargin)
+    spark.sql("INSERT INTO psql.tpcds.cbott SELECT * FROM cbo_tt_src")
+    // the record measures v2 (1000 rows)
+    spark.sql("ANALYZE TABLE psql.tpcds.cbott COMPUTE STATISTICS")
+    def scan(sql: String) = spark.sql(sql).queryExecution
+    val cur = scan("SELECT k FROM psql.tpcds.cbott")
+    assert(cur.executedPlan.toString.contains("GraftStats(rows=1000"),
+      cur.executedPlan.toString)
+    // v1 holds 500 rows: planning it with v2's record would be wrong
+    val v1 = scan("SELECT k FROM psql.tpcds.cbott VERSION AS OF 1")
+    assert(!v1.executedPlan.toString.contains("GraftStats("),
+      s"v2's ANALYZE record reported for v1:\n${v1.executedPlan}")
+    assert(!v1.optimizedPlan.stats.rowCount.contains(BigInt(1000)),
+      v1.optimizedPlan.stats.toString)
+    assert(v1.executedPlan.toString.contains("GraftDpp("), v1.executedPlan.toString)
+    assert(scan("SELECT k FROM psql.tpcds.cbott VERSION AS OF 2")
+      .executedPlan.toString.contains("GraftStats(rows=1000"))
+  }
 }

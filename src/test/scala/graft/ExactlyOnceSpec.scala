@@ -106,7 +106,7 @@ class ExactlyOnceSpec extends SparkSpec {
       assert(kRows("xo5") == (0 to 12))
       // at least one auto fold actually happened, marked layout-only
       val layoutVersions = (1 to cur).filter(v =>
-        GraftVersions.isLive(dir, v) && GraftVersions.isLayoutOnly(dir, v))
+        GraftVersions.isLive(dir, v) && GraftVersions.Snapshot(dir, v).layoutOnly)
       assert(layoutVersions.nonEmpty, "no auto-compaction commit found")
     } finally spark.conf.unset("spark.sql.graft.autoCompact.minSmallFiles")
   }

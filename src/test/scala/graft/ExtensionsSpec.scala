@@ -8,6 +8,17 @@ import org.apache.spark.sql.functions._
 class ExtensionsSpec extends SparkSpec {
 
   private def o = Tables.orders(spark, sf1)
+
+  /** `body` planned without the partial-distinct push, named the way
+    * Spark's optimizer names the rule. */
+  private def withoutPushBelowJoin[T](body: => T): T = {
+    val rule = "graft.plans.PushPartialDistinctBelowJoin"
+    assert(rule == graft.plans.PushPartialDistinctBelowJoin.ruleName)
+    val key = "spark.sql.optimizer.excludedRules"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, rule)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
   private def branch(st: String) =
     o.filter(col("o_orderstatus") === st).select(col("o_custkey"))
 
@@ -105,12 +116,11 @@ class ExtensionsSpec extends SparkSpec {
 
   test("partial distinct below join does not change the result") {
     val on = distinctOverJoin.collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.sql.graft.partialAggBelowJoin", "false")
-    val off = try {
+    val off = withoutPushBelowJoin {
       val plan = distinctOverJoin.queryExecution.optimizedPlan
       assert(plan.collect { case p: graft.plans.PartialDistinct => p }.isEmpty, plan.toString)
       distinctOverJoin.collect().map(_.toString).sorted.toSeq
-    } finally spark.conf.set("spark.sql.graft.partialAggBelowJoin", "true")
+    }
     assert(on == off && on.nonEmpty)
   }
 
@@ -158,12 +168,11 @@ class ExtensionsSpec extends SparkSpec {
 
   test("min/max push below join does not change the result") {
     val on = minMaxOverJoin.collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.sql.graft.partialAggBelowJoin", "false")
-    val off = try {
+    val off = withoutPushBelowJoin {
       val plan = minMaxOverJoin.queryExecution.optimizedPlan
       assert(plan.collect { case p: graft.plans.PartialDistinct => p }.isEmpty, plan.toString)
       minMaxOverJoin.collect().map(_.toString).sorted.toSeq
-    } finally spark.conf.set("spark.sql.graft.partialAggBelowJoin", "true")
+    }
     assert(on == off && on.nonEmpty)
   }
 
@@ -178,9 +187,7 @@ class ExtensionsSpec extends SparkSpec {
     val plan = df.queryExecution.optimizedPlan
     assert(plan.collect { case p: graft.plans.PartialDistinct => p }.size == 2, plan.toString)
     val on = df.collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.sql.graft.partialAggBelowJoin", "false")
-    val off = try df.collect().map(_.toString).sorted.toSeq
-    finally spark.conf.set("spark.sql.graft.partialAggBelowJoin", "true")
+    val off = withoutPushBelowJoin(df.collect().map(_.toString).sorted.toSeq)
     assert(on == off && on.nonEmpty)
   }
 

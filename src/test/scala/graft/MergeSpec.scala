@@ -295,10 +295,11 @@ class MergeSpec extends SparkSpec {
                 |AS SELECT * FROM mg_src3""".stripMargin)
     val dir = s"$root/mg3.parquet"
     // a writer sneaks in a commit between the merge's snapshot read
-    // (simulated: mergeCommit pinned to base=1) and its publish
+    // (simulated: mergeCommit on snapshot 1, read first) and its publish
+    val stale = GraftVersions.Snapshot.current(dir)
     GraftVersions.commit(dir, Seq((2, "b")).toDF("k", "v"), overwrite = false)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      GraftVersions.mergeCommit(dir, expectedBase = 1, keepNames = Seq.empty,
+      GraftVersions.mergeCommit(stale, keepNames = Seq.empty,
         Seq((1, "A")).toDF("k", "v"))
     }
     assert(ex.getMessage.contains("conflicts"))
@@ -777,7 +778,7 @@ class MergeSpec extends SparkSpec {
                 |AS SELECT * FROM mg_srcS""".stripMargin)
     val dir = s"$root/mgS.parquet"
     // the manifest carries per-file k bounds
-    val stats = GraftVersions.manifestStats(dir, 1)
+    val stats = GraftVersions.Snapshot(dir, 1).stats
     assert(stats.size == 4 && stats.values.forall(_.contains("k")),
       stats.toString)
     // candidate pins: the bounds keep exactly the files whose k range
@@ -820,7 +821,7 @@ class MergeSpec extends SparkSpec {
     spark.sql("""CREATE TABLE psql.tpcds.mgT TBLPROPERTIES('versioned'='true')
                 |AS SELECT * FROM mg_srcT""".stripMargin)
     val dirT = s"$root/mgT.parquet"
-    val statsT = GraftVersions.manifestStats(dirT, 1)
+    val statsT = GraftVersions.Snapshot(dirT, 1).stats
     assert(statsT.values.forall(_.contains("g")), statsT.toString)
     assert(filesHolding(dirT, col("g") === "g2").size == 1)
     assert(candidateFiles(dirT, col("g") === "g2") ==
@@ -870,7 +871,7 @@ class MergeSpec extends SparkSpec {
       .map(r => (r.getInt(0), r.getString(1))).toSet == before,
       "clustering changed the row set")
     // old snapshot keeps the old layout; new manifest has g-selective stats
-    val stats = GraftVersions.manifestStats(dir, GraftVersions.current(dir))
+    val stats = GraftVersions.Snapshot.current(dir).stats
     assert(stats.values.forall(_.contains("g")), stats.toString)
     val (_, reused, rewritten) = GraftMerge.deleteFrom(spark, dir, col("g") === "g2")
     assert(rewritten == 1 && reused == 3,
@@ -1087,7 +1088,7 @@ class MergeSpec extends SparkSpec {
     assert(GraftVersions.schemaAt(dir, 1).isEmpty, "table must be never-evolved")
     val files = GraftVersions.manifest(dir, 1)
     val inferred = spark.read.parquet(files.head).schema
-    assert(GraftVersions.snapshotSchema(dir, 1, files).contains(inferred))
+    assert(GraftVersions.Snapshot(dir, 1).schema.contains(inferred))
     // the footer really carries a non-nullable column, and every type
     // the case names
     val required = GraftVersions.footer(new java.io.File(files.head))
@@ -1146,13 +1147,13 @@ class MergeSpec extends SparkSpec {
     assert(opt == Map("base_version" -> 1L, "files_kept" -> 0L,
       "files_compacted" -> n0.toLong), opt.toString)
     assert(GraftVersions.manifest(dir, 2).size == 1)
-    assert(GraftVersions.isLayoutOnly(dir, 2))
+    assert(GraftVersions.Snapshot(dir, 2).layoutOnly)
     assert(kvRows("SELECT * FROM psql.tpcds.mgM") == all)
     // OPTIMIZE … ZORDER BY: re-cluster through the statement surface
     val zo = spark.sql("OPTIMIZE psql.tpcds.mgM ZORDER BY (k)").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(zo == Map("base_version" -> 2L, "files_replaced" -> 1L), zo.toString)
-    assert(GraftVersions.isLayoutOnly(dir, 3))
+    assert(GraftVersions.Snapshot(dir, 3).layoutOnly)
     assert(kvRows("SELECT * FROM psql.tpcds.mgM") == all)
     // VACUUM RETAIN 1 VERSIONS: only the current snapshot stays live
     val vac = spark.sql("VACUUM psql.tpcds.mgM RETAIN 1 VERSIONS").collect()

@@ -35,31 +35,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The files of `dir`'s current snapshot that file pruning keeps as
     * candidates for `pred` (manifest stats, then bloom sidecars). */
   protected def candidateFiles(dir: String,
-      pred: org.apache.spark.sql.Column): Set[String] = {
-    val base = graft.sources.GraftVersions.current(dir)
-    fileNames(graft.sources.GraftMerge.pruneByStats(spark, dir, base,
-      graft.sources.GraftVersions.manifest(dir, base), pred))
-  }
+      pred: org.apache.spark.sql.Column): Set[String] =
+    fileNames(graft.sources.GraftMerge.pruneByStats(spark,
+      graft.sources.GraftVersions.Snapshot.current(dir), pred))
 
   /** The candidates MERGE keeps for a source with key column `keyCol`. */
   protected def mergeCandidateFiles(dir: String,
-      source: org.apache.spark.sql.DataFrame, keyCol: String): Set[String] = {
-    val base = graft.sources.GraftVersions.current(dir)
-    fileNames(graft.sources.GraftMerge.mergeCandidates(spark, dir, base,
-      graft.sources.GraftVersions.manifest(dir, base),
+      source: org.apache.spark.sql.DataFrame, keyCol: String): Set[String] =
+    fileNames(graft.sources.GraftMerge.mergeCandidates(spark,
+      graft.sources.GraftVersions.Snapshot.current(dir),
       source.select(org.apache.spark.sql.functions.col(keyCol)).distinct(), keyCol))
-  }
 
   /** The files of `dir`'s current snapshot holding a row that matches
     * `pred` — what exact discovery finds; pruning keeps a superset. */
   protected def filesHolding(dir: String,
-      pred: org.apache.spark.sql.Column): Set[String] = {
-    val base = graft.sources.GraftVersions.current(dir)
-    fileNames(graft.sources.GraftVersions.read(spark, dir, base,
-      graft.sources.GraftVersions.manifest(dir, base)).filter(pred)
+      pred: org.apache.spark.sql.Column): Set[String] =
+    fileNames(graft.sources.GraftVersions.Snapshot.current(dir).read(spark)
+      .filter(pred)
       .select(org.apache.spark.sql.functions.col("_metadata.file_path"))
       .collect().map(_.getString(0)).toSeq)
-  }
 
   /** Every file of `dir`'s current snapshot. */
   protected def allFiles(dir: String): Set[String] =

@@ -389,7 +389,8 @@ class StreamingSpec extends SparkSpec {
     // every streamed delta equals the batch snapshot diff's added half —
     // the l05 equivalence that makes this a true incremental CDF
     (2 to 3).foreach { v =>
-      val (added, _) = GraftMerge.snapshotDiff(spark, dir, v - 1, v)
+      val (added, _) = GraftMerge.snapshotDiff(spark,
+        GraftVersions.Snapshot(dir, v - 1), GraftVersions.Snapshot(dir, v))
       val batchAdded = added.select(col("k"), col("v")).collect()
         .map(r => (r.getInt(0), r.getString(1))).toSet
       assert(acc(v) == batchAdded, s"v$v: streamed ${acc(v)} != batch $batchAdded")
@@ -534,7 +535,8 @@ class StreamingSpec extends SparkSpec {
     // file-granularity semantics: the delete's rewritten survivors
     // appear as removed (old file) AND inserted (new file)
     (2 to 3).foreach { v =>
-      val (added, removed) = GraftMerge.snapshotDiff(spark, dir, v - 1, v)
+      val (added, removed) = GraftMerge.snapshotDiff(spark,
+        GraftVersions.Snapshot(dir, v - 1), GraftVersions.Snapshot(dir, v))
       def kv(df: org.apache.spark.sql.DataFrame) = df.select(col("k"), col("v"))
         .collect().map(r => (r.getInt(0), r.getString(1))).toSet
       assert(acc.getOrElse((v, "insert"), Set.empty) == kv(added),
@@ -606,8 +608,8 @@ class StreamingSpec extends SparkSpec {
     GraftMerge.cluster(spark, dir, Seq("k"), targetFiles = 1)
     GraftVersions.commit(dir, Seq((4, "d")).toDF("k", "v"), overwrite = false)
     assert(GraftVersions.current(dir) == 5)
-    assert(GraftVersions.isLayoutOnly(dir, 3) && GraftVersions.isLayoutOnly(dir, 4))
-    assert(!GraftVersions.isLayoutOnly(dir, 2) && !GraftVersions.isLayoutOnly(dir, 5))
+    assert(GraftVersions.Snapshot(dir, 3).layoutOnly && GraftVersions.Snapshot(dir, 4).layoutOnly)
+    assert(!GraftVersions.Snapshot(dir, 2).layoutOnly && !GraftVersions.Snapshot(dir, 5).layoutOnly)
     // DSv2 source, both channels: the layout versions contribute ZERO
     // rows — without the skip, v3/v4 would replay the whole table as
     // delete+insert into every incremental consumer
@@ -640,7 +642,8 @@ class StreamingSpec extends SparkSpec {
     // compaction it reports the rewritten files on both sides even
     // though the row set is unchanged — the row-change feed and the
     // file-change diff answer different questions
-    val (added, removed) = GraftMerge.snapshotDiff(spark, dir, 2, 3)
+    val (added, removed) = GraftMerge.snapshotDiff(spark,
+      GraftVersions.Snapshot(dir, 2), GraftVersions.Snapshot(dir, 3))
     assert(added.count() > 0 && removed.count() > 0)
     assert(added.select(col("k")).collect().map(_.getInt(0)).toSet ==
       removed.select(col("k")).collect().map(_.getInt(0)).toSet)

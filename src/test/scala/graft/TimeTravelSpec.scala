@@ -179,6 +179,16 @@ class TimeTravelSpec extends SparkSpec {
     // old files only
     val v2 = spark.sql("SELECT * FROM psql.tpcds.tt7 VERSION AS OF 2")
     assert(v2.columns.toSeq == Seq("k", "v", "note") && v2.count() == 1)
+    // an UPDATE after the evolution rewrites the pre-evolution file
+    // through the evolved schema, while the pre-evolution snapshot still
+    // reads its original schema and values
+    spark.sql("UPDATE psql.tpcds.tt7 SET note = 'upd' WHERE k = 1")
+    assert(spark.sql("SELECT k, v, note FROM psql.tpcds.tt7").collect()
+      .map(r => (r.getInt(0), r.getString(1), Option(r.getString(2)))).toSet ==
+      Set((1, "a", Some("upd")), (2, "b", Some("fresh"))))
+    val v1 = spark.sql("SELECT * FROM psql.tpcds.tt7 VERSION AS OF 1")
+    assert(v1.columns.toSeq == Seq("k", "v"))
+    assert(v1.collect().map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((1, "a")))
     // unsupported changes fail loudly
     val e1 = intercept[Exception] {
       spark.sql("ALTER TABLE psql.tpcds.tt7 ALTER COLUMN note TYPE INT")
