@@ -2,7 +2,7 @@
 # Run a graft main directly (no sbt) — mirrors build.sbt javaOptions.
 # Usage: ./run-main.sh graft.Bench [--profile|--explain] [names...]
 #        ./run-main.sh graft.Harness <leg> [args...]
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="$(cd "$(dirname "$0")" && pwd)/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -414,8 +414,8 @@ object Loader {
               |TBLPROPERTIES('versioned'='true')
               |AS SELECT /*+ REPARTITION(4, n_nationkey) */ *
               |FROM nation_src""".stripMargin)
-      // NATIVE SQL: the DSv2 SupportsDelete seam pushes the condition
-      // as source filters into GraftMerge.deleteFrom's copy-on-write
+      // NATIVE SQL: routed by GraftDmlStatements into deleteFrom's
+      // copy-on-write path (only files holding matching rows rewrite)
       s.sql("DELETE FROM psql.tpcds.nations_del WHERE n_regionkey = 2")
       s.sql("""SELECT 2 AS version, n_nationkey, n_name, n_regionkey
               |FROM psql.tpcds.nations_del""".stripMargin)

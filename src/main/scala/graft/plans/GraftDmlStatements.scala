@@ -12,15 +12,13 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.sources.{GraftMerge, GraftVersionedTable}
 
-/** Native SQL `UPDATE` / `MERGE INTO` statements for graft versioned
-  * tables.
+/** Native SQL `DELETE` / `UPDATE` / `MERGE INTO` statements for graft
+  * versioned tables.
   *
   * The reference's only interface is a wire client issuing SQL text
   * (reference: data-loader/loader.py:25-39), so a DML verb that exists
-  * only as a Scala API is incomplete: `DELETE FROM` already routes
-  * through the DSv2 `SupportsDelete` seam (GraftVersionedTable), and
-  * this rule closes the remaining two verbs. Spark parses the
-  * statements into [[UpdateTable]]/[[MergeIntoTable]] and resolves
+  * only as a Scala API is incomplete. Spark parses the statements into
+  * [[DeleteFromTable]]/[[UpdateTable]]/[[MergeIntoTable]] and resolves
   * every expression; for tables implementing the heavyweight
   * `SupportsRowLevelOperations` seam it would then re-plan them as
   * generic scan+replace jobs — this rule instead routes the RESOLVED
@@ -37,6 +35,9 @@ import graft.sources.{GraftMerge, GraftVersionedTable}
 object GraftDmlStatements extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
+    case d @ DeleteFromTable(GraftTarget(path, _), condition) if d.resolved =>
+      GraftDeleteCommand(path, condition)
+
     case u @ UpdateTable(GraftTarget(path, _), assignments, condition)
         if u.resolved =>
       GraftUpdateCommand(path, condition, assignments.map(toNamedAssignment))
@@ -207,6 +208,16 @@ private object GraftDmlExpr {
     GraftBridge.column(e.transform {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     })
+  }
+}
+
+/** `DELETE FROM t WHERE …` → [[GraftMerge.deleteFrom]] (copy-on-write,
+  * O(touched files); a DELETE without WHERE arrives as `true`). */
+private[graft] case class GraftDeleteCommand(path: String, condition: Expression)
+  extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    GraftMerge.deleteFrom(spark, path, GraftDmlExpr.toColumn(condition))
+    Seq.empty
   }
 }
 

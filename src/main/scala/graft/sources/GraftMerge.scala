@@ -478,41 +478,47 @@ object GraftMerge {
       (snap.version, snap.files.size)
     }
 
-  /** ROW-level change feed between two snapshots (ADVICE/VERDICT r13
-    * #4): the file-granularity [[snapshotDiff]] reports a copy-on-write
-    * UPDATE as whole-file delete+insert churn; this joins the removed
-    * and added rows on the table's merge key and emits
-    * `update_preimage`/`update_postimage` pairs for keys present on
-    * both sides with CHANGED content, plain `insert`/`delete` for
-    * one-sided keys, and NOTHING for rows a rewrite carried unchanged
-    * — the per-row images a CDC consumer expects.
-    *
-    * Contract: `key` is unique per side (the upsert key every
-    * copy-on-write verb here maintains); a NULL key never matches
-    * (SQL join semantics), so null-keyed removed rows surface as
-    * deletes and added ones as inserts. Cost: one shuffled full-outer
-    * join over O(changed files' rows) — the same bound the file diff
-    * has; at 100 TB that is the commit's touched set, never the
-    * table. Layout-only rewrites (compaction) diff to EMPTY here,
-    * where the file feed reports full churn. */
+  /** ROW-level change feed between two snapshots: the file-granularity
+    * [[snapshotDiff]] reports a copy-on-write UPDATE as whole-file
+    * delete+insert churn; [[rowChanges]] joins its removed and added
+    * rows on the table's merge key. The change-data-feed stream runs
+    * the same body one version at a time (GraftCdfSource), so batch and
+    * stream feeds agree on every commit. Layout-only rewrites
+    * (compaction) diff to EMPTY here, where the file feed reports full
+    * churn. */
   def rowLevelDiff(spark: SparkSession, dir: String, v1: Int, v2: Int,
       key: String): DataFrame = {
     val (added, removed) = snapshotDiff(spark,
       Snapshot(dir, v1), Snapshot(dir, v2))
+    rowChanges(added, removed, key, s"$dir v$v1→v$v2")
+  }
+
+  /** Row-level changes between the `removed` and `added` rows of one
+    * diff (`what` names it in errors): `update_preimage`/
+    * `update_postimage` pairs for keys present on both sides with
+    * CHANGED content, plain `insert`/`delete` for one-sided keys, and
+    * NOTHING for rows a rewrite carried unchanged — the per-row images
+    * a CDC consumer expects. Columns: the data columns, then
+    * `_change_type`.
+    *
+    * Contract: `key` is unique per side (the upsert key every
+    * copy-on-write verb here maintains). A duplicate would cartesian
+    * the matched pairs and emit phantom updates, so it fails loudly;
+    * a NULL key never matches (SQL join semantics), so null-keyed
+    * removed rows surface as deletes and added ones as inserts. Cost:
+    * one shuffled full-outer join over O(changed files' rows) — at
+    * 100 TB the commit's touched set, never the table. */
+  private[graft] def rowChanges(added: DataFrame, removed: DataFrame,
+      key: String, what: String): DataFrame = {
     val cols = added.columns.toSeq
-    require(cols.contains(key),
-      s"$dir: rowLevelDiff key $key not in ${cols.mkString(", ")}")
-    // the key-join reconstruction is only sound for a UNIQUE key: a
-    // duplicate would cartesian the matched pairs and emit phantom
-    // update rows — fail loudly (mirrors the streaming reader's gate;
-    // null keys are exempt on both sides: they never join)
+    require(cols.contains(key), s"$what: key $key not in ${cols.mkString(", ")}")
     Seq("removed" -> removed, "added" -> added).foreach { case (side, df) =>
       val dup = df.filter(col(key).isNotNull).groupBy(col(key)).count()
         .filter(col("count") > 1).limit(1).collect()
       if (dup.nonEmpty) throw new IllegalStateException(
-        s"$dir: rowLevelDiff key $key is not unique in the $side rows " +
-          s"of v$v1→v$v2 (duplicate value ${dup.head.get(0)}); row-level " +
-          "CDF requires a unique key — consume the file-level feed instead")
+        s"$what: key $key is not unique in the $side rows (duplicate " +
+          s"value ${dup.head.get(0)}); row-level CDF requires a unique " +
+          "key — consume the file-level feed instead")
     }
     val pre = removed.select(struct(cols.map(col): _*).as("pre"))
     val post = added.select(struct(cols.map(col): _*).as("post"))

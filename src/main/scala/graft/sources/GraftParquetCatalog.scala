@@ -1156,11 +1156,12 @@ private[graft] object GraftVersions {
         case Array(v, t) => Some(v.stripPrefix("v").toInt -> t.toLong)
         case _ => None } }
 
-  /** Newest RETAINED snapshot committed at or before `micros`. */
+  /** Newest RETAINED snapshot committed at or before `micros`: the
+    * ledger's candidates newest first, stopping at the first live one —
+    * one manifest read when the newest candidate is retained. */
   def versionAt(dir: String, micros: Long): Option[Int] =
-    commitInstants(dir)
-      .filter { case (v, t) => t <= micros && isLive(dir, v) }
-      .sortBy(_._1).lastOption.map(_._1)
+    commitInstants(dir).collect { case (v, t) if t <= micros => v }
+      .sorted(Ordering[Int].reverse).find(isLive(dir, _))
 
   def earliestCommitMicros(dir: String): Option[Long] =
     commitInstants(dir)
@@ -1556,22 +1557,12 @@ private class GraftVersionedWriteBuilder(path: String)
 
 /** A versioned table after creation: scans delegate to the wrapped
   * [[ParquetTable]] over ONE snapshot's manifest files; writes commit
-  * a new snapshot through [[GraftVersions]].
-  *
-  * Implements the DSv2 [[SupportsDelete]] seam, so `DELETE FROM t
-  * WHERE p` is a NATIVE SQL statement: Spark pushes the condition as
-  * source filters, each is rebuilt into a Column, and the delete runs
-  * through [[GraftMerge.deleteFrom]]'s copy-on-write path (touched
-  * files only, pre-delete snapshot preserved). File pruning resolves
-  * the rebuilt Column against the snapshot schema and walks it once,
-  * like every other predicate (GraftMerge `domain`). A condition that does
-  * not translate to source filters is rejected by `canDeleteWhere` —
-  * Spark then fails the statement loudly instead of deleting the
-  * wrong rows. */
+  * a new snapshot through [[GraftVersions]]. `DELETE`, `UPDATE` and
+  * `MERGE` statements on it route through GraftDmlStatements into
+  * [[GraftMerge]]'s copy-on-write verbs. */
 private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String,
     version: Int)
-  extends Table with SupportsRead with SupportsWrite
-  with org.apache.spark.sql.connector.catalog.SupportsDelete {
+  extends Table with SupportsRead with SupportsWrite {
   override def name(): String = parquet.name
   override def schema(): StructType = parquet.schema
   override def partitioning(): Array[Transform] = Array.empty
@@ -1589,52 +1580,4 @@ private[graft] class GraftVersionedTable(parquet: ParquetTable, val path: String
       GraftTableStats.scan(path, version))
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftVersionedWriteBuilder(path)
-
-  override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Boolean =
-    filters.forall(f => GraftVersionedTable.filterToColumn(f).isDefined)
-
-  override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Unit = {
-    // conjunction of the pushed filters; no filters = delete all rows
-    val cond = filters
-      .map(f => GraftVersionedTable.filterToColumn(f).getOrElse(
-        throw new UnsupportedOperationException(
-          s"$name: DELETE condition not translatable: $f")))
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    GraftMerge.deleteFrom(SparkSession.active, path, cond)
-  }
-}
-
-private[graft] object GraftVersionedTable {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{col, lit}
-  import org.apache.spark.sql.sources._
-
-  /** Rebuild a pushed source [[Filter]] as a [[Column]] predicate —
-    * the exact semantics Spark assigned the filter, so the
-    * copy-on-write delete removes precisely the rows SQL matched. */
-  def filterToColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case And(l, r) =>
-      for (lc <- filterToColumn(l); rc <- filterToColumn(r)) yield lc && rc
-    case Or(l, r) =>
-      for (lc <- filterToColumn(l); rc <- filterToColumn(r)) yield lc || rc
-    case Not(c) => filterToColumn(c).map(!_)
-    case AlwaysTrue() => Some(lit(true))
-    case AlwaysFalse() => Some(lit(false))
-    case _ => None
-  }
 }

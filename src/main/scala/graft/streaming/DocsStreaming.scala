@@ -28,32 +28,6 @@ object DocsStreaming {
       .dropDuplicates("digest")
       .select(col("doc_id"), col("digest"))
 
-  /** Streaming upsert into a versioned lakehouse table — the CDC-sink
-    * shape (l04's MERGE driven by an unbounded source): each
-    * micro-batch copy-on-write-merges into the table via
-    * [[graft.sources.GraftMerge.mergeInto]], so every micro-batch
-    * becomes one snapshot commit — the ingest history is
-    * time-travelable for free (`VERSION AS OF` any micro-batch
-    * boundary), untouched files are reused by reference, and a reader
-    * mid-stream sees a consistent snapshot, never a torn batch.
-    * Micro-batches are sequential by Structured Streaming's contract,
-    * so the read-modify-write merge never hits its concurrent-commit
-    * conflict path (a SECOND writer outside the stream would —
-    * loudly, failing the batch and the query rather than losing
-    * rows). At 100 TB each commit costs O(touched files + batch), and
-    * retention (l03's expire) bounds the snapshot history the stream
-    * accumulates. MergeSpec gates batch-sequential semantics and the
-    * per-batch snapshot trail. */
-  def mergeStream(dir: String, keyCol: String, updates: DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.sources.GraftMerge.mergeInto(
-            batch.sparkSession, dir, batch, keyCol)
-        ()
-      }
-
   /** EXACTLY-ONCE microbatch sinks. `foreachBatch` alone is
     * at-least-once: after a crash between the table commit and the
     * checkpoint write, Structured Streaming REPLAYS the last batch —
@@ -140,7 +114,18 @@ object DocsStreaming {
     }
   }
 
-  /** [[mergeStream]] with the exactly-once token attached. */
+  /** Streaming upsert into a versioned lakehouse table — the CDC-sink
+    * shape (l04's MERGE driven by an unbounded source): each
+    * micro-batch copy-on-write-merges into the table through
+    * [[idempotentMergeSink]], so every micro-batch becomes one snapshot
+    * commit, exactly once across crash replays — the ingest history is
+    * time-travelable at micro-batch boundaries (`VERSION AS OF`),
+    * untouched files are reused by reference, and a reader mid-stream
+    * sees a consistent snapshot, never a torn batch. Micro-batches are
+    * sequential by Structured Streaming's contract, so the merge's
+    * conflict path fires only for a SECOND writer outside the stream —
+    * loudly, failing the batch rather than losing rows. MergeSpec gates
+    * the per-batch snapshot trail and the crash-replay interleaving. */
   def mergeStreamExactlyOnce(dir: String, keyCol: String, appId: String,
       updates: DataFrame)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -148,67 +133,5 @@ object DocsStreaming {
     updates.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
       sink(b, id); ()
     }
-  }
-
-  /** Change-data-feed as a STREAMING source — l05's snapshot diff made
-    * incremental: `readStream` over the versioned table's manifest
-    * ledger, so each newly PUBLISHED snapshot becomes one micro-batch
-    * whose rows are exactly that snapshot's ADDED files (manifest
-    * set-difference against the predecessor — `snapshotDiff(N-1, N)`'s
-    * added half, which StreamingSpec equates; NOT the `v<N>-` filename
-    * prefix, which silently missed a RESTORE's re-added files because
-    * restored files keep their original prefixes — ADVICE r13).
-    * `consume` receives (version, addedRows) per snapshot.
-    *
-    * Scale shape: the stream reads manifest LINES (O(changed files),
-    * the same driver-side budget as GraftMerge's touched-file names) and
-    * each batch scans only the added data files — a downstream consumer
-    * (e.g. the s14 index-append path) tracks a 100 TB table at the cost
-    * of its deltas, never a rescan. Tombstoned (expired) manifests
-    * carry only a `#expired` marker line and contribute nothing; a
-    * metadata-only schema-evolution snapshot adds no files and yields
-    * an empty delta. Removals are the manifests' complement — they stay
-    * batch-side in [[graft.sources.GraftMerge.snapshotDiff]] (a delete
-    * feed needs the PREVIOUS manifest, which the append-only file
-    * stream deliberately does not replay). */
-  def cdfStream(spark: org.apache.spark.sql.SparkSession, dir: String)(
-      consume: (Int, DataFrame) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val manifests = spark.readStream
-      // one manifest per micro-batch: the snapshot is the unit of change
-      .option("maxFilesPerTrigger", "1")
-      .text(s"$dir/_manifests/v*.txt")
-      // a manifest line is the file name, optionally followed by
-      // tab-separated data-skipping stats — keep the name only
-      .select(split(col("value"), "\t").getItem(0).as("file"),
-        regexp_extract(input_file_name(), "v(\\d+)\\.txt$", 1)
-          .cast("int").as("version"))
-      // keep data-file lines plus the layout-only header; tombstone
-      // markers and other comment headers drop out. The ADDED subset
-      // is decided per version in the sink (set-diff needs the
-      // predecessor manifest, a driver-side metadata read).
-      .filter(expr("NOT startswith(file, '#') OR file = '#layout'"))
-    manifests.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val byVersion = batch.collect()
-          .map(r => r.getInt(1) -> r.getString(0))
-          .groupBy(_._1)
-        byVersion.toSeq.sortBy(_._1).foreach { case (v, rows) =>
-          // a layout-only commit (compaction/re-clustering) rewrote
-          // files without changing rows — no delta for consumers
-          if (!rows.exists(_._2 == "#layout")) {
-            // added = this manifest minus the predecessor's (by name):
-            // one driver-side manifest read, O(changed files) — the
-            // same rule GraftCdfSource.changedFiles applies
-            val prev =
-              graft.sources.GraftVersions.Snapshot(dir, v - 1).names.toSet
-            val added = rows.map(_._2).filterNot(prev.contains)
-            if (added.nonEmpty)
-              consume(v, batch.sparkSession.read.parquet(
-                added.map(n => s"$dir/data/$n").toIndexedSeq: _*))
-          }
-        }
-        ()
-      }
   }
 }

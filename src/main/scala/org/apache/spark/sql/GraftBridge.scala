@@ -101,6 +101,16 @@ object GraftBridge {
       .map(s => s.blockManagerId.executorId -> s.rddBlocks.size)
       .filter(_._1 != org.apache.spark.SparkContext.DRIVER_IDENTIFIER).toMap
 
+  /** `df` as ONE streaming leaf, the form a V1 streaming `Source`
+    * returns a micro-batch in: its whole plan (a join included) runs
+    * as the batch's RDD, so Spark never plans it as a stream-stream
+    * operator. */
+  def streamingLeaf(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema,
+      isStreaming = true)
+  }
+
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, IsNotNull, IsNull, Literal}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftMerge, GraftVersionedTable, GraftVersions}
+import graft.sources.{GraftMerge, GraftVersions}
 
 /** Bloom-sidecar point skipping (GraftBlooms): the layout-independent
   * file-pruning channel for equality/IN predicates. Min/max manifest
@@ -42,12 +42,11 @@ class BloomSkipSpec extends SparkSpec {
       val dir = buildScattered("bl1", "k")
       val n = GraftVersions.manifest(dir, 1).size
       assert(n >= 4, s"fragmentation precondition: $n files")
-      // candidate pins: the point and the SQL DELETE's IN list (rebuilt
-      // from its pushed source filter) keep only the files holding them
+      // candidate pins: the point and the SQL DELETE's IN list keep
+      // only the files holding them
       val hold13 = filesHolding(dir, col("k") === 13)
       assert(hold13.size == 1 && candidateFiles(dir, col("k") === 13) == hold13)
-      val inList = GraftVersionedTable.filterToColumn(
-        org.apache.spark.sql.sources.In("k", Array(5, 21))).get
+      val inList = col("k").isin(5, 21)
       val holdIn = filesHolding(dir, inList)
       assert(holdIn.nonEmpty && holdIn.size < n)
       assert(candidateFiles(dir, inList) == holdIn)

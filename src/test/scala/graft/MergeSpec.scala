@@ -323,7 +323,8 @@ class MergeSpec extends SparkSpec {
       .schema("k INT, v STRING")
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/*.parquet")
-    val q = graft.streaming.DocsStreaming.mergeStream(dir, "k", stream).start()
+    val q = graft.streaming.DocsStreaming
+      .mergeStreamExactlyOnce(dir, "k", "mg5stream", stream).start()
     try {
       q.processAllAvailable()
       assert(kvRows("SELECT * FROM psql.tpcds.mg5") ==
@@ -438,19 +439,31 @@ class MergeSpec extends SparkSpec {
     spark.sql("""CREATE TABLE psql.tpcds.mgC TBLPROPERTIES('versioned'='true')
                 |AS SELECT * FROM mg_srcC""".stripMargin)
     val dir = s"$root/mgC.parquet"
-    // native SQL statement → SupportsDelete → GraftMerge.deleteFrom
+    // native SQL statement → GraftDmlStatements → GraftMerge.deleteFrom
     spark.sql("DELETE FROM psql.tpcds.mgC WHERE k = 2 OR v = 'c'")
     assert(GraftVersions.current(dir) == 2)
     assert(kvRows("SELECT * FROM psql.tpcds.mgC") == Set(1 -> "a"))
     // the pre-delete snapshot is intact (copy-on-write, not in-place)
     assert(kvRows("SELECT * FROM psql.tpcds.mgC VERSION AS OF 1") ==
       Set(1 -> "a", 2 -> "b", 3 -> "c"))
-    // a condition that does not translate to source filters must fail
-    // loudly, never delete the wrong rows
+    // any resolved condition deletes exactly the rows the Scala API
+    // deletes: `k % 2 = 0` translates to no source filter, and the
+    // statement route needs none
+    Seq((1, "a"), (2, "b"), (4, "d"), (5, "e")).toDF("k", "v")
+      .createOrReplaceTempView("mg_srcC2")
+    Seq("mgC2", "mgC3").foreach(t =>
+      spark.sql(s"""CREATE TABLE psql.tpcds.$t TBLPROPERTIES('versioned'='true')
+                   |AS SELECT * FROM mg_srcC2""".stripMargin))
+    spark.sql("DELETE FROM psql.tpcds.mgC2 WHERE k % 2 = 0")
+    GraftMerge.deleteFrom(spark, s"$root/mgC3.parquet", col("k") % 2 === 0)
+    assert(kvRows("SELECT * FROM psql.tpcds.mgC2") == Set(1 -> "a", 5 -> "e"))
+    assert(kvRows("SELECT * FROM psql.tpcds.mgC3") ==
+      kvRows("SELECT * FROM psql.tpcds.mgC2"))
+    // a subquery condition must fail loudly, never delete the wrong rows
     val e = intercept[Exception] {
-      spark.sql("DELETE FROM psql.tpcds.mgC WHERE k % 2 = 0")
+      spark.sql("DELETE FROM psql.tpcds.mgC WHERE k IN (SELECT k FROM mg_srcC)")
     }
-    assert(e.getMessage != null)
+    assert(e.getMessage != null && e.getMessage.contains("subquer"), e.getMessage)
     assert(kvRows("SELECT * FROM psql.tpcds.mgC") == Set(1 -> "a"))
     // unconditional SQL DELETE empties the table as a new snapshot
     spark.sql("INSERT INTO psql.tpcds.mgC VALUES (9, 'z')")

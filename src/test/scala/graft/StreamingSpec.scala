@@ -373,10 +373,17 @@ class StreamingSpec extends SparkSpec {
       Seq((1, "a"), (2, "b")).toDF("k", "v"), overwrite = false)
     GraftVersions.commit(dir, Seq((3, "c")).toDF("k", "v"), overwrite = false)
     val acc = new scala.collection.concurrent.TrieMap[Int, Set[(Int, String)]]
-    val q = graft.streaming.DocsStreaming.cdfStream(spark, dir) { (v, df) =>
-      acc(v) = df.select(col("k"), col("v")).collect()
-        .map(r => (r.getInt(0), r.getString(1))).toSet
-    }.start()
+    val q = spark.readStream
+      .format("graft.streaming.GraftCdfProvider")
+      .option("path", dir).load()
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        batch.select(col("k"), col("v"), col("_cdf_version")).collect()
+          .groupBy(_.getInt(2)).foreach { case (v, rows) =>
+            acc(v) = rows.map(r => (r.getInt(0), r.getString(1))).toSet
+          }
+        ()
+      }.start()
     try {
       q.processAllAvailable()
       assert(acc.keySet == Set(1, 2), acc.toString)
@@ -630,14 +637,6 @@ class StreamingSpec extends SparkSpec {
     assert(acc == scala.collection.concurrent.TrieMap(
       (1, "insert") -> Set(1, 2), (2, "insert") -> Set(3),
       (5, "insert") -> Set(4)), acc.toString)
-    // the text-ledger stream applies the same skip
-    val tacc = new scala.collection.concurrent.TrieMap[Int, Set[Int]]
-    val tq = graft.streaming.DocsStreaming.cdfStream(spark, dir) { (v, df) =>
-      tacc(v) = df.select(col("k")).collect().map(_.getInt(0)).toSet
-    }.start()
-    try tq.processAllAvailable() finally tq.stop()
-    assert(tacc == scala.collection.concurrent.TrieMap(
-      1 -> Set(1, 2), 2 -> Set(3), 5 -> Set(4)), tacc.toString)
     // the batch snapshot diff stays FILE-level by contract: across the
     // compaction it reports the rewritten files on both sides even
     // though the row set is unchanged — the row-change feed and the
@@ -690,14 +689,6 @@ class StreamingSpec extends SparkSpec {
         (if (ch == "insert") 1 else -1))
     }
     assert(state.filter(_._2 > 0).keySet == Set(1, 2), state.toString)
-    // the text-ledger stream applies the same set-diff rule
-    val tacc = new scala.collection.concurrent.TrieMap[Int, Set[Int]]
-    val tq = graft.streaming.DocsStreaming.cdfStream(spark, dir) { (v, df) =>
-      tacc(v) = df.select(col("k")).collect().map(_.getInt(0)).toSet
-    }.start()
-    try tq.processAllAvailable() finally tq.stop()
-    assert(tacc == scala.collection.concurrent.TrieMap(
-      1 -> Set(1, 2), 2 -> Set(9), 3 -> Set(1, 2)), tacc.toString)
   }
 
   test("row-level CDF: preimage/postimage pairs, carried rows suppressed") {
@@ -750,6 +741,61 @@ class StreamingSpec extends SparkSpec {
           rows.map { case (k, vv) => (k, vv, ct) } }.toSet
       assert(batchRows == streamRows, s"v$v→${v + 1}: $batchRows vs $streamRows")
     }
+    // DATE, DECIMAL and TIMESTAMP columns stream through the insert,
+    // delete and row-level channels and equal the batch diffs
+    val tdir = tempDir("graft-cdf8t").toString + "/tbl"
+    new java.io.File(tdir).mkdirs()
+    GraftVersions.commit(tdir,
+      Seq((1, "2024-01-01", "1.25", "2024-01-01 10:00:00"),
+        (2, "2024-02-29", "20.50", "2024-02-29 23:59:59"),
+        (3, "1999-12-31", "-3.10", "1999-12-31 00:00:01"))
+        .toDF("k", "d", "amt", "ts")
+        .select(col("k"), col("d").cast("date").as("d"),
+          col("amt").cast("decimal(12,2)").as("amt"),
+          col("ts").cast("timestamp").as("ts"))
+        .coalesce(1), overwrite = false)
+    GraftMerge.updateWhere(spark, tdir, col("k") === 2,
+      Seq("amt" -> org.apache.spark.sql.functions.lit("99.99").cast("decimal(12,2)")))
+    GraftMerge.deleteFrom(spark, tdir, col("k") === 3)
+    def typedRow(r: org.apache.spark.sql.Row): String =
+      Seq("k", "d", "amt", "ts").map(c => String.valueOf(r.getAs[Any](c))).mkString("|")
+    def drain(opts: (String, String)*): Set[(Int, String, String)] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String)]()
+      val tq = opts.foldLeft(spark.readStream
+          .format("graft.streaming.GraftCdfProvider").option("path", tdir)) {
+          case (r, (k, v)) => r.option(k, v)
+        }.load()
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.collect().foreach(r => got.add((r.getAs[Int]("_cdf_version"),
+            r.getAs[String]("_change_type"), typedRow(r))))
+          ()
+        }.start()
+      try tq.processAllAvailable() finally tq.stop()
+      got.toArray.map(_.asInstanceOf[(Int, String, String)]).toSet
+    }
+    def tagged(df: org.apache.spark.sql.DataFrame, v: Int, ct: Option[String]) =
+      df.collect().map(r =>
+        (v, ct.getOrElse(r.getAs[String]("_change_type")), typedRow(r))).toSet
+    val fileFeed = drain("includeRemoved" -> "true")
+    val rowFeed = drain("rowLevel" -> "true", "mergeKey" -> "k")
+    val v1 = tagged(GraftVersions.Snapshot(tdir, 1).read(spark), 1, Some("insert"))
+    assert(v1.size == 3 && fileFeed.filter(_._1 == 1) == v1, fileFeed.toString)
+    assert(rowFeed.filter(_._1 == 1) == v1, rowFeed.toString)
+    (2 to 3).foreach { v =>
+      val (added, removed) = GraftMerge.snapshotDiff(spark,
+        GraftVersions.Snapshot(tdir, v - 1), GraftVersions.Snapshot(tdir, v))
+      assert(fileFeed.filter(_._1 == v) ==
+        tagged(added, v, Some("insert")) ++ tagged(removed, v, Some("delete")),
+        s"v$v file channels diverged from batch diff: $fileFeed")
+      assert(rowFeed.filter(_._1 == v) ==
+        tagged(GraftMerge.rowLevelDiff(spark, tdir, v - 1, v, "k"), v, None),
+        s"v$v row channel diverged from batch rowLevelDiff: $rowFeed")
+    }
+    assert(rowFeed.filter(_._1 == 2).map(_._2) ==
+      Set("update_preimage", "update_postimage"), rowFeed.toString)
+    assert(rowFeed.filter(_._1 == 3).map(r => (r._2, r._3)) ==
+      Set("delete" -> "3|1999-12-31|-3.10|1999-12-31 00:00:01.0"), rowFeed.toString)
   }
 
   test("row-level CDF rejects a non-unique merge key loudly (batch + stream)") {
