@@ -332,24 +332,26 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
   /** Schema evolution on VERSIONED tables: `ALTER TABLE … ADD COLUMN`
     * and `DROP COLUMN` are metadata-only snapshot commits — no data
     * file is touched, the new snapshot's manifest is exactly the
-    * predecessor's. An added (nullable, appended-at-end) column reads
-    * back NULL from every pre-evolution file; a dropped column's
-    * physical data is simply pruned by the reader (and stays readable
-    * through pre-drop snapshots). Snapshots before an evolution keep
-    * their own schema (TimeTravelSpec gates both directions), and a
-    * dropped name can never be re-added — parquet resolves by name,
-    * so resurrection would read pre-drop values instead of nulls.
-    * This is the first lifecycle verb a corpus refresh needs after
-    * MERGE: metadata columns come and go without rewriting 100 TB. */
+    * predecessor's plus the evolved schema as its `#schema` header
+    * ([[GraftVersions.evolveSchema]]). An added (nullable,
+    * appended-at-end) column reads back NULL from every pre-evolution
+    * file; a dropped column's physical data is simply pruned by the
+    * reader (and stays readable through pre-drop snapshots). Snapshots
+    * before an evolution keep their own schema (TimeTravelSpec gates
+    * both directions), and a dropped name can never be re-added —
+    * parquet resolves by name, so resurrection would read pre-drop
+    * values instead of nulls. The guard reads the current snapshot's
+    * `#dropped` names plus its schema's. This is the first lifecycle
+    * verb a corpus refresh needs after MERGE: metadata columns come and
+    * go without rewriting 100 TB. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val table = ident.name()
     val dir = versionedDir(ident, "ALTER TABLE (ADD/DROP COLUMN as a metadata-only snapshot commit)")
     val snap = GraftVersions.Snapshot.current(dir)
     val base: StructType = snap.schema.orElse(created.get(table))
       .getOrElse(snap.read(spark).schema)
-    // durable pre-history base: backs the ADD-after-DROP resurrection
-    // guard and makes pre-evolution snapshot schemas explicit
-    GraftVersions.recordBaseSchema(dir, base)
+    // every name that ever left the schema, and every name in it now
+    val everNamed = snap.dropped ++ base.fieldNames.map(_.toLowerCase)
     val evolved = changes.foldLeft(base) {
       case (sch, add: TableChange.AddColumn) =>
         require(add.fieldNames().length == 1,
@@ -360,7 +362,7 @@ class GraftParquetCatalog extends TableCatalog with SupportsNamespaces {
         // parquet resolves by NAME (no field ids): a re-added dropped
         // name would resurrect old physical values from pre-drop files
         // instead of reading null
-        require(!GraftVersions.everNamed(dir, base).contains(name.toLowerCase),
+        require(!everNamed.contains(name.toLowerCase),
           s"$catalogName.$table: column $name was previously dropped — " +
             "re-adding it would resurrect pre-drop values (pick a new name)")
         require(add.isNullable,
@@ -560,12 +562,20 @@ private[graft] final case class GraftNullStat(nulls: Long, rows: Long)
   * `_current` pointer advances monotonically under a file lock; a
   * reader between link and flip simply sees the previous snapshot.
   *
+  * A version's manifest is the ONE record of that snapshot's state: its
+  * data files with their stats, and header lines for the layout-only
+  * flag, a stream's `#txn` token, the schema in force (`#schema`,
+  * carried forward by every commit once the table has evolved) and the
+  * names that ever left the schema (`#dropped`, carried the same way).
+  * No other file holds per-snapshot metadata, so a snapshot's state is
+  * published atomically with the snapshot itself.
+  *
   * Reads go through one value: [[GraftVersions.Snapshot]] reads a
-  * version's manifest once and derives its files, per-file stats,
-  * liveness, layout flag and (lazily) schema from those lines. Every
-  * reader of a versioned snapshot — the catalog's loads and ALTER, the
-  * copy-on-write verbs and [[mergeCommit]], ANALYZE, DETAIL and the
-  * change-data feed — takes that value instead of re-reading. */
+  * version's manifest once and parses every header and line; it is the
+  * only manifest parser. Every reader of a versioned snapshot — the
+  * catalog's loads and ALTER, the copy-on-write verbs and
+  * [[mergeCommit]], ANALYZE, DETAIL, the change-data feed, [[lastTxn]]
+  * and [[expire]] — takes that value instead of re-reading. */
 private[graft] object GraftVersions {
   /** The filesystem seam the commit protocol stands on (verdict r17
     * #4): link-test-and-set, atomic overwrite, table lock, ledger
@@ -579,8 +589,10 @@ private[graft] object GraftVersions {
   private def io: GraftCommitIo = ioOverride.getOrElse(PosixCommitIo)
 
   def dataDir(dir: String) = new java.io.File(dir, "data")
+  private def manifestsDir(dir: String) = new java.io.File(dir, "_manifests")
   def manifestFile(dir: String, v: Int) =
-    new java.io.File(new java.io.File(dir, "_manifests"), s"v$v.txt")
+    new java.io.File(manifestsDir(dir), s"v$v.txt")
+  private val manifestName = "^v(\\d+)\\.txt$".r
   private def currentFile(dir: String) = new java.io.File(dir, "_current")
 
   /** Read the `_current` pointer. The writer publishes it by atomic
@@ -615,11 +627,13 @@ private[graft] object GraftVersions {
     * and publish a commit that silently never joins the chain (the
     * exact lost-update MergeSpec's expire-race gate reproduces).
     *
-    * A tombstone PRESERVES the expired manifest's state as comment
-    * lines — `#expired <epochMillis>` header, one `#f <name>` line per
-    * data file, any `#schema` header carried through — so physical file
-    * deletion can be deferred past the orphan grace window (see
-    * [[expire]]) while [[manifest]] still reads the version as empty. */
+    * A tombstone keeps what outlives the snapshot as comment lines —
+    * `#expired <epochMillis>` header, the `#txn` headers, one `#f
+    * <name>` line per data file — so physical file deletion can be
+    * deferred past the orphan grace window (see [[expire]]) while
+    * [[manifest]] still reads the version as empty. It drops `#schema`
+    * and `#dropped`: a tombstoned version is never a commit's
+    * predecessor and never a restore source, so nothing reads them. */
   private val expiredMarker = "#expired"
 
   /** A manifest line is `<fileName>` optionally followed by
@@ -635,32 +649,72 @@ private[graft] object GraftVersions {
     * every downstream incremental consumer as delete+insert. */
   private val layoutMarker = "#layout"
 
+  /** Header kinds a live manifest may carry before its file lines:
+    * `#schema <json>` is the schema in force from this version on, and
+    * `#dropped <json array>` the lower-cased names that ever left the
+    * schema (the ADD COLUMN resurrection guard). Once written, every
+    * later commit copies both ([[Snapshot.carried]]). */
+  private val schemaTag = "#schema "
+  private val droppedTag = "#dropped "
+  private val txnTag = "#txn "
+  private val keptTag = "#f "
+  private lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Snapshot `v` of the table at `dir`, resolved once: its manifest is
     * read in ONE file read, and everything a statement needs from the
-    * snapshot derives from those lines — liveness, the layout-only
-    * flag, the data files, their embedded column stats, and the schema
-    * in force. A statement resolves one Snapshot and passes the value
-    * down to its pruning, discovery, rewrite and commit, so no helper
-    * re-reads the manifest or re-resolves the schema. A missing or
-    * tombstoned manifest has no lines (an expired version reads as
-    * empty). */
+    * snapshot derives from those lines — liveness and expiry instant,
+    * the layout-only flag, `#txn` tokens, the schema in force, the
+    * dropped names, the data files and their embedded column stats (or
+    * a tombstone's preserved file names). A statement resolves one
+    * Snapshot and passes the value down to its pruning, discovery,
+    * rewrite and commit, so no helper re-reads the manifest or
+    * re-resolves the schema. A missing or tombstoned manifest has no
+    * lines (an expired version reads as empty). */
   final class Snapshot private (val dir: String, val version: Int,
       raw: Option[Seq[String]]) {
+    private val comments = raw.getOrElse(Nil).filter(_.startsWith("#"))
+    private def header(tag: String): Option[String] =
+      comments.collectFirst { case l if l.startsWith(tag) => l.stripPrefix(tag) }
+    /** The tombstone's expiry instant (epoch millis; a legacy bare
+      * `#expired` reads as 0), None for a live or missing manifest. */
+    val expiredAt: Option[Long] =
+      raw.flatMap(_.headOption).filter(_.startsWith(expiredMarker))
+        .map(_.stripPrefix(expiredMarker).trim)
+        .map(s => if (s.isEmpty) 0L else s.toLong)
     /** The manifest exists and is not an `#expired` tombstone. */
-    val live: Boolean = raw.exists(!_.headOption.exists(_.startsWith(expiredMarker)))
+    val live: Boolean = raw.isDefined && expiredAt.isEmpty
     /** Committed as layout-only (`#layout` header). A tombstone loses
-      * the header with the rest of its lines, which is fine — readers
-      * skip expired versions by liveness first. */
-    val layoutOnly: Boolean = raw.exists(_.contains(layoutMarker))
+      * the header, which is fine — readers skip expired versions by
+      * liveness first. */
+    val layoutOnly: Boolean = comments.contains(layoutMarker)
+    /** Streaming-transaction tokens (`#txn <appId> <batchId>`), kept by
+      * tombstones: appId → batchId. */
+    lazy val txns: Map[String, Long] = comments
+      .filter(_.startsWith(txnTag)).map(_.stripPrefix(txnTag).trim.split(" ", 2))
+      .collect { case Array(app, batch) => app -> batch.trim.toLong }.toMap
+    /** A tombstone's preserved data-file names (`#f` lines). */
+    lazy val preserved: Seq[String] =
+      comments.filter(_.startsWith(keptTag)).map(_.stripPrefix(keptTag))
+    /** The schema recorded in this manifest (`#schema` header), if the
+      * table has evolved. */
+    lazy val recordedSchema: Option[StructType] =
+      header(schemaTag).map(DataType.fromJson(_).asInstanceOf[StructType])
+    /** Lower-cased names that ever left the schema (`#dropped`). */
+    lazy val dropped: Set[String] = header(droppedTag).fold(Set.empty[String])(
+      json.readValue(_, classOf[Array[String]]).toSet)
+    /** The header lines every successor commit copies: the schema
+      * record and the dropped names, when present. */
+    def carried: Seq[String] =
+      comments.filter(l => l.startsWith(schemaTag) || l.startsWith(droppedTag))
     /** Raw (non-comment) manifest lines, stats included — the form
       * commits carry forward so kept-by-reference files KEEP their
       * skipping stats across snapshots. */
-    val lines: Seq[String] =
+    lazy val lines: Seq[String] =
       raw.getOrElse(Nil).filter(l => l.nonEmpty && !l.startsWith("#"))
     /** Data-file names, in manifest order. */
-    val names: Seq[String] = lines.map(lineName)
+    lazy val names: Seq[String] = lines.map(lineName)
     /** Data files as absolute paths, in manifest order. */
-    val files: Seq[String] =
+    lazy val files: Seq[String] =
       names.map(n => new java.io.File(dataDir(dir), n).getAbsolutePath)
 
     /** Per-file column stats embedded in the manifest: fileName →
@@ -703,12 +757,14 @@ private[graft] object GraftVersions {
     }.toMap
 
     /** The schema this snapshot reads with, resolved on the driver on
-      * first use: the evolution record in force ([[schemaAt]]), else the
-      * footer of the first file — a never-evolved table's files are
+      * first use: its own `#schema` header ([[recordedSchema]]: every
+      * manifest of an evolved table carries one), else the footer of
+      * its first file — a never-evolved table's files are
       * schema-homogeneous — without the one-task job Spark's schema
-      * inference runs. None only when there is no record and no file. */
+      * inference runs. No other file is read. None only when there is
+      * no header and no file. */
     lazy val schema: Option[StructType] =
-      schemaAt(dir, version).orElse(files.headOption.map(footerSchema))
+      recordedSchema.orElse(files.headOption.map(footerSchema))
 
     /** `subset` of this snapshot's files (default all) read with
       * [[schema]]. After an ADD COLUMN the files are
@@ -729,6 +785,7 @@ private[graft] object GraftVersions {
   }
 
   object Snapshot {
+    /** The one place a manifest file is read. */
     def apply(dir: String, v: Int): Snapshot = {
       val f = manifestFile(dir, v)
       val raw =
@@ -739,6 +796,13 @@ private[graft] object GraftVersions {
 
     /** The snapshot the `_current` pointer names. */
     def current(dir: String): Snapshot = apply(dir, GraftVersions.current(dir))
+
+    /** Every published manifest, live or tombstoned, in version order:
+      * one `_manifests/` listing and one read per manifest. A manifest
+      * is never deleted, so every listed version reads. */
+    def all(dir: String): Seq[Snapshot] =
+      Option(manifestsDir(dir).list()).getOrElse(Array.empty).toSeq
+        .collect { case manifestName(k) => k.toInt }.sorted.map(apply(dir, _))
   }
 
   /** Snapshot `v` exists and is not expired. */
@@ -747,15 +811,15 @@ private[graft] object GraftVersions {
   /** Snapshot `v`'s data files as absolute paths. */
   def manifest(dir: String, v: Int): Seq[String] = Snapshot(dir, v).files
 
-  /** The newest LIVE version at or below `v` (0 if none). Commit's
-    * predecessor chain consults this instead of blindly reading `v`:
-    * normally one `isLive` check (the pointer's version is live), but
-    * after an abandoned rollback a tombstoned manifest can sit ABOVE
-    * the pointer, and an append must chain past it. */
-  private[graft] def newestLiveAtOrBelow(dir: String, v: Int): Int = {
-    var i = v
-    while (i > 0 && !isLive(dir, i)) i -= 1
-    i
+  /** The newest LIVE snapshot at or below `v` (the empty version 0 if
+    * none) — the predecessor every chaining commit builds on. Normally
+    * one read (the pointer's version is live), but after an abandoned
+    * rollback a tombstoned manifest can sit ABOVE the pointer, and a
+    * commit must chain past it. */
+  private[graft] def newestLiveAtOrBelow(dir: String, v: Int): Snapshot = {
+    var s = Snapshot(dir, v)
+    while (s.version > 0 && !s.live) s = Snapshot(dir, s.version - 1)
+    s
   }
 
   /** Manifest-level data skipping, collected at COMMIT time: per-file
@@ -946,127 +1010,42 @@ private[graft] object GraftVersions {
 
   // --- schema evolution (metadata-only commits) --------------------------
 
-  private def schemasDir(dir: String) = new java.io.File(dir, "_schemas")
-  private val schemaName = "^v(\\d+)\\.json$".r
-
-  /** The schema in force AT snapshot `v`: the newest schema record with
-    * K ≤ v, or None when the table has never evolved (readers then
-    * fall back to the creation schema / parquet footer inference — so
-    * PRE-evolution snapshots keep reading back with their original
-    * schema, exactly as committed). Records are resolved from
-    * `_schemas/vK.json` first, then from `#schema` manifest headers —
-    * the headers are published ATOMICALLY with the manifest, covering
-    * the window where a schema commit has won its manifest but a
-    * concurrent committer flips the shared pointer past it before the
-    * json record lands. The `schemaRecords.isEmpty` fast path is sound
-    * because [[recordBaseSchema]] always precedes a table's first
-    * evolution: an evolved table has `_schemas/v0.json` before any
-    * manifest can carry a header. */
-  def schemaAt(dir: String, v: Int): Option[StructType] = {
-    val json = schemaRecords(dir)
-    if (json.isEmpty) return None // never evolved — no manifest scan needed
-    val jsonKs = json.map(_._1).toSet
-    val all: Seq[(Int, () => StructType)] =
-      json.map { case (k, f) => (k, () => readSchema(f)) } ++
-        manifestSchemaHeaders(dir).collect {
-          case (k, s) if !jsonKs.contains(k) => (k, () => s)
-        }
-    all.filter(_._1 <= v).sortBy(_._1).lastOption.map(_._2())
+  /** The `#dropped` header of a commit whose predecessor is `prev` and
+    * whose schema is `next`: `prev`'s dropped names, plus `also`, plus
+    * every column of `prev`'s schema that `next` lacks. Empty when no
+    * name ever left. */
+  private def droppedHeader(prev: Snapshot, next: Option[StructType],
+      also: Set[String] = Set.empty): Seq[String] = {
+    def lower(s: Option[StructType]) =
+      s.toSeq.flatMap(_.fieldNames).map(_.toLowerCase).toSet
+    val dropped = prev.dropped ++ also ++ (lower(prev.schema) -- lower(next))
+    if (dropped.isEmpty) Nil
+    else Seq(droppedTag + json.writeValueAsString(dropped.toSeq.sorted.toArray))
   }
-
-  private val manifestTxt = "^v(\\d+)\\.txt$".r
-
-  /** Schemas embedded as `#schema <json>` manifest header lines —
-    * written by [[evolveSchema]]/[[rollback]] inside the atomic manifest
-    * publish itself, so no commit ordering can separate a published
-    * snapshot from its schema. Only leading comment lines are scanned. */
-  private def manifestSchemaHeaders(dir: String): Seq[(Int, StructType)] =
-    Option(new java.io.File(dir, "_manifests").listFiles())
-      .getOrElse(Array.empty).toSeq
-      .flatMap { f =>
-        f.getName match {
-          case manifestTxt(k) => schemaHeaderOf(f).map(k.toInt -> _)
-          case _ => None
-        }
-      }
-
-  private def schemaHeaderOf(f: java.io.File): Option[StructType] = {
-    val in = new java.io.BufferedReader(new java.io.FileReader(f))
-    try {
-      var line = in.readLine()
-      while (line != null && line.startsWith("#") && !line.startsWith("#f ")) {
-        if (line.startsWith("#schema "))
-          return Some(DataType.fromJson(line.stripPrefix("#schema "))
-            .asInstanceOf[StructType])
-        line = in.readLine()
-      }
-      None
-    } finally in.close()
-  }
-
-  private def readSchema(f: java.io.File): StructType =
-    DataType.fromJson(new String(
-      java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).asInstanceOf[StructType]
-
-  private def schemaRecords(dir: String): Seq[(Int, java.io.File)] =
-    Option(schemasDir(dir).listFiles()).getOrElse(Array.empty)
-      .flatMap { f =>
-        f.getName match {
-          case schemaName(k) => Some(k.toInt -> f)
-          case _ => None
-        }
-      }.toSeq
-
-  /** Every column name that has EVER appeared in this table's schema
-    * history (records + the supplied pre-history base). The ADD COLUMN
-    * resurrection guard: parquet resolves columns by NAME (no field
-    * ids), so re-adding a previously-dropped name would read the OLD
-    * physical values back out of pre-drop files instead of nulls. */
-  def everNamed(dir: String, base: StructType): Set[String] =
-    (schemaRecords(dir).flatMap(r => readSchema(r._2).fieldNames) ++
-      base.fieldNames).map(_.toLowerCase).toSet
-
-  /** Record `base` as the schema for every snapshot up to now (written
-    * as record v0, which [[schemaAt]] resolves for all pre-evolution
-    * versions — observably identical to the footer-inference fallback,
-    * but durable for the [[everNamed]] history). Called once, before a
-    * table's first evolution. */
-  def recordBaseSchema(dir: String, base: StructType): Unit =
-    if (schemaRecords(dir).isEmpty) {
-      schemasDir(dir).mkdirs()
-      java.nio.file.Files.write(
-        new java.io.File(schemasDir(dir), "v0.json").toPath,
-        base.json.getBytes("UTF-8"))
-    }
 
   /** Metadata-only commit: publish snapshot N+1 whose manifest is
-    * EXACTLY the predecessor's files, with `schema` recorded as the
-    * schema in force from N+1 onward (ADD COLUMN — old files read
-    * back with the missing column null-filled by the parquet reader).
+    * EXACTLY the predecessor's files, with `schema` as its `#schema`
+    * header — the schema in force from N+1 on, which every later commit
+    * carries forward (ADD COLUMN: old files read back with the missing
+    * column null-filled by the parquet reader) — and a `#dropped`
+    * header that adds every predecessor column `schema` leaves out.
+    * Both ride INSIDE the manifest, atomic with the publish, so no
+    * reader can resolve the snapshot without its schema (ADVICE r12).
     * Optimistically retried like a blind append: the manifest is a
-    * pure function of the predecessor. The schema rides INSIDE the
-    * manifest as a `#schema` header line, atomic with the publish —
-    * writing it as a separate file after winning left a window where a
-    * concurrent committer published v+1 and flipped the shared pointer
-    * first, and readers of that published snapshot resolved a stale
-    * schema (ADVICE r12). The `_schemas/vN.json` record is still
-    * written (it is the durable store that survives tombstoning);
-    * [[schemaAt]] falls back to the header when the json is not yet
-    * visible. Returns the committed version. */
+    * pure function of the newest live predecessor. Returns the
+    * committed version. */
   def evolveSchema(dir: String, schema: StructType): Int = {
     var attempts = 0
+    var v = current(dir) + 1
     while (attempts < 100) {
       attempts += 1
-      val v = current(dir) + 1
-      val prev = if (v == 1) Seq.empty else Snapshot(dir, v - 1).lines
-      if (tryPublish(dir, v, s"#schema ${schema.json}" +: prev)) {
-        schemasDir(dir).mkdirs()
-        java.nio.file.Files.write(
-          new java.io.File(schemasDir(dir), s"v$v.json").toPath,
-          schema.json.getBytes("UTF-8"))
+      val prev = newestLiveAtOrBelow(dir, v - 1)
+      val header = (schemaTag + schema.json) +: droppedHeader(prev, Some(schema))
+      if (tryPublish(dir, v, header ++ prev.lines)) {
         publishPointer(dir, v)
         return v
       }
+      v = math.max(v + 1, current(dir) + 1)
     }
     throw new java.util.ConcurrentModificationException(
       s"$dir: schema evolution lost $attempts optimistic races — giving up")
@@ -1074,12 +1053,14 @@ private[graft] object GraftVersions {
 
   /** RESTORE (rollback): publish a NEW snapshot whose manifest — and
     * schema, if the table ever evolved — is exactly snapshot `v`'s.
-    * History moves only forward (the bad commits stay in the ledger
-    * and readable until retention), data files are reused by
-    * reference, so undoing a bad write on a 100 TB table costs one
-    * manifest. Optimistically retried like a blind append (the
-    * restored state is version-pinned, not read-modify-write).
-    * Returns the new current version. */
+    * On an evolved table the new manifest records `v`'s schema (its
+    * header, or for a pre-evolution `v` its footer) and adds each name
+    * the restore removes to `#dropped`. History moves only forward (the
+    * bad commits stay in the ledger and readable until retention), data
+    * files are reused by reference, so undoing a bad write on a 100 TB
+    * table costs one manifest. Optimistically retried like a blind
+    * append (the restored state is version-pinned, not
+    * read-modify-write). Returns the new current version. */
   def rollback(dir: String, v: Int): Int = {
     // ONE read decides liveness AND supplies the lines: a separate
     // liveness check before reading the lines races a concurrent
@@ -1092,15 +1073,19 @@ private[graft] object GraftVersions {
     val snap = Snapshot(dir, v)
     require(snap.live,
       s"$dir: cannot restore snapshot $v — it does not exist or was expired")
-    val lines = snap.lines // stats kept
-    val names = snap.names
-    val restoredSchema = schemaAt(dir, v)
     var attempts = 0
     var nv = current(dir) + 1
     while (attempts < 100) {
       attempts += 1
-      val header = restoredSchema.map(s => s"#schema ${s.json}").toSeq
-      if (tryPublish(dir, nv, header ++ lines)) {
+      // an evolved table restores v's schema too: with the successor's
+      // header carried instead, rolling back past an ADD COLUMN would
+      // keep serving the post-evolution schema for pre-evolution data
+      val prev = newestLiveAtOrBelow(dir, nv - 1)
+      val header =
+        if (snap.recordedSchema.isEmpty && prev.recordedSchema.isEmpty) Nil
+        else snap.schema.map(schemaTag + _.json).toSeq ++
+          droppedHeader(prev, snap.schema, snap.dropped)
+      if (tryPublish(dir, nv, header ++ snap.lines)) {
         // a concurrent expire may have tombstoned v between our isLive
         // check and this publish; its files stay protected for the
         // orphan grace window (expire defers physical deletion), so
@@ -1108,31 +1093,21 @@ private[graft] object GraftVersions {
         // the grace — and it fails BEFORE the pointer flip, so no
         // reader ever sees a current snapshot with missing files.
         val missing =
-          names.filterNot(n => new java.io.File(dataDir(dir), n).exists())
+          snap.names.filterNot(n => new java.io.File(dataDir(dir), n).exists())
         if (missing.nonEmpty) {
           // the won manifest must not stay live (ADVICE r13): a
           // successor's append chains onto snapshot nv's lines — the
           // dead manifest's lines reference vacuumed files, and the
           // next commit would publish a current snapshot that breaks
           // every read. Tombstone it (no preserved #f lines — the
-          // files are already gone) so [[liveLinesBelow]] skips it;
-          // the version number stays burned, as tryPublish requires.
-          tombstone(dir, nv, System.currentTimeMillis(), Seq.empty, Seq.empty)
+          // files are already gone) so [[newestLiveAtOrBelow]] skips
+          // it; the version number stays burned, as tryPublish requires.
+          tombstone(dir, nv, System.currentTimeMillis(), Map.empty, Seq.empty)
           throw new IllegalStateException(
             s"$dir: RESTORE of snapshot $v lost a race with expire — " +
               s"data files ${missing.mkString(", ")} were vacuumed; " +
               "the pointer was not flipped and the won manifest was " +
               "tombstoned")
-        }
-        // a table with schema history restores v's schema too —
-        // without this, rolling back past an ADD COLUMN would keep
-        // serving the post-evolution schema for pre-evolution data
-        // (the durable json record; the atomic copy rode the manifest)
-        restoredSchema.foreach { sch =>
-          schemasDir(dir).mkdirs()
-          java.nio.file.Files.write(
-            new java.io.File(schemasDir(dir), s"v$nv.json").toPath,
-            sch.json.getBytes("UTF-8"))
         }
         publishPointer(dir, nv)
         return nv
@@ -1218,34 +1193,23 @@ private[graft] object GraftVersions {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val cur = current(dir)
     val cutoff = math.max(1, cur - keepLast + 1)
-    val expired = (1 until cutoff).filter(isLive(dir, _))
-    val keptFiles = (cutoff to cur)
-      .flatMap(v => manifest(dir, v)).map(p => new java.io.File(p).getName).toSet
+    // one listing, one read per manifest: every decision below derives
+    // from these snapshots
+    val snaps = Snapshot.all(dir)
+    val expired = snaps.filter(s => s.live && s.version < cutoff)
+    val keptFiles = snaps.filter(s => s.version >= cutoff && s.version <= cur)
+      .flatMap(_.names).toSet
     val now = System.currentTimeMillis()
     // tombstone, never delete — see [[isLive]]: a deleted manifest
-    // would make its version number winnable again. The tombstone
-    // preserves the expiry instant, the file list, and any #schema
-    // header (self-healing the json record first if a crashed schema
-    // commit never wrote it), so deferred deletion stays possible.
-    expired.foreach { v =>
-      val mf = manifestFile(dir, v)
-      val prevLines = java.nio.file.Files.readAllLines(mf.toPath).asScala.toSeq
-      val schemaHdr = prevLines.filter(_.startsWith("#schema "))
-      if (schemaHdr.nonEmpty &&
-          !new java.io.File(schemasDir(dir), s"v$v.json").exists()) {
-        schemasDir(dir).mkdirs()
-        java.nio.file.Files.write(
-          new java.io.File(schemasDir(dir), s"v$v.json").toPath,
-          schemaHdr.head.stripPrefix("#schema ").getBytes("UTF-8"))
-      }
-      val names = manifest(dir, v).map(p => new java.io.File(p).getName)
-      // carry `#txn` headers through: retention must not forget a
-      // stream's idempotence high-water mark (see [[lastTxn]])
-      tombstone(dir, v, now, prevLines.filter(_.startsWith("#txn ")), names)
-    }
+    // would make its version number winnable again. The tombstone keeps
+    // the expiry instant, the file list (so deferred deletion stays
+    // possible) and the `#txn` tokens: retention must not forget a
+    // stream's idempotence high-water mark (see [[lastTxn]])
+    expired.foreach(s => tombstone(dir, s.version, now, s.txns, s.names))
     // partition every tombstone's preserved file list by tombstone age:
     // fresh (within grace) → protected from ALL tiers; stale → deletable
-    val toms = tombstoneRecords(dir)
+    val toms = snaps.flatMap(s => s.expiredAt.map(_ -> s.preserved)) ++
+      expired.map(now -> _.names)
     val protectedNames =
       toms.filter(t => now - t._1 < orphanGraceMillis).flatMap(_._2).toSet
     val staleNames =
@@ -1267,7 +1231,7 @@ private[graft] object GraftVersions {
         val n = f.getName; f.delete(); GraftBlooms.dropSidecars(dir, n); n
       }
     GraftBlooms.sweepOrphans(dir) // sidecars a crashed vacuum stranded
-    (expired, deleted.toSeq)
+    (expired.map(_.version), deleted.toSeq)
   }
 
   /** Atomically rewrite snapshot `v`'s manifest as an `#expired`
@@ -1277,31 +1241,12 @@ private[graft] object GraftVersions {
     * FILE always survives: deleting it would let a retrying writer win
     * the dead version number again (see [[isLive]]). */
   private def tombstone(dir: String, v: Int, now: Long,
-      txnHdrs: Seq[String], names: Seq[String]): Unit = {
-    val content =
-      (s"$expiredMarker $now" +: (txnHdrs ++ names.map("#f " + _)))
-        .mkString("", "\n", "\n")
+      txns: Map[String, Long], names: Seq[String]): Unit = {
+    val kept = txns.toSeq.map { case (app, batch) => s"$txnTag$app $batch" } ++
+      names.map(keptTag + _)
+    val content = (s"$expiredMarker $now" +: kept).mkString("", "\n", "\n")
     io.atomicOverwrite(manifestFile(dir, v), content.getBytes("UTF-8"))
   }
-
-  /** (expiredAtMillis, preserved file names) for every tombstoned
-    * manifest. Legacy tombstones (bare `#expired`, no instant, no file
-    * list) parse as expired-at-epoch with no names — their files fall
-    * through to the orphan tier. */
-  private def tombstoneRecords(dir: String): Seq[(Long, Seq[String])] =
-    Option(new java.io.File(dir, "_manifests").listFiles())
-      .getOrElse(Array.empty).toSeq
-      .filter(f => manifestTxt.findFirstIn(f.getName).isDefined)
-      .flatMap { f =>
-        val lines = java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
-        lines.headOption.filter(_.startsWith(expiredMarker)).map { h =>
-          val ts = h.stripPrefix(expiredMarker).trim match {
-            case "" => 0L
-            case s => s.toLong
-          }
-          (ts, lines.filter(_.startsWith("#f ")).map(_.stripPrefix("#f ")))
-        }
-      }
 
   private def lockFile(dir: String) = new java.io.File(dir, "_lock")
 
@@ -1364,7 +1309,8 @@ private[graft] object GraftVersions {
 
   /** Commit one write: stage the DataFrame, move its files into the
     * immutable store, publish snapshot N+1's manifest (previous files +
-    * new for append, new only for overwrite), flip the pointer.
+    * new for append, new only for overwrite, under the predecessor's
+    * `#schema`/`#dropped` headers either way), flip the pointer.
     * Optimistically retried on a lost race — both commit shapes are
     * retry-safe because their manifest is recomputed from the current
     * predecessor on every attempt. */
@@ -1382,12 +1328,13 @@ private[graft] object GraftVersions {
       // LIVE predecessor: a tombstoned manifest above the pointer (a
       // rollback that won its version but failed re-verification,
       // ADVICE r13) reads as empty lines, and chaining onto it would
-      // publish an append that silently drops the whole table
-      val prev =
-        if (overwrite || v == 1) Seq.empty
-        else Snapshot(dir, newestLiveAtOrBelow(dir, v - 1)).lines
+      // publish an append that silently drops the whole table. An
+      // overwrite replaces the files but keeps the schema record and
+      // the dropped names in force.
+      val prev = newestLiveAtOrBelow(dir, v - 1)
+      val kept = if (overwrite) Seq.empty else prev.lines
       val newLines = moved.zip(suffixes).map { case (n, s) => n + s }
-      if (tryPublish(dir, v, txnHeader(txn) ++ prev ++ newLines)) {
+      if (tryPublish(dir, v, txnHeader(txn) ++ prev.carried ++ kept ++ newLines)) {
         publishPointer(dir, v)
         GraftBlooms.write(data.sparkSession, dir, moved, data.schema)
         autoCompact(data.sparkSession, dir)
@@ -1404,11 +1351,11 @@ private[graft] object GraftVersions {
     * snapshot whose manifest is `keepNames` (the untouched files of
     * snapshot `base`, reused by reference with the stats of `base`'s
     * own manifest lines — no re-read) plus `data` (the rewritten +
-    * inserted rows). UNLIKE blind appends this is NOT retry-safe — the
-    * kept-file set was derived by reading snapshot `base`, so if any
-    * other writer committed in between, the merge would silently drop
-    * their rows; detect the conflict at the atomic publish and fail
-    * loudly instead.
+    * inserted rows), under `base`'s `#schema`/`#dropped` headers.
+    * UNLIKE blind appends this is NOT retry-safe — the kept-file set
+    * was derived by reading snapshot `base`, so if any other writer
+    * committed in between, the merge would silently drop their rows;
+    * detect the conflict at the atomic publish and fail loudly instead.
     *
     * `dataChange = false` marks the commit LAYOUT-ONLY (`#layout`
     * header): same rows, different files — compaction/re-clustering.
@@ -1427,7 +1374,7 @@ private[graft] object GraftVersions {
     val keepSet = keepNames.toSet
     val keepLines = base.lines.filter(l => keepSet.contains(lineName(l)))
     val header = (if (dataChange) Seq.empty else Seq(layoutMarker)) ++
-      txnHeader(txn)
+      txnHeader(txn) ++ base.carried
     if (!tryPublish(dir, v, header ++ keepLines ++ newLines)) {
       // lost the race: surrender our staged files (they are orphans —
       // no manifest references them; a later expire may vacuum them
@@ -1497,23 +1444,10 @@ private[graft] object GraftVersions {
     * carries `#txn` headers into its tombstones, so retention does not
     * forget idempotence; the ledger is forgotten only if a tombstoned
     * manifest FILE itself were removed, which this layout never does).
-    * One header-line read per version — O(versions) driver metadata; a
-    * long-lived stream caches its own high-water mark and consults
-    * this only at (re)start. */
-  def lastTxn(dir: String, appId: String): Option[Long] = {
-    val mdir = new java.io.File(dir, "_manifests")
-    val files = Option(mdir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("v\\d+\\.txt"))
-    val prefix = s"#txn $appId "
-    val batches = files.flatMap { f =>
-      java.nio.file.Files.readAllLines(f.toPath).asScala
-        .takeWhile(_.startsWith("#"))
-        .collectFirst { case l if l.startsWith(prefix) =>
-          l.stripPrefix(prefix).trim.toLong
-        }
-    }
-    if (batches.isEmpty) None else Some(batches.max)
-  }
+    * One read per manifest ([[Snapshot.all]]) — O(versions) driver
+    * metadata per call. */
+  def lastTxn(dir: String, appId: String): Option[Long] =
+    Snapshot.all(dir).flatMap(_.txns.get(appId)).maxOption
 }
 
 /** Write half of a versioned CTAS: the initial snapshot commit. */

@@ -1098,7 +1098,8 @@ class MergeSpec extends SparkSpec {
     spark.sql("""CREATE TABLE psql.tpcds.mg13 TBLPROPERTIES('versioned'='true')
                 |AS SELECT * FROM mg_src13""".stripMargin)
     val dir = s"$root/mg13.parquet"
-    assert(GraftVersions.schemaAt(dir, 1).isEmpty, "table must be never-evolved")
+    assert(GraftVersions.Snapshot(dir, 1).recordedSchema.isEmpty,
+      "table must be never-evolved (no #schema header)")
     val files = GraftVersions.manifest(dir, 1)
     val inferred = spark.read.parquet(files.head).schema
     assert(GraftVersions.Snapshot(dir, 1).schema.contains(inferred))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Snapshot versioning + time travel gates (l02's catalog mechanics):
   * commits are manifest-plus-pointer, data files are immutable, held
@@ -321,5 +322,133 @@ class TimeTravelSpec extends SparkSpec {
     val restored = spark.read.parquet(GraftVersions.manifest(dir, 6): _*)
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(restored == Set(9 -> "keep"), restored.toString)
+  }
+
+  /** Files under a table dir that a second metadata store would leave:
+    * a `_schemas` entry or any `.json` record. */
+  private def sideRecords(dir: String): Seq[String] =
+    java.nio.file.Files.walk(new java.io.File(dir).toPath).iterator()
+      .asScala.map(_.toFile).filter(f =>
+        f.getName == "_schemas" || f.getName.endsWith(".json"))
+      .map(_.getPath).toSeq
+
+  test("the evolved schema outlives its expired evolution snapshot") {
+    val root = freshRoot("graft_tt")
+    import spark.implicits._
+    import graft.sources.GraftVersions
+    Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src11")
+    spark.sql("""CREATE TABLE psql.tpcds.tt11 TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM tt_src11""".stripMargin)
+    val dir = s"$root/tt11.parquet"
+    spark.sql("ALTER TABLE psql.tpcds.tt11 ADD COLUMN note STRING")  // v2
+    spark.sql("INSERT INTO psql.tpcds.tt11 VALUES (2, 'b', 'n2')")     // v3
+    spark.sql("VACUUM psql.tpcds.tt11 RETAIN 1 VERSIONS").collect()
+    assert(!GraftVersions.isLive(dir, 2), "the evolution snapshot was not tombstoned")
+    def notes(q: String) = spark.sql(q).collect()
+      .map(r => r.getInt(0) -> Option(r.getString(2))).toSet
+    assert(spark.table("psql.tpcds.tt11").columns.toSeq == Seq("k", "v", "note"))
+    assert(notes("SELECT * FROM psql.tpcds.tt11") == Set(1 -> None, 2 -> Some("n2")))
+    assert(notes("SELECT * FROM psql.tpcds.tt11 VERSION AS OF 3") ==
+      Set(1 -> None, 2 -> Some("n2")))
+    // the newest snapshot's schema is its own header: no footer read
+    assert(GraftVersions.Snapshot(dir, 3).recordedSchema.map(_.fieldNames.toSeq)
+      .contains(Seq("k", "v", "note")))
+  }
+
+  test("INSERT OVERWRITE after ADD COLUMN keeps the evolved schema") {
+    val root = freshRoot("graft_tt")
+    import spark.implicits._
+    Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src12")
+    spark.sql("""CREATE TABLE psql.tpcds.tt12 TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM tt_src12""".stripMargin)
+    spark.sql("ALTER TABLE psql.tpcds.tt12 ADD COLUMN note STRING")
+    spark.sql("INSERT OVERWRITE psql.tpcds.tt12 VALUES (9, 'z', 'n9')")
+    assert(spark.table("psql.tpcds.tt12").columns.toSeq == Seq("k", "v", "note"))
+    assert(spark.sql("SELECT k, v, note FROM psql.tpcds.tt12").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq((9, "z", "n9")))
+    // a later DROP + ADD of the same name across the overwrite is refused
+    spark.sql("ALTER TABLE psql.tpcds.tt12 DROP COLUMN note")
+    spark.sql("INSERT OVERWRITE psql.tpcds.tt12 VALUES (8, 'y')")
+    val e = intercept[Exception] {
+      spark.sql("ALTER TABLE psql.tpcds.tt12 ADD COLUMN note STRING")
+    }
+    assert(e.getMessage.contains("previously dropped"), e.getMessage)
+    assert(sideRecords(s"$root/tt12.parquet").isEmpty)
+  }
+
+  test("a RESTORE that removes a column records the name as dropped") {
+    val root = freshRoot("graft_tt")
+    import spark.implicits._
+    import graft.sources.GraftVersions
+    Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("tt_src13")
+    spark.sql("""CREATE TABLE psql.tpcds.tt13 TBLPROPERTIES('versioned'='true')
+                |AS SELECT * FROM tt_src13""".stripMargin)
+    val dir = s"$root/tt13.parquet"
+    spark.sql("ALTER TABLE psql.tpcds.tt13 ADD COLUMN note STRING")   // v2
+    spark.sql("INSERT INTO psql.tpcds.tt13 VALUES (2, 'b', 'n2')")      // v3
+    assert(GraftVersions.rollback(dir, 1) == 4)
+    assert(spark.table("psql.tpcds.tt13").columns.toSeq == Seq("k", "v"))
+    assert(GraftVersions.Snapshot(dir, 4).dropped == Set("note"))
+    val e = intercept[Exception] {
+      spark.sql("ALTER TABLE psql.tpcds.tt13 ADD COLUMN note STRING")
+    }
+    assert(e.getMessage.contains("previously dropped"), e.getMessage)
+    spark.sql("ALTER TABLE psql.tpcds.tt13 ADD COLUMN note2 STRING")
+    assert(spark.table("psql.tpcds.tt13").columns.toSeq == Seq("k", "v", "note2"))
+  }
+
+  test("every verb keeps the manifest the only metadata record") {
+    val root = freshRoot("graft_tt")
+    import spark.implicits._
+    import graft.sources.GraftVersions
+    Seq((1, "a"), (2, "b")).toDF("k", "v").createOrReplaceTempView("tt_src14")
+    Seq((2, "B"), (3, "c")).toDF("k", "v").createOrReplaceTempView("tt_up14")
+    val dir = s"$root/tt14.parquet"
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "CTAS" -> (() => spark.sql("""CREATE TABLE psql.tpcds.tt14
+          |TBLPROPERTIES('versioned'='true') AS SELECT * FROM tt_src14""".stripMargin)),
+      "INSERT" -> (() => spark.sql("INSERT INTO psql.tpcds.tt14 VALUES (4, 'd')")),
+      "ADD COLUMN" -> (() => spark.sql("ALTER TABLE psql.tpcds.tt14 ADD COLUMN note STRING")),
+      "UPDATE" -> (() => spark.sql("UPDATE psql.tpcds.tt14 SET note = 'u' WHERE k = 1")),
+      "DELETE" -> (() => spark.sql("DELETE FROM psql.tpcds.tt14 WHERE k = 4")),
+      "MERGE" -> (() => spark.sql("""MERGE INTO psql.tpcds.tt14 t
+          |USING (SELECT k, v, CAST(NULL AS STRING) AS note FROM tt_up14) s
+          |ON t.k = s.k WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)),
+      "DROP COLUMN" -> (() => spark.sql("ALTER TABLE psql.tpcds.tt14 DROP COLUMN v")),
+      "OPTIMIZE" -> (() => spark.sql("OPTIMIZE psql.tpcds.tt14").collect()),
+      "INSERT OVERWRITE" -> (() =>
+        spark.sql("INSERT OVERWRITE psql.tpcds.tt14 VALUES (7, 'o')")),
+      "RESTORE" -> (() => GraftVersions.rollback(dir, 2)),
+      "VACUUM" -> (() =>
+        spark.sql("VACUUM psql.tpcds.tt14 RETAIN 1 VERSIONS").collect()))
+    verbs.foreach { case (verb, run) =>
+      run()
+      assert(sideRecords(dir).isEmpty, s"after $verb: ${sideRecords(dir)}")
+    }
+    // DROP COLUMN v, then the RESTORE of pre-evolution v2 removed note
+    assert(spark.table("psql.tpcds.tt14").columns.toSeq == Seq("k", "v"))
+    assert(GraftVersions.Snapshot.current(dir).dropped == Set("note", "v"))
+  }
+
+  test("ALTER TABLE chains past an abandoned restore's burned version") {
+    import spark.implicits._
+    import graft.sources.GraftVersions
+    import org.apache.spark.sql.types.StringType
+    val dir = tempDir("graft_tt15").toString + "/tbl"
+    new java.io.File(dir).mkdirs()
+    GraftVersions.commit(dir, Seq((1, "a")).toDF("k", "v"), overwrite = false)
+    GraftVersions.commit(dir, Seq((9, "keep")).toDF("k", "v"), overwrite = true)
+    GraftVersions.manifest(dir, 1).foreach(f => new java.io.File(f).delete())
+    intercept[IllegalStateException] { GraftVersions.rollback(dir, 1) }
+    assert(!GraftVersions.isLive(dir, 3))
+    val base = GraftVersions.Snapshot(dir, 2).schema.get
+    assert(GraftVersions.evolveSchema(dir, base.add("note", StringType)) == 4)
+    val snap = GraftVersions.Snapshot.current(dir)
+    assert(snap.version == 4 && snap.names == GraftVersions.Snapshot(dir, 2).names)
+    assert(snap.schema.map(_.fieldNames.toSeq).contains(Seq("k", "v", "note")))
+    assert(snap.read(spark).collect().map(r => (r.getInt(0), r.getString(1),
+      Option(r.getString(2)))).toSeq == Seq((9, "keep", None)))
   }
 }
